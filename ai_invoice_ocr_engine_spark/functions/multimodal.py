@@ -1155,7 +1155,7 @@ def decode_audio(data: bytes) -> np.ndarray:
 
         s, _rate, bps = decode_flac(data)
         return to_mono_int16(s, bps)
-    if len(data) >= 132 and data[65:69] == b"FSSD" and data[128:132] == b"HCOM":
+    if len(data) >= 152 and data[65:69] == b"FSSD" and data[128:132] == b"HCOM":
         return decode_hcom(data)
     if data[:6] == b"SOUND\x1a":
         return decode_sndt(data)

@@ -44,6 +44,8 @@ independent.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
 # ---------------------------------------------------------------------------
@@ -173,6 +175,15 @@ class _HuffTable:
         self.lut_len = lng
 
 
+@functools.lru_cache(maxsize=32)
+def _huff_table(bits: bytes, vals: bytes) -> _HuffTable:
+    """The decode table for one DHT entry, shared across frames: a corpus
+    mostly repeats a few tables (Annex K's above all), and building the
+    lookups costs ~1.4 ms each. Bounded, so a stream of distinct tables
+    cannot grow memory. Callers must treat the table as read-only."""
+    return _HuffTable(list(bits), list(vals))
+
+
 def _entropy_segments(data: bytes, pos: int) -> tuple[list[tuple[bytes, int]], int]:
     """Split the entropy-coded stream at RST markers, unstuffing 0xFF00
     once up front. Returns ([(unstuffed_bytes, rst_id_or_-1), ...], end) —
@@ -281,10 +292,10 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 sp = 0
                 while sp < len(seg):
                     tc, th = seg[sp] >> 4, seg[sp] & 0x0F
-                    bits = list(seg[sp + 1 : sp + 17])
+                    bits = bytes(seg[sp + 1 : sp + 17])
                     cnt = sum(bits)
-                    vals = list(seg[sp + 17 : sp + 17 + cnt])
-                    (huff_dc if tc == 0 else huff_ac)[th] = _HuffTable(bits, vals)
+                    vals = bytes(seg[sp + 17 : sp + 17 + cnt])
+                    (huff_dc if tc == 0 else huff_ac)[th] = _huff_table(bits, vals)
                     sp += 17 + cnt
             elif marker in (0xC0, 0xC1, 0xC2, 0xC3):
                 # SOF0/1 baseline, SOF2 progressive, SOF3 lossless

@@ -39,6 +39,8 @@ import zlib
 
 import numpy as np
 
+from .kernels import _unfilter_png
+
 
 class _Ref:
     __slots__ = ("num", "gen")
@@ -501,41 +503,20 @@ class _Stream:
         self.raw = raw
 
 
-def _png_unpredict(data: bytes, colors: int, columns: int) -> bytes:
-    rb = colors * columns
-    out = bytearray()
-    prev = bytearray(rb)
-    pos = 0
-    while pos + 1 + rb <= len(data) + rb and pos < len(data):
-        ft = data[pos]
-        row = bytearray(data[pos + 1 : pos + 1 + rb])
-        pos += 1 + rb
-        if ft == 0:
-            pass
-        elif ft == 1:
-            for i in range(colors, len(row)):
-                row[i] = (row[i] + row[i - colors]) & 0xFF
-        elif ft == 2:
-            for i in range(len(row)):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif ft == 3:
-            for i in range(len(row)):
-                a = row[i - colors] if i >= colors else 0
-                row[i] = (row[i] + ((a + prev[i]) >> 1)) & 0xFF
-        elif ft == 4:
-            for i in range(len(row)):
-                a = row[i - colors] if i >= colors else 0
-                b = prev[i]
-                c = prev[i - colors] if i >= colors else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                row[i] = (row[i] + pred) & 0xFF
-        else:
-            raise ValueError(f"PDF PNG predictor row filter {ft} invalid")
-        out += row
-        prev = row
-    return bytes(out)
+def _png_unpredict(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
+    """PNG predictors (Predictor >= 10): each row is a filter-type byte plus
+    ceil(Colors*BPC*Columns/8) bytes, filtered at a distance of
+    ceil(Colors*BPC/8) bytes (at least 1). A short final row is undone as
+    far as it goes."""
+    if min(colors, bpc, columns) < 1:
+        raise ValueError("PDF PNG predictor needs positive Colors, BitsPerComponent, Columns")
+    rb = (colors * bpc * columns + 7) // 8
+    bpp = max(1, (colors * bpc + 7) // 8)
+    h = -(-len(data) // (1 + rb))
+    buf = np.zeros(h * (1 + rb), np.uint8)
+    buf[: len(data)] = np.frombuffer(data, np.uint8)
+    n_out = len(data) - h  # every started row carries one filter byte
+    return _unfilter_png(buf, h, rb, bpp).tobytes()[:n_out]
 
 
 def _unpredict(raw: bytes, p: dict, resolve) -> bytes:
@@ -546,8 +527,8 @@ def _unpredict(raw: bytes, p: dict, resolve) -> bytes:
     if pred >= 10:
         return _png_unpredict(
             raw,
-            int(resolve(p.get("Colors", 1)))
-            * max(1, int(resolve(p.get("BitsPerComponent", 8))) // 8),
+            int(resolve(p.get("Colors", 1))),
+            int(resolve(p.get("BitsPerComponent", 8))),
             int(resolve(p.get("Columns", 1))),
         )
     raise NotImplementedError(f"PDF TIFF predictor {pred}")

@@ -330,6 +330,15 @@ def _write_text_exclusive(spark: SparkSession, path: str, text: str) -> None:
                 os.fsync(f.fileno())
             try:
                 os.link(tmp, path)
+            except FileExistsError:
+                raise
+            except OSError as e:
+                raise OSError(
+                    e.errno,
+                    f"cannot publish snapshot manifest {path!r}: the "
+                    f"filesystem lacks hard links ({e.strerror}); local "
+                    "tables need a filesystem that supports os.link",
+                ) from e
             finally:
                 os.remove(tmp)
             return

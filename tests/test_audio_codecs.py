@@ -756,6 +756,25 @@ def test_hcom_structural_failures_are_loud():
         decode_hcom(bytes(bad))
 
 
+def test_hcom_short_prefix_is_value_error():
+    """An HCOM header cut anywhere before its 152-byte fixed part (header
+    fields and first dictionary node) is a ValueError, not struct.error."""
+    import struct
+
+    import pytest
+
+    from ai_invoice_ocr_engine_spark.functions.multimodal import decode_audio
+
+    head = bytearray(152)
+    head[1] = 4  # MacBinary filename length
+    head[65:69] = b"FSSD"
+    head[128:132] = b"HCOM"
+    struct.pack_into(">4IH", head, 132, 8, 0, 0, 1, 1)  # 1 dictionary node
+    for n in range(132, 152):
+        with pytest.raises(ValueError):
+            decode_audio(bytes(head[:n]))
+
+
 def test_adts_aac_exact_frame_walk():
     """ADTS AAC frame walk (the AAC analog of the mp3 walk — pure
     structure, each header carries its own frame_length): a synthetic

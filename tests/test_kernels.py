@@ -1210,3 +1210,228 @@ def test_polymorphic_reader_random_matrix_soak():
                 compression=comp, big_endian=bool(rng.random() < 0.5))
             want = g
         assert np.array_equal(K.decode_image(data), want), f"case {i}/{c}"
+
+
+# ---- PNG unfilter: round trips against the source samples ----
+#
+# The oracle is the samples themselves, filtered by the test-side encoder
+# below (each predictor computed from SOURCE bytes, PNG spec §9), so a bug
+# shared by the decoder's two Average/Paeth paths cannot hide.
+
+def _filter_rows(src: np.ndarray, ftypes, bpp: int) -> np.ndarray:
+    """(h, rb) source bytes → (h, 1 + rb) scanlines, row y filtered with
+    ``ftypes[y]`` (an invalid type > 4 is written with the bytes as-is)."""
+    s = src.astype(np.int32)
+    h, rb = s.shape
+    up = np.vstack([np.zeros((1, rb), np.int32), s[:-1]])
+    left = np.hstack([np.zeros((h, bpp), np.int32), s[:, :-bpp]])
+    upleft = np.hstack([np.zeros((h, bpp), np.int32), up[:, :-bpp]])
+    p = left + up - upleft
+    pa, pb, pc = abs(p - left), abs(p - up), abs(p - upleft)
+    paeth = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, up, upleft))
+    preds = [np.zeros_like(s), left, up, (left + up) >> 1, paeth]
+    out = np.empty((h, 1 + rb), np.uint8)
+    for y, f in enumerate(ftypes):
+        out[y, 0] = f
+        out[y, 1:] = (s[y] - preds[f][y]) & 0xFF if f < 5 else s[y]
+    return out
+
+
+def _png_file(samples: np.ndarray, ctype: int, depth: int, filters, interlace: int = 0) -> bytes:
+    """PNG of (h, w, nch) samples (uint16 when depth is 16), every pass's
+    rows filtered with ``filters(n_rows)``."""
+    import struct
+    import zlib
+
+    h, w, nch = samples.shape
+    bpp = nch * depth // 8
+
+    def pass_bytes(sub: np.ndarray) -> bytes:
+        ph, pw = sub.shape[:2]
+        if not ph or not pw:
+            return b""
+        flat = sub.reshape(ph, pw * nch)
+        rows = flat.astype(">u2").view(np.uint8) if depth == 16 else flat.astype(np.uint8)
+        return _filter_rows(rows.reshape(ph, -1), filters(ph), bpp).tobytes()
+
+    if interlace:
+        body = b"".join(pass_bytes(samples[y0::dy, x0::dx]) for x0, y0, dx, dy in K._ADAM7)
+    else:
+        body = pass_bytes(samples)
+
+    def chunk(typ: bytes, payload: bytes) -> bytes:
+        return struct.pack(">I", len(payload)) + typ + payload + struct.pack(
+            ">I", zlib.crc32(typ + payload) & 0xFFFFFFFF)
+
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, ctype, 0, 0, interlace)
+    return (K.PNG_MAGIC + chunk(b"IHDR", ihdr) + chunk(b"IDAT", zlib.compress(body))
+            + chunk(b"IEND", b""))
+
+
+def _png_gray(samples: np.ndarray, nch: int, depth: int) -> np.ndarray:
+    """What decode_png must return for these samples."""
+    hi = (samples >> 8).astype(np.uint8) if depth == 16 else samples.astype(np.uint8)
+    return hi[:, :, 0] if nch <= 2 else K.rgb_to_gray(hi[:, :, :3])
+
+
+def _mixed_filters(n: int) -> list:
+    """Lone Paeth and Average rows beside long Paeth/Average runs and a
+    mixed 3/4 run, between None/Sub/Up rows."""
+    pat = [4, 1, 4, 3, 2, 0] + [4] * 20 + [3, 4, 3, 4, 4, 3] + [1] + [3] * 9 + [2, 4]
+    return [pat[i % len(pat)] for i in range(n)]
+
+
+#: (step cost, block cap) forcing each Average/Paeth path
+_UNFILTER_PATHS = {
+    "auto": None,
+    "list": (1 << 40, None),
+    "wavefront": (0, None),
+    "blocked": (0, 256),
+}
+
+
+@pytest.fixture(params=sorted(_UNFILTER_PATHS))
+def unfilter_path(request, monkeypatch):
+    forced = _UNFILTER_PATHS[request.param]
+    if forced:
+        monkeypatch.setattr(K, "_WAVE_STEP_BYTES", forced[0])
+        if forced[1]:
+            monkeypatch.setattr(K, "_WAVE_MAX_CELLS", forced[1])
+    return request.param
+
+
+def test_unfilter_png_every_filter_and_bpp(unfilter_path):
+    rng = np.random.default_rng(40)
+    for bpp in (1, 2, 3, 4, 6, 8):
+        for data in (
+            rng.integers(0, 256, (11, 9 * bpp), dtype=np.uint8),
+            rng.choice(np.array([0, 1, 2, 254, 255], np.uint8), (11, 9 * bpp)),  # ties
+        ):
+            h, rb = data.shape
+            for ftypes in ([[f] * h for f in range(5)]
+                           + [rng.integers(0, 5, h).tolist(), _mixed_filters(h)]):
+                raw = _filter_rows(data, ftypes, bpp).reshape(-1)
+                got = K._unfilter_png(raw, h, rb, bpp)
+                assert np.array_equal(got, data), (bpp, ftypes)
+
+
+def test_unfilter_png_chooses_path_per_run(monkeypatch):
+    """A lone Paeth row takes the list loop; a long run takes the
+    wavefront; the mixed image still round-trips."""
+    runs = []
+    real = K._unfilter_wavefront
+
+    def spy(out, y0, y1, *args):
+        runs.append((y0, y1))
+        return real(out, y0, y1, *args)
+
+    monkeypatch.setattr(K, "_unfilter_wavefront", spy)
+    ftypes = [4, 1] + [4] * 64 + [0] + [3, 4, 3] * 20
+    data = np.random.default_rng(41).integers(0, 256, (len(ftypes), 256), dtype=np.uint8)
+    raw = _filter_rows(data, ftypes, 4).reshape(-1)
+    assert np.array_equal(K._unfilter_png(raw, len(ftypes), 256, 4), data)
+    assert (2, 66) in runs and (67, 127) in runs
+    assert all(y0 >= 2 for y0, _ in runs)  # the lone row 0 stayed on the list loop
+
+
+@pytest.mark.parametrize(
+    "ctype,depth", [(0, 8), (4, 8), (2, 8), (6, 8), (0, 16), (2, 16), (6, 16)]
+)
+def test_decode_png_filter_mix_roundtrip(ctype, depth, unfilter_path):
+    """Gray, gray+alpha, RGB, RGBA at 8 and 16 bits (bpp 1/2/3/4/2/6/8),
+    plain and Adam7, with mixed per-row filters."""
+    nch = {0: 1, 2: 3, 4: 2, 6: 4}[ctype]
+    rng = np.random.default_rng(42 + ctype + depth)
+    s = rng.integers(0, 1 << depth, (37, 29, nch)).astype(np.uint16 if depth == 16 else np.uint8)
+    for interlace in (0, 1):
+        data = _png_file(s, ctype, depth, _mixed_filters, interlace)
+        assert np.array_equal(K.decode_png(data), _png_gray(s, nch, depth)), interlace
+
+
+def test_decode_png_degenerate_shapes(unfilter_path):
+    rng = np.random.default_rng(43)
+    for shape in ((1, 1), (1, 23), (23, 1)):
+        for ctype, depth, nch in ((0, 8, 1), (6, 16, 4)):
+            s = rng.integers(0, 1 << depth, shape + (nch,)).astype(
+                np.uint16 if depth == 16 else np.uint8)
+            for f in range(5):
+                for interlace in (0, 1):
+                    data = _png_file(s, ctype, depth, lambda n: [f] * n, interlace)
+                    assert np.array_equal(K.decode_png(data), _png_gray(s, nch, depth)), (
+                        shape, ctype, f, interlace)
+
+
+def test_unfilter_png_error_contract(unfilter_path):
+    """A bad filter type after a long Paeth run and truncated pixel data
+    both raise ValueError."""
+    import struct
+    import zlib
+
+    rng = np.random.default_rng(44)
+    s = rng.integers(0, 256, (60, 50, 1), dtype=np.uint8)
+    data = _png_file(s, 0, 8, lambda n: [4] * (n - 1) + [5])
+    with pytest.raises(ValueError, match="filter type 5"):
+        K.decode_png(data)
+    raw = _filter_rows(s[:, :, 0], [4] * 60, 1).reshape(-1)
+    with pytest.raises(ValueError, match="truncated"):
+        K._unfilter_png(raw[:-1], 60, 50, 1)
+    # IDAT that inflates to one byte short of the pixel data
+    good = _png_file(s, 0, 8, lambda n: [4] * n)
+    short = zlib.compress(raw[:-1].tobytes())
+    head = good[: good.index(b"IDAT") - 4]
+    idat = struct.pack(">I", len(short)) + b"IDAT" + short + struct.pack(
+        ">I", zlib.crc32(b"IDAT" + short) & 0xFFFFFFFF)
+    with pytest.raises(ValueError, match="truncated"):
+        K.decode_png(head + idat)
+    # IDAT cut mid-stream
+    with pytest.raises(ValueError):
+        K.decode_png(good[: len(good) - 40])
+
+
+# ---- JPEG Huffman table cache ----
+
+def _jpeg_gray_custom_dht(img: np.ndarray, quality: int = 85) -> bytes:
+    """Baseline gray JPEG with the same coefficients as encode_jpeg but
+    non-Annex-K Huffman tables (flat 4-bit DC codes, flat 8-bit AC codes)."""
+    from ai_invoice_ocr_engine_spark import jpeg as jm
+
+    dc_bits, dc_vals = [0, 0, 0, 12] + [0] * 12, jm.DC_LUM_VALS
+    ac_bits, ac_vals = [0] * 7 + [len(jm.AC_LUM_VALS)] + [0] * 8, sorted(jm.AC_LUM_VALS)
+    ql = jm._scale_quant(jm.QUANT_LUM, quality)
+    bw = jm._BitWriter()
+    jm._encode_component(bw, jm._blocks_of(img), ql[jm.ZIGZAG_INV],
+                         jm._HuffTable(dc_bits, dc_vals), jm._HuffTable(ac_bits, ac_vals), 0)
+    bw.flush()
+    h, w = img.shape
+    return (b"\xff\xd8" + jm._seg(0xDB, bytes([0]) + bytes(ql.tolist()))
+            + jm._seg(0xC0, bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big")
+                      + bytes([1, 1, 0x11, 0]))
+            + jm._seg(0xC4, jm._dht_payload(0, 0, dc_bits, dc_vals))
+            + jm._seg(0xC4, jm._dht_payload(1, 0, ac_bits, ac_vals))
+            + jm._seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0])) + bytes(bw.out) + b"\xff\xd9")
+
+
+def test_jpeg_huffman_cache_keeps_tables_apart():
+    """Custom-DHT and Annex-K frames decoded back to back, in either order,
+    equal their cold-cache decodes; the cache stays bounded."""
+    from ai_invoice_ocr_engine_spark import jpeg as jm
+
+    img = np.random.default_rng(45).integers(0, 256, (24, 40), dtype=np.uint8)
+    annex_k, custom = jm.encode_jpeg(img, quality=85), _jpeg_gray_custom_dht(img)
+    assert annex_k != custom
+    cold = {}
+    for data in (annex_k, custom):
+        jm._huff_table.cache_clear()
+        cold[data] = jm.decode_jpeg(data)
+    # entropy coding is lossless: same coefficients, same pixels
+    assert np.array_equal(cold[annex_k], cold[custom])
+    for order in ((annex_k, custom), (custom, annex_k)):
+        jm._huff_table.cache_clear()
+        for data in order + order:
+            assert np.array_equal(jm.decode_jpeg(data), cold[data])
+    assert jm._huff_table.cache_info().hits > 0
+    maxsize = jm._huff_table.cache_info().maxsize
+    assert maxsize is not None and maxsize <= 64
+    for k in range(maxsize + 8):  # distinct one-code tables
+        jm._huff_table(bytes([1] + [0] * 15), bytes([k]))
+    assert jm._huff_table.cache_info().currsize == maxsize

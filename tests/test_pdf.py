@@ -698,6 +698,27 @@ def test_lzw_image_with_png_predictor():
     np.testing.assert_array_equal(img, gray)
 
 
+def test_png_predictor_sub_byte_rows():
+    """Below 8 bits per component a predictor row holds
+    ceil(Colors*BPC*Columns/8) bytes, filtered at 1-byte distance: the
+    filter-type bytes must not leak into the data."""
+    from ai_invoice_ocr_engine_spark.pdf import _unpredict
+
+    def unpredict(hexdata, colors, bpc, columns):
+        p = {"Predictor": 15, "Colors": colors, "BitsPerComponent": bpc, "Columns": columns}
+        return _unpredict(bytes.fromhex(hexdata), p, lambda v: v).hex()
+
+    assert unpredict("00aa55" "00ff00" "000ff0", 1, 1, 16) == "aa55ff000ff0"
+    # Sub then Up over 3-byte rows (6-bit pixels)
+    assert unpredict("01101010" "02010203", 3, 2, 4) == "102030112233"
+    # a short final row is undone as far as it goes
+    assert unpredict("00aa55" "02ff", 1, 1, 16) == "aa55a9"
+    with pytest.raises(ValueError, match="filter type 7"):
+        unpredict("00aa55" "07aa55", 1, 1, 16)
+    with pytest.raises(ValueError, match="positive"):
+        unpredict("00aa55", 1, 8, 0)
+
+
 # ---------------------------------------------------------------------------
 # Type0 / CID composite fonts via ToUnicode CMaps
 # ---------------------------------------------------------------------------

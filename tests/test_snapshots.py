@@ -615,6 +615,22 @@ def test_concurrent_commit_loses_loudly(spark, corpus, tmp_path):
     assert open(path).read() == before  # winner's manifest untouched
 
 
+def test_manifest_publish_without_hard_links_is_clear(tmp_path, monkeypatch):
+    """A local filesystem that refuses os.link (not EEXIST) fails the
+    commit with an error naming the missing hard-link support, and leaves
+    neither the manifest nor its staging file behind."""
+    import errno
+
+    def no_links(src, dst):
+        raise OSError(errno.EPERM, "Operation not permitted")
+
+    monkeypatch.setattr(S.os, "link", no_links)
+    path = str(tmp_path / "_snapshots" / "snap-00000001.json")
+    with pytest.raises(OSError, match="lacks hard links"):
+        S._write_text_exclusive(None, path, '{"snapshot_id": 1}')
+    assert os.listdir(os.path.dirname(path)) == []
+
+
 def test_time_travel_read_scans_only_requested_buckets(spark, history):
     """The bucket-restricted historical read must hand Spark ONLY the
     requested buckets' files — pruning happens at file-list resolution,
