@@ -63,7 +63,7 @@ def _interleaved_docs(spark: SparkSession, sf_dir: str):
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: interleaved-document OCR extraction on sf0.001."""
     docs, media = _interleaved_docs(spark, "/root/testdata/sf0.001")
-    result = extract(docs, media, ExtractConfig(), media_strategy="frames")
+    result = extract(docs, media, ExtractConfig())
     return result.select(
         "doc_id",
         "spans_out",

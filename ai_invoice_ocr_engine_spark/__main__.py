@@ -6,7 +6,7 @@ subcommands) re-shaped for a distributed batch engine:
     python -m ai_invoice_ocr_engine_spark gen --out DIR --docs 2000 [--seed 42]
     python -m ai_invoice_ocr_engine_spark extract --docs DIR/documents.parquet \
         --media DIR/media.parquet --out OUTDIR [--buckets 32] [--no-resume] \
-        [--strategy auto|broadcast|join] [--master local[32]]
+        [--master local[32]]
     python -m ai_invoice_ocr_engine_spark oracle --docs ... --media ... --out golden.parquet
     python -m ai_invoice_ocr_engine_spark ingest --pdfs DIR_OF_PDFS --out TABLES_DIR
     python -m ai_invoice_ocr_engine_spark stats --out OUTDIR      # layout/skew report
@@ -94,10 +94,6 @@ def main(argv=None) -> int:
     e.add_argument("--media", required=True)
     e.add_argument("--out", required=True)
     e.add_argument("--buckets", type=int, default=32)
-    e.add_argument("--salt", type=int, default=4)
-    e.add_argument(
-        "--strategy", default="auto", choices=["auto", "frames", "broadcast", "join"]
-    )
     e.add_argument("--no-resume", action="store_true")
     e.add_argument("--master", default=None)
     e.add_argument("--run-id", default=None)
@@ -353,9 +349,7 @@ def main(argv=None) -> int:
                 args.out,
                 cfg=_cfg_from(args),
                 num_buckets=args.buckets,
-                salt=args.salt,
                 resume=not args.no_resume,
-                media_strategy=args.strategy,
                 run_id=args.run_id,
             )
         finally:

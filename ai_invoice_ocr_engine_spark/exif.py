@@ -414,32 +414,18 @@ def scrub_exif(data: bytes) -> bytes:
         "datetime": (0x0132, 2),
     }
     for name, (tag, typ) in packers.items():
-        v = meta.get(name)
-        if v is None:
-            continue
-        if typ == 3:
-            entries.append((tag, 3, 1, struct.pack("<H", int(v))))
-        elif typ == 5:
-            # re-rationalize at 1/10000 precision (resolutions are small)
-            entries.append(
-                (tag, 5, 1, struct.pack("<II", int(round(v * 10000)), 10000))
-            )
-        else:
-            b = v.encode("ascii", "replace") + b"\x00"
-            entries.append((tag, 2, len(b), b))
-    # safe Exif-IFD scalars are re-homed into IFD0 as plain LONGs where a
-    # standard tag exists; pixel dims re-emit under their own tags inside
-    # a minimal Exif sub-IFD to stay spec-shaped
+        e = _safe_entry(tag, typ, meta.get(name))
+        if e is not None:
+            entries.append(e)
+    # pixel dims and the original timestamp re-emit under their own tags
+    # inside a minimal Exif sub-IFD to stay spec-shaped
     sub = []
-    for name, tag in (("pixel_x_dimension", 0xA002),
-                      ("pixel_y_dimension", 0xA003),):
-        v = meta.get(name)
-        if v is not None:
-            sub.append((tag, 4, 1, struct.pack("<I", int(v))))
-    dto = meta.get("datetime_original")
-    if dto is not None:
-        b = dto.encode("ascii", "replace") + b"\x00"
-        sub.append((0x9003, 2, len(b), b))
+    for name, tag, typ in (("pixel_x_dimension", 0xA002, 4),
+                           ("pixel_y_dimension", 0xA003, 4),
+                           ("datetime_original", 0x9003, 2)):
+        e = _safe_entry(tag, typ, meta.get(name))
+        if e is not None:
+            sub.append(e)
     if sub:
         # IFD0 first, Exif IFD appended after it; pointer patched below
         ifd0 = _build_ifd(entries + [(TAG_EXIF_IFD, 4, 1, b"\x00" * 4)])
@@ -461,6 +447,28 @@ def scrub_exif(data: bytes) -> bytes:
         pos = b
     out += data[pos:]
     return bytes(out)
+
+
+def _safe_entry(tag: int, typ: int, v):
+    """One whitelisted value as a little-endian IFD entry (tag, typ, count,
+    value_bytes) of ``typ`` (ASCII 2, SHORT 3, LONG 4, RATIONAL 5), or None
+    when the source tag's type or range does not fit: parse_exif yields str
+    for ASCII, int for SHORT/LONG and float for RATIONAL, so e.g. a
+    SHORT-typed DateTime is dropped instead of forced into an ASCII slot."""
+    if typ == 2:
+        if not isinstance(v, str):
+            return None
+        b = v.encode("ascii", "replace") + b"\x00"
+        return tag, 2, len(b), b
+    if typ == 5:
+        # re-rationalize at 1/10000 precision (resolutions are small)
+        if isinstance(v, float) and 0 <= round(v * 10000) <= 0xFFFFFFFF:
+            return tag, 5, 1, struct.pack("<II", round(v * 10000), 10000)
+        return None
+    limit, code = (0xFFFF, "<H") if typ == 3 else (0xFFFFFFFF, "<I")
+    if type(v) is int and 0 <= v <= limit:
+        return tag, typ, 1, struct.pack(code, v)
+    return None
 
 
 def _build_sub_ifd(entries, base_off: int) -> bytes:

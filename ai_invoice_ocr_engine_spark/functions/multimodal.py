@@ -1006,20 +1006,37 @@ def exif_meta(media: DataFrame) -> DataFrame:
 def scrub_gps(media: DataFrame) -> DataFrame:
     """The image-privacy pass: rewrite every JPEG's EXIF to the safe-tag
     whitelist (GPS/MakerNotes/serials gone by construction, pixels
-    untouched — exif.py scrub_exif); non-JPEG media pass through
+    untouched — exif.py scrub_exif); media without metadata pass through
     unchanged. Same (media_ref, image) schema out, so the scrub composes
-    anywhere in a media pipeline."""
-    from ..exif import scrub_exif
+    anywhere in a media pipeline.
+
+    Fails closed: when the scrub of a row raises, its original bytes pass
+    through only if parse_exif finds no metadata in them (plain or torn
+    non-image bytes). A row that carries metadata but cannot be scrubbed
+    — e.g. a geo-tagged TIFF — raises with its media_ref named."""
+    from ..exif import parse_exif, scrub_exif
+
+    def carries_meta(b: bytes) -> bool:
+        try:
+            meta = parse_exif(b)
+        except Exception:
+            return False
+        return any(v is True for k, v in meta.items() if k.startswith("has_"))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for img in pdf["image"]:
+            for ref, img in zip(pdf["media_ref"], pdf["image"]):
                 b = bytes(img)
                 try:
-                    out.append(bytearray(scrub_exif(b)))
-                except Exception:
-                    out.append(bytearray(b))
+                    b = scrub_exif(b)
+                except Exception as e:
+                    if carries_meta(b):
+                        raise ValueError(
+                            f"media_ref {ref!r}: metadata scrub failed, "
+                            f"refusing to pass the original through: {e}"
+                        ) from e
+                out.append(bytearray(b))
             pdf = pdf.copy()
             pdf["image"] = out
             yield pdf

@@ -1,31 +1,25 @@
 """The Spark extraction job: media join → vectorized extract → lineage/resume.
 
-Plan shape (what Catalyst sees, SURVEY.md §3.1; frames strategy, default):
+Plan shape (what Catalyst sees, SURVEY.md §3.1) — the one extraction plan:
 
     scan(documents) → explode → filter(kind='media') → distinct refs
         → repartition → mapInPandas(OCR per distinct frame)   [CPU stage]
     scan(documents) → posexplode(spans) ⋈ ocr(media_ref)      [AQE-planned]
         → groupBy(doc_id) → array_sort merge → spans_out → sink + lineage
 
-    Frame bytes reach the OCR stage either through a semi join + byte
-    shuffle, or (media_side_path) via a once-per-node mmap blob with only
-    ref strings shuffling — the at-scale default (see extract_frames).
-
 Scale design decisions:
-  * The Python boundary is crossed ONCE per document batch — a single fused
-    mapInPandas does decode→detect→recognize→layout (SURVEY.md §4, the
-    JVM↔Python Arrow tax is the dominant cost per the CIDR'22 UDF paper).
-  * Media side: 'auto'/'frames' (the default frame-deduplicated plan —
-    OCR once per distinct media_ref, merge in Catalyst), 'broadcast'
-    (media dict shipped once per executor — zero shuffle, only valid while
-    the media table fits in memory) or 'join' (explode + equi-join +
-    re-group; AQE plans broadcast vs SMJ and splits skewed doc_id groups).
-  * Media bytes are deduplicated per (doc_id, media_ref) BEFORE the join so
-    a doc referencing the same frame twice ships it once.
-  * Skew: media-heavy documents cluster into few bucket(doc_id) partitions
-    (fixture skew tier); the pre-extract repartition key is
-    (bucket, salt=pmod(xxhash64(doc_id, run_id), S)) so those buckets fan
-    out over S tasks.
+  * The Python boundary is crossed ONCE per distinct media frame — a single
+    fused mapInPandas does decode→detect→recognize→layout (SURVEY.md §4;
+    the JVM↔Python Arrow tax is the dominant cost per the CIDR'22 UDF
+    paper). Duplicate occurrences of a frame are expanded in Catalyst.
+  * Frame bytes reach the OCR stage either through a semi join + byte
+    shuffle, or via a once-per-node mmap blob with only ref strings
+    shuffling (``media_side_path``). That is the only delivery switch;
+    batch, upsert and streaming pick it from the media path's scheme
+    (``media_side_path_for``).
+  * Skew: OCR cost is keyed by media_ref, not doc_id, so the frame
+    repartition before the OCR stage is the skew treatment; the doc-side
+    groupBy hash-distributes media-heavy documents on its own.
   * Lineage rows (partition_id, doc_count, span_count, checksum) are written
     per completed run; resume anti-joins documents against completed
     buckets (J3 of SURVEY.md §2.3) and processes only the remainder.
@@ -46,7 +40,6 @@ from pyspark.sql.types import (
     ArrayType,
     IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -55,35 +48,6 @@ from pyspark.sql.types import (
 from .config import ExtractConfig
 from . import kernels as K
 from . import snapshots
-from .extractor import extract_doc
-
-# largest media table extract(media_strategy="broadcast") will collect to
-# the driver; above this the caller is redirected to the frames/blob plans
-_BROADCAST_MEDIA_CAP_BYTES = 2 << 30  # 2 GiB
-
-RESULT_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField(
-            "spans_out",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("kind", StringType()),
-                        StructField("text", StringType()),
-                        StructField("media_ref", StringType()),
-                        StructField("order", IntegerType()),
-                    ]
-                )
-            ),
-        ),
-        StructField("invoice_fields", MapType(StringType(), StringType())),
-        StructField("n_spans_in", IntegerType()),
-        StructField("n_media", IntegerType()),
-        StructField("n_media_missing", IntegerType()),
-        StructField("n_ocr", IntegerType()),
-    ]
-)
 
 LINEAGE_SCHEMA = StructType(
     [
@@ -120,8 +84,8 @@ def build_media_blob(media_parquet: str, cache_dir: str | None = None) -> str:
 
     # Accept both a single parquet file and a directory-style parquet (the
     # shape Spark itself writes): a dir expands to its sorted part files so
-    # `extract --media <spark-written-dir>` works in the default frames
-    # strategy, not only via the byte-shuffle path.
+    # `extract --media <spark-written-dir>` works with blob delivery, not
+    # only via the byte-shuffle path.
     if os.path.isdir(media_parquet):
         parts = sorted(
             os.path.join(dp, fn)
@@ -196,49 +160,6 @@ def _load_media_side(blob_path: str) -> _BlobLookup:
     return lookup
 
 
-def _run_extract_batches(
-    batches: Iterator[pd.DataFrame],
-    cfg: ExtractConfig,
-    media_bc=None,
-    weights_bc=None,
-    media_side_path: str | None = None,
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body. Executed on executors; weights come from the
-    broadcast when provided (north_star: broadcast of model weights), else
-    are re-derived from the frozen seed via the per-worker module cache
-    (/root/reference/engine.py:17-21 singleton pattern, SURVEY.md §4)."""
-    weights = weights_bc.value if weights_bc is not None else K.resolve_weights(cfg.rec)
-    if media_side_path is not None:
-        media_lookup = _load_media_side(media_side_path)
-    else:
-        media_lookup = media_bc.value if media_bc is not None else None
-    for pdf in batches:
-        out = {k.name: [] for k in RESULT_SCHEMA.fields}
-        has_media_col = "__media" in pdf.columns
-        for i in range(len(pdf)):
-            spans = pdf["spans"].iloc[i]
-            if media_lookup is not None:
-                lookup = media_lookup
-            elif has_media_col:
-                ml = pdf["__media"].iloc[i]
-                lookup = (
-                    {m["media_ref"]: m["image"] for m in ml} if ml is not None else {}
-                )
-            else:
-                lookup = {}
-            res = extract_doc(
-                list(spans) if spans is not None else [], lookup, cfg, weights
-            )
-            out["doc_id"].append(pdf["doc_id"].iloc[i])
-            out["spans_out"].append(res["spans_out"])
-            out["invoice_fields"].append(res["invoice_fields"])
-            out["n_spans_in"].append(res["n_spans_in"])
-            out["n_media"].append(res["n_media"])
-            out["n_media_missing"].append(res["n_media_missing"])
-            out["n_ocr"].append(res["n_ocr"])
-        yield pd.DataFrame(out)
-
-
 OCR_FRAME_SCHEMA = StructType(
     [
         StructField("media_ref", StringType()),
@@ -250,7 +171,7 @@ OCR_FRAME_SCHEMA = StructType(
 def _ocr_frame_batches(
     batches: Iterator[pd.DataFrame],
     cfg: ExtractConfig,
-    weights_bc=None,
+    weights_bc,
     media_side_path: str | None = None,
 ) -> Iterator[pd.DataFrame]:
     """Per-FRAME OCR: media_ref[+image] → flat reading-order line texts.
@@ -262,9 +183,7 @@ def _ocr_frame_batches(
     like the semi join dropping them."""
     from .extractor import assemble_frame_lines, frame_geometry
 
-    weights = (
-        weights_bc.value if weights_bc is not None else K.resolve_weights(cfg.rec)
-    )
+    weights = weights_bc.value
     blob = _load_media_side(media_side_path) if media_side_path is not None else None
     for pdf in batches:
         if blob is not None:
@@ -362,17 +281,27 @@ def _media_plan_transforms_bytes(media: DataFrame) -> bool:
     )
 
 
-def extract_frames(
+def media_side_path_for(media_path: str) -> str | None:
+    """The one delivery rule for jobs that read media from a path: a local
+    parquet is served from the per-node blob (``extract``'s
+    ``media_side_path``); remote storage ('://' schemes) shuffles the
+    bytes, since the blob is built from a local file."""
+    return media_path if "://" not in media_path else None
+
+
+def extract(
     docs: DataFrame,
     media: DataFrame,
     cfg: ExtractConfig | None = None,
-    broadcast_weights: bool = True,
     media_side_path: str | None = None,
+    media_strategy: str = "auto",
 ) -> DataFrame:
-    """Frame-deduplicated extraction — the at-scale plan (and default).
+    """documents × media → extracted span sequences, one row per doc_id
+    (doc_id, spans_out, invoice_fields, n_spans_in, n_media,
+    n_media_missing, n_ocr).
 
     Python is crossed once per DISTINCT media frame (an 8 k-occurrence /
-    2.4 k-frame corpus does 3.7× less OCR than the per-document plan, and a
+    2.4 k-frame corpus does 3.7× less OCR than a per-document plan, and a
     10^12-doc web corpus reuses frames far more). Everything else is pure
     Catalyst:
 
@@ -394,19 +323,28 @@ def extract_frames(
     otherwise the on-disk originals are used. Either way only small text
     flows through the doc-side join. The reading-order/boilerplate
     semantics live in the frame UDF (shared kernels), so output is
-    bit-identical to the per-document oracle — each duplicate occurrence of
-    a frame expands to the same lines, exactly as the reference recomputes
-    it per document (/root/reference/engine.py:49-55, pure function).
+    bit-identical to the per-document oracle (extractor.extract_doc) —
+    each duplicate occurrence of a frame expands to the same lines, exactly
+    as the reference engine recomputes it per document (its engine.py:49-55
+    is a pure function).
+
+    ``media_strategy`` accepts only 'auto'/'frames': the per-document
+    'broadcast'/'join' plans were removed.
     """
+    # compatibility keyword: perfbench/run.py (frozen with the benchmark) passes it
+    if media_strategy not in ("auto", "frames"):
+        raise ValueError(
+            f"media_strategy={media_strategy!r}: the per-document "
+            "'broadcast'/'join' plans were removed; extract runs one "
+            "frame-deduplicated plan"
+        )
     cfg = cfg or ExtractConfig()
     spark = docs.sparkSession
     sc = spark.sparkContext
     target_parallelism = max(
         sc.defaultParallelism, int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     )
-    weights_bc = (
-        sc.broadcast(K.resolve_weights(cfg.rec)) if broadcast_weights else None
-    )
+    weights_bc = sc.broadcast(K.resolve_weights(cfg.rec))
 
     needed = (
         docs.select(F.explode("spans").alias("s"))
@@ -414,11 +352,12 @@ def extract_frames(
         .select(F.col("s.media_ref").alias("media_ref"))
         .distinct()
     )
+    blob_path = None
     if media_side_path is not None:
         # Blob mode: ONLY ref strings shuffle; every byte of image data goes
         # scan→blob once per node, then zero-copy mmap into each worker.
         # Eliminates the byte shuffle AND the JVM→Arrow→Python byte copies —
-        # the frames plan's remaining bandwidth tax at full core width.
+        # the plan's remaining bandwidth tax at full core width.
         if _media_plan_transforms_bytes(media):
             raise ValueError(
                 "media_side_path (blob mode) reads image bytes from the "
@@ -438,9 +377,6 @@ def extract_frames(
         # numPartitions round-robin — which also balances frame counts
         # exactly
         frames = needed.repartition(target_parallelism)
-        ocr_fn = lambda it: _ocr_frame_batches(  # noqa: E731
-            it, cfg, weights_bc=weights_bc, media_side_path=blob_path
-        )
     else:
         frames = media.select("media_ref", "image").join(needed, "media_ref", "left_semi")
         # Hash-repartition the surviving frames before OCR. Measured tradeoff:
@@ -452,8 +388,10 @@ def extract_frames(
         # OCR throughput per node, and AQE skew-split handles any oversized
         # shuffle partition.
         frames = frames.repartition(target_parallelism, "media_ref")
-        ocr_fn = lambda it: _ocr_frame_batches(it, cfg, weights_bc=weights_bc)  # noqa: E731
-    ocr = frames.mapInPandas(ocr_fn, OCR_FRAME_SCHEMA)
+    ocr = frames.mapInPandas(
+        lambda it: _ocr_frame_batches(it, cfg, weights_bc, blob_path),
+        OCR_FRAME_SCHEMA,
+    )
 
     sp = docs.select("doc_id", F.posexplode_outer("spans").alias("pos", "s"))
     j = sp.join(ocr, sp["s.media_ref"] == ocr["media_ref"], "left")
@@ -537,118 +475,6 @@ def extract_frames(
         "n_media_missing",
         "n_ocr",
     )
-
-
-def extract(
-    docs: DataFrame,
-    media: DataFrame,
-    cfg: ExtractConfig | None = None,
-    media_strategy: str = "auto",
-    broadcast_weights: bool = True,
-    media_side_path: str | None = None,
-) -> DataFrame:
-    """documents × media → extracted span sequences (RESULT_SCHEMA).
-
-    ``media_strategy``: 'frames' (and 'auto', the default) = the
-    frame-deduplicated plan of extract_frames — OCR once per distinct
-    media_ref, merge in Catalyst. 'broadcast' / 'join' = the per-document
-    plans (each doc's UDF call receives its own media bytes) — kept as
-    testing seams and for corpora with no frame reuse.
-
-    ``media_side_path``: parquet path of the media table. For 'frames' it
-    selects blob delivery (only ref strings shuffle; bytes come from a
-    once-per-node mmap blob — the fastest path, see extract_frames). For
-    'broadcast' it replaces the driver collect+pickle broadcast with the
-    same per-node blob."""
-    cfg = cfg or ExtractConfig()
-    spark = docs.sparkSession
-    sc = spark.sparkContext
-
-    if media_strategy in ("auto", "frames"):
-        # frame-deduplicated plan: the default — see extract_frames
-        return extract_frames(
-            docs,
-            media,
-            cfg,
-            broadcast_weights=broadcast_weights,
-            media_side_path=media_side_path,
-        )
-
-    weights_bc = (
-        sc.broadcast(K.resolve_weights(cfg.rec)) if broadcast_weights else None
-    )
-
-    # The documents table is narrow (text-only) so a small corpus arrives in
-    # very few input splits; the extract stage is CPU-bound, so fan it out to
-    # the full core count before crossing into Python. (At 100 TB the scan
-    # itself produces thousands of splits and this repartition collapses to
-    # a no-op round-robin of already-wide input.)
-    target_parallelism = max(
-        sc.defaultParallelism, int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    )
-
-    if media_strategy == "broadcast":
-        if media_side_path is not None:
-            if _media_plan_transforms_bytes(media):
-                raise ValueError(
-                    "media_side_path (blob mode) reads image bytes from the "
-                    "on-disk parquet, but this media DataFrame COMPUTES its "
-                    "image column — pass media_side_path=None so the "
-                    "transformed bytes are collected instead."
-                )
-            blob_path = build_media_blob(media_side_path)
-            fn = lambda it: _run_extract_batches(  # noqa: E731
-                it, cfg, weights_bc=weights_bc, media_side_path=blob_path
-            )
-        else:
-            # Hard cap before collecting the media table to the driver: this
-            # strategy is the SMALL-media testing seam; at web scale the
-            # collect below would OOM the driver long before the executors
-            # noticed. Estimate from the table's own stats (count × avg
-            # byte length — one cheap aggregate, no bytes moved) and refuse
-            # loudly, pointing at the plans that do scale.
-            est = media.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.avg(F.length("image")).alias("avg_len"),
-            ).collect()[0]
-            est_bytes = int((est["n"] or 0) * (est["avg_len"] or 0.0))
-            if est_bytes > _BROADCAST_MEDIA_CAP_BYTES:
-                raise ValueError(
-                    f"media_strategy='broadcast' would collect ~{est_bytes:,}"
-                    f" bytes of media to the driver (cap "
-                    f"{_BROADCAST_MEDIA_CAP_BYTES:,}); use the default "
-                    "'frames' plan, or pass media_side_path for node-local "
-                    "blob delivery"
-                )
-            lookup = {
-                r["media_ref"]: bytes(r["image"])
-                for r in media.select("media_ref", "image").collect()
-            }
-            media_bc = sc.broadcast(lookup)
-            fn = lambda it: _run_extract_batches(it, cfg, media_bc=media_bc, weights_bc=weights_bc)  # noqa: E731
-        work = docs.select("doc_id", "spans")
-        if work.rdd.getNumPartitions() < target_parallelism:
-            work = work.repartition(target_parallelism)
-        return work.mapInPandas(fn, RESULT_SCHEMA)
-
-    # join strategy: ship each doc exactly the frames it references
-    needed = (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .where(F.col("s.kind") == F.lit("media"))
-        .select("doc_id", F.col("s.media_ref").alias("media_ref"))
-        .distinct()  # dedupe duplicate refs within a doc before shipping bytes
-    )
-    doc_media = (
-        needed.join(media.select("media_ref", "image"), "media_ref", "inner")
-        .groupBy("doc_id")
-        .agg(F.collect_list(F.struct("media_ref", "image")).alias("__media"))
-    )
-    enriched = docs.select("doc_id", "spans").join(doc_media, "doc_id", "left")
-    # AQE may coalesce the small join output below the core count; the
-    # extract stage is CPU-bound, so hold it at full width.
-    enriched = enriched.repartition(target_parallelism, "doc_id")
-    fn = lambda it: _run_extract_batches(it, cfg, weights_bc=weights_bc)  # noqa: E731
-    return enriched.mapInPandas(fn, RESULT_SCHEMA)
 
 
 def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
@@ -803,9 +629,7 @@ def run_extract(
     out_dir: str,
     cfg: ExtractConfig | None = None,
     num_buckets: int = 32,
-    salt: int = 4,
     resume: bool = True,
-    media_strategy: str = "auto",
     run_id: str | None = None,
 ) -> dict:
     """End-to-end job: read → (resume filter) → extract → bucketed write +
@@ -833,27 +657,9 @@ def run_extract(
             skipped = done.count()
             docs = docs.join(done, "bucket", "left_anti")  # J3: resume anti-join
 
-    if media_strategy in ("broadcast", "join"):
-        # per-document plans are CPU-bound on doc partitions: salt spreads
-        # skewed (media-heavy) buckets across `salt` tasks each
-        docs = docs.withColumn(
-            "__salt", F.pmod(F.xxhash64("doc_id", F.lit(run_id)), F.lit(salt))
-        ).repartition(
-            max(spark.sparkContext.defaultParallelism, num_buckets), "bucket", "__salt"
-        )
-    # (frames plan: OCR cost is keyed by media_ref, not doc_id — frame
-    # repartitioning inside extract_frames is the skew treatment, and the
-    # doc-side groupBy hash-distributes media-heavy docs on its own)
-
     t0 = time.time()
     result = with_bucket(
-        extract(
-            docs,
-            media,
-            cfg,
-            media_strategy=media_strategy,
-            media_side_path=media_path if "://" not in media_path else None,
-        ),
+        extract(docs, media, cfg, media_side_path=media_side_path_for(media_path)),
         num_buckets,
     )
     result.persist()
@@ -927,7 +733,6 @@ def upsert_extract(
     media_path: str | None = None,
     where: str = "",
     cfg: ExtractConfig | None = None,
-    media_strategy: str = "auto",
     run_id: str | None = None,
     delete: bool = False,
 ) -> dict:
@@ -974,13 +779,7 @@ def upsert_extract(
             raise ValueError("upsert re-extraction requires media_path")
         media = spark.read.parquet(media_path)
         new = with_bucket(
-            extract(
-                sel,
-                media,
-                cfg,
-                media_strategy=media_strategy,
-                media_side_path=media_path if "://" not in media_path else None,
-            ),
+            extract(sel, media, cfg, media_side_path=media_side_path_for(media_path)),
             num_buckets,
         )
         # join/count on the SELECTION's ids, not the extract output:

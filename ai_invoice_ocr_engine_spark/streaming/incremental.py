@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import snapshots
 from ..config import ExtractConfig
-from ..pipeline import extract, lineage_of, with_bucket
+from ..pipeline import extract, lineage_of, media_side_path_for, with_bucket
 
 
 def incremental_extract(
@@ -37,7 +37,6 @@ def incremental_extract(
     checkpoint_dir: str,
     cfg: ExtractConfig | None = None,
     num_buckets: int = 32,
-    media_strategy: str = "broadcast",
     trigger_once: bool = True,
 ):
     """Start (and by default run-once) the incremental extraction stream.
@@ -47,6 +46,7 @@ def incremental_extract(
     """
     cfg = cfg or ExtractConfig()
     media = spark.read.parquet(media_path)
+    media_side_path = media_side_path_for(media_path)
     schema = spark.read.parquet(docs_stream_dir).schema
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -102,7 +102,7 @@ def incremental_extract(
             if todo.isEmpty():
                 return
         result = with_bucket(
-            extract(todo, media, cfg, media_strategy=media_strategy), num_buckets
+            extract(todo, media, cfg, media_side_path=media_side_path), num_buckets
         )
         result.persist()
         try:

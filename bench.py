@@ -60,13 +60,7 @@ def run_extract_bench(spark, docs_path: str, media_path: str) -> tuple[float, in
     # checksum action: forces OCR + merge + full spans_out materialization
     # (a bare count() lets Catalyst prune the OCR join entirely)
     row = (
-        extract(
-            docs,
-            media,
-            ExtractConfig(),
-            media_strategy="frames",
-            media_side_path=media_path,
-        )
+        extract(docs, media, ExtractConfig(), media_side_path=media_path)
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.bit_xor(F.xxhash64("doc_id", F.to_json("spans_out"))).alias("ck"),

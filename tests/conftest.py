@@ -24,3 +24,16 @@ def corpus(tmp_path_factory):
     docs_path, media_path = FX.write_corpus(str(d), docs, media)
     return {"dir": str(d), "docs_path": docs_path, "media_path": media_path,
             "docs": docs, "media": media}
+
+
+@pytest.fixture(scope="session")
+def golden_spans(corpus):
+    """The single-process oracle (extractor.extract_doc via run_oracle) on
+    the t1 corpus, as {doc_id: [(kind, text, media_ref, order), ...]} —
+    the expected side of the Spark-vs-oracle equality checks."""
+    from ai_invoice_ocr_engine_spark import oracle as O
+    from ai_invoice_ocr_engine_spark.config import ExtractConfig
+
+    from .util import spans_key
+
+    return spans_key(O.run_oracle(corpus["docs"], corpus["media"], ExtractConfig()))

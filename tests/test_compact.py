@@ -33,7 +33,6 @@ def _run_fragmented(spark, corpus, out):
         out,
         cfg=ExtractConfig(),
         num_buckets=NB,
-        media_strategy="broadcast",
         run_id="run-base",
     )
     assert stats["docs"] > 0
@@ -119,7 +118,6 @@ def test_bucket_stats_report(spark, corpus, tmp_path):
         out,
         cfg=ExtractConfig(),
         num_buckets=NB,
-        media_strategy="broadcast",
         run_id="run-stats",
     )
     rep = bucket_stats(spark, out)

@@ -25,9 +25,10 @@ _OS_EXIF_JPG = (
 _OS_PLAIN_JPG = "/usr/share/doc/nodejs/thin-white-stripe.jpg"
 
 
-def _gps_exif_app1(endian: str) -> bytes:
+def _gps_exif_app1(endian: str, extra=()) -> bytes:
     """A hand-built APP1 Exif payload: IFD0 {orientation=6, GPSInfo ->
-    GPS IFD} with lat 37;46;30 N, lon 122;25;10 W."""
+    GPS IFD} with lat 37;46;30 N, lon 122;25;10 W. ``extra``: more
+    inline (tag, type, count, value) IFD0 entries."""
     fmt = "<" if endian == "II" else ">"
 
     def ifd(entries, ifd_off, tail_vals):
@@ -47,7 +48,7 @@ def _gps_exif_app1(endian: str) -> bytes:
 
     # GPS IFD will live after IFD0; compute sizes: IFD0 has 2 entries
     ifd0_off = 8
-    ifd0_size = 2 + 12 * 2 + 4
+    ifd0_size = 2 + 12 * (2 + len(extra)) + 4
     gps_off = ifd0_off + ifd0_size
     gps_entries = [
         (0x0001, 2, 2, b"N\x00"),
@@ -57,10 +58,11 @@ def _gps_exif_app1(endian: str) -> bytes:
     ]
     gps = ifd(gps_entries, gps_off, None)
     ifd0 = ifd(
-        [
+        sorted([
             (0x0112, 3, 1, struct.pack(fmt + "H", 6)),
             (0x8825, 4, 1, struct.pack(fmt + "I", gps_off)),
-        ],
+            *extra,
+        ]),
         ifd0_off,
         None,
     )
@@ -71,8 +73,8 @@ def _gps_exif_app1(endian: str) -> bytes:
     return b"Exif\x00\x00" + tiff
 
 
-def _with_gps(jpeg: bytes, endian: str) -> bytes:
-    payload = _gps_exif_app1(endian)
+def _with_gps(jpeg: bytes, endian: str, extra=()) -> bytes:
+    payload = _gps_exif_app1(endian, extra)
     seg = b"\xff\xe1" + struct.pack(">H", len(payload) + 2) + payload
     return jpeg[:2] + seg + jpeg[2:]
 
@@ -168,6 +170,67 @@ def test_spark_exif_meta_and_scrub_gps(spark):
     assert np.array_equal(
         decode_image(after["gps_mm"]), decode_image(base)
     )
+
+
+@pytest.mark.skipif(not glob.os.path.exists(_OS_PLAIN_JPG),
+                    reason="OS plain JPEG absent")
+@pytest.mark.parametrize("endian", ["II", "MM"])
+def test_mistyped_safe_tag_is_dropped_not_repacked(endian):
+    """A safe tag whose type does not match its slot (DateTime typed
+    SHORT, resolutions typed SHORT/ASCII, an out-of-range orientation
+    LONG) is dropped from the whitelist rebuild; the GPS IFD goes, the
+    well-typed safe tag stays."""
+    fmt = "<" if endian == "II" else ">"
+    base = open(_OS_PLAIN_JPG, "rb").read()
+    bad = [
+        (0x011A, 3, 1, struct.pack(fmt + "H", 72)),  # XResolution as SHORT
+        (0x011B, 2, 2, b"7\x00"),                    # YResolution as ASCII
+        (0x0132, 3, 1, struct.pack(fmt + "H", 2024)),  # DateTime as SHORT
+    ]
+    tagged = _with_gps(base, endian, bad)
+    m = parse_exif(tagged)
+    assert m["has_gps"] and m["datetime"] == 2024
+    s = scrub_exif(tagged)
+    m2 = parse_exif(s)
+    assert m2["has_gps"] is False and m2["orientation"] == 6
+    for name in ("datetime", "x_resolution", "y_resolution"):
+        assert name not in m2
+    assert np.array_equal(decode_image(tagged), decode_image(s))
+
+    # a LONG orientation too large for the SHORT slot is dropped as well
+    big = [(0x0112, 4, 1, struct.pack(fmt + "I", 1 << 20))]
+    m3 = parse_exif(scrub_exif(_with_gps(base, endian, big)))
+    assert "orientation" not in m3 and m3["has_gps"] is False
+
+
+@pytest.mark.skipif(not glob.os.path.exists(_OS_PLAIN_JPG),
+                    reason="OS plain JPEG absent")
+def test_spark_scrub_gps_fails_closed(spark):
+    """scrub_gps never emits unscrubbed metadata: the SHORT-DateTime GPS
+    JPEG comes out GPS-free, and a geo-tagged TIFF (which the scrub
+    refuses to rewrite) fails the job with its media_ref named instead of
+    passing its coordinates through."""
+    from ai_invoice_ocr_engine_spark.functions.multimodal import scrub_gps
+
+    base = open(_OS_PLAIN_JPG, "rb").read()
+    short_dt = [(0x0132, 3, 1, struct.pack("<H", 2024))]
+    rows = [
+        ("short_dt", bytearray(_with_gps(base, "II", short_dt))),
+        ("plain", bytearray(base)),
+    ]
+    media = spark.createDataFrame(rows, "media_ref string, image binary")
+    after = {r["media_ref"]: bytes(r["image"]) for r in scrub_gps(media).collect()}
+    assert parse_exif(after["short_dt"])["has_gps"] is False
+    assert parse_exif(after["short_dt"])["orientation"] == 6
+    assert after["plain"] == base
+
+    geo_tiff = _gps_exif_app1("MM")[6:]
+    media = spark.createDataFrame(
+        rows + [("geo_tiff", bytearray(geo_tiff))], "media_ref string, image binary"
+    )
+    with pytest.raises(Exception, match="geo_tiff") as ei:
+        scrub_gps(media).collect()
+    assert "scrub failed" in str(ei.value)
 
 
 @pytest.mark.skipif(not glob.os.path.exists(_OS_PLAIN_JPG),

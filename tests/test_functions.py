@@ -176,10 +176,10 @@ def test_resize_frames(spark, corpus):
         assert img.shape == (64, 96)
 
 
-def test_incremental_stream_matches_batch(spark, corpus, tmp_path):
+def test_incremental_stream_matches_batch(spark, corpus, golden_spans, tmp_path):
+    """The stream's micro-batches run the batch extraction plan: the
+    streamed table equals the single-process oracle."""
     from ai_invoice_ocr_engine_spark.streaming import incremental_extract
-    from ai_invoice_ocr_engine_spark.config import ExtractConfig
-    from ai_invoice_ocr_engine_spark.pipeline import extract
 
     from .util import assert_span_equal, spans_key
 
@@ -196,15 +196,7 @@ def test_incremental_stream_matches_batch(spark, corpus, tmp_path):
     )
     q.awaitTermination(300)
     got = spans_key(spark.read.parquet(f"{out}/spans").collect())
-    want = spans_key(
-        extract(
-            spark.read.parquet(corpus["docs_path"]),
-            spark.read.parquet(corpus["media_path"]),
-            ExtractConfig(),
-            media_strategy="broadcast",
-        ).collect()
-    )
-    assert_span_equal(got, want)
+    assert_span_equal(got, golden_spans)
 
 
 def test_ivf_full_probe_equals_brute_force(emb_df):

@@ -115,7 +115,7 @@ def test_ingested_tables_run_the_pipeline(spark, pdf_corpus):
     docs_rows = [r.asDict(recursive=True) for r in docs.collect()]
     media_rows = [r.asDict(recursive=True) for r in media.collect()]
     golden = spans_key(O.run_oracle(docs_rows, media_rows, cfg))
-    result = extract(docs, media, cfg, media_strategy="frames")
+    result = extract(docs, media, cfg)
     assert_span_equal(spans_key(result.collect()), golden)
     # the embedded rendered page must actually produce OCR spans in place
     kinds = [k for (k, *_r) in golden["pdf-a"]]
@@ -181,8 +181,8 @@ def test_pdf_corpus_roundtrip(spark, tmp_path):
                       for s in r.asDict(recursive=True)["spans_out"]]
         for r in rows
     }
-    a = key(extract(ing_docs, ing_media, cfg, media_strategy="frames").collect())
-    b = key(extract(orig_docs, orig_media, cfg, media_strategy="frames").collect())
+    a = key(extract(ing_docs, ing_media, cfg).collect())
+    b = key(extract(orig_docs, orig_media, cfg).collect())
     assert a == b
 
 

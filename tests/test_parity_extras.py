@@ -144,10 +144,11 @@ def test_span_equality_report(spark, corpus):
 
     docs = spark.read.parquet(corpus["docs_path"]).limit(20)
     media = spark.read.parquet(corpus["media_path"])
-    r1 = extract(docs, media, ExtractConfig(), media_strategy="broadcast")
-    r2 = extract(docs, media, ExtractConfig(), media_strategy="join")
+    # the two media deliveries: byte shuffle vs per-node blob
+    r1 = extract(docs, media, ExtractConfig())
+    r2 = extract(docs, media, ExtractConfig(), media_side_path=corpus["media_path"])
     rep = M.span_equality_report(r1, r2).collect()[0]
-    assert rep["pass_rate"] == 1.0
+    assert rep["n_docs"] == 20 and rep["pass_rate"] == 1.0
 
 
 def test_export_sinks(spark, corpus, tmp_path):
@@ -157,7 +158,7 @@ def test_export_sinks(spark, corpus, tmp_path):
 
     docs = spark.read.parquet(corpus["docs_path"]).limit(10)
     media = spark.read.parquet(corpus["media_path"])
-    res = extract(docs, media, ExtractConfig(), media_strategy="broadcast")
+    res = extract(docs, media, ExtractConfig())
     res.persist()
     flat = flat_spans(res)
     assert flat.columns == ["doc_id", "idx", "kind", "text", "media_ref"]
@@ -252,7 +253,7 @@ def test_html_sink(spark, corpus, tmp_path):
 
     docs = spark.read.parquet(corpus["docs_path"]).limit(6)
     media = spark.read.parquet(corpus["media_path"])
-    res = extract(docs, media, ExtractConfig(), media_strategy="broadcast")
+    res = extract(docs, media, ExtractConfig())
     res.persist()
     p = str(tmp_path / "report.html")
     write_html(res, p, run_id="r3")

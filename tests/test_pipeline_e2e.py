@@ -1,6 +1,7 @@
 """End-to-end golden tests (SURVEY.md §5.2(3)): the Spark pipeline must
 reproduce the single-process oracle's span sequences exactly, under both
-media strategies, including all edge documents."""
+media deliveries (byte shuffle and per-node blob), including all edge
+documents."""
 
 import pytest
 
@@ -11,44 +12,37 @@ from ai_invoice_ocr_engine_spark.pipeline import extract
 from .util import assert_span_equal, spans_key
 
 
-@pytest.fixture(scope="module")
-def golden(corpus):
-    return spans_key(O.run_oracle(corpus["docs"], corpus["media"], ExtractConfig()))
-
-
-@pytest.mark.parametrize("strategy", ["frames", "broadcast", "join"])
-def test_golden_equality(spark, corpus, golden, strategy):
+# one case: the "frames" id keeps the test name stable
+@pytest.mark.parametrize("plan", ["frames"])
+def test_golden_equality(spark, corpus, golden_spans, plan):
+    """The byte-shuffle delivery equals the oracle."""
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(corpus["media_path"])
-    result = extract(docs, media, ExtractConfig(), media_strategy=strategy)
+    result = extract(docs, media, ExtractConfig())
     actual = spans_key(result.collect())
-    assert_span_equal(actual, golden)
+    assert_span_equal(actual, golden_spans)
 
 
-def test_golden_equality_frames_blob_side_input(spark, corpus, golden):
+def test_golden_equality_frames_blob_side_input(spark, corpus, golden_spans):
     """The blob side-input delivery (only refs shuffle, bytes via per-node
     mmap) must be byte-identical to the shuffle delivery AND the oracle."""
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(corpus["media_path"])
     result = extract(
-        docs,
-        media,
-        ExtractConfig(),
-        media_strategy="frames",
-        media_side_path=corpus["media_path"],
+        docs, media, ExtractConfig(), media_side_path=corpus["media_path"]
     )
-    assert_span_equal(spans_key(result.collect()), golden)
+    assert_span_equal(spans_key(result.collect()), golden_spans)
 
 
-def test_edge_docs_present(spark, corpus, golden):
+def test_edge_docs_present(spark, corpus, golden_spans):
     """Edge docs (FIXTURES.md §1) survive the pipeline: empty spans, dangling
     media_ref, blank image."""
     docs = corpus["docs"]
     empty_id = docs[0]["doc_id"]
     dangling_id = docs[6]["doc_id"]
-    assert golden[empty_id] == []
+    assert golden_spans[empty_id] == []
     # dangling ref: media span contributes nothing, text span passes through
-    assert [k for (k, *_rest) in golden[dangling_id]] == ["text"]
+    assert [k for (k, *_rest) in golden_spans[dangling_id]] == ["text"]
 
 
 def test_oracle_deterministic(corpus):
@@ -65,30 +59,9 @@ def test_invoice_fields_match_oracle(spark, corpus):
     golden_fields = {r["doc_id"]: dict(r["invoice_fields"]) for r in rows}
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(corpus["media_path"])
-    result = extract(docs, media, cfg, media_strategy="broadcast")
+    result = extract(docs, media, cfg)
     for r in result.select("doc_id", "invoice_fields").collect():
         assert dict(r["invoice_fields"] or {}) == golden_fields[r["doc_id"]]
-
-
-def test_broadcast_media_cap_refuses_oversized_collect(spark, corpus, monkeypatch):
-    """VERDICT r3 'what's wrong' #3: the broadcast strategy collects the
-    media table to the driver; above the size cap it must refuse loudly
-    (pointing at the scaling plans) instead of OOMing the driver at 100x."""
-    import pytest
-
-    from ai_invoice_ocr_engine_spark import pipeline as P
-
-    docs = spark.read.parquet(corpus["docs_path"])
-    media = spark.read.parquet(corpus["media_path"])
-    monkeypatch.setattr(P, "_BROADCAST_MEDIA_CAP_BYTES", 1024)
-    with pytest.raises(ValueError, match="frames"):
-        P.extract(docs, media, ExtractConfig(), media_strategy="broadcast")
-    # blob delivery bypasses the driver collect, so the cap does not apply
-    out = P.extract(
-        docs, media, ExtractConfig(), media_strategy="broadcast",
-        media_side_path=corpus["media_path"],
-    )
-    assert out.count() == docs.count()
 
 
 def test_blob_mode_respects_filtered_media(spark, corpus):
@@ -99,25 +72,23 @@ def test_blob_mode_respects_filtered_media(spark, corpus):
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(corpus["media_path"])
     half = media.where(F.xxhash64("media_ref") % 2 == 0)
-    via_shuffle = extract(docs, half, ExtractConfig(), media_strategy="frames")
+    via_shuffle = extract(docs, half, ExtractConfig())
     via_blob = extract(
         docs,
         half,
         ExtractConfig(),
-        media_strategy="frames",
         media_side_path=corpus["media_path"],  # blob holds ALL refs
     )
     assert_span_equal(spans_key(via_blob.collect()), spans_key(via_shuffle.collect()))
 
 
-def test_mixed_format_media_golden(spark, corpus, tmp_path):
+def test_mixed_format_media_golden(spark, corpus, golden_spans, tmp_path):
     """Polymorphic S2 in the DISTRIBUTED path: re-encode half the media
     table as PNG; engine and oracle (sharing decode_image) must still agree
     doc-for-doc, and output must equal the all-SYNF golden (same pixels)."""
     import numpy as np
 
     from ai_invoice_ocr_engine_spark import kernels as K
-    from ai_invoice_ocr_engine_spark import oracle as O
 
     media_rows = []
     for i, m in enumerate(corpus["media"]):
@@ -133,16 +104,15 @@ def test_mixed_format_media_golden(spark, corpus, tmp_path):
         "media_ref string, width int, height int, image binary, n_lines int",
     ).write.parquet(mixed_path)
 
-    golden = spans_key(O.run_oracle(corpus["docs"], corpus["media"], ExtractConfig()))
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(mixed_path)
-    result = extract(docs, media, ExtractConfig(), media_strategy="frames")
-    assert_span_equal(spans_key(result.collect()), golden)
+    result = extract(docs, media, ExtractConfig())
+    assert_span_equal(spans_key(result.collect()), golden_spans)
 
 
 def test_blob_mode_accepts_directory_parquet(spark, corpus, tmp_path):
     """ADVICE r1 #1: `extract --media <spark-written-dir>` must work in the
-    default frames/blob strategy — build_media_blob expands a directory
+    default blob delivery — build_media_blob expands a directory
     parquet to its part files. Output must equal the single-file path."""
     from ai_invoice_ocr_engine_spark.pipeline import build_media_blob, extract
 
@@ -295,11 +265,13 @@ def test_mixed_synf_png_jpeg_bmp_tiff_media_golden(spark, corpus, tmp_path):
     golden = spans_key(O.run_oracle(corpus["docs"], media_rows, ExtractConfig()))
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(mixed_path)
-    result = extract(docs, media, ExtractConfig(), media_strategy="frames")
+    result = extract(docs, media, ExtractConfig())
     assert_span_equal(spans_key(result.collect()), golden)
 
 
-def test_rotated_media_ocr_equals_upright_golden(spark, corpus, tmp_path):
+def test_rotated_media_ocr_equals_upright_golden(
+    spark, corpus, golden_spans, tmp_path
+):
     """VERDICT r1 next-step #10: rotate every confidently-classifiable frame
     by a quadrant; the distributed engine (orientation gate on by default,
     reference prep.ori) must produce spans equal to the UPRIGHT corpus's
@@ -307,7 +279,6 @@ def test_rotated_media_ocr_equals_upright_golden(spark, corpus, tmp_path):
     import numpy as np
 
     from ai_invoice_ocr_engine_spark import kernels as K
-    from ai_invoice_ocr_engine_spark import oracle as O
 
     n_rotated = 0
     media_rows = []
@@ -331,14 +302,12 @@ def test_rotated_media_ocr_equals_upright_golden(spark, corpus, tmp_path):
         "media_ref string, width int, height int, image binary, n_lines int",
     ).write.parquet(rot_path)
 
-    golden = spans_key(O.run_oracle(corpus["docs"], corpus["media"], ExtractConfig()))
     result = extract(
         spark.read.parquet(corpus["docs_path"]),
         spark.read.parquet(rot_path),
         ExtractConfig(),
-        media_strategy="frames",
     )
-    assert_span_equal(spans_key(result.collect()), golden)
+    assert_span_equal(spans_key(result.collect()), golden_spans)
 
 
 def test_blob_mode_rejects_transformed_media_bytes(spark, corpus, tmp_path):
@@ -356,14 +325,12 @@ def test_blob_mode_rejects_transformed_media_bytes(spark, corpus, tmp_path):
     resized = resize_frames(media, 64, 64)
     with _pytest.raises(ValueError, match="COMPUTES its image column"):
         extract(
-            docs, resized, ExtractConfig(),
-            media_strategy="frames", media_side_path=corpus["media_path"],
+            docs, resized, ExtractConfig(), media_side_path=corpus["media_path"]
         )
     # a pure filter keeps blob mode available (refs gate, bytes from disk)
     filtered = media.where(F.xxhash64("media_ref") % 2 == 0)
     out = extract(
-        docs, filtered, ExtractConfig(),
-        media_strategy="frames", media_side_path=corpus["media_path"],
+        docs, filtered, ExtractConfig(), media_side_path=corpus["media_path"]
     )
     assert out.count() > 0
 
@@ -392,16 +359,11 @@ def test_corrupt_media_policy(spark, corpus, tmp_path):
     media = spark.read.parquet(bad_path)
     with _pytest.raises(Exception, match="media_ref"):  # task fails loudly,
         # naming the offending frame (wrapped by Spark's Python-worker error)
-        extract(docs, media, ExtractConfig(), media_strategy="frames").collect()
+        extract(docs, media, ExtractConfig()).collect()
 
     cfg_skip = dataclasses.replace(ExtractConfig(), on_bad_media="skip")
-    got = spans_key(extract(docs, media, cfg_skip, media_strategy="frames").collect())
+    got = spans_key(extract(docs, media, cfg_skip).collect())
     # golden: same corpus with the corrupt frame simply absent
     absent = [m for m in media_rows if m["media_ref"] != bad_ref]
     want = spans_key(O.run_oracle(corpus["docs"], absent, cfg_skip))
     assert_span_equal(got, want)
-    # per-document plans route through extract_doc's policy branch: same result
-    got_b = spans_key(
-        extract(docs, media, cfg_skip, media_strategy="broadcast").collect()
-    )
-    assert_span_equal(got_b, want)

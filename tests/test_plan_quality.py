@@ -87,20 +87,35 @@ def test_grouping_sets_single_pass(spark, name):
 
 def test_extract_plan_single_python_crossing(spark, corpus):
     """The flagship plan crosses JVM<->Python exactly once (per distinct
-    frame), SURVEY.md §4 — the CIDR'22 Arrow-boundary tax design rule."""
+    frame), SURVEY.md §4 — the CIDR'22 Arrow-boundary tax design rule —
+    under both media deliveries: byte shuffle and per-node blob."""
     from ai_invoice_ocr_engine_spark.config import ExtractConfig
     from ai_invoice_ocr_engine_spark.pipeline import extract
 
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(corpus["media_path"])
-    plan = (
-        extract(docs, media, ExtractConfig(), media_strategy="frames")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("MapInPandas") == 1
-    assert "BatchEvalPython" not in plan  # no row-at-a-time Python anywhere
+    for media_side_path in (None, corpus["media_path"]):
+        plan = (
+            extract(docs, media, ExtractConfig(), media_side_path=media_side_path)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert plan.count("MapInPandas") == 1, media_side_path
+        # no row-at-a-time Python anywhere
+        assert "BatchEvalPython" not in plan, media_side_path
+
+
+@pytest.mark.parametrize("removed", ["broadcast", "join"])
+def test_extract_rejects_removed_per_document_plans(spark, corpus, removed):
+    """extract runs one plan; its compatibility keyword takes only
+    'auto'/'frames' and names the removed per-document plans otherwise."""
+    from ai_invoice_ocr_engine_spark.pipeline import extract
+
+    docs = spark.read.parquet(corpus["docs_path"])
+    media = spark.read.parquet(corpus["media_path"])
+    with pytest.raises(ValueError, match="plans were removed"):
+        extract(docs, media, media_strategy=removed)
 
 
 def test_ivf_assign_is_pure_projection(spark):

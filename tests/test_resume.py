@@ -20,7 +20,7 @@ from .util import assert_span_equal, spans_key
 NB = 8  # few buckets so every bucket is populated at test scale
 
 
-def test_resume_skips_completed_buckets(spark, corpus, tmp_path):
+def test_resume_skips_completed_buckets(spark, corpus, golden_spans, tmp_path):
     out = str(tmp_path / "out")
     cfg = ExtractConfig()
 
@@ -29,9 +29,7 @@ def test_resume_skips_completed_buckets(spark, corpus, tmp_path):
     docs_all = with_bucket(spark.read.parquet(corpus["docs_path"]), NB)
     media = spark.read.parquet(corpus["media_path"])
     prefix = docs_all.where(F.col("bucket") <= 2)
-    part = with_bucket(
-        extract(prefix, media, cfg, media_strategy="broadcast"), NB
-    )
+    part = with_bucket(extract(prefix, media, cfg), NB)
     part.write.mode("append").partitionBy("bucket").parquet(os.path.join(out, "spans"))
     lineage_of(part, "run-partial").write.mode("append").partitionBy(
         "partition_id"
@@ -47,18 +45,14 @@ def test_resume_skips_completed_buckets(spark, corpus, tmp_path):
         cfg=cfg,
         num_buckets=NB,
         resume=True,
-        media_strategy="broadcast",
         run_id="run-resume",
     )
     assert stats["buckets_skipped"] == 3
     assert stats["docs"] == docs_all.count() - n_prefix  # no recompute
 
-    # --- final table equals an uninterrupted run ---
+    # --- final table equals the single-process oracle ---
     final = spans_key(spark.read.parquet(os.path.join(out, "spans")).collect())
-    full = spans_key(
-        extract(docs_all, media, cfg, media_strategy="broadcast").collect()
-    )
-    assert_span_equal(final, full)
+    assert_span_equal(final, golden_spans)
 
     # lineage accounting: every bucket exactly once, counts add up
     lin = spark.read.parquet(os.path.join(out, "lineage"))
@@ -71,12 +65,12 @@ def test_rerun_is_noop(spark, corpus, tmp_path):
     out = str(tmp_path / "out2")
     s1 = run_extract(
         spark, corpus["docs_path"], corpus["media_path"], out,
-        num_buckets=NB, media_strategy="broadcast", run_id="r1",
+        num_buckets=NB, run_id="r1",
     )
     assert s1["buckets_skipped"] == 0 and s1["docs"] > 0
     s2 = run_extract(
         spark, corpus["docs_path"], corpus["media_path"], out,
-        num_buckets=NB, media_strategy="broadcast", run_id="r2",
+        num_buckets=NB, run_id="r2",
     )
     assert s2["docs"] == 0  # everything already completed
 
@@ -84,12 +78,14 @@ def test_rerun_is_noop(spark, corpus, tmp_path):
     assert set(LINEAGE_SCHEMA.fieldNames()) == set(lin.columns)
 
 
-def test_crash_between_data_and_lineage_no_duplicates(spark, corpus, tmp_path):
+def test_crash_between_data_and_lineage_no_duplicates(
+    spark, corpus, golden_spans, tmp_path
+):
     """A run that died AFTER writing a bucket's spans but BEFORE its
     lineage row must be recoverable: the resumed run recomputes that
     bucket and REPLACES the orphaned partition (dynamic partition
-    overwrite), so the final table has no duplicates and equals a clean
-    run. Lineage is the commit marker; data without lineage is invisible
+    overwrite), so the final table has no duplicates and equals the
+    oracle. Lineage is the commit marker; data without lineage is invisible
     to resume and must be safely overwritten."""
     out = str(tmp_path / "out_crash")
     cfg = ExtractConfig()
@@ -99,18 +95,14 @@ def test_crash_between_data_and_lineage_no_duplicates(spark, corpus, tmp_path):
 
     # simulate the crash: bucket 3's spans land on disk, its lineage does NOT
     orphan = with_bucket(
-        extract(docs_all.where(F.col("bucket") == 3), media, cfg,
-                media_strategy="broadcast"),
-        NB,
+        extract(docs_all.where(F.col("bucket") == 3), media, cfg), NB
     )
     orphan.write.mode("append").partitionBy("bucket").parquet(
         os.path.join(out, "spans")
     )
     # buckets 0-2 completed properly (data + lineage)
     done = with_bucket(
-        extract(docs_all.where(F.col("bucket") <= 2), media, cfg,
-                media_strategy="broadcast"),
-        NB,
+        extract(docs_all.where(F.col("bucket") <= 2), media, cfg), NB
     )
     done.write.mode("append").partitionBy("bucket").parquet(
         os.path.join(out, "spans")
@@ -129,14 +121,7 @@ def test_crash_between_data_and_lineage_no_duplicates(spark, corpus, tmp_path):
     n_docs_in = spark.read.parquet(corpus["docs_path"]).count()
     assert final.count() == n_docs_in  # every doc exactly once
     assert final.select("doc_id").distinct().count() == n_docs_in
-
-    clean_out = str(tmp_path / "out_clean")
-    run_extract(spark, corpus["docs_path"], corpus["media_path"], clean_out,
-                num_buckets=NB, resume=False)
-    clean = spark.read.parquet(os.path.join(clean_out, "spans"))
-    assert_span_equal(
-        spans_key(final.collect()), spans_key(clean.collect())
-    )
+    assert_span_equal(spans_key(final.collect()), golden_spans)
 
 
 def test_no_resume_rerun_keeps_lineage_consistent(spark, corpus, tmp_path):

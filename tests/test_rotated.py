@@ -188,6 +188,5 @@ def test_e2e_golden_equality_rotated(spark, tmp_path):
         spark.read.parquet(docs_path),
         spark.read.parquet(media_path),
         cfg,
-        media_strategy="frames",
     )
     assert_span_equal(spans_key(result.collect()), golden)

@@ -33,7 +33,7 @@ def test_randomized_mutation_soak(spark, corpus, tmp_path):
     run_extract(
         spark, corpus["docs_path"], corpus["media_path"], out,
         cfg=ExtractConfig(), num_buckets=NB,
-        media_strategy="broadcast", run_id="soak-base",
+        run_id="soak-base",
     )
     spans_dir = os.path.join(out, "spans")
     golden = spans_key(spark.read.parquet(spans_dir).collect())
@@ -66,7 +66,7 @@ def test_randomized_mutation_soak(spark, corpus, tmp_path):
                 spark, out, corpus["docs_path"],
                 media_path=corpus["media_path"],
                 where=f"doc_id IN ({ids_sql(ids)})",
-                cfg=ExtractConfig(), media_strategy="broadcast",
+                cfg=ExtractConfig(),
             )
             for i in ids:  # deterministic engine: re-extract == golden
                 expected[i] = golden[i]

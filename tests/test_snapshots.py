@@ -35,7 +35,6 @@ def _extract(spark, corpus, out, run_id="base"):
         out,
         cfg=ExtractConfig(),
         num_buckets=NB,
-        media_strategy="broadcast",
         run_id=run_id,
     )
 
@@ -64,7 +63,7 @@ def history(spark, corpus, tmp_path_factory):
     ids_sql = ",".join(f"'{i}'" for i in up_ids)
     rep2 = upsert_extract(
         spark, out, corpus["docs_path"], media_path=corpus["media_path"],
-        where=f"doc_id IN ({ids_sql})", cfg=cfg2, media_strategy="broadcast",
+        where=f"doc_id IN ({ids_sql})", cfg=cfg2,
     )
     states[2] = spans_key(spark.read.parquet(spans_dir).collect())
 
@@ -441,7 +440,7 @@ def test_rebucket_partition_evolution(spark, corpus, tmp_path):
     rep2 = run_extract(
         spark, corpus["docs_path"], corpus["media_path"], out,
         cfg=ExtractConfig(), num_buckets=16,
-        media_strategy="broadcast", run_id="after",
+        run_id="after",
     )
     assert rep2["docs"] == 0 and rep2["buckets_skipped"] == 16
 

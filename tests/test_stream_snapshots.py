@@ -12,8 +12,6 @@ import shutil
 import pyarrow.parquet as pq
 
 from ai_invoice_ocr_engine_spark import snapshots as S
-from ai_invoice_ocr_engine_spark.config import ExtractConfig
-from ai_invoice_ocr_engine_spark.pipeline import extract
 from ai_invoice_ocr_engine_spark.streaming import incremental_extract
 
 from .util import assert_span_equal, spans_key
@@ -30,17 +28,6 @@ def _table(spark, out):
     return spans_key(spark.read.parquet(f"{out}/spans").collect())
 
 
-def _want(spark, docs_df, media_path):
-    return spans_key(
-        extract(
-            docs_df,
-            spark.read.parquet(media_path),
-            ExtractConfig(),
-            media_strategy="broadcast",
-        ).collect()
-    )
-
-
 def _split_docs(corpus, dst_dir):
     """First/second half of the corpus docs as separate parquet files."""
     t = pq.read_table(corpus["docs_path"])
@@ -53,7 +40,9 @@ def _split_docs(corpus, dst_dir):
     return a, b
 
 
-def test_checkpoint_loss_replay_is_exactly_once(spark, corpus, tmp_path):
+def test_checkpoint_loss_replay_is_exactly_once(
+    spark, corpus, golden_spans, tmp_path
+):
     """Losing the streaming checkpoint replays batch 0 with the same
     batch_id; the committed snapshot makes the replay a no-op instead of
     doubling every row."""
@@ -69,8 +58,7 @@ def test_checkpoint_loss_replay_is_exactly_once(spark, corpus, tmp_path):
     clean = _table(spark, out)
     assert_span_equal(
         clean,
-        _want(spark, spark.read.parquet(corpus["docs_path"]),
-              corpus["media_path"]),
+        golden_spans,
     )
 
     # fresh checkpoint → the source replays everything as batch 0 again
@@ -107,7 +95,7 @@ def test_torn_append_is_quarantined_before_replay(spark, corpus, tmp_path):
 
 
 def test_checkpoint_loss_with_new_file_appends_only_new_docs(
-    spark, corpus, tmp_path
+    spark, corpus, golden_spans, tmp_path
 ):
     """Review scenario: batch 0 commits; checkpoint is lost; a NEW file
     arrives; the fresh checkpoint delivers old+new together as batch 0
@@ -129,8 +117,7 @@ def test_checkpoint_loss_with_new_file_appends_only_new_docs(
     assert set(got) > set(half1)
     assert_span_equal(
         got,
-        _want(spark, spark.read.parquet(corpus["docs_path"]),
-              corpus["media_path"]),
+        golden_spans,
     )
     # the first half's rows were NOT re-appended (exactly-once per doc)
     n = spark.read.parquet(f"{out}/spans").count()
@@ -161,9 +148,11 @@ def test_stream_into_legacy_dir_without_log_refuses(spark, corpus, tmp_path):
         assert "no snapshot log" in str(e)
 
 
-def test_incremental_growth_commits_per_batch(spark, corpus, tmp_path):
+def test_incremental_growth_commits_per_batch(
+    spark, corpus, golden_spans, tmp_path
+):
     """Normal operation: a second file arriving later lands as its own
-    batch + snapshot, and the table equals a batch extract of both
+    batch + snapshot, and the table equals the oracle over both
     halves; snapshot 1 still time-travels to the first half alone."""
     a, b = _split_docs(corpus, str(tmp_path / "halves"))
     src = tmp_path / "src"
@@ -182,8 +171,7 @@ def test_incremental_growth_commits_per_batch(spark, corpus, tmp_path):
     assert [s["op"] for s in log] == ["stream-append", "stream-append"]
     assert_span_equal(
         _table(spark, out),
-        _want(spark, spark.read.parquet(corpus["docs_path"]),
-              corpus["media_path"]),
+        golden_spans,
     )
     # time travel back to the first micro-batch
     assert spans_key(S.read_snapshot(spark, out, 1).collect()) == half1

@@ -28,6 +28,5 @@ def test_t2_golden_equality(spark, tmp_path):
         spark.read.parquet(docs_path),
         spark.read.parquet(media_path),
         ExtractConfig(),
-        media_strategy="frames",
     )
     assert_span_equal(spans_key(result.collect()), golden)

@@ -9,13 +9,12 @@ import os
 from pyspark.sql import functions as F
 
 from ai_invoice_ocr_engine_spark import fixtures as FX
+from ai_invoice_ocr_engine_spark import oracle as O
 from ai_invoice_ocr_engine_spark.config import ExtractConfig
 from ai_invoice_ocr_engine_spark.pipeline import (
-    extract,
     run_extract,
     upsert_extract,
     verify_lineage,
-    with_bucket,
 )
 
 from .util import assert_span_equal, spans_key
@@ -32,7 +31,6 @@ def _base_run(spark, corpus, tmp_path):
         out,
         cfg=ExtractConfig(),
         num_buckets=NB,
-        media_strategy="broadcast",
         run_id="base",
     )
     return out
@@ -40,7 +38,7 @@ def _base_run(spark, corpus, tmp_path):
 
 def test_upsert_reextracts_subset_and_matches_full_run(spark, corpus, tmp_path):
     """Re-extract 6 docs with a DIFFERENT config (beam decode): upserted
-    rows must equal a fresh extract under the new config, every other
+    rows must equal the oracle under the new config, every other
     doc must keep its original spans, and lineage must verify."""
     out = _base_run(spark, corpus, tmp_path)
     spans_dir = os.path.join(out, "spans")
@@ -61,21 +59,15 @@ def test_upsert_reextracts_subset_and_matches_full_run(spark, corpus, tmp_path):
         media_path=corpus["media_path"],
         where=f"doc_id IN ({ids_sql})",
         cfg=cfg2,
-        media_strategy="broadcast",
     )
     assert rep["docs"] == 6 and not rep["deleted"]
 
     after = spans_key(spark.read.parquet(spans_dir).collect())
     assert set(after) == set(before)
-    docs = with_bucket(spark.read.parquet(corpus["docs_path"]), NB)
-    media = spark.read.parquet(corpus["media_path"])
     want = spans_key(
-        extract(
-            docs.where(F.col("doc_id").isin(ids)),
-            media,
-            cfg2,
-            media_strategy="broadcast",
-        ).collect()
+        O.run_oracle(
+            [d for d in corpus["docs"] if d["doc_id"] in ids], corpus["media"], cfg2
+        )
     )
     assert_span_equal({k: after[k] for k in ids}, want)
     untouched = {k: v for k, v in before.items() if k not in ids}
@@ -95,7 +87,7 @@ def test_upsert_inserts_new_docs(spark, corpus, tmp_path):
     docs_all.where(~F.col("doc_id").isin(held_out)).write.parquet(subset_path)
     run_extract(
         spark, subset_path, corpus["media_path"], out,
-        cfg=ExtractConfig(), num_buckets=NB, media_strategy="broadcast",
+        cfg=ExtractConfig(), num_buckets=NB,
     )
     rep = upsert_extract(
         spark,
@@ -103,7 +95,6 @@ def test_upsert_inserts_new_docs(spark, corpus, tmp_path):
         corpus["docs_path"],
         media_path=corpus["media_path"],
         where=f"doc_id IN ({held_sql})",
-        media_strategy="broadcast",
     )
     assert rep["docs"] == 4
     table = spans_key(
@@ -150,7 +141,6 @@ def test_upsert_is_idempotent(spark, corpus, tmp_path):
     kw = dict(
         media_path=corpus["media_path"],
         where=f"doc_id IN ({ids_sql})",
-        media_strategy="broadcast",
     )
     upsert_extract(spark, out, corpus["docs_path"], **kw)
     first = spans_key(spark.read.parquet(spans_dir).collect())

@@ -74,9 +74,7 @@ def test_spark_pipeline_broadcasts_file_weights(spark, corpus, tmp_path):
     media = spark.read.parquet(corpus["media_path"])
     got = {
         r["doc_id"]: [tuple(s) for s in r["spans_out"]]
-        for r in extract(
-            docs, media, _with_weights(p), media_strategy="broadcast"
-        ).collect()
+        for r in extract(docs, media, _with_weights(p)).collect()
     }
     want_rows = run_oracle(
         [d for d in corpus["docs"] if d["doc_id"] in got],

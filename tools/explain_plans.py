@@ -77,7 +77,7 @@ def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app="explain", master="local[4]", shuffle_partitions=4)
     print("#" * 78)
-    print("# extract (frames strategy) — flagship pipeline")
+    print("# extract — flagship pipeline")
     print("#" * 78)
     docs = spark.createDataFrame(
         [], "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
@@ -85,7 +85,7 @@ def main():
     media = spark.createDataFrame(
         [], "media_ref string, width int, height int, image binary, n_lines int"
     )
-    print(formatted(spark, extract(docs, media, ExtractConfig(), media_strategy="frames")))
+    print(formatted(spark, extract(docs, media, ExtractConfig())))
     for name in SHOW:
         fn, _sql = REGISTRY[name]
         print("#" * 78)

@@ -22,7 +22,6 @@ def main() -> int:
     p.add_argument("--media", required=True)
     p.add_argument("--out", required=True)
     p.add_argument("--buckets", type=int, default=32)
-    p.add_argument("--strategy", default="auto")
     p.add_argument("--no-resume", action="store_true")
     args = p.parse_args()
 
@@ -41,7 +40,6 @@ def main() -> int:
         args.out,
         num_buckets=args.buckets,
         resume=not args.no_resume,
-        media_strategy=args.strategy,
     )
     print(json.dumps(stats))
     spark.stop()
