@@ -969,8 +969,24 @@ def exif_meta(media: DataFrame) -> DataFrame:
     """Per-image EXIF audit over media(media_ref, image) — one Arrow
     crossing, no shuffle: the geo-tag census a corpus runs BEFORE the
     privacy scrub (exif.py parse_exif; non-JPEG/torn rows report
-    has_exif=false rather than failing the batch)."""
+    has_exif=false rather than failing the batch).
+
+    parse_exif returns each tag as its on-disk type decodes, so a
+    mistyped tag (a SHORT DateTime, an ASCII orientation) does not fit
+    EXIF_META_SCHEMA; such a value is reported as null instead of
+    failing the whole job."""
     from ..exif import parse_exif
+
+    def fit_int(v):
+        ok = isinstance(v, int) and not isinstance(v, bool)
+        return v if ok and -(1 << 31) <= v < (1 << 31) else None
+
+    def fit_double(v):
+        ok = isinstance(v, (int, float)) and not isinstance(v, bool)
+        return float(v) if ok else None
+
+    def fit_str(v):
+        return v if isinstance(v, str) else None
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -986,10 +1002,10 @@ def exif_meta(media: DataFrame) -> DataFrame:
                         bool(m.get("has_exif")),
                         bool(m.get("has_gps")),
                         bool(m.get("has_text_meta")),
-                        m.get("orientation"),
-                        m.get("gps_lat"),
-                        m.get("gps_lon"),
-                        m.get("datetime"),
+                        fit_int(m.get("orientation")),
+                        fit_double(m.get("gps_lat")),
+                        fit_double(m.get("gps_lon")),
+                        fit_str(m.get("datetime")),
                     )
                 )
             yield pd.DataFrame(

@@ -5,7 +5,8 @@ Plan shape (what Catalyst sees, SURVEY.md §3.1) — the one extraction plan:
     scan(documents) → explode → filter(kind='media') → distinct refs
         → repartition → mapInPandas(OCR per distinct frame)   [CPU stage]
     scan(documents) → posexplode(spans) ⋈ ocr(media_ref)      [AQE-planned]
-        → groupBy(doc_id) → array_sort merge → spans_out → sink + lineage
+        → hashpartition(bucket) → groupBy(bucket, doc_id)
+        → array_sort merge → spans_out → sink + lineage
 
 Scale design decisions:
   * The Python boundary is crossed ONCE per distinct media frame — a single
@@ -18,8 +19,13 @@ Scale design decisions:
     batch, upsert and streaming pick it from the media path's scheme
     (``media_side_path_for``).
   * Skew: OCR cost is keyed by media_ref, not doc_id, so the frame
-    repartition before the OCR stage is the skew treatment; the doc-side
-    groupBy hash-distributes media-heavy documents on its own.
+    repartition before the OCR stage is the skew treatment.
+  * Write clustering: the writers hand ``extract`` docs that carry their
+    ``bucket`` (``with_bucket``), and the doc-side merge shuffles on that
+    bucket instead of doc_id — the same one exchange — so each bucket's
+    rows sit in one task and every bucketed write lands one file per
+    bucket. Unbucketed docs (the library API, oracle/eval) group by
+    doc_id as before.
   * Lineage rows (partition_id, doc_count, span_count, checksum) are written
     per completed run; resume anti-joins documents against completed
     buckets (J3 of SURVEY.md §2.3) and processes only the remainder.
@@ -310,6 +316,19 @@ def extract(
         groupBy(doc_id) → array_sort by (offset, pos) → flatten
         → dense `order` via transform index → fields via regexp_extract
 
+    When ``docs`` carries a ``bucket`` column (``with_bucket``, as every
+    writer passes it), the merge is hash-partitioned by bucket into the
+    same shuffle-partition count P and grouped by (bucket, doc_id); the
+    output then keeps ``bucket`` as its last column. That exchange
+    replaces the doc_id one (Spark sees it satisfies the aggregate), so
+    each bucket's rows sit in one task and a ``partitionBy("bucket")``
+    write lands one file per bucket instead of one per task per bucket.
+    The trade-off: the merge/write stage runs at most min(P, distinct
+    buckets) busy tasks, placed by hash (32 buckets on 4 partitions
+    measured 10/10/7/5 per task; on 32 partitions only 18 were
+    non-empty). At cluster width keep ``num_buckets`` ≥ cores
+    (``rebucket_spans`` changes it).
+
     Byte delivery (two modes): with ``media_side_path`` only ref STRINGS
     shuffle and workers read bytes zero-copy from a once-per-node mmap blob
     (image bytes never shuffle and never cross JVM→Arrow→Python — measured
@@ -393,7 +412,8 @@ def extract(
         OCR_FRAME_SCHEMA,
     )
 
-    sp = docs.select("doc_id", F.posexplode_outer("spans").alias("pos", "s"))
+    bucket = ["bucket"] if "bucket" in docs.columns else []
+    sp = docs.select(*bucket, "doc_id", F.posexplode_outer("spans").alias("pos", "s"))
     j = sp.join(ocr, sp["s.media_ref"] == ocr["media_ref"], "left")
 
     is_media = F.col("s.kind") == "media"
@@ -416,6 +436,7 @@ def extract(
         )
     )
     pieces = j.select(
+        *bucket,
         "doc_id",
         "pos",
         F.when(F.col("s").isNull(), F.array().cast(
@@ -431,7 +452,9 @@ def extract(
         ).alias("is_missing"),
         F.col("s").isNotNull().cast("int").alias("is_span"),
     )
-    grouped = pieces.groupBy("doc_id").agg(
+    if bucket:
+        pieces = pieces.repartition(target_parallelism, "bucket")
+    grouped = pieces.groupBy(*bucket, "doc_id").agg(
         F.flatten(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("off", "pos", "piece"))),
@@ -474,6 +497,7 @@ def extract(
         "n_media",
         "n_media_missing",
         "n_ocr",
+        *bucket,
     )
 
 
@@ -658,20 +682,19 @@ def run_extract(
             docs = docs.join(done, "bucket", "left_anti")  # J3: resume anti-join
 
     t0 = time.time()
-    result = with_bucket(
-        extract(docs, media, cfg, media_side_path=media_side_path_for(media_path)),
-        num_buckets,
-    )
+    # bucketed docs in → bucket-clustered result out (one file per bucket)
+    result = extract(docs, media, cfg, media_side_path=media_side_path_for(media_path))
     result.persist()
     try:
-        n_docs = result.count()
+        # one pass over the result: its ≤ num_buckets lineage rows carry
+        # the doc count and the buckets this run writes
+        lineage = lineage_of(result, run_id).collect()
+        n_docs = sum(r["doc_count"] for r in lineage)
+        written_buckets = [r["partition_id"] for r in lineage]
         # snapshot log: the buckets this run writes are about to have
         # their current files deleted by the dynamic overwrite's commit —
         # hard-link them into the archive first so every prior snapshot
         # stays readable (snapshots.py; cheap: O(files), no data copied)
-        written_buckets = [
-            r["bucket"] for r in result.select("bucket").distinct().collect()
-        ]
         snapshots.archive_buckets(spark, out_dir, written_buckets)
         # DYNAMIC partition overwrite, not append: only the bucket
         # partitions present in `result` are replaced; completed buckets
@@ -694,7 +717,7 @@ def run_extract(
         # xor-cancelling). Completed buckets are absent from `result` and
         # keep their rows.
         (
-            lineage_of(result, run_id)
+            spark.createDataFrame(lineage, LINEAGE_SCHEMA)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("partition_id")
@@ -778,10 +801,7 @@ def upsert_extract(
         if media_path is None:
             raise ValueError("upsert re-extraction requires media_path")
         media = spark.read.parquet(media_path)
-        new = with_bucket(
-            extract(sel, media, cfg, media_side_path=media_side_path_for(media_path)),
-            num_buckets,
-        )
+        new = extract(sel, media, cfg, media_side_path=media_side_path_for(media_path))
         # join/count on the SELECTION's ids, not the extract output:
         # extract preserves the doc set, and using `new` here would
         # re-evaluate the whole OCR DAG for each count on top of the
@@ -801,7 +821,11 @@ def upsert_extract(
     tmp = spans_dir + "_upsert_tmp"
     _delete_path(spark, tmp)
     n_new = 0
-    if merged.isEmpty():
+    # only a purge can stage nothing: a re-extract stages one row per
+    # selected doc. Asking `merged` would run the OCR stage just to
+    # answer it, since the bucket exchange keeps Catalyst from pruning
+    # the OCR join out of a row-count-only plan
+    if new is None and kept.isEmpty():
         # a purge that empties EVERY affected bucket stages nothing —
         # parquet cannot round-trip an empty partitioned write, and the
         # dynamic overwrite would be a no-op anyway; fall through to the
@@ -809,7 +833,11 @@ def upsert_extract(
         staged_buckets: set[int] = set()
         snapshots.archive_buckets(spark, out_dir, affected)
     else:
-        merged.write.partitionBy("bucket").parquet(tmp)
+        # the union of kept and new rows is clustered by nothing: this
+        # one exchange puts each bucket in one task, so staging (and the
+        # live rewrite, which reads whole small staging files per task)
+        # lands one file per bucket
+        merged.repartition("bucket").write.partitionBy("bucket").parquet(tmp)
         staged = spark.read.parquet(tmp)
         # invariant gate before touching the live table: one row per doc
         dup = staged.groupBy("doc_id").count().where(F.col("count") > 1).count()
@@ -988,9 +1016,10 @@ def compact_spans(
 ) -> dict:
     """Small-file compaction for the bucketed spans table — the
     OPTIMIZE / rewrite_data_files analog. Long-running ingestion appends
-    one file set per run into every ``bucket=N`` partition; at 10^12
-    docs the accumulated small files dominate scan planning time and
-    NameNode/manifest pressure long before data size does.
+    one file per run or streaming micro-batch into each ``bucket=N``
+    partition it touches; at 10^12 docs the accumulated small files
+    dominate scan planning time and NameNode/manifest pressure long
+    before data size does.
 
     Per bucket, the target file count is ceil(bucket_bytes/target) from
     an actual file listing (no guessing from row counts). The rewrite

@@ -26,7 +26,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import snapshots
 from ..config import ExtractConfig
-from ..pipeline import extract, lineage_of, media_side_path_for, with_bucket
+from ..pipeline import (
+    LINEAGE_SCHEMA,
+    extract,
+    lineage_of,
+    media_side_path_for,
+    with_bucket,
+)
 
 
 def incremental_extract(
@@ -95,18 +101,24 @@ def incremental_extract(
                 "start streaming into a fresh out_dir or one written by "
                 "the snapshot-committing batch job"
             )
-        todo = batch_df
+        # bucketed docs in → bucket-clustered result out: the append
+        # adds one file per bucket this micro-batch touches
+        todo = with_bucket(batch_df, num_buckets)
         if head_has_spans:
             existing = spark.read.parquet(f"{out_dir}/spans").select("doc_id")
-            todo = batch_df.join(existing, "doc_id", "left_anti")
+            todo = todo.join(existing, "doc_id", "left_anti")
             if todo.isEmpty():
                 return
-        result = with_bucket(
-            extract(todo, media, cfg, media_side_path=media_side_path), num_buckets
-        )
+        result = extract(todo, media, cfg, media_side_path=media_side_path)
         result.persist()
         try:
-            n_docs = result.count()
+            # lineage rows are taken BEFORE the spans append: the append
+            # refreshes every cached plan that reads spans/, and `todo`
+            # anti-joins against spans/, so re-deriving lineage from
+            # `result` afterwards would see this batch's docs as already
+            # committed — an empty lineage for every batch after the first
+            lineage = lineage_of(result, run_id).collect()
+            n_docs = sum(r["doc_count"] for r in lineage)
             result.write.mode("append").partitionBy("bucket").parquet(
                 f"{out_dir}/spans"
             )
@@ -114,7 +126,7 @@ def incremental_extract(
             # rows: spans are appended too) but in the same
             # partition_id-partitioned layout run_extract writes, so the
             # two surfaces can share an out_dir without mixed layouts
-            lineage_of(result, run_id).write.mode(
+            spark.createDataFrame(lineage, LINEAGE_SCHEMA).write.mode(
                 "append"
             ).partitionBy("partition_id").parquet(f"{out_dir}/lineage")
         finally:

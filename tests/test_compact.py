@@ -17,15 +17,15 @@ from ai_invoice_ocr_engine_spark.pipeline import (
     verify_lineage,
 )
 
-from .util import spans_key
+from .util import fragment_spans, spans_key
 
 NB = 8
 
 
 def _run_fragmented(spark, corpus, out):
-    """One extract run, then force fragmentation by re-appending the same
-    spans files under new names (simulating many small ingest runs) —
-    lineage is appended alongside so verification still balances."""
+    """One extract run, then force fragmentation by rewriting its spans
+    as many small files per bucket (simulating many small ingest runs);
+    lineage is untouched, so verification still balances."""
     stats = run_extract(
         spark,
         corpus["docs_path"],
@@ -36,23 +36,8 @@ def _run_fragmented(spark, corpus, out):
         run_id="run-base",
     )
     assert stats["docs"] > 0
-    # fragment: split every bucket's data into per-doc appends
-    spans_dir = os.path.join(out, "spans")
-    df = spark.read.parquet(spans_dir)
-    frag = df.repartition(32, "doc_id")
-    frag.write.mode("overwrite").partitionBy("bucket").parquet(spans_dir + "_f")
-    import shutil
-
-    shutil.rmtree(spans_dir)
-    os.rename(spans_dir + "_f", spans_dir)
-    # commit the fragmented tree: the many small ingest runs this
-    # simulates would each have committed; without this, the mutators'
-    # start-of-op reconciliation (correctly) flags the out-of-band
-    # rewrite as an unrecoverable HEAD divergence
-    from ai_invoice_ocr_engine_spark import snapshots
-
-    snapshots.commit_snapshot(spark, out, op="test-fragment")
-    return spans_dir
+    fragment_spans(spark, out)
+    return os.path.join(out, "spans")
 
 
 def test_compact_preserves_content_and_lineage(spark, corpus, tmp_path):

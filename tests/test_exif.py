@@ -235,6 +235,45 @@ def test_spark_scrub_gps_fails_closed(spark):
 
 @pytest.mark.skipif(not glob.os.path.exists(_OS_PLAIN_JPG),
                     reason="OS plain JPEG absent")
+def test_spark_exif_meta_nulls_values_that_do_not_fit(spark):
+    """exif_meta reports a tag value that does not fit EXIF_META_SCHEMA as
+    null instead of failing the job: a SHORT-typed DateTime (parse_exif
+    yields the int 2024 for the `datetime string` column) and an
+    ASCII-typed orientation (a str for `orientation int`); the rest of
+    each row, and the well-typed rows, are reported as before."""
+    from ai_invoice_ocr_engine_spark.functions.multimodal import exif_meta
+
+    base = open(_OS_PLAIN_JPG, "rb").read()
+    short_dt = _with_gps(base, "II", [(0x0132, 3, 1, struct.pack("<H", 2024))])
+    assert parse_exif(short_dt)["datetime"] == 2024
+    gps = _with_gps(base, "II")
+    short6 = struct.pack("<HHIH", 0x0112, 3, 1, 6) + b"\x00\x00"
+    ascii6 = struct.pack("<HHI", 0x0112, 2, 2) + b"6\x00\x00\x00"
+    assert gps.count(short6) == 1
+    ascii_orient = gps.replace(short6, ascii6)
+    assert parse_exif(ascii_orient)["orientation"] == "6"
+    rows = [
+        ("short_dt", bytearray(short_dt)),
+        ("ascii_orient", bytearray(ascii_orient)),
+        ("gps", bytearray(gps)),
+        ("plain", bytearray(base)),
+    ]
+    media = spark.createDataFrame(rows, "media_ref string, image binary")
+    census = {r["media_ref"]: r for r in exif_meta(media).collect()}
+    assert census["short_dt"]["datetime"] is None
+    assert census["short_dt"]["orientation"] == 6
+    assert census["ascii_orient"]["orientation"] is None
+    for ref in ("short_dt", "ascii_orient", "gps"):
+        assert census[ref]["has_exif"] and census[ref]["has_gps"], ref
+        assert abs(census[ref]["gps_lat"] - 37.775) < 1e-3, ref
+        assert abs(census[ref]["gps_lon"] + 122.419) < 1e-3, ref
+    assert census["gps"]["orientation"] == 6
+    assert not census["plain"]["has_exif"]
+    assert census["plain"]["orientation"] is None
+
+
+@pytest.mark.skipif(not glob.os.path.exists(_OS_PLAIN_JPG),
+                    reason="OS plain JPEG absent")
 def test_exif_cli_census_and_scrub(tmp_path):
     """CLI surface: `exif --media` census, then `--scrub --out` writes a
     GPS-free copy and reports n_gps_after == 0."""

@@ -106,6 +106,31 @@ def test_extract_plan_single_python_crossing(spark, corpus):
         assert "BatchEvalPython" not in plan, media_side_path
 
 
+def test_extract_bucketed_docs_merge_on_the_bucket_exchange(spark, corpus):
+    """Docs that carry `bucket` (every writer's input) get their doc-side
+    merge hash-partitioned by bucket instead of doc_id, with the same
+    number of exchanges, under both media deliveries; the output keeps
+    `bucket` as its last column."""
+    from ai_invoice_ocr_engine_spark.config import ExtractConfig
+    from ai_invoice_ocr_engine_spark.pipeline import extract, with_bucket
+
+    docs = spark.read.parquet(corpus["docs_path"])
+    media = spark.read.parquet(corpus["media_path"])
+    for media_side_path in (None, corpus["media_path"]):
+        plans = {}
+        for name, d in (("plain", docs), ("bucketed", with_bucket(docs, 8))):
+            df = extract(d, media, ExtractConfig(), media_side_path=media_side_path)
+            plans[name] = df._jdf.queryExecution().executedPlan().toString()
+            if name == "bucketed":
+                assert df.columns[-1] == "bucket"
+            else:
+                assert "bucket" not in df.columns
+        assert plans["bucketed"].count("Exchange") == plans["plain"].count("Exchange")
+        assert "hashpartitioning(doc_id" in plans["plain"], media_side_path
+        assert "hashpartitioning(bucket" in plans["bucketed"], media_side_path
+        assert "hashpartitioning(doc_id" not in plans["bucketed"], media_side_path
+
+
 @pytest.mark.parametrize("removed", ["broadcast", "join"])
 def test_extract_rejects_removed_per_document_plans(spark, corpus, removed):
     """extract runs one plan; its compatibility keyword takes only

@@ -19,7 +19,7 @@ from ai_invoice_ocr_engine_spark.pipeline import (
     verify_lineage,
 )
 
-from .util import spans_key
+from .util import fragment_spans, spans_key
 
 NB = 8
 #: in-suite default 10; the exit ritual runs an extended pass via
@@ -72,9 +72,14 @@ def test_randomized_mutation_soak(spark, corpus, tmp_path):
                 expected[i] = golden[i]
             model[rep["snapshot_id"]] = dict(expected)
         elif op == "compact":
+            # every write leaves one file per bucket: fragment the table
+            # (a committed, content-preserving rewrite) so the compaction
+            # has small files to merge
+            frag = fragment_spans(spark, out)
+            model[frag["snapshot_id"]] = dict(expected)
             rep = compact_spans(spark, out, target_mb=1024)
-            if rep["rewritten"]:
-                model[rep["snapshot_id"]] = dict(expected)
+            assert rep["rewritten"] is True, rep
+            model[rep["snapshot_id"]] = dict(expected)
         elif op == "rebucket":
             target = rng.choice([4, 8, 16])
             rep = rebucket_spans(spark, out, target)
@@ -104,6 +109,8 @@ def test_randomized_mutation_soak(spark, corpus, tmp_path):
 
     # the walk must have actually exercised a mix of ops
     assert len(set(ops_run)) >= 4, ops_run
+    # ...including at least one rewriting compaction
+    assert "compact" in ops_run, ops_run
     # final sweep: every retained snapshot still reads exactly
     for sid, want in model.items():
         assert spans_key(S.read_snapshot(spark, out, sid).collect()) == want

@@ -22,7 +22,7 @@ from ai_invoice_ocr_engine_spark.pipeline import (
     verify_lineage,
 )
 
-from .util import spans_key
+from .util import fragment_spans, spans_key
 
 NB = 8
 
@@ -44,7 +44,9 @@ def history(spark, corpus, tmp_path_factory):
     """One mutation chain, with the live table MATERIALIZED after every
     commit so each snapshot has an independently captured expectation:
     1 extract → 2 upsert(re-extract 4 docs, beam decode) → 3 delete(2
-    docs) → 4 compact."""
+    docs) → 4 fragment (every write leaves one file per bucket, so the
+    table is split into many small files to give compaction work) → 5
+    compact."""
     out = str(tmp_path_factory.mktemp("snap") / "out")
     states = {}
 
@@ -74,13 +76,16 @@ def history(spark, corpus, tmp_path_factory):
     )
     states[3] = spans_key(spark.read.parquet(spans_dir).collect())
 
-    rep4 = compact_spans(spark, out, target_mb=1024)
+    rep4 = fragment_spans(spark, out)
     states[4] = spans_key(spark.read.parquet(spans_dir).collect())
+
+    rep5 = compact_spans(spark, out, target_mb=1024)
+    states[5] = spans_key(spark.read.parquet(spans_dir).collect())
 
     return {
         "out": out,
         "states": states,
-        "reps": {1: rep1, 2: rep2, 3: rep3, 4: rep4},
+        "reps": {1: rep1, 2: rep2, 3: rep3, 4: rep4, 5: rep5},
         "up_ids": up_ids,
         "del_ids": del_ids,
     }
@@ -89,26 +94,25 @@ def history(spark, corpus, tmp_path_factory):
 def test_every_mutation_commits_a_snapshot(spark, history):
     log = S.list_snapshots(spark, history["out"])
     ops = [s["op"] for s in log]
-    assert ops[:3] == ["extract", "upsert", "delete"]
-    # compaction may be a no-op (files already ≥ target); if it rewrote,
-    # it must have committed
-    if history["reps"][4]["rewritten"]:
-        assert ops[3] == "compact"
+    assert ops == ["extract", "upsert", "delete", "test-fragment", "compact"]
+    # the fragmented table gives compaction files to merge; it rewrote
+    # and committed
+    assert history["reps"][5]["rewritten"] is True
     ids = [s["snapshot_id"] for s in log]
     assert ids == sorted(ids) and ids[0] == 1
     parents = [s["parent_id"] for s in log]
     assert parents == [None] + ids[:-1]
-    for k in (1, 2, 3):
+    for k in (1, 2, 3, 4, 5):
         assert history["reps"][k]["snapshot_id"] == ids[k - 1]
 
 
 def test_time_travel_reads_every_retained_state(spark, history):
     """read_snapshot(k) must equal the table as materialized right after
     commit k — including snapshot 1, whose files were later partially
-    replaced (upsert), purged (delete), and rewritten (compact)."""
+    replaced (upsert), purged (delete), and rewritten (fragment,
+    compact)."""
+    assert history["reps"][5]["rewritten"] is True
     for k, want in history["states"].items():
-        if k == 4 and not history["reps"][4]["rewritten"]:
-            continue
         got = spans_key(
             S.read_snapshot(spark, history["out"], k).collect()
         )
@@ -127,8 +131,8 @@ def test_time_travel_bucket_pruning_matches_full_read(spark, history):
 def test_snapshot_changes_cdc(spark, history):
     """1→2: the 4 re-extracted docs appear as update (or nothing, if the
     beam decode happened to produce identical spans — assert subset);
-    2→3: exactly the 2 deleted docs as delete; compact commit: zero
-    change rows (content-preserving rewrite)."""
+    2→3: exactly the 2 deleted docs as delete; fragment and compact
+    commits: zero change rows (content-preserving rewrites)."""
     out = history["out"]
     ch12 = {
         r["doc_id"]: r["change"]
@@ -148,8 +152,9 @@ def test_snapshot_changes_cdc(spark, history):
     }
     assert ch23 == {i: "delete" for i in history["del_ids"]}
 
-    if history["reps"][4]["rewritten"]:
-        assert S.snapshot_changes(spark, out, 3, 4).count() == 0
+    assert history["reps"][5]["rewritten"] is True
+    assert S.snapshot_changes(spark, out, 3, 4).count() == 0
+    assert S.snapshot_changes(spark, out, 4, 5).count() == 0
 
 
 def test_rollback_restores_exact_rows_and_lineage(spark, corpus, tmp_path):
