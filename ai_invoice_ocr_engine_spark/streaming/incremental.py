@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .. import snapshots
 from ..config import ExtractConfig
 from ..pipeline import (
-    LINEAGE_SCHEMA,
     extract,
+    lineage_frame,
     lineage_of,
     media_side_path_for,
     with_bucket,
@@ -126,9 +126,9 @@ def incremental_extract(
             # rows: spans are appended too) but in the same
             # partition_id-partitioned layout run_extract writes, so the
             # two surfaces can share an out_dir without mixed layouts
-            spark.createDataFrame(lineage, LINEAGE_SCHEMA).write.mode(
-                "append"
-            ).partitionBy("partition_id").parquet(f"{out_dir}/lineage")
+            lineage_frame(spark, lineage).write.mode("append").partitionBy(
+                "partition_id"
+            ).parquet(f"{out_dir}/lineage")
         finally:
             result.unpersist()
         snapshots.commit_snapshot(

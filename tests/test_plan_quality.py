@@ -131,6 +131,30 @@ def test_extract_bucketed_docs_merge_on_the_bucket_exchange(spark, corpus):
         assert "hashpartitioning(doc_id" not in plans["bucketed"], media_side_path
 
 
+def test_collected_lineage_writes_from_a_local_relation(spark):
+    """run_extract and the streaming append write the lineage rows they
+    collected from a driver-local relation, not a Python-RDD scan (whose
+    tasks start a second Python worker pool beside the OCR stage's)."""
+    from ai_invoice_ocr_engine_spark.pipeline import (
+        LINEAGE_SCHEMA,
+        lineage_frame,
+        lineage_of,
+    )
+
+    src = spark.createDataFrame(
+        [(0, "a", ["x"]), (0, "b", []), (3, "c", ["y", "z"])],
+        "bucket int, doc_id string, spans_out array<string>",
+    )
+    rows = lineage_of(src, "r1").collect()
+    df = lineage_frame(spark, rows)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert df.schema == LINEAGE_SCHEMA
+    assert sorted(df.collect()) == sorted(rows)
+    empty = lineage_frame(spark, [])
+    assert empty.schema == LINEAGE_SCHEMA and empty.count() == 0
+
+
 @pytest.mark.parametrize("removed", ["broadcast", "join"])
 def test_extract_rejects_removed_per_document_plans(spark, corpus, removed):
     """extract runs one plan; its compatibility keyword takes only
