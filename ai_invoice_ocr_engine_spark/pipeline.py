@@ -33,7 +33,8 @@ Scale design decisions:
 
 from __future__ import annotations
 
-import json
+import functools
+import operator
 import os
 import re
 import time
@@ -53,7 +54,7 @@ from pyspark.sql.types import (
 
 from .config import ExtractConfig
 from . import kernels as K
-from . import snapshots
+from . import snapshots, tablefs
 
 LINEAGE_SCHEMA = StructType(
     [
@@ -290,9 +291,10 @@ def _media_plan_transforms_bytes(media: DataFrame) -> bool:
 def media_side_path_for(media_path: str) -> str | None:
     """The one delivery rule for jobs that read media from a path: a local
     parquet is served from the per-node blob (``extract``'s
-    ``media_side_path``); remote storage ('://' schemes) shuffles the
-    bytes, since the blob is built from a local file."""
-    return media_path if "://" not in media_path else None
+    ``media_side_path``); a path with a URI scheme (hdfs://, s3a://,
+    file:) shuffles the bytes, since the blob is built from a plain local
+    file."""
+    return None if tablefs.has_scheme(media_path) else media_path
 
 
 def _target_parallelism(spark: SparkSession) -> int:
@@ -516,15 +518,19 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
-def lineage_of(result_with_bucket: DataFrame, run_id: str) -> DataFrame:
-    """Per-partition lineage rows. checksum = bit_xor fold of
+def lineage_of(result_with_bucket: DataFrame, run_id: str | None, *extra) -> DataFrame:
+    """Per-partition lineage rows — the table's one digest: every lineage
+    writer and every gate comparing two trees (``verify_lineage``,
+    compaction, rebucket) folds through here. checksum = bit_xor fold of
     xxhash64(doc_id, canonical spans_out json) — order-insensitive and
-    overflow-free (Spark 4 ANSI mode makes sum() overflow an error)."""
+    overflow-free (Spark 4 ANSI mode makes sum() overflow an error).
+    ``extra`` aggregates ride the same pass (upsert's duplicate gate)."""
     return result_with_bucket.groupBy(F.col("bucket").alias("partition_id")).agg(
         F.lit(run_id).alias("run_id"),
         F.count(F.lit(1)).alias("doc_count"),
         F.coalesce(F.sum(F.size("spans_out")), F.lit(0)).cast("long").alias("span_count"),
         F.bit_xor(F.xxhash64("doc_id", F.to_json("spans_out"))).alias("checksum"),
+        *extra,
     )
 
 
@@ -539,14 +545,14 @@ def lineage_frame(spark: SparkSession, rows: list) -> DataFrame:
     if not rows:
         return spark.createDataFrame([], LINEAGE_SCHEMA)
     return spark.createDataFrame(
-        pd.DataFrame([tuple(r) for r in rows], columns=LINEAGE_SCHEMA.fieldNames()),
+        pd.DataFrame([r.asDict() for r in rows], columns=LINEAGE_SCHEMA.fieldNames()),
         LINEAGE_SCHEMA,
     )
 
 
 def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | None:
     """Buckets already extracted (any run)."""
-    if not _path_exists(spark, lineage_path):
+    if not tablefs.exists(spark, lineage_path):
         return None
     return (
         spark.read.parquet(lineage_path)
@@ -555,119 +561,59 @@ def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | Non
     )
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    if "://" not in path:
-        return os.path.exists(path)
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
+def _staged(out_dir: str, sub: str = "spans") -> str:
+    """Where a mutator stages ``sub`` for ``commit_buckets``; each
+    ``snapshots.open_table`` starts it empty."""
+    return os.path.join(out_dir, snapshots.STAGING_DIR, sub)
 
 
-#: bucket layout identifier recorded in the run manifest (sources/tables.py:
-#: Iceberg's bucket transform is murmur3-based and assigns doc_ids to
-#: DIFFERENT bucket numbers — one table must never mix the two layouts)
-BUCKET_LAYOUT = "parquet-xxhash64"
+def commit_buckets(
+    spark: SparkSession,
+    out_dir: str,
+    op: str,
+    lineage: list | None,
+    replaced=(),
+    run_id: str | None = None,
+    summary: dict | None = None,
+) -> dict:
+    """The one commit tail of every bucket mutator. The op has opened the
+    table (``snapshots.open_table``) and written its spans rows ONCE, to
+    ``_staged(out_dir)`` partitioned by bucket; ``lineage`` holds their
+    lineage rows, collected on the driver (``None`` keeps the table's
+    lineage: compaction rewrites files, not content). The steps, which
+    are also the protocol's crash points:
 
+    1. archive the live spans and lineage files of the ``replaced``
+       buckets, so every earlier snapshot still reads back;
+    2. land spans: delete each replaced bucket, then move every staged
+       file into its bucket — renames, no pass over the data. A replaced
+       bucket that got no rows stays dropped (a purge); a bucket not
+       replaced gains files (the streaming append);
+    3. land lineage the same way, staged through ``lineage_frame``;
+    4. commit the snapshot — the commit marker.
 
-def _check_manifest(spark: SparkSession, out_dir: str, num_buckets: int) -> None:
-    """Fail fast when rerunning into an out_dir written under a different
-    bucket layout: dynamic partition overwrite only replaces buckets present
-    in the NEW result, so a num_buckets change would leave stale partitions
-    from the old layout — self-consistent lineage included, meaning a doc
-    could appear under two layouts while verify_lineage still reports ok.
-    The manifest pins (num_buckets, layout) at first write, through the
-    Hadoop FileSystem for '://' out_dirs (hdfs://, s3a://, …) so the guard
-    fires on cluster storage too, not only local paths (review finding
-    r3). At catalog-managed scale the same record belongs in the table's
-    properties."""
-    path = os.path.join(out_dir, "_manifest.json")
-    if _path_exists(spark, path):
-        prev = json.loads(_read_text(spark, path))
-        if (
-            prev.get("num_buckets") != num_buckets
-            or prev.get("layout") != BUCKET_LAYOUT
-        ):
-            raise ValueError(
-                f"out_dir {out_dir!r} was written with "
-                f"num_buckets={prev.get('num_buckets')} layout={prev.get('layout')!r}; "
-                f"rerunning with num_buckets={num_buckets} layout={BUCKET_LAYOUT!r} "
-                "would strand stale bucket partitions. Use a fresh out_dir "
-                "(or delete the old one) to change the bucket layout."
+    A crash before step 4 leaves the live tree off HEAD, and the next
+    ``open_table`` reconciles it back (``reconcile_to_head``: landed files
+    removed, deleted ones restored from the archive). Returns the commit
+    record."""
+    replaced = sorted({int(b) for b in replaced})
+    trees = [("spans", "bucket")]
+    if lineage is not None:
+        trees.append(("lineage", "partition_id"))
+        if lineage:
+            lineage_frame(spark, lineage).write.partitionBy("partition_id").parquet(
+                _staged(out_dir, "lineage")
             )
-        return
-    _write_text(
-        spark, path, json.dumps({"num_buckets": num_buckets, "layout": BUCKET_LAYOUT})
-    )
-
-
-def _read_manifest(spark: SparkSession, out_dir: str) -> dict:
-    """Load and validate the run manifest; a missing manifest means the
-    directory was not written by run_extract — a clear ValueError, not a
-    raw FileNotFoundError, so CLI callers see what went wrong."""
-    path = os.path.join(out_dir, "_manifest.json")
-    if not _path_exists(spark, path):
-        raise ValueError(
-            f"{out_dir!r} has no _manifest.json — not an extract out_dir"
-        )
-    manifest = json.loads(_read_text(spark, path))
-    if manifest.get("layout") != BUCKET_LAYOUT:
-        raise ValueError(
-            f"out_dir layout {manifest.get('layout')!r} is not {BUCKET_LAYOUT!r}"
-        )
-    return manifest
-
-
-def _read_text(spark: SparkSession, path: str) -> str:
-    if "://" not in path:
-        with open(path) as f:
-            return f.read()
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    stream = fs.open(p)
-    try:
-        out = bytearray()
-        while True:
-            b = stream.read()
-            if b < 0:
-                break
-            out.append(b)
-        return out.decode("utf-8")
-    finally:
-        stream.close()
-
-
-def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    if "://" not in path:
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        with open(path, "w") as f:
-            f.write(text)
-        return
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    stream = fs.create(p, True)
-    try:
-        stream.write(bytearray(text.encode("utf-8")))
-    finally:
-        stream.close()
-
-
-def _reconcile_if_committed(spark: SparkSession, out_dir: str) -> dict | None:
-    """Run the gc-style crash reconciliation before a batch mutation when
-    the table has a snapshot log (ADVICE r4: without this, torn files left
-    by a crashed predecessor would be manifested into THIS op's snapshot
-    as committed data, and a bucket whose overwrite landed but whose
-    commit didn't would read empty behind a stale 'completed' lineage
-    row). The streaming path runs the same reconciliation inline per
-    micro-batch. Tables without a log (pre-snapshot layouts) are left
-    alone — there is no manifest to reconcile against."""
-    if snapshots.current_snapshot_id(spark, out_dir) is None:
-        return None
-    return snapshots.reconcile_to_head(spark, out_dir)
+    snapshots.archive_buckets(spark, out_dir, replaced)
+    for sub, col in trees:
+        live, staged = os.path.join(out_dir, sub), _staged(out_dir, sub)
+        for b in replaced:
+            tablefs.delete(spark, os.path.join(live, f"{col}={b}"))
+        for rel, _ in tablefs.list_parquet_files(spark, staged):
+            tablefs.move(spark, os.path.join(staged, rel), os.path.join(live, rel))
+    snap = snapshots.commit_snapshot(spark, out_dir, op=op, run_id=run_id, summary=summary)
+    tablefs.delete(spark, os.path.join(out_dir, snapshots.STAGING_DIR))
+    return snap
 
 
 def run_extract(
@@ -690,17 +636,14 @@ def run_extract(
     """
     cfg = cfg or ExtractConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
-    spans_dir = os.path.join(out_dir, "spans")
-    lineage_dir = os.path.join(out_dir, "lineage")
-    _check_manifest(spark, out_dir, num_buckets)
-    _reconcile_if_committed(spark, out_dir)
+    num_buckets = snapshots.open_table(spark, out_dir, num_buckets)
 
     docs = with_bucket(spark.read.parquet(docs_path), num_buckets)
     media = spark.read.parquet(media_path)
 
     skipped = 0
     if resume:
-        done = completed_buckets(spark, lineage_dir)
+        done = completed_buckets(spark, os.path.join(out_dir, "lineage"))
         if done is not None:
             skipped = done.count()
             docs = docs.join(done, "bucket", "left_anti")  # J3: resume anti-join
@@ -713,47 +656,21 @@ def run_extract(
         # one pass over the result: its ≤ num_buckets lineage rows carry
         # the doc count and the buckets this run writes
         lineage = lineage_of(result, run_id).collect()
-        n_docs = sum(r["doc_count"] for r in lineage)
-        written_buckets = [r["partition_id"] for r in lineage]
-        # snapshot log: the buckets this run writes are about to have
-        # their current files deleted by the dynamic overwrite's commit —
-        # hard-link them into the archive first so every prior snapshot
-        # stays readable (snapshots.py; cheap: O(files), no data copied)
-        snapshots.archive_buckets(spark, out_dir, written_buckets)
-        # DYNAMIC partition overwrite, not append: only the bucket
-        # partitions present in `result` are replaced; completed buckets
-        # (anti-joined out by resume) are untouched. This makes a crash
-        # BETWEEN the spans write and the lineage write recoverable — the
-        # rerun recomputes the unfinished bucket and replaces its partial
-        # partition instead of appending duplicates (lineage is the commit
-        # marker, written strictly after the data it describes).
-        (
-            result.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(spans_dir)
-        )
-        # lineage mirrors the spans write: dynamic overwrite partitioned by
-        # partition_id, so replacing a bucket's data also replaces its
-        # lineage row — a rerun (resume or --no-resume) can never leave a
-        # stale row describing overwritten data, which would make
-        # verify_lineage flag healthy buckets (doubled counts, checksums
-        # xor-cancelling). Completed buckets are absent from `result` and
-        # keep their rows.
-        (
-            lineage_frame(spark, lineage)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("partition_id")
-            .parquet(lineage_dir)
-        )
+        if lineage:
+            result.write.partitionBy("bucket").parquet(_staged(out_dir))
     finally:
         result.unpersist()
-    if written_buckets:
-        snap_id = snapshots.commit_snapshot(
-            spark,
-            out_dir,
-            op="extract",
+    n_docs = sum(r["doc_count"] for r in lineage)
+    if lineage:
+        # the written buckets are REPLACED, data and lineage alike
+        # (completed buckets, anti-joined out by resume, are untouched):
+        # a rerun after a crash between the data and lineage landing
+        # recomputes the unfinished bucket and replaces its partial
+        # partition instead of appending duplicates, and can never leave
+        # a stale lineage row describing overwritten data
+        snap_id = commit_buckets(
+            spark, out_dir, "extract", lineage,
+            replaced=[r["partition_id"] for r in lineage],
             run_id=run_id,
             summary={"docs": int(n_docs), "buckets_skipped": int(skipped)},
         )["snapshot_id"]
@@ -768,7 +685,7 @@ def run_extract(
         "buckets_skipped": skipped,
         "secs": round(secs, 3),
         "docs_per_sec": round(n_docs / secs, 3) if secs > 0 else None,
-        "out": spans_dir,
+        "out": os.path.join(out_dir, "spans"),
         "snapshot_id": snap_id,
     }
 
@@ -796,121 +713,83 @@ def upsert_extract(
     no media needed).
 
     Scale + safety shape: only AFFECTED bucket partitions are read
-    (partition pruning on the bucket filter), merged rows go to a temp
-    dir first (never read-and-overwrite the same path in one job), then
-    land via the same dynamic partition overwrite run_extract uses —
-    data first, lineage rows strictly after, so a crash in the window
-    leaves verify_lineage flagging exactly the swapped-but-unrecorded
-    buckets and a RERUN of the same upsert is idempotent (re-extracting
-    a doc already replaced anti-joins it out and writes it again)."""
+    (partition pruning on the bucket filter); their merged rows are
+    written once, to the staging tree (never read-and-overwrite the same
+    path in one job), checked for one row per doc_id, and moved into
+    place by ``commit_buckets`` — the staged rows ARE the new buckets.
+    A RERUN of the same upsert is idempotent (re-extracting a doc already
+    replaced anti-joins it out and writes it again)."""
+    if not delete and media_path is None:
+        raise ValueError("upsert re-extraction requires media_path")
     cfg = cfg or ExtractConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
     spans_dir = os.path.join(out_dir, "spans")
-    lineage_dir = os.path.join(out_dir, "lineage")
-    manifest = _read_manifest(spark, out_dir)
-    num_buckets = int(manifest["num_buckets"])
-    _reconcile_if_committed(spark, out_dir)
+    num_buckets = snapshots.open_table(spark, out_dir)
 
     docs = with_bucket(spark.read.parquet(docs_path), num_buckets)
     sel = docs.where(where) if where else docs
-    affected = [r["bucket"] for r in sel.select("bucket").distinct().collect()]
+    # one pass over the selection: the buckets it touches and its distinct
+    # doc_ids per bucket — a re-extract stages exactly one row per doc_id
+    n_sel = {
+        r["bucket"]: r["ids"]
+        for r in sel.groupBy("bucket").agg(F.count_distinct("doc_id").alias("ids")).collect()
+    }
+    affected = sorted(n_sel)
     if not affected:
         return {"run_id": run_id, "docs": 0, "buckets": 0,
                 "deleted": bool(delete), "out": spans_dir}
 
+    sel_ids = sel.select("doc_id")
+    kept = (
+        spark.read.parquet(spans_dir)
+        .where(F.col("bucket").isin(affected))
+        .join(sel_ids, "doc_id", "left_anti")
+    )
     if delete:
-        new = None
-        sel_ids = sel.select("doc_id")
+        merged, n_new = kept, 0
     else:
-        if media_path is None:
-            raise ValueError("upsert re-extraction requires media_path")
         media = spark.read.parquet(media_path)
         new = extract(sel, media, cfg, media_side_path=media_side_path_for(media_path))
-        # join/count on the SELECTION's ids, not the extract output:
-        # extract preserves the doc set, and using `new` here would
-        # re-evaluate the whole OCR DAG for each count on top of the
-        # staging write (3x extraction cost)
-        sel_ids = sel.select("doc_id")
-
-    old = spark.read.parquet(spans_dir).where(
-        F.col("bucket").isin([int(b) for b in affected])
-    )
-    n_replaced = old.join(sel_ids, "doc_id", "left_semi").count()
-    kept = old.join(sel_ids, "doc_id", "left_anti")
-    merged = kept if new is None else kept.unionByName(
-        new.select(*kept.columns)
+        merged = kept.unionByName(new.select(*kept.columns))
+        n_new = sum(n_sel.values())
+    # the affected buckets' rows before the upsert, from their committed
+    # lineage (open_table reconciled the data to it): no count of the data
+    n_old = (
+        spark.read.parquet(os.path.join(out_dir, "lineage"))
+        .where(F.col("partition_id").isin(affected))
+        .agg(F.coalesce(F.sum("doc_count"), F.lit(0)))
+        .first()[0]
     )
 
     t0 = time.time()
-    tmp = spans_dir + "_upsert_tmp"
-    _delete_path(spark, tmp)
-    n_new = 0
-    # only a purge can stage nothing: a re-extract stages one row per
-    # selected doc. Asking `merged` would run the OCR stage just to
-    # answer it, since the bucket exchange keeps Catalyst from pruning
-    # the OCR join out of a row-count-only plan
-    if new is None and kept.isEmpty():
-        # a purge that empties EVERY affected bucket stages nothing —
-        # parquet cannot round-trip an empty partitioned write, and the
-        # dynamic overwrite would be a no-op anyway; fall through to the
-        # explicit emptied-bucket deletes below
-        staged_buckets: set[int] = set()
-        snapshots.archive_buckets(spark, out_dir, affected)
-    else:
-        # the union of kept and new rows is clustered by nothing: this
-        # one exchange puts each bucket in one task, so staging (and the
-        # live rewrite, which reads whole small staging files per task)
-        # lands one file per bucket. The count is explicit: AQE would
-        # coalesce this small shuffle into ONE task that sorts and writes
-        # every affected bucket serially (the slowest, least steady stage
-        # of the upsert)
-        merged.repartition(_target_parallelism(spark), "bucket").write.partitionBy(
-            "bucket"
-        ).parquet(tmp)
-        staged = spark.read.parquet(tmp)
-        # invariant gate before touching the live table: one row per doc
-        dup = staged.groupBy("doc_id").count().where(F.col("count") > 1).count()
-        if dup:
-            _delete_path(spark, tmp)
-            raise ValueError(
-                f"upsert staging has {dup} duplicate doc_ids; table untouched"
-            )
-        n_new = 0 if new is None else staged.join(
-            sel_ids, "doc_id", "left_semi"
-        ).count()
-        staged_buckets = {
-            r["bucket"] for r in staged.select("bucket").distinct().collect()
-        }
-        # snapshot log: every affected bucket's current files are about to
-        # be replaced (dynamic overwrite) or purged (emptied-bucket delete
-        # below)
-        snapshots.archive_buckets(spark, out_dir, affected)
-        (
-            staged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(spans_dir)
+    # the union of kept and new rows is clustered by nothing: this one
+    # exchange puts each bucket in one task, so staging lands one file per
+    # bucket. The count is explicit: AQE would coalesce this small shuffle
+    # into ONE task that sorts and writes every affected bucket serially
+    # (the slowest, least steady stage of the upsert)
+    merged.repartition(_target_parallelism(spark), "bucket").write.partitionBy(
+        "bucket"
+    ).parquet(_staged(out_dir))
+    # one pass over the staged tree: its lineage rows, plus the invariant
+    # gate before touching the live table — one row per doc. A purge that
+    # empties every affected bucket stages no file (and parquet cannot
+    # read an empty tree back)
+    lineage = []
+    if tablefs.list_parquet_files(spark, _staged(out_dir)):
+        lineage = lineage_of(
+            spark.read.parquet(_staged(out_dir)), run_id,
+            F.count_distinct("doc_id").alias("ids"),
+        ).collect()
+    dup = sum(r["doc_count"] - r["ids"] for r in lineage)
+    if dup:
+        tablefs.delete(spark, _staged(out_dir))
+        raise ValueError(
+            f"upsert staging has {dup} duplicate doc_ids; table untouched"
         )
-        (
-            lineage_of(staged, run_id)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("partition_id")
-            .parquet(lineage_dir)
-        )
-    # a bucket emptied by deletion has NO staged rows, so dynamic
-    # overwrite never touches it — drop its data and lineage explicitly
-    for b in affected:
-        if b not in staged_buckets:
-            _delete_path(spark, os.path.join(spans_dir, f"bucket={b}"))
-            _delete_path(
-                spark, os.path.join(lineage_dir, f"partition_id={b}")
-            )
-    _delete_path(spark, tmp)
-    snap = snapshots.commit_snapshot(
-        spark,
-        out_dir,
-        op="delete" if delete else "upsert",
+    n_replaced = n_old - (sum(r["doc_count"] for r in lineage) - n_new)
+    snap = commit_buckets(
+        spark, out_dir, "delete" if delete else "upsert", lineage,
+        replaced=affected,
         run_id=run_id,
         summary={
             "replaced": int(n_replaced),
@@ -936,21 +815,14 @@ def verify_lineage(spark: SparkSession, out_dir: str) -> dict:
     answer to 'did every partition land, exactly once, uncorrupted?' —
     runs as two scans + one join, no collect of data rows.
     """
-    spans_dir = os.path.join(out_dir, "spans")
-    lineage_dir = os.path.join(out_dir, "lineage")
-    actual = (
-        spark.read.parquet(spans_dir)
-        .groupBy(F.col("bucket").alias("partition_id"))
-        .agg(
-            F.count(F.lit(1)).alias("a_doc_count"),
-            F.coalesce(F.sum(F.size("spans_out")), F.lit(0))
-            .cast("long")
-            .alias("a_span_count"),
-            F.bit_xor(F.xxhash64("doc_id", F.to_json("spans_out"))).alias("a_checksum"),
-        )
+    actual = lineage_of(spark.read.parquet(os.path.join(out_dir, "spans")), None).select(
+        "partition_id",
+        F.col("doc_count").alias("a_doc_count"),
+        F.col("span_count").alias("a_span_count"),
+        F.col("checksum").alias("a_checksum"),
     )
     expected = (
-        spark.read.parquet(lineage_dir)
+        spark.read.parquet(os.path.join(out_dir, "lineage"))
         .groupBy("partition_id")
         .agg(
             F.sum("doc_count").alias("doc_count"),
@@ -976,68 +848,17 @@ def verify_lineage(spark: SparkSession, out_dir: str) -> dict:
     }
 
 
-def _list_parquet_files(spark: SparkSession, d: str) -> list[tuple[str, int]]:
-    """(path, bytes) of every parquet data file under ``d``, recursively —
-    local os.walk, or the Hadoop FileSystem for '://' paths.
-
-    Hidden path components UNDER ``d`` (leading '_' or '.') are skipped,
-    matching Spark's directory-listing filter (ADVICE r4): staging trees
-    like ``spans/_temporary/`` left by a crashed in-flight job must not be
-    snapshot-manifested or handed to read_snapshot — Spark's own reads
-    would never have counted them. (``d`` itself may be a hidden root,
-    e.g. the _archive walk; only components below it are filtered.)"""
-
-    def _hidden(relparts) -> bool:
-        return any(s and s[0] in "_." for s in relparts)
-
-    if "://" not in d:
-        out = []
-        for root, dirs, names in os.walk(d):
-            dirs[:] = [x for x in dirs if x[0] not in "_."]
-            for n in names:
-                if n.endswith(".parquet") and n[0] not in "_.":
-                    p = os.path.join(root, n)
-                    out.append((p, os.path.getsize(p)))
-        return out
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(d)
-    fs = path.getFileSystem(conf)
-    base = path.toUri().getPath().rstrip("/")
-    it = fs.listFiles(path, True)
-    out = []
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        rel = st.getPath().toUri().getPath()
-        rel = rel[len(base):].lstrip("/") if rel.startswith(base) else rel
-        if p.endswith(".parquet") and not _hidden(rel.split("/")):
-            out.append((p, st.getLen()))
-    return out
-
-
-def _move_path(spark: SparkSession, src: str, dst: str) -> None:
-    if "://" not in src:
-        os.rename(src, dst)
-        return
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(src)
-    fs = p.getFileSystem(conf)
-    if not fs.rename(p, jvm.org.apache.hadoop.fs.Path(dst)):
-        raise ValueError(f"rename {src!r} -> {dst!r} failed")
-
-
-def _delete_path(spark: SparkSession, path: str) -> None:
-    if "://" not in path:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        return
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(conf).delete(p, True)
+def _bucket_files(spark: SparkSession, spans_dir: str) -> dict[int, list[int]]:
+    """{bucket: [files, bytes]} of the live spans tree, from one listing —
+    the census compaction plans from and ``bucket_stats`` reports."""
+    per: dict[int, list[int]] = {}
+    for rel, size in tablefs.list_parquet_files(spark, spans_dir):
+        m = re.match(r"bucket=(\d+)/", rel)
+        if m is not None:
+            st = per.setdefault(int(m.group(1)), [0, 0])
+            st[0] += 1
+            st[1] += size
+    return per
 
 
 def compact_spans(
@@ -1054,26 +875,17 @@ def compact_spans(
     an actual file listing (no guessing from row counts). The rewrite
     shuffles on (bucket, slot) where slot = pmod(xxhash64(doc_id, 1),
     n_slots) — deterministic, and a task holds whole slots so each
-    bucket directory lands at most n_slots files. Safety protocol:
-    write to a temp dir, recompute the per-bucket lineage aggregate on
-    BOTH copies and require exact equality (doc_count + span_count +
-    checksum), then swap directories (spans → spans_backup → deleted;
-    a crash between the two renames leaves spans_backup intact to
-    restore). Lineage rows are untouched: content is identical, and the
-    checksum is order-insensitive, so verify_lineage passes unchanged
-    against the compacted table."""
+    bucket directory lands at most n_slots files. Safety protocol: the
+    rewrite is staged, its per-bucket lineage digest (``lineage_of``) must
+    equal the live tree's exactly (doc_count + span_count + checksum),
+    and only then does ``commit_buckets`` move it into place. Lineage rows
+    are untouched: content is identical, and the checksum is
+    order-insensitive, so verify_lineage passes unchanged against the
+    compacted table."""
     spans_dir = os.path.join(out_dir, "spans")
-    _read_manifest(spark, out_dir)
-    _reconcile_if_committed(spark, out_dir)
+    snapshots.open_table(spark, out_dir)
     target = int(target_mb) * 1024 * 1024
-    per: dict[int, list[int]] = {}
-    for path, size in _list_parquet_files(spark, spans_dir):
-        m = re.search(r"bucket=(\d+)", path)
-        if m is None:
-            continue
-        st = per.setdefault(int(m.group(1)), [0, 0])
-        st[0] += 1
-        st[1] += size
+    per = _bucket_files(spark, spans_dir)
     files_before = sum(st[0] for st in per.values())
     slots = {b: max(1, -(-st[1] // target)) for b, st in per.items()}
     stats = {
@@ -1087,53 +899,28 @@ def compact_spans(
     slot_df = spark.createDataFrame(
         [(b, int(s)) for b, s in sorted(slots.items())], "bucket int, n_slots int"
     )
-    df = spark.read.parquet(spans_dir)
-    tmp = spans_dir + "_compact_tmp"
-    _delete_path(spark, tmp)
+    staged = _staged(out_dir)
     total_slots = int(sum(slots.values()))
     (
-        df.join(F.broadcast(slot_df), "bucket", "inner")
+        spark.read.parquet(spans_dir)
+        .join(F.broadcast(slot_df), "bucket", "inner")
         .withColumn("slot", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.col("n_slots")))
         .repartition(max(total_slots, 1), F.col("bucket"), F.col("slot"))
         .drop("n_slots", "slot")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp)
+        .write.partitionBy("bucket")
+        .parquet(staged)
     )
 
     def _digest(d: str) -> list:
-        return (
-            spark.read.parquet(d)
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("doc_count"),
-                F.coalesce(F.sum(F.size("spans_out")), F.lit(0))
-                .cast("long")
-                .alias("span_count"),
-                F.bit_xor(F.xxhash64("doc_id", F.to_json("spans_out"))).alias(
-                    "checksum"
-                ),
-            )
-            .orderBy("bucket")
-            .collect()
-        )
+        return sorted(lineage_of(spark.read.parquet(d), None).collect())
 
-    if _digest(tmp) != _digest(spans_dir):
-        _delete_path(spark, tmp)
+    if _digest(staged) != _digest(spans_dir):
+        tablefs.delete(spark, staged)
         raise ValueError("compaction digest mismatch; original left untouched")
-    # snapshot log: compaction rewrites every file — preserve the whole
-    # pre-swap tree (hard links) so prior snapshots stay readable
-    snapshots.archive_all(spark, out_dir)
-    backup = spans_dir + "_backup"
-    _delete_path(spark, backup)
-    _move_path(spark, spans_dir, backup)
-    _move_path(spark, tmp, spans_dir)
-    _delete_path(spark, backup)
-    files_after = len(_list_parquet_files(spark, spans_dir))
-    snap = snapshots.commit_snapshot(
-        spark,
-        out_dir,
-        op="compact",
+    files_after = len(tablefs.list_parquet_files(spark, staged))
+    snap = commit_buckets(
+        spark, out_dir, "compact", None,
+        replaced=list(per),
         summary={"files_before": files_before, "files_after": files_after},
     )
     return {
@@ -1154,8 +941,8 @@ def rebucket_spans(
     """Partition evolution: rewrite the spans table under a different
     bucket count — the Iceberg partition-spec-evolution analog for the
     parquet layout, where the bucket transform is pinned per table
-    (_manifest.json) and can otherwise never change (a mixed layout
-    would strand stale partitions; see _check_manifest).
+    (``snapshots.open_table``) and can otherwise never change (a mixed
+    layout would strand stale partitions).
 
     At 10^12 docs the need is real: a table bucketed for yesterday's
     size eventually has buckets too large to task-parallelize or too
@@ -1163,101 +950,73 @@ def rebucket_spans(
     bucket, slot) — compact's slot scheme, so a large bucket spreads
     over ceil(bytes/target) tasks/files instead of one. Safety: the
     expected content digest comes from the COMMITTED lineage rows (a
-    k-row aggregate — no pre-scan of the live tree, and torn files
-    from a crashed writer can't launder in: any divergence between
-    live data and lineage fails the gate; run `gc` first if a crash
-    left uncommitted files), the rewrite lands in a temp dir and must
-    reproduce that digest, the NEW lineage is also built from the temp
-    tree BEFORE any swap (the uncommitted window is just the renames,
-    as in compact), then archive → swap → re-pin manifest → commit
+    k-row aggregate — no pre-scan of the live tree), and the table is
+    opened without reconciliation, so torn files from a crashed writer
+    can't launder in: any divergence between live data and lineage fails
+    the gate (run `gc` first if a crash left uncommitted files). The
+    rewrite is staged and read ONCE: its lineage rows fold into the gate's
+    digest and are the new layout's lineage. Then the layout is re-pinned
+    and ``commit_buckets`` replaces every old bucket and commits
     (op=rebucket). Old snapshots remain readable with their ORIGINAL
     bucket numbers (the archived files carry the old layout)."""
     spans_dir = os.path.join(out_dir, "spans")
-    lineage_dir = os.path.join(out_dir, "lineage")
-    manifest = _read_manifest(spark, out_dir)
-    old_buckets = int(manifest["num_buckets"])
     new_buckets = int(new_buckets)
     if new_buckets < 1:
         raise ValueError("new_buckets must be >= 1")
+    old_buckets = snapshots.open_table(spark, out_dir, reconcile=False)
     if new_buckets == old_buckets:
         return {"rewritten": False, "num_buckets": old_buckets}
     run_id = run_id or f"rebucket-{uuid.uuid4().hex[:8]}"
     target = int(target_mb) * 1024 * 1024
 
-    def _content_digest(df) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(
-                F.xxhash64("doc_id", F.to_json("spans_out"))
-            ).alias("checksum"),
-        ).collect()[0]
-        return (row["n"], row["checksum"])
-
     # expected digest from committed lineage (k rows; xor folds across
     # buckets) — the gate that both saves a full pre-scan and refuses to
     # launder torn uncommitted files into the rewrite
     lrow = (
-        spark.read.parquet(lineage_dir)
+        spark.read.parquet(os.path.join(out_dir, "lineage"))
         .agg(
             F.coalesce(F.sum("doc_count"), F.lit(0)).cast("long").alias("n"),
-            F.bit_xor("checksum").alias("checksum"),
+            F.coalesce(F.bit_xor("checksum"), F.lit(0)).alias("checksum"),
         )
         .collect()[0]
     )
     before = (lrow["n"], lrow["checksum"])
 
-    total_bytes = sum(
-        sz for _, sz in _list_parquet_files(spark, spans_dir)
-    )
+    per = _bucket_files(spark, spans_dir)
+    total_bytes = sum(st[1] for st in per.values())
     # slots per NEW bucket ≈ ceil(expected bucket bytes / target): a big
     # bucket spreads over that many tasks/files (compact's slot scheme)
     n_slots = max(1, -(-total_bytes // (new_buckets * target)))
     df = spark.read.parquet(spans_dir).drop("bucket")
-    rewritten = (
+    (
         with_bucket(df, new_buckets)
         .withColumn(
             "slot", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(n_slots))
         )
         .repartition(int(new_buckets * n_slots), F.col("bucket"), F.col("slot"))
         .drop("slot")
+        .write.partitionBy("bucket")
+        .parquet(_staged(out_dir))
     )
-    tmp = spans_dir + "_rebucket_tmp"
-    _delete_path(spark, tmp)
-    rewritten.write.partitionBy("bucket").parquet(tmp)
-    staged = spark.read.parquet(tmp)
-    if _content_digest(staged) != before:
-        _delete_path(spark, tmp)
+    lineage = lineage_of(spark.read.parquet(_staged(out_dir)), run_id).collect()
+    after = (
+        sum(r["doc_count"] for r in lineage),
+        functools.reduce(operator.xor, (r["checksum"] for r in lineage), 0),
+    )
+    if after != before:
+        tablefs.delete(spark, _staged(out_dir))
         raise ValueError(
             "rebucket digest mismatch vs committed lineage; original left "
             "untouched (uncommitted files from a crashed writer? run `gc`)"
         )
-    # new-layout lineage from the VERIFIED temp tree, before any swap
-    lineage_tmp = lineage_dir + "_rebucket_tmp"
-    _delete_path(spark, lineage_tmp)
-    lineage_of(staged, run_id).write.partitionBy(
-        "partition_id"
-    ).parquet(lineage_tmp)
-
-    snapshots.archive_all(spark, out_dir)
-    backup = spans_dir + "_backup"
-    _delete_path(spark, backup)
-    _move_path(spark, spans_dir, backup)
-    _move_path(spark, tmp, spans_dir)
-    _delete_path(spark, backup)
-    lineage_backup = lineage_dir + "_backup"
-    _delete_path(spark, lineage_backup)
-    _move_path(spark, lineage_dir, lineage_backup)
-    _move_path(spark, lineage_tmp, lineage_dir)
-    _delete_path(spark, lineage_backup)
-    _write_text(
-        spark,
-        os.path.join(out_dir, "_manifest.json"),
-        json.dumps({"num_buckets": new_buckets, "layout": BUCKET_LAYOUT}),
-    )
-    snap = snapshots.commit_snapshot(
-        spark,
-        out_dir,
-        op="rebucket",
+    # the commit records the pinned layout; a crash before it leaves the
+    # pin ahead of HEAD, and the next open_table re-pins it to HEAD's
+    snapshots.pin_buckets(spark, out_dir, new_buckets)
+    snap = commit_buckets(
+        spark, out_dir, "rebucket", lineage,
+        # every live bucket: the unreconciled tree may still hold the
+        # buckets of a crashed rebucket's uncommitted layout
+        replaced=set(per) | set(range(old_buckets)),
         run_id=run_id,
         summary={"from_buckets": old_buckets, "to_buckets": new_buckets},
     )
@@ -1278,15 +1037,7 @@ def bucket_stats(spark: SparkSession, out_dir: str) -> dict:
     skew = max/mean of per-bucket rows; >2 is the usual salt-or-split
     signal (AQE handles it at join time, the layout fix is num_buckets
     or salting at write)."""
-    spans_dir = os.path.join(out_dir, "spans")
-    per: dict[int, list[int]] = {}
-    for path, size in _list_parquet_files(spark, spans_dir):
-        m = re.search(r"bucket=(\d+)", path)
-        if m is None:
-            continue
-        st = per.setdefault(int(m.group(1)), [0, 0])
-        st[0] += 1
-        st[1] += size
+    per = _bucket_files(spark, os.path.join(out_dir, "spans"))
     rows = {
         r["partition_id"]: r["docs"]
         for r in spark.read.parquet(os.path.join(out_dir, "lineage"))
@@ -1326,13 +1077,12 @@ def lookup_docs(spark: SparkSession, out_dir: str, doc_ids) -> DataFrame:
     ``len(set(buckets))`` of the P directories — at 10^12 docs a 10-doc
     lookup touches ~10/P of the table's files instead of all of them;
     the residual doc_id IN (...) filter prunes row groups via parquet
-    stats within those. P comes from the run manifest, so callers
+    stats within those. P comes from the table's layout pin, so callers
     cannot desync from the layout that actually wrote the table."""
     from .xxh import spark_bucket
 
     ids = list(doc_ids)
-    manifest = _read_manifest(spark, out_dir)
-    p = int(manifest["num_buckets"])
+    p = snapshots.pinned_buckets(spark, out_dir)
     buckets = sorted({spark_bucket(d, p) for d in ids})
     return (
         spark.read.parquet(os.path.join(out_dir, "spans"))

@@ -12,20 +12,25 @@ of this is delegated to Iceberg itself (``sources/tables.py`` routes
 This module provides the same contract for the parquet layout the sandbox
 runs on:
 
+    {out_dir}/_manifest.json                  bucket layout pin (num_buckets, layout)
     {out_dir}/_snapshots/snap-00000001.json   one immutable manifest per commit
     {out_dir}/_archive/<relpath>              retired data files (time travel)
+    {out_dir}/_staging/{spans,lineage}/       an op's rows before they land
 
 (HEAD is derived by listing the manifests — no pointer file to go stale.)
 
 A snapshot manifest lists every live data file (relpath + size) under
-``spans/`` and ``lineage/`` at commit time, plus op metadata. Mutating ops
-(``run_extract``, ``upsert_extract``, ``compact_spans``, ``rollback``)
-ARCHIVE the files they are about to destroy — local archives are hard
-links (zero data copied; the inode survives the live file's deletion),
-'://' paths fall back to a filesystem copy — then commit a new manifest.
-Spark part-file names carry a per-job UUID, so a relpath identifies one
-immutable file for the life of the table and the archive can be flat
-link-per-relpath with no versioning.
+``spans/`` and ``lineage/`` at commit time, plus op metadata. The bucket
+mutators (``run_extract``, ``upsert_extract``, the streaming append,
+``compact_spans``, ``rebucket_spans``) start with ``open_table`` and end
+with ``pipeline.commit_buckets``, which ARCHIVES the files they are about
+to destroy — local archives are hard links (zero data copied; the inode
+survives the live file's deletion), paths with a URI scheme fall back to
+a filesystem copy — lands the staged rows and commits a new manifest;
+``rollback`` archives and restores files itself. Every filesystem call
+goes through ``tablefs``. Spark part-file names carry a per-job UUID, so
+a relpath identifies one immutable file for the life of the table and the
+archive can be flat link-per-relpath with no versioning.
 
 Scale posture: commits cost one file listing + O(retired files) hard
 links — no data pass; time-travel reads hand Spark an explicit file list
@@ -54,13 +59,14 @@ rewrite, never a content change).
 from __future__ import annotations
 
 import json
-import os
+import os  # noqa: F401  (the hard-link test patches os.link through this module)
 import posixpath
 import re
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from . import tablefs
 
 SNAP_DIR = "_snapshots"
 ARCHIVE_DIR = "_archive"
@@ -72,85 +78,108 @@ TRACKED = ("spans", "lineage")
 FULL_MANIFEST_EVERY = 16
 
 
-# ---------------------------------------------------------------- fs helpers
-def _is_local(path: str) -> bool:
-    return "://" not in path
+# ------------------------------------------------------------ table layout
+#: the bucket layout pin, read and written only here (see ``open_table``)
+LAYOUT_PIN = "_manifest.json"
+#: bucket layout identifier recorded in the pin (sources/tables.py:
+#: Iceberg's bucket transform is murmur3-based and assigns doc_ids to
+#: DIFFERENT bucket numbers — one table must never mix the two layouts)
+BUCKET_LAYOUT = "parquet-xxhash64"
+#: where a mutator stages its rows before ``pipeline.commit_buckets``
+#: lands them; hidden, so no listing, snapshot or Spark read sees it
+STAGING_DIR = "_staging"
 
 
-def _jfs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, conf, p, p.getFileSystem(conf)
+def _pin(spark: SparkSession, out_dir: str) -> dict | None:
+    path = posixpath.join(out_dir, LAYOUT_PIN)
+    return json.loads(tablefs.read_text(spark, path)) if tablefs.exists(spark, path) else None
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    if _is_local(path):
-        return os.path.exists(path)
-    _, _, p, fs = _jfs(spark, path)
-    return fs.exists(p)
+def pin_buckets(spark: SparkSession, out_dir: str, num_buckets: int) -> None:
+    """Pin the bucket count every later write of the table must use."""
+    tablefs.write_text(
+        spark,
+        posixpath.join(out_dir, LAYOUT_PIN),
+        json.dumps({"num_buckets": int(num_buckets), "layout": BUCKET_LAYOUT}),
+    )
 
 
-def _preserve(spark: SparkSession, src: str, dst: str) -> None:
-    """Make ``dst`` another name for ``src``'s bytes without copying where
-    the filesystem allows it (hard link); no-op if ``dst`` exists (the
-    archive is content-stable: a relpath never maps to two contents)."""
-    if _is_local(src):
-        if os.path.exists(dst):
-            return
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        try:
-            os.link(src, dst)
-        except OSError:  # cross-device / fs without links
-            shutil.copy2(src, dst)
-        return
-    jvm, conf, sp, fs = _jfs(spark, src)
-    dp = jvm.org.apache.hadoop.fs.Path(dst)
-    if fs.exists(dp):
-        return
-    jvm.org.apache.hadoop.fs.FileUtil.copy(fs, sp, fs, dp, False, conf)
+def pinned_buckets(spark: SparkSession, out_dir: str) -> int:
+    """The table's pinned bucket count. A missing pin means the directory
+    was not written by an extract job — a clear ValueError, not a raw
+    FileNotFoundError, so CLI callers see what went wrong."""
+    pin = _pin(spark, out_dir)
+    if pin is None:
+        raise ValueError(
+            f"{out_dir!r} has no {LAYOUT_PIN} — not an extract out_dir"
+        )
+    if pin.get("layout") != BUCKET_LAYOUT:
+        raise ValueError(
+            f"out_dir layout {pin.get('layout')!r} is not {BUCKET_LAYOUT!r}"
+        )
+    return int(pin["num_buckets"])
 
 
-def _remove_file(spark: SparkSession, path: str) -> None:
-    if _is_local(path):
-        if os.path.exists(path):
-            os.remove(path)
-        return
-    jvm, _, p, fs = _jfs(spark, path)
-    fs.delete(p, False)
+def open_table(
+    spark: SparkSession,
+    out_dir: str,
+    num_buckets: int | None = None,
+    reconcile: bool = True,
+) -> int:
+    """The one open step of every bucket mutator; returns the table's
+    bucket count.
+
+    1. Clear ``_staging``: rows a crashed op staged never landed.
+    2. With a snapshot log, reconcile the live tree to HEAD
+       (``reconcile_to_head``: torn files a crashed predecessor left are
+       removed, HEAD files it deleted are restored), then re-pin the
+       layout to HEAD's recorded ``num_buckets``: an op that re-pinned
+       (rebucket) and crashed before its commit must not leave the next
+       writer hashing into the uncommitted layout. ``reconcile=False``
+       skips the reconciliation only: ``rebucket_spans`` gates its rewrite
+       against committed lineage so that torn files fail it loudly
+       instead of being quietly removed.
+    3. Check the pin against ``num_buckets`` — or set it, on a table's
+       first write. The pin exists because a commit replaces only the
+       buckets its rows land in: a num_buckets change would strand stale
+       partitions of the old layout, with self-consistent lineage, so
+       verify_lineage would still pass. Tables without a log
+       (pre-snapshot layouts) skip step 2 — there is no manifest to
+       reconcile against."""
+    tablefs.delete(spark, posixpath.join(out_dir, STAGING_DIR))
+    head = current_snapshot_id(spark, out_dir)
+    if head is not None:
+        # both return the HEAD manifest's fields; reconcile has loaded it
+        state = (
+            reconcile_to_head(spark, out_dir)
+            if reconcile
+            else load_snapshot(spark, out_dir, head)
+        )
+        head_nb = state.get("num_buckets")
+        if head_nb is not None and head_nb != (_pin(spark, out_dir) or {}).get("num_buckets"):
+            pin_buckets(spark, out_dir, head_nb)
+    if num_buckets is not None and _pin(spark, out_dir) is None:
+        pin_buckets(spark, out_dir, num_buckets)
+    pinned = pinned_buckets(spark, out_dir)
+    if num_buckets is not None and pinned != num_buckets:
+        raise ValueError(
+            f"out_dir {out_dir!r} was written with num_buckets={pinned} "
+            f"layout={BUCKET_LAYOUT!r}; rerunning with "
+            f"num_buckets={num_buckets} would strand stale bucket "
+            "partitions. Use a fresh out_dir (or delete the old one) to "
+            "change the bucket layout, or rebucket the table."
+        )
+    return pinned
 
 
-def _strip_fs(path: str) -> str:
-    """URI → filesystem path component ('hdfs://nn:8020/a/b' → '/a/b'),
-    local paths unchanged — Hadoop listings return fully-qualified URIs
-    even when the caller passed a less-qualified root, so relpaths must
-    be computed on the path component, never by slicing the raw string."""
-    if "://" in path:
-        rest = path.split("://", 1)[1]
-        slash = rest.find("/")
-        return rest[slash:] if slash >= 0 else "/"
-    return path
-
-
-def _relpath(path: str, out_dir: str) -> str:
-    p, o = _strip_fs(path), _strip_fs(out_dir).rstrip("/")
-    if not p.startswith(o + "/"):
-        raise ValueError(f"listed file {path!r} is not under {out_dir!r}")
-    return p[len(o):].lstrip("/")
-
-
-def _list_tracked(spark: SparkSession, out_dir: str) -> list[list]:
+def _list_tracked(spark: SparkSession | None, out_dir: str) -> list[list]:
     """[[relpath, bytes], ...] of every live parquet data file under the
     tracked subtrees, relpaths POSIX-style relative to ``out_dir``."""
-    from .pipeline import _list_parquet_files  # local import: avoid cycle
-
-    out: list[list] = []
-    for sub in TRACKED:
-        root = posixpath.join(out_dir, sub)
-        if not _exists(spark, root):
-            continue
-        for path, size in _list_parquet_files(spark, root):
-            out.append([_relpath(path, out_dir), int(size)])
+    out = [
+        [f"{sub}/{rel}", int(size)]
+        for sub in TRACKED
+        for rel, size in tablefs.list_parquet_files(spark, posixpath.join(out_dir, sub))
+    ]
     out.sort()
     return out
 
@@ -161,16 +190,8 @@ def _snap_path(out_dir: str, snapshot_id: int) -> str:
 
 
 def _snapshot_ids(spark: SparkSession, out_dir: str) -> list[int]:
-    d = posixpath.join(out_dir, SNAP_DIR)
-    if not _exists(spark, d):
-        return []
-    if _is_local(d):
-        names = os.listdir(d)
-    else:
-        jvm, _, p, fs = _jfs(spark, d)
-        names = [st.getPath().getName() for st in fs.listStatus(p)]
     ids = []
-    for n in names:
+    for n in tablefs.list_names(spark, posixpath.join(out_dir, SNAP_DIR)):
         m = re.fullmatch(r"snap-(\d{8,})\.json", n)
         if m:
             ids.append(int(m.group(1)))
@@ -189,16 +210,14 @@ def load_snapshot(spark: SparkSession, out_dir: str, snapshot_id: int) -> dict:
     on-disk representation. An unparseable manifest names itself loudly —
     with the staged-publish writer that means external corruption, and the
     remedy (quarantine the file, re-list) is in the message."""
-    from .pipeline import _read_text
-
     path = _snap_path(out_dir, snapshot_id)
-    if not _exists(spark, path):
+    if not tablefs.exists(spark, path):
         raise ValueError(
             f"snapshot {snapshot_id} not found in {out_dir!r} (expired or "
             f"never committed; see `snapshots` for the retained log)"
         )
     try:
-        snap = json.loads(_read_text(spark, path))
+        snap = json.loads(tablefs.read_text(spark, path))
     except ValueError:
         raise ValueError(
             f"snapshot manifest {path!r} is not valid JSON — the staged "
@@ -262,12 +281,7 @@ def commit_snapshot(
     # record the bucket layout the files were written under: rollback
     # across a rebucket boundary must re-pin _manifest.json to match the
     # restored tree, or follow-on writes would mix layouts
-    num_buckets = None
-    mpath = posixpath.join(out_dir, "_manifest.json")
-    if _exists(spark, mpath):
-        from .pipeline import _read_text
-
-        num_buckets = json.loads(_read_text(spark, mpath)).get("num_buckets")
+    num_buckets = (_pin(spark, out_dir) or {}).get("num_buckets")
     cur = files if files is not None else _list_tracked(spark, out_dir)
     snap = {
         "snapshot_id": sid,
@@ -306,52 +320,15 @@ def _write_text_exclusive(spark: SparkSession, path: str, text: str) -> None:
     clobbering the winner's manifest (the stance of Iceberg's
     CommitFailedException — re-list the log and retry).
 
-    TORN-MANIFEST SAFETY (ADVICE r4): the manifest bytes are staged to a
-    sibling temp file first and only then LINKED (locally) or RENAMED
-    ('://') to the final name, so a crash mid-write can never leave a
-    truncated JSON document as HEAD — the final name either does not
-    exist or holds the complete text. Locally ``os.link`` is both the
-    atomic publish and the exclusive-create arbitration (link fails with
-    EEXIST if another writer won). For '://' paths the publish is
-    ``fs.rename`` after an overwrite=false existence probe: atomic
-    create-if-absent on HDFS (rename onto an existing file fails there);
-    object stores without atomic rename (plain S3A) get torn-write
-    safety but only best-effort race arbitration — run a catalog/lock
-    service for multi-writer commits there, exactly as Iceberg requires
-    a catalog on S3."""
+    TORN-MANIFEST SAFETY (ADVICE r4): ``tablefs.write_text`` stages the
+    bytes and publishes them whole, so a crash mid-write can never leave
+    a truncated JSON document as HEAD. Its exclusive publish is atomic
+    locally and on HDFS; object stores without atomic rename (plain S3A)
+    get torn-write safety but only best-effort race arbitration — run a
+    catalog/lock service for multi-writer commits there, exactly as
+    Iceberg requires a catalog on S3."""
     try:
-        if _is_local(path):
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            tmp = f"{path}.tmp-{os.getpid()}"
-            fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-            with os.fdopen(fd, "w") as f:
-                f.write(text)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(tmp, path)
-            except FileExistsError:
-                raise
-            except OSError as e:
-                raise OSError(
-                    e.errno,
-                    f"cannot publish snapshot manifest {path!r}: the "
-                    f"filesystem lacks hard links ({e.strerror}); local "
-                    "tables need a filesystem that supports os.link",
-                ) from e
-            finally:
-                os.remove(tmp)
-            return
-        jvm, _, p, fs = _jfs(spark, path)
-        tmp_p = jvm.org.apache.hadoop.fs.Path(path + f".tmp-{os.getpid()}")
-        stream = fs.create(tmp_p, True)
-        try:
-            stream.write(bytearray(text.encode("utf-8")))
-        finally:
-            stream.close()
-        if fs.exists(p) or not fs.rename(tmp_p, p):
-            fs.delete(tmp_p, False)
-            raise FileExistsError(path)
+        tablefs.write_text(spark, path, text, exclusive=True)
     except Exception as e:
         if isinstance(e, FileExistsError) or "exists" in str(e).lower():
             raise ValueError(
@@ -359,33 +336,6 @@ def _write_text_exclusive(spark: SparkSession, path: str, text: str) -> None:
                 "exists — another writer committed first; re-list and retry"
             ) from None
         raise
-
-
-def _replace_text_atomic(spark: SparkSession, path: str, text: str) -> None:
-    """Atomically REPLACE an existing metadata file (expiry's manifest
-    materialization — a representation rewrite, never a content change).
-    Same staging as ``_write_text_exclusive``; the publish is
-    ``os.replace`` locally / delete+rename on the Hadoop FileSystem
-    (admin-op single-writer stance, as gc/expire document)."""
-    if _is_local(path):
-        tmp = f"{path}.tmp-{os.getpid()}"
-        fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-        with os.fdopen(fd, "w") as f:
-            f.write(text)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-        return
-    jvm, _, p, fs = _jfs(spark, path)
-    tmp_p = jvm.org.apache.hadoop.fs.Path(path + f".tmp-{os.getpid()}")
-    stream = fs.create(tmp_p, True)
-    try:
-        stream.write(bytearray(text.encode("utf-8")))
-    finally:
-        stream.close()
-    fs.delete(p, False)
-    if not fs.rename(tmp_p, p):
-        raise IOError(f"atomic replace of {path!r} failed at rename")
 
 
 # --------------------------------------------------------- metadata tables
@@ -535,12 +485,10 @@ def set_tag(
     """Name a snapshot (``prod``, ``pre-migration``, …) — a mutable named
     ref à la Iceberg branches/tags. Tagged snapshots are pinned: expiry
     retains them (and their files) regardless of ``keep_last``."""
-    from .pipeline import _write_text
-
     if not _TAG_RE.match(name):
         raise ValueError(f"invalid tag name {name!r}")
     load_snapshot(spark, out_dir, snapshot_id)  # must exist
-    _write_text(
+    tablefs.write_text(
         spark,
         _tag_path(out_dir, name),
         json.dumps({"name": name, "snapshot_id": int(snapshot_id)}),
@@ -550,27 +498,18 @@ def set_tag(
 
 def delete_tag(spark: SparkSession, out_dir: str, name: str) -> None:
     path = _tag_path(out_dir, name)
-    if not _exists(spark, path):
+    if not tablefs.exists(spark, path):
         raise ValueError(f"tag {name!r} not found")
-    _remove_file(spark, path)
+    tablefs.delete(spark, path)
 
 
 def list_tags(spark: SparkSession, out_dir: str) -> dict[str, int]:
-    from .pipeline import _read_text
-
     d = posixpath.join(out_dir, SNAP_DIR)
-    if not _exists(spark, d):
-        return {}
-    if _is_local(d):
-        names = os.listdir(d)
-    else:
-        jvm, _, p, fs = _jfs(spark, d)
-        names = [st.getPath().getName() for st in fs.listStatus(p)]
     out = {}
-    for n in names:
+    for n in tablefs.list_names(spark, d):
         m = re.fullmatch(r"tag-(.+)\.json", n)
         if m:
-            t = json.loads(_read_text(spark, posixpath.join(d, n)))
+            t = json.loads(tablefs.read_text(spark, posixpath.join(d, n)))
             out[m.group(1)] = int(t["snapshot_id"])
     return out
 
@@ -591,25 +530,27 @@ def reconcile_to_head(spark: SparkSession, out_dir: str) -> dict:
     not reference (torn writes of a job that crashed before its snapshot
     commit — invisible to every snapshot yet read by a plain
     ``spark.read.parquet``); (2) re-link from the archive any HEAD file
-    MISSING from the live tree (a crash between a bucket's dynamic
-    overwrite and its commit deletes the old files, which survive only as
-    archive links — without the restore the live bucket reads empty while
-    a stale lineage row still marks it completed, so a resume run would
-    silently skip it). A HEAD file with no live or archive copy is
-    unrecoverable → loud error, table untouched. Metadata/link ops only.
-    Single-writer assumption as everywhere in this module."""
+    MISSING from the live tree (a crash between a bucket's replacement
+    and its commit deletes the old files, which survive only as archive
+    links — without the restore the live bucket reads empty while a stale
+    lineage row still marks it completed, so a resume run would silently
+    skip it). A HEAD file with no live or archive copy is unrecoverable →
+    loud error, table untouched. Metadata/link ops only. Single-writer
+    assumption as everywhere in this module. Returns the counts and the
+    bucket count HEAD records."""
     head = current_snapshot_id(spark, out_dir)
     if head is None:
         raise ValueError(
             f"{out_dir!r} has no snapshot log — cannot distinguish "
             "committed from torn files"
         )
-    committed = {rel for rel, _ in load_snapshot(spark, out_dir, head)["files"]}
+    snap = load_snapshot(spark, out_dir, head)
+    committed = {rel for rel, _ in snap["files"]}
     live = {rel for rel, _ in _list_tracked(spark, out_dir)}
     lost = [
         rel
         for rel in sorted(committed - live)
-        if not _exists(spark, posixpath.join(out_dir, ARCHIVE_DIR, rel))
+        if not tablefs.exists(spark, posixpath.join(out_dir, ARCHIVE_DIR, rel))
     ]
     if lost:
         raise ValueError(
@@ -619,17 +560,22 @@ def reconcile_to_head(spark: SparkSession, out_dir: str) -> dict:
         )
     removed = 0
     for rel in sorted(live - committed):
-        _remove_file(spark, posixpath.join(out_dir, rel))
+        tablefs.delete(spark, posixpath.join(out_dir, rel))
         removed += 1
     restored = 0
     for rel in sorted(committed - live):
-        _preserve(
+        tablefs.link(
             spark,
             posixpath.join(out_dir, ARCHIVE_DIR, rel),
             posixpath.join(out_dir, rel),
         )
         restored += 1
-    return {"head": head, "removed": removed, "restored": restored}
+    return {
+        "head": head,
+        "removed": removed,
+        "restored": restored,
+        "num_buckets": snap.get("num_buckets"),
+    }
 
 
 def gc_uncommitted(spark: SparkSession, out_dir: str) -> dict:
@@ -643,45 +589,22 @@ def gc_uncommitted(spark: SparkSession, out_dir: str) -> dict:
 
 
 # -------------------------------------------------------------- archiving
-def archive_buckets(
-    spark: SparkSession, out_dir: str, buckets, include_lineage: bool = True
-) -> int:
-    """Preserve every live file of the given bucket partitions before a
-    mutation replaces them (dynamic partition overwrite deletes the old
-    files as part of its own commit, so the links must exist first).
-    Returns the number of files preserved."""
-    from .pipeline import _list_parquet_files
-
-    buckets = {int(b) for b in buckets}
+def archive_buckets(spark: SparkSession, out_dir: str, buckets) -> int:
+    """Preserve every live spans and lineage file of the given bucket
+    partitions before a mutation replaces them (``commit_buckets`` deletes
+    the old files while it lands the new ones, so the links must exist
+    first). Returns the number of files preserved."""
     n = 0
-    subs = [("spans", "bucket")] + (
-        [("lineage", "partition_id")] if include_lineage else []
-    )
-    for sub, col in subs:
-        for b in sorted(buckets):
-            d = posixpath.join(out_dir, sub, f"{col}={b}")
-            if not _exists(spark, d):
-                continue
-            for path, _ in _list_parquet_files(spark, d):
-                rel = _relpath(path, out_dir)
-                _preserve(
-                    spark, path, posixpath.join(out_dir, ARCHIVE_DIR, rel)
+    for sub, col in (("spans", "bucket"), ("lineage", "partition_id")):
+        for b in sorted({int(b) for b in buckets}):
+            part = f"{sub}/{col}={b}"
+            for rel, _ in tablefs.list_parquet_files(spark, posixpath.join(out_dir, part)):
+                tablefs.link(
+                    spark,
+                    posixpath.join(out_dir, part, rel),
+                    posixpath.join(out_dir, ARCHIVE_DIR, part, rel),
                 )
                 n += 1
-    return n
-
-
-def archive_all(spark: SparkSession, out_dir: str) -> int:
-    """Preserve every live tracked file (compaction rewrites the whole
-    table; the pre-swap tree must survive for time travel)."""
-    n = 0
-    for rel, _ in _list_tracked(spark, out_dir):
-        _preserve(
-            spark,
-            posixpath.join(out_dir, rel),
-            posixpath.join(out_dir, ARCHIVE_DIR, rel),
-        )
-        n += 1
     return n
 
 
@@ -709,9 +632,9 @@ def _resolve_files(
                 continue
         lp = posixpath.join(out_dir, rel)
         ap = posixpath.join(out_dir, ARCHIVE_DIR, rel)
-        if _exists(spark, lp):
+        if tablefs.exists(spark, lp):
             live.append(lp)
-        elif _exists(spark, ap):
+        elif tablefs.exists(spark, ap):
             archived.append(ap)
         else:
             missing.append(rel)
@@ -932,7 +855,7 @@ def rollback(spark: SparkSession, out_dir: str, to_id: int) -> dict:
     unreachable = [
         rel
         for rel in sorted(want - live)
-        if not _exists(spark, posixpath.join(out_dir, ARCHIVE_DIR, rel))
+        if not tablefs.exists(spark, posixpath.join(out_dir, ARCHIVE_DIR, rel))
     ]
     if unreachable:
         raise ValueError(
@@ -943,12 +866,12 @@ def rollback(spark: SparkSession, out_dir: str, to_id: int) -> dict:
     n_removed = 0
     for rel in sorted(live - want):
         p = posixpath.join(out_dir, rel)
-        _preserve(spark, p, posixpath.join(out_dir, ARCHIVE_DIR, rel))
-        _remove_file(spark, p)
+        tablefs.link(spark, p, posixpath.join(out_dir, ARCHIVE_DIR, rel))
+        tablefs.delete(spark, p)
         n_removed += 1
     n_restored = 0
     for rel in sorted(want - live):
-        _preserve(
+        tablefs.link(
             spark,
             posixpath.join(out_dir, ARCHIVE_DIR, rel),
             posixpath.join(out_dir, rel),
@@ -956,28 +879,13 @@ def rollback(spark: SparkSession, out_dir: str, to_id: int) -> dict:
         n_restored += 1
 
     # rolling back across a rebucket boundary: the restored tree carries
-    # the bucket layout of the TARGET snapshot — re-pin _manifest.json to
-    # it, or the layout guard would let follow-on writes mix layouts.
-    # (Snapshots committed before num_buckets was recorded skip the
-    # re-pin; verify-lineage still flags any resulting inconsistency.)
-    target_nb = target.get("num_buckets")
-    if target_nb is not None:
-        from .pipeline import BUCKET_LAYOUT, _read_text, _write_text
-
-        mpath = posixpath.join(out_dir, "_manifest.json")
-        cur = (
-            json.loads(_read_text(spark, mpath)).get("num_buckets")
-            if _exists(spark, mpath)
-            else None
-        )
-        if cur != target_nb:
-            _write_text(
-                spark,
-                mpath,
-                json.dumps(
-                    {"num_buckets": int(target_nb), "layout": BUCKET_LAYOUT}
-                ),
-            )
+    # the bucket layout of the TARGET snapshot — re-pin the layout to it
+    # before the commit records it (a crash in between is repaired by the
+    # next open_table, which re-pins to HEAD). Snapshots committed before
+    # num_buckets was recorded skip the re-pin; verify-lineage still flags
+    # any resulting inconsistency.
+    if target.get("num_buckets") is not None:
+        pin_buckets(spark, out_dir, target["num_buckets"])
 
     snap = commit_snapshot(
         spark,
@@ -999,70 +907,41 @@ def clone_table(spark: SparkSession, src_dir: str, dst_dir: str) -> dict:
     """Zero-copy clone of a snapshot-committed table — the CLONE TABLE /
     snapshot-export primitive for sandboxing a production table: every
     tracked data file, archive file, snapshot manifest, tag, and the
-    layout manifest is hard-linked (local) or copied ('://') into
+    layout pin is hard-linked (local) or copied (a URI scheme) into
     ``dst_dir``. Data files are immutable (writers always create new
     part files; nothing mutates in place), so clone and source share
     bytes safely: mutations on either side add/remove NAMES, never
     rewrite shared content. Cost: O(files) metadata ops, zero data
     locally. The clone is a full first-class table — its own history,
     its own future."""
-    # ('://' paths fall back to FileUtil.copy inside _preserve — still
-    # correct, just not zero-copy)
     if current_snapshot_id(spark, src_dir) is None:
         raise ValueError(
             f"{src_dir!r} has no snapshot log — clone requires a "
             "snapshot-committed table"
         )
-    if _exists(spark, posixpath.join(dst_dir, SNAP_DIR)):
+    if tablefs.exists(spark, posixpath.join(dst_dir, SNAP_DIR)):
         raise ValueError(f"{dst_dir!r} already holds a table; refusing")
 
-    n_files = 0
-    for rel, _ in _list_tracked(spark, src_dir):
-        _preserve(
-            spark,
-            posixpath.join(src_dir, rel),
-            posixpath.join(dst_dir, rel),
-        )
-        n_files += 1
-    arch_root = posixpath.join(src_dir, ARCHIVE_DIR)
-    if _exists(spark, arch_root):
-        from .pipeline import _list_parquet_files
-
-        for path, _ in _list_parquet_files(spark, arch_root):
-            rel = _relpath(path, arch_root)
-            _preserve(
-                spark, path, posixpath.join(dst_dir, ARCHIVE_DIR, rel)
-            )
-            n_files += 1
-    from .pipeline import _read_text, _write_text
-
-    snap_src = posixpath.join(src_dir, SNAP_DIR)
-    if _is_local(snap_src):
-        names = os.listdir(snap_src)
-    else:
-        jvm, _, p, fs = _jfs(spark, snap_src)
-        names = [st.getPath().getName() for st in fs.listStatus(p)]
-    n_meta = 0
-    for n in names:
-        if n.endswith(".json"):
-            _write_text(
-                spark,
-                posixpath.join(dst_dir, SNAP_DIR, n),
-                _read_text(spark, posixpath.join(snap_src, n)),
-            )
-            n_meta += 1
-    mpath = posixpath.join(src_dir, "_manifest.json")
-    if _exists(spark, mpath):
-        _write_text(
-            spark,
-            posixpath.join(dst_dir, "_manifest.json"),
-            _read_text(spark, mpath),
-        )
+    data = [rel for rel, _ in _list_tracked(spark, src_dir)] + [
+        f"{ARCHIVE_DIR}/{rel}"
+        for rel, _ in tablefs.list_parquet_files(spark, posixpath.join(src_dir, ARCHIVE_DIR))
+    ]
+    meta = [
+        f"{SNAP_DIR}/{n}"
+        for n in tablefs.list_names(spark, posixpath.join(src_dir, SNAP_DIR))
+        if n.endswith(".json")
+    ]
+    if tablefs.exists(spark, posixpath.join(src_dir, LAYOUT_PIN)):
+        meta.append(LAYOUT_PIN)
+    # metadata files are shared safely too: every metadata write publishes
+    # a new file (tablefs.write_text), none rewrites one in place
+    for rel in data + meta:
+        tablefs.link(spark, posixpath.join(src_dir, rel), posixpath.join(dst_dir, rel))
     return {
         "src": src_dir,
         "dst": dst_dir,
-        "files": n_files,
-        "snapshots": n_meta,
+        "files": len(data),
+        "snapshots": len(meta) - (LAYOUT_PIN in meta),
     }
 
 
@@ -1079,7 +958,6 @@ def expire_snapshots(
     only when unreferenced, which cannot orphan the live copy)."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    from .pipeline import _read_text
 
     ids = _snapshot_ids(spark, out_dir)
     tagged = set(list_tags(spark, out_dir).values())
@@ -1093,31 +971,25 @@ def expire_snapshots(
     # are bit-identical after load_snapshot). Crash between rewrite and
     # drop is harmless: rerun re-materializes (no-op) and re-drops.
     for sid in keep:
-        raw = json.loads(_read_text(spark, _snap_path(out_dir, sid)))
+        raw = json.loads(tablefs.read_text(spark, _snap_path(out_dir, sid)))
         if "files" not in raw:
             full = load_snapshot(spark, out_dir, sid)
             raw["files"] = full["files"]
             for k in ("base_id", "add", "remove"):
                 raw.pop(k, None)
-            _replace_text_atomic(
-                spark, _snap_path(out_dir, sid), json.dumps(raw)
-            )
+            tablefs.write_text(spark, _snap_path(out_dir, sid), json.dumps(raw))
     for sid in keep:
         for rel, _ in load_snapshot(spark, out_dir, sid)["files"]:
             referenced.add(rel)
 
     arch_root = posixpath.join(out_dir, ARCHIVE_DIR)
     n_files = 0
-    if _exists(spark, arch_root):
-        from .pipeline import _list_parquet_files
-
-        for path, _ in _list_parquet_files(spark, arch_root):
-            rel = _relpath(path, arch_root)
-            if rel not in referenced:
-                _remove_file(spark, path)
-                n_files += 1
+    for rel, _ in tablefs.list_parquet_files(spark, arch_root):
+        if rel not in referenced:
+            tablefs.delete(spark, posixpath.join(arch_root, rel))
+            n_files += 1
     for sid in drop:
-        _remove_file(spark, _snap_path(out_dir, sid))
+        tablefs.delete(spark, _snap_path(out_dir, sid))
     return {
         "expired_snapshots": len(drop),
         "kept": keep,

@@ -24,11 +24,12 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import snapshots
+from .. import snapshots, tablefs
 from ..config import ExtractConfig
 from ..pipeline import (
+    _staged,
+    commit_buckets,
     extract,
-    lineage_frame,
     lineage_of,
     media_side_path_for,
     with_bucket,
@@ -54,6 +55,7 @@ def incremental_extract(
     media = spark.read.parquet(media_path)
     media_side_path = media_side_path_for(media_path)
     schema = spark.read.parquet(docs_stream_dir).schema
+    spans_dir = f"{out_dir}/spans"
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -84,59 +86,43 @@ def incremental_extract(
         #     `upsert --delete` is re-added if its file is replayed —
         #     takedowns must also drop the source file.
         head = snapshots.current_snapshot_id(spark, out_dir)
-        head_has_spans = False
-        if head is not None:
-            head_snap = snapshots.load_snapshot(spark, out_dir, head)
-            head_has_spans = any(
-                r.startswith("spans/") for r, _ in head_snap["files"]
-            )
-            # two-sided: torn appends removed AND HEAD files a crashed
-            # batch mutator deleted (surviving only as archive links)
-            # restored — same routine the batch mutators run at start
-            snapshots.reconcile_to_head(spark, out_dir)
-        elif snapshots._list_tracked(spark, out_dir):
+        if head is None and snapshots._list_tracked(spark, out_dir):
             raise ValueError(
                 f"{out_dir!r} has data files but no snapshot log — "
                 "cannot distinguish committed rows from torn writes; "
                 "start streaming into a fresh out_dir or one written by "
                 "the snapshot-committing batch job"
             )
+        # the batch mutators' open step: the two-sided reconciliation
+        # (torn appends removed, HEAD files a crashed mutator deleted
+        # restored) and the layout pin, set on a fresh out_dir and checked
+        # against num_buckets otherwise
+        snapshots.open_table(spark, out_dir, num_buckets)
         # bucketed docs in → bucket-clustered result out: the append
         # adds one file per bucket this micro-batch touches
         todo = with_bucket(batch_df, num_buckets)
-        if head_has_spans:
-            existing = spark.read.parquet(f"{out_dir}/spans").select("doc_id")
+        if tablefs.list_parquet_files(spark, spans_dir):
+            existing = spark.read.parquet(spans_dir).select("doc_id")
             todo = todo.join(existing, "doc_id", "left_anti")
             if todo.isEmpty():
                 return
         result = extract(todo, media, cfg, media_side_path=media_side_path)
         result.persist()
         try:
-            # lineage rows are taken BEFORE the spans append: the append
-            # refreshes every cached plan that reads spans/, and `todo`
-            # anti-joins against spans/, so re-deriving lineage from
-            # `result` afterwards would see this batch's docs as already
-            # committed — an empty lineage for every batch after the first
             lineage = lineage_of(result, run_id).collect()
-            n_docs = sum(r["doc_count"] for r in lineage)
-            result.write.mode("append").partitionBy("bucket").parquet(
-                f"{out_dir}/spans"
-            )
-            # append (micro-batches legitimately accumulate per-bucket
-            # rows: spans are appended too) but in the same
-            # partition_id-partitioned layout run_extract writes, so the
-            # two surfaces can share an out_dir without mixed layouts
-            lineage_frame(spark, lineage).write.mode("append").partitionBy(
-                "partition_id"
-            ).parquet(f"{out_dir}/lineage")
+            result.write.partitionBy("bucket").parquet(_staged(out_dir))
         finally:
             result.unpersist()
-        snapshots.commit_snapshot(
-            spark,
-            out_dir,
-            op="stream-append",
+        # an append: no bucket is replaced, so the staged files and
+        # lineage rows join the buckets' existing ones (the same
+        # partition_id-partitioned lineage layout run_extract writes)
+        commit_buckets(
+            spark, out_dir, "stream-append", lineage,
             run_id=run_id,
-            summary={"batch_id": int(batch_id), "docs": int(n_docs)},
+            summary={
+                "batch_id": int(batch_id),
+                "docs": int(sum(r["doc_count"] for r in lineage)),
+            },
         )
 
     reader = (

@@ -10,12 +10,12 @@ from pyspark.sql import functions as F
 
 from ai_invoice_ocr_engine_spark.config import ExtractConfig
 from ai_invoice_ocr_engine_spark.pipeline import (
-    _list_parquet_files,
     compact_spans,
     lookup_docs,
     run_extract,
     verify_lineage,
 )
+from ai_invoice_ocr_engine_spark.tablefs import list_parquet_files as _list_parquet_files
 
 from .util import fragment_spans, spans_key
 

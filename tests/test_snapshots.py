@@ -769,7 +769,7 @@ def test_hidden_staging_dirs_excluded_from_manifest(spark, corpus, tmp_path):
     import glob
     import shutil
 
-    from ai_invoice_ocr_engine_spark.pipeline import _list_parquet_files
+    from ai_invoice_ocr_engine_spark.tablefs import list_parquet_files as _list_parquet_files
 
     out = str(tmp_path / "out")
     _extract(spark, corpus, out)

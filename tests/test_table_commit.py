@@ -1,0 +1,187 @@
+"""The bucketed table's one open step (snapshots.open_table) and one commit
+tail (pipeline.commit_buckets), seen from the ops that use them: a table
+under a ``file://`` URI goes through the Hadoop FileSystem branch of
+tablefs and must behave exactly like the same table under a plain path;
+a rebucket that crashes before its commit must not leave the next writer
+on the uncommitted layout; and the streaming append checks the layout
+pin like run_extract does."""
+
+import glob
+import json
+import os
+import shutil
+
+import pytest
+from pyspark.errors import StreamingQueryException
+from pyspark.sql import functions as F
+
+from ai_invoice_ocr_engine_spark import snapshots as S
+from ai_invoice_ocr_engine_spark.config import ExtractConfig
+from ai_invoice_ocr_engine_spark.pipeline import (
+    compact_spans,
+    rebucket_spans,
+    run_extract,
+    upsert_extract,
+    verify_lineage,
+)
+from ai_invoice_ocr_engine_spark.streaming import incremental_extract
+
+from .util import fragment_spans, spans_key
+
+NB = 8
+
+
+def _ids_sql(ids):
+    return ",".join(f"'{i}'" for i in ids)
+
+
+def _walk(spark, corpus, out):
+    """run_extract → upsert → delete → fragment + compact → rebucket →
+    rollback to the delete, then the table's rows, bucket of every doc,
+    snapshot ops and verify_lineage report."""
+    docs, media = corpus["docs_path"], corpus["media_path"]
+    ids = sorted(r.doc_id for r in spark.read.parquet(docs).select("doc_id").collect())
+    run_extract(spark, docs, media, out, cfg=ExtractConfig(), num_buckets=NB, run_id="walk")
+    upsert_extract(
+        spark, out, docs, media_path=media,
+        where=f"doc_id IN ({_ids_sql(ids[:5])})", run_id="walk-upsert",
+    )
+    deleted = upsert_extract(
+        spark, out, docs, where=f"doc_id IN ({_ids_sql(ids[5:8])})", delete=True,
+    )
+    fragment_spans(spark, out)
+    assert compact_spans(spark, out, target_mb=1024)["rewritten"]
+    assert rebucket_spans(spark, out, 16, run_id="walk-rebucket")["rewritten"]
+    S.rollback(spark, out, deleted["snapshot_id"])
+    with open(os.path.join(out.removeprefix("file://"), "_manifest.json")) as f:
+        assert json.load(f)["num_buckets"] == NB
+    spans = spark.read.parquet(f"{out}/spans")
+    return (
+        spans_key(spans.collect()),
+        sorted((r.doc_id, r.bucket) for r in spans.select("doc_id", "bucket").collect()),
+        [s["op"] for s in S.list_snapshots(spark, out)],
+        verify_lineage(spark, out),
+    )
+
+
+def test_file_uri_table_matches_plain_path(spark, corpus, tmp_path):
+    plain = _walk(spark, corpus, str(tmp_path / "plain"))
+    uri = _walk(spark, corpus, "file://" + str(tmp_path / "uri"))
+    assert plain[2] == [
+        "extract", "upsert", "delete", "test-fragment", "compact", "rebucket", "rollback",
+    ]
+    assert plain[3]["ok"]
+    assert uri == plain
+
+
+def test_crashed_rebucket_commit_does_not_strand_the_next_upsert(
+    spark, corpus, tmp_path, monkeypatch
+):
+    out = str(tmp_path / "out")
+    docs = corpus["docs_path"]
+    run_extract(spark, docs, corpus["media_path"], out, cfg=ExtractConfig(), num_buckets=NB)
+    n_docs = spark.read.parquet(docs).count()
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("killed before the snapshot commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(S, "commit_snapshot", crash)
+        with pytest.raises(RuntimeError, match="killed"):
+            rebucket_spans(spark, out, 16)
+
+    ids = sorted(r.doc_id for r in spark.read.parquet(docs).select("doc_id").collect())[:10]
+    upsert_extract(
+        spark, out, docs, media_path=corpus["media_path"],
+        where=f"doc_id IN ({_ids_sql(ids)})",
+    )
+    spans = spark.read.parquet(os.path.join(out, "spans"))
+    assert spans.count() == spans.select("doc_id").distinct().count() == n_docs
+    head = S.load_snapshot(spark, out, S.current_snapshot_id(spark, out))
+    with open(os.path.join(out, "_manifest.json")) as f:
+        assert json.load(f)["num_buckets"] == head["num_buckets"] == NB
+    assert spans.where(F.col("bucket") >= NB).count() == 0
+    assert verify_lineage(spark, out)["ok"]
+
+
+def test_rebucket_retried_after_a_crash_replaces_the_uncommitted_layout(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """A rebucket killed before its commit leaves its new-layout buckets
+    live; the retry (which does not reconcile first) must replace them
+    all, not add its rows beside them."""
+    out = str(tmp_path / "out")
+    run_extract(
+        spark, corpus["docs_path"], corpus["media_path"], out,
+        cfg=ExtractConfig(), num_buckets=NB,
+    )
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("killed before the snapshot commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(S, "commit_snapshot", crash)
+        with pytest.raises(RuntimeError, match="killed"):
+            rebucket_spans(spark, out, 16)
+    assert rebucket_spans(spark, out, 16)["rewritten"]
+    spans = spark.read.parquet(os.path.join(out, "spans"))
+    n_docs = spark.read.parquet(corpus["docs_path"]).count()
+    assert spans.count() == spans.select("doc_id").distinct().count() == n_docs
+    lineage = spark.read.parquet(os.path.join(out, "lineage"))
+    assert lineage.agg(F.sum("doc_count")).first()[0] == n_docs
+    assert verify_lineage(spark, out)["ok"]
+
+
+def test_stream_refuses_a_num_buckets_other_than_the_pin(spark, corpus, tmp_path):
+    out = str(tmp_path / "out")
+    run_extract(
+        spark, corpus["docs_path"], corpus["media_path"], out,
+        cfg=ExtractConfig(), num_buckets=NB,
+    )
+    with pytest.raises(ValueError, match="stale bucket partitions") as batch:
+        run_extract(spark, corpus["docs_path"], corpus["media_path"], out, num_buckets=32)
+
+    src = tmp_path / "src"
+    src.mkdir()
+    shutil.copy(corpus["docs_path"], src / "part-000.parquet")
+    q = incremental_extract(
+        spark, str(src), corpus["media_path"], out, str(tmp_path / "ckpt"),
+        num_buckets=32, trigger_once=True,
+    )
+    with pytest.raises(StreamingQueryException) as stream:
+        q.awaitTermination(300)
+    assert str(batch.value) in str(stream.value)
+    assert [s["op"] for s in S.list_snapshots(spark, out)] == ["extract"]
+    assert sorted(os.listdir(os.path.join(out, "spans"))) == [
+        f"bucket={b}" for b in range(NB)
+    ]
+
+
+def test_upsert_refuses_a_staged_duplicate(spark, corpus, tmp_path):
+    """The upsert's one-row-per-doc gate rides its one pass over the staged
+    tree: a committed duplicate in an affected bucket stops the upsert
+    before the live table changes."""
+    out = str(tmp_path / "out")
+    run_extract(
+        spark, corpus["docs_path"], corpus["media_path"], out,
+        cfg=ExtractConfig(), num_buckets=NB,
+    )
+    spans_dir = os.path.join(out, "spans")
+    bucket_dir = sorted(glob.glob(f"{spans_dir}/bucket=*"))[0]
+    shutil.copy(
+        glob.glob(f"{bucket_dir}/part-*.parquet")[0],
+        os.path.join(bucket_dir, "part-duplicate.parquet"),
+    )
+    S.commit_snapshot(spark, out, op="test-duplicate")
+    files = sorted(glob.glob(f"{out}/*/*/*.parquet"))
+    victim = (
+        spark.read.parquet(spans_dir)
+        .where(F.col("bucket") == int(bucket_dir.rsplit("=", 1)[1]))
+        .first()["doc_id"]
+    )
+    with pytest.raises(ValueError, match="duplicate doc_ids; table untouched"):
+        upsert_extract(
+            spark, out, corpus["docs_path"], where=f"doc_id = '{victim}'", delete=True,
+        )
+    assert [s["op"] for s in S.list_snapshots(spark, out)] == ["extract", "test-duplicate"]
+    assert sorted(glob.glob(f"{out}/*/*/*.parquet")) == files

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from ai_invoice_ocr_engine_spark.config import ExtractConfig
 from ai_invoice_ocr_engine_spark.pipeline import (
-    _list_parquet_files,
     bucket_stats,
     compact_spans,
     extract,
@@ -24,6 +23,7 @@ from ai_invoice_ocr_engine_spark.pipeline import (
     with_bucket,
 )
 from ai_invoice_ocr_engine_spark.streaming import incremental_extract
+from ai_invoice_ocr_engine_spark.tablefs import list_parquet_files as _list_parquet_files
 
 NB = 8
 

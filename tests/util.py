@@ -33,21 +33,16 @@ def fragment_spans(spark, out: str, n_files: int = 32) -> dict:
     """Rewrite the live spans table of ``out`` as many small files per
     bucket — the shape many small ingest runs would leave, since every
     write now lands one file per bucket — with the same rows, and commit
-    it as a ``test-fragment`` snapshot. The replaced files are archived
-    first, so every earlier snapshot still reads back. Returns the
-    commit record."""
+    it through the table's commit tail as a ``test-fragment`` snapshot
+    (lineage kept; the replaced files archived, so every earlier snapshot
+    still reads back). Returns the commit record."""
     import os
-    import shutil
 
-    from ai_invoice_ocr_engine_spark import snapshots
+    from ai_invoice_ocr_engine_spark import pipeline, snapshots
 
-    spans_dir = os.path.join(out, "spans")
-    frag = spark.read.parquet(spans_dir).repartition(n_files, "doc_id")
-    frag.write.mode("overwrite").partitionBy("bucket").parquet(spans_dir + "_f")
-    snapshots.archive_all(spark, out)
-    shutil.rmtree(spans_dir)
-    os.rename(spans_dir + "_f", spans_dir)
-    # commit the fragmented tree: without this, the mutators' start-of-op
-    # reconciliation (correctly) flags the out-of-band rewrite as an
-    # unrecoverable HEAD divergence
-    return snapshots.commit_snapshot(spark, out, op="test-fragment")
+    num_buckets = snapshots.open_table(spark, out)
+    frag = spark.read.parquet(os.path.join(out, "spans")).repartition(n_files, "doc_id")
+    frag.write.partitionBy("bucket").parquet(pipeline._staged(out))
+    return pipeline.commit_buckets(
+        spark, out, "test-fragment", None, replaced=range(num_buckets)
+    )
