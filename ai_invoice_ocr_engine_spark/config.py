@@ -2,9 +2,8 @@
 
 Default numeric thresholds mirror the reference engine's defaults
 (/root/reference/config.py:14-37 — det.th=0.3, det.bth=0.6, det.ur=1.5,
-det.mxs=960, det.ms=3, det.dil=1; rec.h=48, rec.mw=320), plus layout
-thresholds line_th=10 (/root/reference/postprocess.py:56) and
-para_th=30 (/root/reference/postprocess.py:70).
+det.mxs=960, det.ms=3, det.dil=1; rec.h=48, rec.mw=320), plus the layout
+threshold line_th=10 (reference postprocess.py:56).
 """
 
 from __future__ import annotations
@@ -42,7 +41,6 @@ class RecognizeConfig:
 @dataclass(frozen=True)
 class LayoutConfig:
     line_th: float = 10.0      # reading-order line threshold (px)
-    para_th: float = 30.0      # paragraph gap threshold (px)
     strip_boilerplate: bool = True
     header_frac: float = 0.10  # lines with y-center above this band are header
     footer_frac: float = 0.90  # …below this band are footer
@@ -71,7 +69,6 @@ class ExtractConfig:
     layout: LayoutConfig = field(default_factory=LayoutConfig)
     prep: PrepConfig = field(default_factory=PrepConfig)
     cls: ClsConfig = field(default_factory=ClsConfig)
-    extract_fields: bool = True
     #: corrupt/unsupported media bytes: 'fail' (reference parity — the
     #: task dies, with the offending media_ref named) or 'skip' (the 100
     #: TB posture: the frame counts toward n_media_missing and the rest of

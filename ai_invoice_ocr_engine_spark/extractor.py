@@ -199,14 +199,9 @@ def extract_doc(
             )
     for order, span in enumerate(out):
         span["order"] = order
-    fields = (
-        K.extract_invoice_fields([sp["text"] for sp in out])
-        if cfg.extract_fields
-        else {}
-    )
     return {
         "spans_out": out,
-        "invoice_fields": fields,
+        "invoice_fields": K.extract_invoice_fields([sp["text"] for sp in out]),
         "n_spans_in": len(items),
         "n_media": n_media,
         "n_media_missing": n_media_missing,

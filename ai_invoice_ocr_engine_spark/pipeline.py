@@ -43,30 +43,12 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from .config import ExtractConfig
 from . import kernels as K
 from . import snapshots, tablefs
-
-LINEAGE_SCHEMA = StructType(
-    [
-        StructField("partition_id", IntegerType()),
-        StructField("run_id", StringType()),
-        StructField("doc_count", LongType()),
-        StructField("span_count", LongType()),
-        StructField("checksum", LongType()),
-    ]
-)
-
-
+from .snapshots import LINEAGE_SCHEMA, read_tree
 
 #: per-python-worker media side-input cache (the reference's config-hash
 #: singleton pattern, /root/reference/engine.py:17-21 — load once per worker
@@ -550,21 +532,22 @@ def lineage_frame(spark: SparkSession, rows: list) -> DataFrame:
     )
 
 
-def completed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | None:
-    """Buckets already extracted (any run)."""
-    if not tablefs.exists(spark, lineage_path):
-        return None
-    return (
-        spark.read.parquet(lineage_path)
-        .select(F.col("partition_id").alias("bucket"))
-        .distinct()
-    )
+def completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
+    """Buckets a committed run already extracted: the partitions the
+    lineage tree records. A new or emptied table has none, and reading its
+    lineage then starts no job."""
+    lineage = read_tree(spark, out_dir, "lineage")
+    return [r[0] for r in lineage.select("partition_id").distinct().collect()]
+
+
+def _staging(out_dir: str) -> str:
+    """Where a mutator stages its trees for ``commit_buckets``; each
+    ``snapshots.open_table`` starts it empty."""
+    return os.path.join(out_dir, snapshots.STAGING_DIR)
 
 
 def _staged(out_dir: str, sub: str = "spans") -> str:
-    """Where a mutator stages ``sub`` for ``commit_buckets``; each
-    ``snapshots.open_table`` starts it empty."""
-    return os.path.join(out_dir, snapshots.STAGING_DIR, sub)
+    return os.path.join(_staging(out_dir), sub)
 
 
 def commit_buckets(
@@ -638,15 +621,13 @@ def run_extract(
     run_id = run_id or uuid.uuid4().hex[:12]
     num_buckets = snapshots.open_table(spark, out_dir, num_buckets)
 
-    docs = with_bucket(spark.read.parquet(docs_path), num_buckets)
+    done = completed_buckets(spark, out_dir) if resume else []
+    skipped = len(done)
+    # J3: resume skips the completed buckets
+    docs = with_bucket(spark.read.parquet(docs_path), num_buckets).where(
+        ~F.col("bucket").isin(done)
+    )
     media = spark.read.parquet(media_path)
-
-    skipped = 0
-    if resume:
-        done = completed_buckets(spark, os.path.join(out_dir, "lineage"))
-        if done is not None:
-            skipped = done.count()
-            docs = docs.join(done, "bucket", "left_anti")  # J3: resume anti-join
 
     t0 = time.time()
     # bucketed docs in → bucket-clustered result out (one file per bucket)
@@ -741,7 +722,7 @@ def upsert_extract(
 
     sel_ids = sel.select("doc_id")
     kept = (
-        spark.read.parquet(spans_dir)
+        read_tree(spark, out_dir, "spans")
         .where(F.col("bucket").isin(affected))
         .join(sel_ids, "doc_id", "left_anti")
     )
@@ -755,7 +736,7 @@ def upsert_extract(
     # the affected buckets' rows before the upsert, from their committed
     # lineage (open_table reconciled the data to it): no count of the data
     n_old = (
-        spark.read.parquet(os.path.join(out_dir, "lineage"))
+        read_tree(spark, out_dir, "lineage")
         .where(F.col("partition_id").isin(affected))
         .agg(F.coalesce(F.sum("doc_count"), F.lit(0)))
         .first()[0]
@@ -772,14 +753,11 @@ def upsert_extract(
     ).parquet(_staged(out_dir))
     # one pass over the staged tree: its lineage rows, plus the invariant
     # gate before touching the live table — one row per doc. A purge that
-    # empties every affected bucket stages no file (and parquet cannot
-    # read an empty tree back)
-    lineage = []
-    if tablefs.list_parquet_files(spark, _staged(out_dir)):
-        lineage = lineage_of(
-            spark.read.parquet(_staged(out_dir)), run_id,
-            F.count_distinct("doc_id").alias("ids"),
-        ).collect()
+    # empties every affected bucket stages no row, and so no lineage row
+    lineage = lineage_of(
+        read_tree(spark, _staging(out_dir), "spans"), run_id,
+        F.count_distinct("doc_id").alias("ids"),
+    ).collect()
     dup = sum(r["doc_count"] - r["ids"] for r in lineage)
     if dup:
         tablefs.delete(spark, _staged(out_dir))
@@ -813,16 +791,17 @@ def verify_lineage(spark: SparkSession, out_dir: str) -> dict:
     """Operational integrity check: recompute per-bucket counts/checksums
     from the spans table and compare with the lineage rows. The 10^12-scale
     answer to 'did every partition land, exactly once, uncorrupted?' —
-    runs as two scans + one join, no collect of data rows.
+    runs as two scans + one join, whose ≤ num_buckets rows are collected
+    once; no collect of data rows.
     """
-    actual = lineage_of(spark.read.parquet(os.path.join(out_dir, "spans")), None).select(
+    actual = lineage_of(read_tree(spark, out_dir, "spans"), None).select(
         "partition_id",
         F.col("doc_count").alias("a_doc_count"),
         F.col("span_count").alias("a_span_count"),
         F.col("checksum").alias("a_checksum"),
     )
     expected = (
-        spark.read.parquet(os.path.join(out_dir, "lineage"))
+        read_tree(spark, out_dir, "lineage")
         .groupBy("partition_id")
         .agg(
             F.sum("doc_count").alias("doc_count"),
@@ -831,18 +810,22 @@ def verify_lineage(spark: SparkSession, out_dir: str) -> dict:
             F.count(F.lit(1)).alias("n_runs"),
         )
     )
-    j = expected.join(actual, "partition_id", "full_outer")
-    bad = j.where(
+    bad = (
         F.col("a_doc_count").isNull()
         | F.col("doc_count").isNull()
         | (F.col("a_doc_count") != F.col("doc_count"))
         | (F.col("a_span_count") != F.col("span_count"))
         | (F.col("a_checksum") != F.col("checksum"))
     )
-    n_bad = bad.count()
-    n_parts = j.count()
+    rows = (
+        expected.join(actual, "partition_id", "full_outer")
+        .select(bad.alias("bad"))
+        .collect()
+    )
+    # a null comparison is not a mismatch (as in a SQL WHERE)
+    n_bad = sum(1 for r in rows if r["bad"])
     return {
-        "partitions": n_parts,
+        "partitions": len(rows),
         "mismatched": n_bad,
         "ok": n_bad == 0,
     }
@@ -902,7 +885,7 @@ def compact_spans(
     staged = _staged(out_dir)
     total_slots = int(sum(slots.values()))
     (
-        spark.read.parquet(spans_dir)
+        read_tree(spark, out_dir, "spans")
         .join(F.broadcast(slot_df), "bucket", "inner")
         .withColumn("slot", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.col("n_slots")))
         .repartition(max(total_slots, 1), F.col("bucket"), F.col("slot"))
@@ -911,10 +894,10 @@ def compact_spans(
         .parquet(staged)
     )
 
-    def _digest(d: str) -> list:
-        return sorted(lineage_of(spark.read.parquet(d), None).collect())
+    def _digest(root: str) -> list:
+        return sorted(lineage_of(read_tree(spark, root, "spans"), None).collect())
 
-    if _digest(staged) != _digest(spans_dir):
+    if _digest(_staging(out_dir)) != _digest(out_dir):
         tablefs.delete(spark, staged)
         raise ValueError("compaction digest mismatch; original left untouched")
     files_after = len(tablefs.list_parquet_files(spark, staged))
@@ -973,7 +956,7 @@ def rebucket_spans(
     # buckets) — the gate that both saves a full pre-scan and refuses to
     # launder torn uncommitted files into the rewrite
     lrow = (
-        spark.read.parquet(os.path.join(out_dir, "lineage"))
+        read_tree(spark, out_dir, "lineage")
         .agg(
             F.coalesce(F.sum("doc_count"), F.lit(0)).cast("long").alias("n"),
             F.coalesce(F.bit_xor("checksum"), F.lit(0)).alias("checksum"),
@@ -987,7 +970,7 @@ def rebucket_spans(
     # slots per NEW bucket ≈ ceil(expected bucket bytes / target): a big
     # bucket spreads over that many tasks/files (compact's slot scheme)
     n_slots = max(1, -(-total_bytes // (new_buckets * target)))
-    df = spark.read.parquet(spans_dir).drop("bucket")
+    df = read_tree(spark, out_dir, "spans").drop("bucket")
     (
         with_bucket(df, new_buckets)
         .withColumn(
@@ -998,7 +981,7 @@ def rebucket_spans(
         .write.partitionBy("bucket")
         .parquet(_staged(out_dir))
     )
-    lineage = lineage_of(spark.read.parquet(_staged(out_dir)), run_id).collect()
+    lineage = lineage_of(read_tree(spark, _staging(out_dir), "spans"), run_id).collect()
     after = (
         sum(r["doc_count"] for r in lineage),
         functools.reduce(operator.xor, (r["checksum"] for r in lineage), 0),
@@ -1040,7 +1023,7 @@ def bucket_stats(spark: SparkSession, out_dir: str) -> dict:
     per = _bucket_files(spark, os.path.join(out_dir, "spans"))
     rows = {
         r["partition_id"]: r["docs"]
-        for r in spark.read.parquet(os.path.join(out_dir, "lineage"))
+        for r in read_tree(spark, out_dir, "lineage")
         .groupBy("partition_id")
         .agg(F.sum("doc_count").alias("docs"))
         .collect()
@@ -1085,7 +1068,7 @@ def lookup_docs(spark: SparkSession, out_dir: str, doc_ids) -> DataFrame:
     p = snapshots.pinned_buckets(spark, out_dir)
     buckets = sorted({spark_bucket(d, p) for d in ids})
     return (
-        spark.read.parquet(os.path.join(out_dir, "spans"))
+        read_tree(spark, out_dir, "spans")
         .where(F.col("bucket").isin(buckets))
         .where(F.col("doc_id").isin(ids))
     )

@@ -32,10 +32,16 @@ goes through ``tablefs``. Spark part-file names carry a per-job UUID, so
 a relpath identifies one immutable file for the life of the table and the
 archive can be flat link-per-relpath with no versioning.
 
+Every Spark read of a table tree goes through ``read_tree`` with the
+tree's declared schema (``SPANS_SCHEMA``, ``LINEAGE_SCHEMA``), never one
+inferred from its files: no read starts a schema-inference job, and a
+missing or empty tree (a new table, one whose every doc was purged)
+reads as an empty DataFrame.
+
 Scale posture: commits cost one file listing + O(retired files) hard
-links — no data pass; time-travel reads hand Spark an explicit file list
-(two parquet reads with ``basePath``, one over live files, one over
-archived, unioned), so partition pruning on ``bucket`` still works;
+links — no data pass; time-travel reads hand ``read_tree`` an explicit
+file list (one read over live files, one over archived, unioned, each
+with ``basePath``), so partition pruning on ``bucket`` still works;
 ``snapshot_changes`` diffs ONLY the buckets whose file sets differ
 between the two manifests, so CDC cost is bounded by the mutation size,
 not the table size. Concurrent committers ARE arbitrated at the
@@ -65,8 +71,38 @@ import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (
+    ArrayType, IntegerType, LongType, MapType, StringType, StructField, StructType,
+)
 
 from . import tablefs
+
+#: a spans row: ``pipeline.extract``'s output plus the bucket it lands in
+SPANS_SCHEMA = StructType([
+    StructField("doc_id", StringType()),
+    StructField("spans_out", ArrayType(StructType([
+        StructField("kind", StringType()),
+        StructField("text", StringType()),
+        StructField("media_ref", StringType()),
+        StructField("order", IntegerType()),
+    ]))),
+    StructField("invoice_fields", MapType(StringType(), StringType())),
+    StructField("n_spans_in", IntegerType()),
+    StructField("n_media", IntegerType()),
+    StructField("n_media_missing", IntegerType()),
+    StructField("n_ocr", IntegerType()),
+    StructField("bucket", IntegerType()),
+])
+#: a lineage row: one bucket's digest as one run wrote it
+LINEAGE_SCHEMA = StructType([
+    StructField("partition_id", IntegerType()),
+    StructField("run_id", StringType()),
+    StructField("doc_count", LongType()),
+    StructField("span_count", LongType()),
+    StructField("checksum", LongType()),
+])
+#: the trees of a table, and of its ``_staging`` and ``_archive``
+TREE_SCHEMAS = {"spans": SPANS_SCHEMA, "lineage": LINEAGE_SCHEMA}
 
 SNAP_DIR = "_snapshots"
 ARCHIVE_DIR = "_archive"
@@ -86,7 +122,7 @@ LAYOUT_PIN = "_manifest.json"
 #: DIFFERENT bucket numbers — one table must never mix the two layouts)
 BUCKET_LAYOUT = "parquet-xxhash64"
 #: where a mutator stages its rows before ``pipeline.commit_buckets``
-#: lands them; hidden, so no listing, snapshot or Spark read sees it
+#: lands them; hidden, so no listing, snapshot or live-table read sees it
 STAGING_DIR = "_staging"
 
 
@@ -425,38 +461,17 @@ def doc_history(
             if nb
             else None
         )
-        live, archived = _resolve_files(spark, out_dir, snap, "spans", buckets)
-        rows = {}
-        if live or archived:
-            parts = []
-            if live:
-                parts.append(
-                    spark.read.option(
-                        "basePath", posixpath.join(out_dir, "spans")
-                    ).parquet(*live)
-                )
-            if archived:
-                parts.append(
-                    spark.read.option(
-                        "basePath",
-                        posixpath.join(out_dir, ARCHIVE_DIR, "spans"),
-                    ).parquet(*archived)
-                )
-            df = parts[0]
-            for p in parts[1:]:
-                df = p.unionByName(df)
-            rows = {
-                r["doc_id"]: r
-                for r in df.where(F.col("doc_id").isin(doc_ids))
-                .select(
-                    "doc_id",
-                    F.size("spans_out").alias("n_spans"),
-                    F.xxhash64("doc_id", F.to_json("spans_out")).alias(
-                        "digest"
-                    ),
-                )
-                .collect()
-            }
+        rows = {
+            r["doc_id"]: r
+            for r in read_snapshot(spark, out_dir, sid, buckets=buckets)
+            .where(F.col("doc_id").isin(doc_ids))
+            .select(
+                "doc_id",
+                F.size("spans_out").alias("n_spans"),
+                F.xxhash64("doc_id", F.to_json("spans_out")).alias("digest"),
+            )
+            .collect()
+        }
         for d in doc_ids:
             r = rows.get(d)
             out[d].append(
@@ -524,6 +539,40 @@ def resolve_tag(spark: SparkSession, out_dir: str, name: str) -> int:
 
 
 # ---------------------------------------------------------------------- gc
+def _restore_tree(
+    spark: SparkSession, out_dir: str, files: list, archive_removed: bool,
+    unreachable: str,
+) -> tuple[int, int]:
+    """Make the live tracked tree exactly ``files`` (a manifest's
+    [[relpath, bytes], ...]): live files it does not list are deleted —
+    archived first with ``archive_removed`` — and listed files missing
+    live are re-linked from the archive. A listed file neither live nor
+    archived refuses the whole restore before anything is touched, with
+    ``unreachable`` formatted with its count ``n`` and first ``rel``.
+    Returns (removed, restored)."""
+    want = {rel for rel, _ in files}
+    live = {rel for rel, _ in _list_tracked(spark, out_dir)}
+    lost = [
+        rel
+        for rel in sorted(want - live)
+        if not tablefs.exists(spark, posixpath.join(out_dir, ARCHIVE_DIR, rel))
+    ]
+    if lost:
+        raise ValueError(unreachable.format(n=len(lost), rel=lost[0]))
+    for rel in sorted(live - want):
+        p = posixpath.join(out_dir, rel)
+        if archive_removed:
+            tablefs.link(spark, p, posixpath.join(out_dir, ARCHIVE_DIR, rel))
+        tablefs.delete(spark, p)
+    for rel in sorted(want - live):
+        tablefs.link(
+            spark,
+            posixpath.join(out_dir, ARCHIVE_DIR, rel),
+            posixpath.join(out_dir, rel),
+        )
+    return len(live - want), len(want - live)
+
+
 def reconcile_to_head(spark: SparkSession, out_dir: str) -> dict:
     """Make the live tree EXACTLY the HEAD manifest — the two-sided crash
     reconciliation (ADVICE r4): (1) remove live tracked files HEAD does
@@ -545,31 +594,12 @@ def reconcile_to_head(spark: SparkSession, out_dir: str) -> dict:
             "committed from torn files"
         )
     snap = load_snapshot(spark, out_dir, head)
-    committed = {rel for rel, _ in snap["files"]}
-    live = {rel for rel, _ in _list_tracked(spark, out_dir)}
-    lost = [
-        rel
-        for rel in sorted(committed - live)
-        if not tablefs.exists(spark, posixpath.join(out_dir, ARCHIVE_DIR, rel))
-    ]
-    if lost:
-        raise ValueError(
-            f"HEAD snapshot {head} references {len(lost)} file(s) present "
-            f"neither live nor archived (e.g. {lost[0]!r}) — unrecoverable "
-            "without rollback to an older snapshot; table untouched"
-        )
-    removed = 0
-    for rel in sorted(live - committed):
-        tablefs.delete(spark, posixpath.join(out_dir, rel))
-        removed += 1
-    restored = 0
-    for rel in sorted(committed - live):
-        tablefs.link(
-            spark,
-            posixpath.join(out_dir, ARCHIVE_DIR, rel),
-            posixpath.join(out_dir, rel),
-        )
-        restored += 1
+    removed, restored = _restore_tree(
+        spark, out_dir, snap["files"], archive_removed=False,
+        unreachable=f"HEAD snapshot {head} references {{n}} file(s) present "
+        "neither live nor archived (e.g. {rel!r}) — unrecoverable without "
+        "rollback to an older snapshot; table untouched",
+    )
     return {
         "head": head,
         "removed": removed,
@@ -609,6 +639,31 @@ def archive_buckets(spark: SparkSession, out_dir: str, buckets) -> int:
 
 
 # ---------------------------------------------------------------- reading
+def read_tree(
+    spark: SparkSession, root: str, sub: str, files: list[str] | None = None
+) -> DataFrame:
+    """The one Spark read of a table tree: ``{root}/{sub}`` (``sub`` is
+    ``spans`` or ``lineage``; ``root`` is the table, its ``_staging`` or
+    its ``_archive``) with the tree's declared schema, in its declared
+    column order. ``files`` restricts the read to those paths under the
+    tree (a snapshot's file list), partition columns still recovered from
+    their ``bucket=N`` / ``partition_id=N`` directories. A missing tree or
+    an empty file list reads as an empty DataFrame, planned as a local
+    relation: actions over it start no job."""
+    schema = TREE_SCHEMAS[sub]
+    base = posixpath.join(root, sub)
+    if files is None:
+        files = [base] if tablefs.exists(spark, base) else []
+    if not files:
+        return spark.createDataFrame([], schema).limit(0)
+    return (
+        spark.read.schema(schema)
+        .option("basePath", base)
+        .parquet(*files)
+        .select(*schema.fieldNames())
+    )
+
+
 def _resolve_files(
     spark: SparkSession, out_dir: str, snap: dict, sub: str,
     buckets=None,
@@ -653,45 +708,22 @@ def read_snapshot(
     snapshot_id: int | None = None,
     sub: str = "spans",
     buckets=None,
-    empty_ok: bool = False,
-) -> DataFrame | None:
+) -> DataFrame:
     """Time-travel read: the table exactly as of ``snapshot_id`` (default
     HEAD). Partition-column recovery (``bucket=N`` / ``partition_id=N``)
     works on both the live and archived sides via ``basePath``, so
     bucket-pruned point lookups prune identically on historical reads.
     A snapshot with no files under ``sub`` (or none in the requested
-    buckets) raises — or returns None with ``empty_ok`` (parquet cannot
-    infer a schema from zero files, so there is no empty DataFrame to
-    hand back)."""
+    buckets) reads as an empty DataFrame."""
     if snapshot_id is None:
         snapshot_id = current_snapshot_id(spark, out_dir)
         if snapshot_id is None:
             raise ValueError(f"{out_dir!r} has no snapshots")
     snap = load_snapshot(spark, out_dir, snapshot_id)
     live, archived = _resolve_files(spark, out_dir, snap, sub, buckets)
-    if not live and not archived:
-        if empty_ok:
-            return None
-        raise ValueError(
-            f"snapshot {snapshot_id} has no files under {sub!r}"
-            + (" for the requested buckets" if buckets is not None else "")
-        )
-    parts = []
-    if live:
-        parts.append(
-            spark.read.option("basePath", posixpath.join(out_dir, sub))
-            .parquet(*live)
-        )
-    if archived:
-        parts.append(
-            spark.read.option(
-                "basePath", posixpath.join(out_dir, ARCHIVE_DIR, sub)
-            ).parquet(*archived)
-        )
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    return read_tree(spark, out_dir, sub, live).unionByName(
+        read_tree(spark, posixpath.join(out_dir, ARCHIVE_DIR), sub, archived)
+    )
 
 
 def snapshot_as_of(spark: SparkSession, out_dir: str, ts: float) -> int:
@@ -738,32 +770,19 @@ def snapshot_changes(
     bucket, rows pair on doc_id and compare by a span-content digest (the
     same doc_id+spans hash the lineage checksum xors), so a bucket rewrite
     that preserves content (compaction) yields zero change rows."""
-    a = load_snapshot(spark, out_dir, from_id)
-    b = load_snapshot(spark, out_dir, to_id)
-    changed = _changed_buckets(a, b)
-    schema = "doc_id string, bucket int, change string"
-    if not changed:
-        return spark.createDataFrame([], schema)
-
-    def _digested(snap):
-        # a side may own ZERO files in the changed buckets (insert into a
-        # brand-new bucket / delete emptying one) — that side is an empty
-        # relation, not an error
-        df = read_snapshot(
-            spark, out_dir, snap["snapshot_id"], "spans",
-            buckets=changed, empty_ok=True,
-        )
-        if df is None:
-            return spark.createDataFrame(
-                [], "doc_id string, bucket int, digest bigint"
-            )
-        return df.select(
+    changed = _changed_buckets(
+        load_snapshot(spark, out_dir, from_id), load_snapshot(spark, out_dir, to_id)
+    )
+    # a side may own no file in the changed buckets (an insert into a new
+    # bucket, a delete emptying one): it reads as an empty relation
+    old, new = (
+        read_snapshot(spark, out_dir, sid, buckets=changed).select(
             "doc_id",
             "bucket",
             F.xxhash64("doc_id", F.to_json("spans_out")).alias("digest"),
         )
-
-    old, new = _digested(a), _digested(b)
+        for sid in (from_id, to_id)
+    )
     j = old.alias("o").join(
         new.alias("n"), on="doc_id", how="full_outer"
     )
@@ -814,21 +833,13 @@ def incremental_doc_stats(
     not the table. Returns prev_stats with changed/deleted docs replaced."""
     changes = snapshot_changes(spark, out_dir, from_id, to_id)
     changed_docs = changes.select("doc_id", "change")
-    a = load_snapshot(spark, out_dir, from_id)
-    b = load_snapshot(spark, out_dir, to_id)
-    changed_buckets = _changed_buckets(a, b)
+    changed_buckets = _changed_buckets(
+        load_snapshot(spark, out_dir, from_id), load_snapshot(spark, out_dir, to_id)
+    )
     kept = prev_stats.join(
         changed_docs.select("doc_id"), "doc_id", "left_anti"
     )
-    if not changed_buckets:
-        return kept
-    # a delete that emptied every changed bucket leaves the to-side with
-    # zero files there — the delta is pure removal, kept IS the answer
-    to_side = read_snapshot(
-        spark, out_dir, to_id, buckets=changed_buckets, empty_ok=True
-    )
-    if to_side is None:
-        return kept
+    to_side = read_snapshot(spark, out_dir, to_id, buckets=changed_buckets)
     fresh = doc_stats_full(to_side).join(
         changed_docs.where(F.col("change") != "delete").select("doc_id"),
         "doc_id",
@@ -849,34 +860,11 @@ def rollback(spark: SparkSession, out_dir: str, to_id: int) -> dict:
     doesn't list; re-link missing target files from the archive. All
     metadata/link operations — no data pass, any table size."""
     target = load_snapshot(spark, out_dir, to_id)
-    want = {rel for rel, _ in target["files"]}
-    live = {rel for rel, _ in _list_tracked(spark, out_dir)}
-
-    unreachable = [
-        rel
-        for rel in sorted(want - live)
-        if not tablefs.exists(spark, posixpath.join(out_dir, ARCHIVE_DIR, rel))
-    ]
-    if unreachable:
-        raise ValueError(
-            f"cannot roll back to snapshot {to_id}: {len(unreachable)} "
-            f"file(s) expired (e.g. {unreachable[0]!r}); table untouched"
-        )
-
-    n_removed = 0
-    for rel in sorted(live - want):
-        p = posixpath.join(out_dir, rel)
-        tablefs.link(spark, p, posixpath.join(out_dir, ARCHIVE_DIR, rel))
-        tablefs.delete(spark, p)
-        n_removed += 1
-    n_restored = 0
-    for rel in sorted(want - live):
-        tablefs.link(
-            spark,
-            posixpath.join(out_dir, ARCHIVE_DIR, rel),
-            posixpath.join(out_dir, rel),
-        )
-        n_restored += 1
+    n_removed, n_restored = _restore_tree(
+        spark, out_dir, target["files"], archive_removed=True,
+        unreachable=f"cannot roll back to snapshot {to_id}: {{n}} file(s) "
+        "expired (e.g. {rel!r}); table untouched",
+    )
 
     # rolling back across a rebucket boundary: the restored tree carries
     # the bucket layout of the TARGET snapshot — re-pin the layout to it

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .. import snapshots, tablefs
+from .. import snapshots
 from ..config import ExtractConfig
 from ..pipeline import (
     _staged,
@@ -55,7 +55,6 @@ def incremental_extract(
     media = spark.read.parquet(media_path)
     media_side_path = media_side_path_for(media_path)
     schema = spark.read.parquet(docs_stream_dir).schema
-    spans_dir = f"{out_dir}/spans"
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -100,12 +99,13 @@ def incremental_extract(
         snapshots.open_table(spark, out_dir, num_buckets)
         # bucketed docs in → bucket-clustered result out: the append
         # adds one file per bucket this micro-batch touches
-        todo = with_bucket(batch_df, num_buckets)
-        if tablefs.list_parquet_files(spark, spans_dir):
-            existing = spark.read.parquet(spans_dir).select("doc_id")
-            todo = todo.join(existing, "doc_id", "left_anti")
-            if todo.isEmpty():
-                return
+        todo = with_bucket(batch_df, num_buckets).join(
+            snapshots.read_tree(spark, out_dir, "spans").select("doc_id"),
+            "doc_id",
+            "left_anti",
+        )
+        if todo.isEmpty():
+            return
         result = extract(todo, media, cfg, media_side_path=media_side_path)
         result.persist()
         try:

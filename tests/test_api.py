@@ -64,11 +64,11 @@ def test_stats_and_run(spark, corpus, tmp_path):
 
 def test_update_config_dotted(spark):
     eng = OCREngineSpark(spark, ExtractConfig())
-    eng.update_config(**{"det.th": 0.42, "extract_fields": False})
+    eng.update_config(**{"det.th": 0.42, "on_bad_media": "skip"})
     assert eng.config.det.th == 0.42
-    assert eng.config.extract_fields is False
+    assert eng.config.on_bad_media == "skip"
     eng.update_config(nonexistent=1)  # silently ignored, like the reference
-    eng.update_config(**{"extract_fields.x": 1})  # non-dataclass parent: no-op
+    eng.update_config(**{"on_bad_media.x": 1})  # non-dataclass parent: no-op
 
 
 def test_warmup_forces_ocr_stage(spark):

@@ -1,0 +1,143 @@
+"""A table whose every doc was purged is an ordinary state: every read
+and every mutator works on it. Each tree is read with its declared
+schema (``snapshots.read_tree``), so a tree with no file reads as an
+empty DataFrame instead of failing schema inference."""
+
+import os
+
+import pyarrow.parquet as pq
+import pytest
+
+from ai_invoice_ocr_engine_spark import snapshots as S
+from ai_invoice_ocr_engine_spark.pipeline import (
+    bucket_stats,
+    extract,
+    lookup_docs,
+    rebucket_spans,
+    run_extract,
+    upsert_extract,
+    verify_lineage,
+    with_bucket,
+)
+from ai_invoice_ocr_engine_spark.streaming import incremental_extract
+
+from .util import assert_span_equal, spans_key
+
+NB = 4
+N_DOCS = 16
+
+
+@pytest.fixture(scope="module")
+def emptied(spark, corpus, tmp_path_factory):
+    """A 4-bucket table of 16 docs (snapshot 1), then every doc purged
+    (snapshot 2)."""
+    d = tmp_path_factory.mktemp("emptied")
+    docs_path = str(d / "docs.parquet")
+    pq.write_table(pq.read_table(corpus["docs_path"]).slice(0, N_DOCS), docs_path)
+    out = str(d / "table")
+    run_extract(spark, docs_path, corpus["media_path"], out, num_buckets=NB)
+    upsert_extract(spark, out, docs_path, where="1=1", delete=True)
+    ids = sorted(r["doc_id"] for r in pq.read_table(docs_path, columns=["doc_id"]).to_pylist())
+    return {"out": out, "docs_path": docs_path, "ids": ids, "dir": d}
+
+
+def _clone(spark, emptied, name):
+    dst = str(emptied["dir"] / name)
+    S.clone_table(spark, emptied["out"], dst)
+    return dst
+
+
+def _live(spark, out):
+    return spans_key(S.read_tree(spark, out, "spans").collect())
+
+
+def test_emptied_table_reads(spark, emptied):
+    out, ids = emptied["out"], emptied["ids"]
+    assert [s["op"] for s in S.list_snapshots(spark, out)] == ["extract", "delete"]
+    assert verify_lineage(spark, out)["ok"]
+    assert bucket_stats(spark, out)["docs"] == 0
+    assert lookup_docs(spark, out, ids).count() == 0
+    head = S.read_snapshot(spark, out)
+    assert head.schema.fieldNames() == S.SPANS_SCHEMA.fieldNames()
+    assert head.count() == 0
+    changes = {r["doc_id"]: r["change"] for r in S.snapshot_changes(spark, out, 1, 2).collect()}
+    assert changes == {d: "delete" for d in ids}
+    for trail in S.doc_history(spark, out, ids[:3]).values():
+        assert [(e["snapshot_id"], e["present"]) for e in trail] == [(1, True), (2, False)]
+
+
+def test_emptied_table_takes_an_upsert(spark, emptied, corpus, golden_spans):
+    out = _clone(spark, emptied, "upsert")
+    three = emptied["ids"][:3]
+    in_sql = ",".join(f"'{d}'" for d in three)
+    r = upsert_extract(
+        spark, out, emptied["docs_path"], corpus["media_path"],
+        where=f"doc_id IN ({in_sql})",
+    )
+    assert r["docs"] == 3
+    rows = S.read_tree(spark, out, "spans").select("doc_id").collect()
+    assert sorted(x["doc_id"] for x in rows) == three  # one row per doc_id
+    assert_span_equal(_live(spark, out), {d: golden_spans[d] for d in three})
+    assert verify_lineage(spark, out)["ok"]
+
+
+def test_emptied_table_rebuckets(spark, emptied):
+    out = _clone(spark, emptied, "rebucket")
+    r = rebucket_spans(spark, out, 2)
+    assert r["rewritten"] and r["rows"] == 0
+    assert S.list_snapshots(spark, out)[-1]["op"] == "rebucket"
+    assert S.pinned_buckets(spark, out) == 2
+    assert verify_lineage(spark, out)["ok"]
+
+
+def test_emptied_table_resumes_and_streams(spark, emptied, corpus, golden_spans, tmp_path):
+    want = {d: golden_spans[d] for d in emptied["ids"]}
+    out = _clone(spark, emptied, "resume")
+    r = run_extract(spark, emptied["docs_path"], corpus["media_path"], out, num_buckets=NB)
+    assert (r["docs"], r["buckets_skipped"]) == (N_DOCS, 0)
+    assert_span_equal(_live(spark, out), want)
+    assert verify_lineage(spark, out)["ok"]
+
+    out = _clone(spark, emptied, "stream")
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(pq.read_table(emptied["docs_path"]), str(src / "part-000.parquet"))
+    q = incremental_extract(
+        spark, str(src), corpus["media_path"], out, str(tmp_path / "ckpt"), num_buckets=NB
+    )
+    q.awaitTermination(300)
+    assert S.list_snapshots(spark, out)[-1]["op"] == "stream-append"
+    assert_span_equal(_live(spark, out), want)
+    assert verify_lineage(spark, out)["ok"]
+
+
+def test_declared_read_starts_no_job(spark, emptied):
+    """A declared-schema read plans without touching a file; an inferring
+    read of the same tree runs a schema-inference job first."""
+    sc = spark.sparkContext
+    arch = os.path.join(emptied["out"], S.ARCHIVE_DIR)
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("declared", lambda: S.read_tree(spark, arch, "spans")) == 0
+    missing = str(emptied["dir"])  # holds no lineage tree
+    assert jobs("missing", lambda: S.read_tree(spark, missing, "lineage").collect()) == 0
+    assert jobs("inferred", lambda: spark.read.parquet(os.path.join(arch, "spans"))) >= 1
+    # the archive holds the purged rows, read back with the declared schema
+    assert S.read_tree(spark, arch, "spans").count() == N_DOCS
+
+
+def test_declared_spans_schema_matches_extract(spark, corpus):
+    """The declared spans schema is ``extract``'s bucketed output, names
+    and types: a change to ``extract``'s select must change it too."""
+    docs = with_bucket(spark.read.parquet(corpus["docs_path"]), NB)
+    got = extract(docs, spark.read.parquet(corpus["media_path"])).schema
+    assert [(f.name, f.dataType.simpleString()) for f in got] == [
+        (f.name, f.dataType.simpleString()) for f in S.SPANS_SCHEMA
+    ]
