@@ -75,6 +75,22 @@ def _cfg_from(args):
     )
 
 
+def _read_spans(spark, path: str):
+    """The ``--spans`` input of ``eval`` and ``export``. A table's
+    ``spans`` tree (its parent holds the layout pin) reads with the
+    table's declared schema, so an emptied table reads as no rows; any
+    other parquet (the oracle's golden file) reads with the schema its
+    files carry."""
+    import posixpath
+
+    from . import snapshots, tablefs
+
+    table, tree = posixpath.split(path.rstrip("/"))
+    if tree == "spans" and tablefs.exists(spark, posixpath.join(table, snapshots.LAYOUT_PIN)):
+        return snapshots.read_tree(spark, table, "spans")
+    return spark.read.parquet(path)
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="ai_invoice_ocr_engine_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -437,7 +453,7 @@ def main(argv=None) -> int:
 
         spark = get_spark(app="eval", master=args.master)
         try:
-            res = spark.read.parquet(args.spans)
+            res = _read_spans(spark, args.spans)
             gold = spark.read.parquet(args.golden)
             eq = span_equality_report(res, gold).collect()[0].asDict()
             # text-level A5 metrics over position-aligned spans (order is the
@@ -471,7 +487,7 @@ def main(argv=None) -> int:
 
                 result = read_snapshot(spark, args.table, args.as_of)
             else:
-                result = spark.read.parquet(args.spans)
+                result = _read_spans(spark, args.spans)
             writer = {"json": X.write_json, "csv": X.write_csv, "txt": X.write_text,
                       "xlsx": X.write_xlsx, "html": X.write_html}
             writer[args.format](result, args.out)

@@ -6,7 +6,8 @@ Plan shape (what Catalyst sees, SURVEY.md §3.1) — the one extraction plan:
         → repartition → mapInPandas(OCR per distinct frame)   [CPU stage]
     scan(documents) → posexplode(spans) ⋈ ocr(media_ref)      [AQE-planned]
         → hashpartition(bucket) → groupBy(bucket, doc_id)
-        → array_sort merge → spans_out → sink + lineage
+        → array_sort merge → spans_out
+        → staged write → lineage from the staged files → commit
 
 Scale design decisions:
   * The Python boundary is crossed ONCE per distinct media frame — a single
@@ -26,9 +27,13 @@ Scale design decisions:
     rows sit in one task and every bucketed write lands one file per
     bucket. Unbucketed docs (the library API, oracle/eval) group by
     doc_id as before.
-  * Lineage rows (partition_id, doc_count, span_count, checksum) are written
-    per completed run; resume anti-joins documents against completed
-    buckets (J3 of SURVEY.md §2.3) and processes only the remainder.
+  * Every bucket mutator takes three steps: ``snapshots.open_table`` →
+    ``stage_buckets`` (one write into ``_staging``, lineage rows
+    (partition_id, doc_count, span_count, checksum) folded from the files
+    that landed) → ``commit_buckets``. Every check of the table folds its
+    committed lineage once (``committed_lineage``); resume anti-joins
+    documents against its buckets (J3 of SURVEY.md §2.3) and processes
+    only the remainder.
 """
 
 from __future__ import annotations
@@ -501,9 +506,9 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
 
 
 def lineage_of(result_with_bucket: DataFrame, run_id: str | None, *extra) -> DataFrame:
-    """Per-partition lineage rows — the table's one digest: every lineage
-    writer and every gate comparing two trees (``verify_lineage``,
-    compaction, rebucket) folds through here. checksum = bit_xor fold of
+    """Per-partition lineage rows — the table's one digest: the staged
+    files' lineage (``stage_buckets``) and ``verify_lineage``'s recount of
+    the live tree fold through here. checksum = bit_xor fold of
     xxhash64(doc_id, canonical spans_out json) — order-insensitive and
     overflow-free (Spark 4 ANSI mode makes sum() overflow an error).
     ``extra`` aggregates ride the same pass (upsert's duplicate gate)."""
@@ -532,12 +537,30 @@ def lineage_frame(spark: SparkSession, rows: list) -> DataFrame:
     )
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> list[int]:
-    """Buckets a committed run already extracted: the partitions the
-    lineage tree records. A new or emptied table has none, and reading its
-    lineage then starts no job."""
-    lineage = read_tree(spark, out_dir, "lineage")
-    return [r[0] for r in lineage.select("partition_id").distinct().collect()]
+def _by_bucket(lineage: list) -> dict[int, tuple]:
+    """Lineage rows keyed by bucket: {partition_id: (doc_count,
+    span_count, checksum)}."""
+    return {
+        r["partition_id"]: (r["doc_count"], r["span_count"], r["checksum"])
+        for r in lineage
+    }
+
+
+def committed_lineage(spark: SparkSession, out_dir: str) -> dict[int, tuple]:
+    """The committed lineage folded per bucket over every run that wrote
+    it — {bucket: (doc_count, span_count, checksum)}, equal to
+    ``lineage_of`` over the bucket's live rows when lineage equals data.
+    The one read of the lineage tree; an emptied table folds to {}."""
+    return _by_bucket(
+        read_tree(spark, out_dir, "lineage")
+        .groupBy("partition_id")
+        .agg(
+            F.sum("doc_count").alias("doc_count"),
+            F.sum("span_count").alias("span_count"),
+            F.bit_xor("checksum").alias("checksum"),
+        )
+        .collect()
+    )
 
 
 def _staging(out_dir: str) -> str:
@@ -550,6 +573,22 @@ def _staged(out_dir: str, sub: str = "spans") -> str:
     return os.path.join(_staging(out_dir), sub)
 
 
+def stage_buckets(
+    spark: SparkSession, out_dir: str, rows: DataFrame, run_id: str | None = None
+) -> list:
+    """The one staging step of every bucket mutator, between
+    ``snapshots.open_table`` and ``commit_buckets``: write the
+    bucket-clustered ``rows`` once into ``_staged(out_dir)`` and return
+    the lineage rows of the files that landed (plus ``ids``, distinct
+    doc_ids per bucket, for upsert's gate). Folding lineage from the files
+    rather than the plan runs the plan once with nothing cached."""
+    rows.write.partitionBy("bucket").parquet(_staged(out_dir))
+    return lineage_of(
+        read_tree(spark, _staging(out_dir), "spans"), run_id,
+        F.count_distinct("doc_id").alias("ids"),
+    ).collect()
+
+
 def commit_buckets(
     spark: SparkSession,
     out_dir: str,
@@ -560,9 +599,9 @@ def commit_buckets(
     summary: dict | None = None,
 ) -> dict:
     """The one commit tail of every bucket mutator. The op has opened the
-    table (``snapshots.open_table``) and written its spans rows ONCE, to
-    ``_staged(out_dir)`` partitioned by bucket; ``lineage`` holds their
-    lineage rows, collected on the driver (``None`` keeps the table's
+    table (``snapshots.open_table``) and staged its spans rows
+    (``stage_buckets``); ``lineage`` holds the staged files' lineage
+    rows, collected on the driver (``None`` keeps the table's
     lineage: compaction rewrites files, not content). The steps, which
     are also the protocol's crash points:
 
@@ -621,7 +660,7 @@ def run_extract(
     run_id = run_id or uuid.uuid4().hex[:12]
     num_buckets = snapshots.open_table(spark, out_dir, num_buckets)
 
-    done = completed_buckets(spark, out_dir) if resume else []
+    done = sorted(committed_lineage(spark, out_dir)) if resume else []
     skipped = len(done)
     # J3: resume skips the completed buckets
     docs = with_bucket(spark.read.parquet(docs_path), num_buckets).where(
@@ -630,17 +669,14 @@ def run_extract(
     media = spark.read.parquet(media_path)
 
     t0 = time.time()
-    # bucketed docs in → bucket-clustered result out (one file per bucket)
-    result = extract(docs, media, cfg, media_side_path=media_side_path_for(media_path))
-    result.persist()
-    try:
-        # one pass over the result: its ≤ num_buckets lineage rows carry
-        # the doc count and the buckets this run writes
-        lineage = lineage_of(result, run_id).collect()
-        if lineage:
-            result.write.partitionBy("bucket").parquet(_staged(out_dir))
-    finally:
-        result.unpersist()
+    # bucketed docs in → bucket-clustered result out (one file per bucket);
+    # its ≤ num_buckets lineage rows carry the doc count and the buckets
+    # this run writes
+    lineage = stage_buckets(
+        spark, out_dir,
+        extract(docs, media, cfg, media_side_path=media_side_path_for(media_path)),
+        run_id,
+    )
     n_docs = sum(r["doc_count"] for r in lineage)
     if lineage:
         # the written buckets are REPLACED, data and lineage alike
@@ -656,8 +692,9 @@ def run_extract(
             summary={"docs": int(n_docs), "buckets_skipped": int(skipped)},
         )["snapshot_id"]
     else:
-        # fully-resumed rerun wrote nothing — don't append a no-op
+        # fully-resumed rerun staged nothing — don't append a no-op
         # snapshot; report the head the table already stands at
+        tablefs.delete(spark, _staging(out_dir))
         snap_id = snapshots.current_snapshot_id(spark, out_dir)
     secs = time.time() - t0
     return {
@@ -735,12 +772,8 @@ def upsert_extract(
         n_new = sum(n_sel.values())
     # the affected buckets' rows before the upsert, from their committed
     # lineage (open_table reconciled the data to it): no count of the data
-    n_old = (
-        read_tree(spark, out_dir, "lineage")
-        .where(F.col("partition_id").isin(affected))
-        .agg(F.coalesce(F.sum("doc_count"), F.lit(0)))
-        .first()[0]
-    )
+    committed = committed_lineage(spark, out_dir)
+    n_old = sum(committed[b][0] for b in affected if b in committed)
 
     t0 = time.time()
     # the union of kept and new rows is clustered by nothing: this one
@@ -748,16 +781,12 @@ def upsert_extract(
     # bucket. The count is explicit: AQE would coalesce this small shuffle
     # into ONE task that sorts and writes every affected bucket serially
     # (the slowest, least steady stage of the upsert)
-    merged.repartition(_target_parallelism(spark), "bucket").write.partitionBy(
-        "bucket"
-    ).parquet(_staged(out_dir))
-    # one pass over the staged tree: its lineage rows, plus the invariant
-    # gate before touching the live table — one row per doc. A purge that
-    # empties every affected bucket stages no row, and so no lineage row
-    lineage = lineage_of(
-        read_tree(spark, _staging(out_dir), "spans"), run_id,
-        F.count_distinct("doc_id").alias("ids"),
-    ).collect()
+    lineage = stage_buckets(
+        spark, out_dir, merged.repartition(_target_parallelism(spark), "bucket"), run_id
+    )
+    # the invariant gate before touching the live table: one row per doc.
+    # A purge that empties every affected bucket stages no row, and so no
+    # lineage row
     dup = sum(r["doc_count"] - r["ids"] for r in lineage)
     if dup:
         tablefs.delete(spark, _staged(out_dir))
@@ -789,43 +818,25 @@ def upsert_extract(
 
 def verify_lineage(spark: SparkSession, out_dir: str) -> dict:
     """Operational integrity check: recompute per-bucket counts/checksums
-    from the spans table and compare with the lineage rows. The 10^12-scale
-    answer to 'did every partition land, exactly once, uncorrupted?' —
-    runs as two scans + one join, whose ≤ num_buckets rows are collected
-    once; no collect of data rows.
+    from the spans table and compare with the committed lineage. The
+    10^12-scale answer to 'did every partition land, exactly once,
+    uncorrupted?' — one scan of the data and one of the lineage, each
+    folded to ≤ num_buckets rows and compared on the driver; no collect
+    of data rows. A bucket on one side only is a mismatch.
     """
-    actual = lineage_of(read_tree(spark, out_dir, "spans"), None).select(
-        "partition_id",
-        F.col("doc_count").alias("a_doc_count"),
-        F.col("span_count").alias("a_span_count"),
-        F.col("checksum").alias("a_checksum"),
-    )
-    expected = (
-        read_tree(spark, out_dir, "lineage")
-        .groupBy("partition_id")
-        .agg(
-            F.sum("doc_count").alias("doc_count"),
-            F.sum("span_count").alias("span_count"),
-            F.bit_xor("checksum").alias("checksum"),
-            F.count(F.lit(1)).alias("n_runs"),
+    actual = _by_bucket(lineage_of(read_tree(spark, out_dir, "spans"), None).collect())
+    expected = committed_lineage(spark, out_dir)
+    buckets = set(actual) | set(expected)
+    absent = (None, None, None)
+    n_bad = 0
+    for b in buckets:
+        a, e = actual.get(b, absent), expected.get(b, absent)
+        # a null comparison is not a mismatch (as in a SQL WHERE)
+        n_bad += a[0] is None or e[0] is None or any(
+            x != y for x, y in zip(a, e) if x is not None and y is not None
         )
-    )
-    bad = (
-        F.col("a_doc_count").isNull()
-        | F.col("doc_count").isNull()
-        | (F.col("a_doc_count") != F.col("doc_count"))
-        | (F.col("a_span_count") != F.col("span_count"))
-        | (F.col("a_checksum") != F.col("checksum"))
-    )
-    rows = (
-        expected.join(actual, "partition_id", "full_outer")
-        .select(bad.alias("bad"))
-        .collect()
-    )
-    # a null comparison is not a mismatch (as in a SQL WHERE)
-    n_bad = sum(1 for r in rows if r["bad"])
     return {
-        "partitions": len(rows),
+        "partitions": len(buckets),
         "mismatched": n_bad,
         "ok": n_bad == 0,
     }
@@ -859,9 +870,10 @@ def compact_spans(
     shuffles on (bucket, slot) where slot = pmod(xxhash64(doc_id, 1),
     n_slots) — deterministic, and a task holds whole slots so each
     bucket directory lands at most n_slots files. Safety protocol: the
-    rewrite is staged, its per-bucket lineage digest (``lineage_of``) must
-    equal the live tree's exactly (doc_count + span_count + checksum),
-    and only then does ``commit_buckets`` move it into place. Lineage rows
+    rewrite is staged, its staged files' lineage must equal the committed
+    lineage per bucket exactly (doc_count + span_count + checksum), and
+    only then does ``commit_buckets`` move it into place: a table whose
+    live rows disagree with its lineage is refused, not compacted. Lineage rows
     are untouched: content is identical, and the checksum is
     order-insensitive, so verify_lineage passes unchanged against the
     compacted table."""
@@ -884,20 +896,15 @@ def compact_spans(
     )
     staged = _staged(out_dir)
     total_slots = int(sum(slots.values()))
-    (
+    lineage = stage_buckets(
+        spark, out_dir,
         read_tree(spark, out_dir, "spans")
         .join(F.broadcast(slot_df), "bucket", "inner")
         .withColumn("slot", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.col("n_slots")))
         .repartition(max(total_slots, 1), F.col("bucket"), F.col("slot"))
-        .drop("n_slots", "slot")
-        .write.partitionBy("bucket")
-        .parquet(staged)
+        .drop("n_slots", "slot"),
     )
-
-    def _digest(root: str) -> list:
-        return sorted(lineage_of(read_tree(spark, root, "spans"), None).collect())
-
-    if _digest(_staging(out_dir)) != _digest(out_dir):
+    if _by_bucket(lineage) != committed_lineage(spark, out_dir):
         tablefs.delete(spark, staged)
         raise ValueError("compaction digest mismatch; original left untouched")
     files_after = len(tablefs.list_parquet_files(spark, staged))
@@ -955,15 +962,11 @@ def rebucket_spans(
     # expected digest from committed lineage (k rows; xor folds across
     # buckets) — the gate that both saves a full pre-scan and refuses to
     # launder torn uncommitted files into the rewrite
-    lrow = (
-        read_tree(spark, out_dir, "lineage")
-        .agg(
-            F.coalesce(F.sum("doc_count"), F.lit(0)).cast("long").alias("n"),
-            F.coalesce(F.bit_xor("checksum"), F.lit(0)).alias("checksum"),
-        )
-        .collect()[0]
-    )
-    before = (lrow["n"], lrow["checksum"])
+    def total(d: dict) -> tuple[int, int]:
+        v = d.values()
+        return sum(x[0] for x in v), functools.reduce(operator.xor, (x[2] for x in v), 0)
+
+    before = total(committed_lineage(spark, out_dir))
 
     per = _bucket_files(spark, spans_dir)
     total_bytes = sum(st[1] for st in per.values())
@@ -971,22 +974,17 @@ def rebucket_spans(
     # bucket spreads over that many tasks/files (compact's slot scheme)
     n_slots = max(1, -(-total_bytes // (new_buckets * target)))
     df = read_tree(spark, out_dir, "spans").drop("bucket")
-    (
+    lineage = stage_buckets(
+        spark, out_dir,
         with_bucket(df, new_buckets)
         .withColumn(
             "slot", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(n_slots))
         )
         .repartition(int(new_buckets * n_slots), F.col("bucket"), F.col("slot"))
-        .drop("slot")
-        .write.partitionBy("bucket")
-        .parquet(_staged(out_dir))
+        .drop("slot"),
+        run_id,
     )
-    lineage = lineage_of(read_tree(spark, _staging(out_dir), "spans"), run_id).collect()
-    after = (
-        sum(r["doc_count"] for r in lineage),
-        functools.reduce(operator.xor, (r["checksum"] for r in lineage), 0),
-    )
-    if after != before:
+    if total(_by_bucket(lineage)) != before:
         tablefs.delete(spark, _staged(out_dir))
         raise ValueError(
             "rebucket digest mismatch vs committed lineage; original left "
@@ -1021,13 +1019,7 @@ def bucket_stats(spark: SparkSession, out_dir: str) -> dict:
     signal (AQE handles it at join time, the layout fix is num_buckets
     or salting at write)."""
     per = _bucket_files(spark, os.path.join(out_dir, "spans"))
-    rows = {
-        r["partition_id"]: r["docs"]
-        for r in read_tree(spark, out_dir, "lineage")
-        .groupBy("partition_id")
-        .agg(F.sum("doc_count").alias("docs"))
-        .collect()
-    }
+    rows = {b: d[0] for b, d in committed_lineage(spark, out_dir).items()}
     buckets = sorted(set(per) | set(rows))
     doc_counts = [int(rows.get(b, 0)) for b in buckets]
     mean = (sum(doc_counts) / len(doc_counts)) if doc_counts else 0.0

@@ -6,11 +6,8 @@ Iceberg's real value beyond partitioning is its METADATA layer: every
 commit produces an immutable snapshot (a manifest of data files), so the
 table can be read as-of any retained snapshot, rolled back after a bad
 write, diffed for incremental (CDC) consumption, and vacuumed of files no
-retained snapshot references. On a cluster with the Iceberg runtime, all
-of this is delegated to Iceberg itself (``sources/tables.py`` routes
-``iceberg://`` targets to ``writeTo``; snapshots come from the catalog).
-This module provides the same contract for the parquet layout the sandbox
-runs on:
+retained snapshot references. The package writes no Iceberg table; this
+module provides the same contract for the parquet layout:
 
     {out_dir}/_manifest.json                  bucket layout pin (num_buckets, layout)
     {out_dir}/_snapshots/snap-00000001.json   one immutable manifest per commit
@@ -22,11 +19,19 @@ runs on:
 A snapshot manifest lists every live data file (relpath + size) under
 ``spans/`` and ``lineage/`` at commit time, plus op metadata. The bucket
 mutators (``run_extract``, ``upsert_extract``, the streaming append,
-``compact_spans``, ``rebucket_spans``) start with ``open_table`` and end
-with ``pipeline.commit_buckets``, which ARCHIVES the files they are about
-to destroy — local archives are hard links (zero data copied; the inode
-survives the live file's deletion), paths with a URI scheme fall back to
-a filesystem copy — lands the staged rows and commits a new manifest;
+``compact_spans``, ``rebucket_spans``) take the same three steps:
+
+1. ``open_table`` — clear ``_staging``, reconcile to HEAD, check the pin;
+2. ``pipeline.stage_buckets`` — write the op's rows once into
+   ``_staging/spans`` and fold their lineage from the staged files; each
+   op's gate compares that lineage (with ``pipeline.committed_lineage``
+   where it checks the table) before anything live changes;
+3. ``pipeline.commit_buckets`` — ARCHIVE the files about to be destroyed
+   (local archives are hard links: zero data copied, the inode survives
+   the live file's deletion; paths with a URI scheme fall back to a
+   filesystem copy), land the staged rows and lineage, and commit a new
+   manifest.
+
 ``rollback`` archives and restores files itself. Every filesystem call
 goes through ``tablefs``. Spark part-file names carry a per-job UUID, so
 a relpath identifies one immutable file for the life of the table and the
@@ -117,9 +122,10 @@ FULL_MANIFEST_EVERY = 16
 # ------------------------------------------------------------ table layout
 #: the bucket layout pin, read and written only here (see ``open_table``)
 LAYOUT_PIN = "_manifest.json"
-#: bucket layout identifier recorded in the pin (sources/tables.py:
-#: Iceberg's bucket transform is murmur3-based and assigns doc_ids to
-#: DIFFERENT bucket numbers — one table must never mix the two layouts)
+#: bucket layout identifier recorded in the pin: Iceberg's bucket(P,
+#: doc_id) transform is murmur3-based and assigns doc_ids to DIFFERENT
+#: bucket numbers than this xxhash64 layout — one table must never mix two
+#: layouts
 BUCKET_LAYOUT = "parquet-xxhash64"
 #: where a mutator stages its rows before ``pipeline.commit_buckets``
 #: lands them; hidden, so no listing, snapshot or live-table read sees it

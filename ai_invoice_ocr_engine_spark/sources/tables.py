@@ -1,69 +1,15 @@
-"""Table IO abstraction — Iceberg when a catalog is configured, parquet
-otherwise.
+"""Spark bucketed catalog tables for shuffle-free joins.
 
-The north_rule targets Iceberg tables partitioned by ``bucket(doc_id)``.
-This sandbox has no Iceberg runtime jars, so the same logical layout is
-realized on parquet: an explicit ``bucket = pmod(xxhash64(doc_id), P)``
-column + ``partitionBy("bucket")``. NOTE the two layouts are structurally
-equivalent but NOT bucket-for-bucket identical: Iceberg's ``bucket(P,
-doc_id)`` transform hashes with murmur3_32, this parquet fallback with
-Spark's xxhash64, so the same doc_id lands in different bucket numbers
-under the two schemes. Resume/lineage only needs a STABLE doc_id→partition
-map within one table, which both provide — but a single table must never
-mix the two layouts (the run manifest records which one is in use).
-
-On a cluster with Iceberg configured (spark.sql.catalog.* set and the
-runtime jar on the classpath), pass an ``iceberg://catalog.db.table``
-identifier and the writer uses ``writeTo(...).partitionedBy(bucket(P,
-doc_id))``.
+The extraction table itself is not written here: its bucketed parquet
+layout (``bucket = pmod(xxhash64(doc_id), P)``, ``partitionBy("bucket")``)
+is staged by ``pipeline.stage_buckets`` and landed by
+``pipeline.commit_buckets`` under the layout pin of ``snapshots``. This
+module holds the other bucketing, which aligns TWO tables on a join key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-ICEBERG_PREFIX = "iceberg://"
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def read_table(spark: SparkSession, target: str) -> DataFrame:
-    if target.startswith(ICEBERG_PREFIX):
-        return spark.read.format("iceberg").load(target[len(ICEBERG_PREFIX):])
-    return spark.read.parquet(target)
-
-
-def write_bucketed(
-    df: DataFrame, target: str, num_buckets: int, mode: str = "append"
-) -> None:
-    """Write the result table partitioned by bucket(doc_id)."""
-    if target.startswith(ICEBERG_PREFIX):
-        ident = target[len(ICEBERG_PREFIX):]
-        writer = df.writeTo(ident).partitionedBy(
-            F.bucket(num_buckets, F.col("doc_id"))
-        )
-        if mode == "append":
-            try:
-                writer.append()
-            except Exception:
-                writer.createOrReplace()
-        else:
-            writer.createOrReplace()
-        return
-    out = df
-    if "bucket" not in df.columns:
-        out = df.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
-        )
-    out.write.mode(mode).partitionBy("bucket").parquet(target)
+from pyspark.sql import DataFrame
 
 
 def write_bucketed_table(
@@ -80,8 +26,8 @@ def write_bucketed_table(
     as a SortMergeJoin with ZERO Exchange (both sides arrive
     pre-shuffled, and pre-sorted when ``sort``), the pattern that turns
     a 100 TB fact⋈fact join from a full network shuffle into a local
-    merge. Distinct from `write_bucketed` above: that one lays out ONE
-    table's partitions for pruning/resume; this one aligns TWO tables
+    merge. Distinct from the extraction table's ``bucket`` partitions:
+    those lay out ONE table for pruning/resume; this aligns TWO tables
     for shuffle-free joins (Iceberg equivalent: identical bucket(N, key)
     partition transforms + storage-partitioned join). With ``path`` the
     table is external (files live at ``path``; DROP TABLE keeps them)."""

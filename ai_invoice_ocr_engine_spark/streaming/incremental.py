@@ -27,11 +27,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .. import snapshots
 from ..config import ExtractConfig
 from ..pipeline import (
-    _staged,
     commit_buckets,
     extract,
-    lineage_of,
     media_side_path_for,
+    stage_buckets,
     with_bucket,
 )
 
@@ -106,13 +105,9 @@ def incremental_extract(
         )
         if todo.isEmpty():
             return
-        result = extract(todo, media, cfg, media_side_path=media_side_path)
-        result.persist()
-        try:
-            lineage = lineage_of(result, run_id).collect()
-            result.write.partitionBy("bucket").parquet(_staged(out_dir))
-        finally:
-            result.unpersist()
+        lineage = stage_buckets(
+            spark, out_dir, extract(todo, media, cfg, media_side_path=media_side_path), run_id
+        )
         # an append: no bucket is replaced, so the staged files and
         # lineage rows join the buckets' existing ones (the same
         # partition_id-partitioned lineage layout run_extract writes)

@@ -3,12 +3,16 @@ and every mutator works on it. Each tree is read with its declared
 schema (``snapshots.read_tree``), so a tree with no file reads as an
 empty DataFrame instead of failing schema inference."""
 
+import json
 import os
+import subprocess
+import sys
 
 import pyarrow.parquet as pq
 import pytest
 
 from ai_invoice_ocr_engine_spark import snapshots as S
+from ai_invoice_ocr_engine_spark.__main__ import _read_spans
 from ai_invoice_ocr_engine_spark.pipeline import (
     bucket_stats,
     extract,
@@ -141,3 +145,24 @@ def test_declared_spans_schema_matches_extract(spark, corpus):
     assert [(f.name, f.dataType.simpleString()) for f in got] == [
         (f.name, f.dataType.simpleString()) for f in S.SPANS_SCHEMA
     ]
+
+
+def test_cli_spans_input_reads_an_emptied_table(spark, emptied, tmp_path):
+    """``export --spans`` and ``eval --spans`` read a table's spans tree
+    with its declared schema: an emptied table exports no rows instead of
+    failing schema inference. A spans directory outside a table (no
+    layout pin beside it) still reads with the schema its files carry."""
+    spans = os.path.join(emptied["out"], "spans")
+    df = _read_spans(spark, spans)
+    assert df.schema == S.SPANS_SCHEMA and df.count() == 0
+    archived = _read_spans(spark, os.path.join(emptied["out"], S.ARCHIVE_DIR, "spans"))
+    assert archived.count() == N_DOCS
+
+    r = subprocess.run(
+        [sys.executable, "-m", "ai_invoice_ocr_engine_spark", "export", "--spans", spans,
+         "--out", str(tmp_path / "export"), "--format", "json", "--master", "local[2]"],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, timeout=420,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert json.loads(r.stdout.splitlines()[-1])["docs"] == 0

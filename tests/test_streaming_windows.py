@@ -1,7 +1,9 @@
 """Streaming windowed aggregation + custom stateful sessionizer: the
 stream==batch equality contracts (SURVEY.md §2.9 — beyond-reference ops)."""
 
+import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,7 +60,23 @@ def _run_stream(spark, df_fn, stream_dir, checkpoint, out_mode, name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    # availableNow ends a query once its input is drained, except a stateful
+    # one with a processing-time timeout, which keeps running no-data
+    # micro-batches. Wait for the query to end, or for a no-data batch after
+    # the batch that read the last file (maxFilesPerTrigger=1: one file per
+    # log offset); then stop it so no batch outlives the test.
+    last = len([f for f in os.listdir(stream_dir) if f.endswith(".parquet")]) - 1
+    deadline = time.time() + 300
+    try:
+        while not q.awaitTermination(1) and time.time() < deadline:
+            p = q.lastProgress
+            p = json.loads(p.json) if p is not None else {"sources": []}
+            if p["sources"] and p["numInputRows"] == 0 and all(
+                (s["endOffset"] or {}).get("logOffset", -1) >= last for s in p["sources"]
+            ):
+                break
+    finally:
+        q.stop()
     return spark.sql(f"SELECT * FROM {name}")
 
 

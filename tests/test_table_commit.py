@@ -157,31 +157,49 @@ def test_stream_refuses_a_num_buckets_other_than_the_pin(spark, corpus, tmp_path
     ]
 
 
-def test_upsert_refuses_a_staged_duplicate(spark, corpus, tmp_path):
-    """The upsert's one-row-per-doc gate rides its one pass over the staged
-    tree: a committed duplicate in an affected bucket stops the upsert
-    before the live table changes."""
+def _committed_duplicate(spark, corpus, tmp_path):
+    """A table whose first bucket holds one part file twice, committed as
+    a snapshot: its live rows disagree with its lineage. Returns the table,
+    that bucket, and the table's data files."""
     out = str(tmp_path / "out")
     run_extract(
         spark, corpus["docs_path"], corpus["media_path"], out,
         cfg=ExtractConfig(), num_buckets=NB,
     )
-    spans_dir = os.path.join(out, "spans")
-    bucket_dir = sorted(glob.glob(f"{spans_dir}/bucket=*"))[0]
+    bucket_dir = sorted(glob.glob(f"{out}/spans/bucket=*"))[0]
     shutil.copy(
         glob.glob(f"{bucket_dir}/part-*.parquet")[0],
         os.path.join(bucket_dir, "part-duplicate.parquet"),
     )
     S.commit_snapshot(spark, out, op="test-duplicate")
-    files = sorted(glob.glob(f"{out}/*/*/*.parquet"))
+    return out, int(bucket_dir.rsplit("=", 1)[1]), sorted(glob.glob(f"{out}/*/*/*.parquet"))
+
+
+def test_upsert_refuses_a_staged_duplicate(spark, corpus, tmp_path):
+    """The upsert's one-row-per-doc gate rides its one pass over the staged
+    tree: a committed duplicate in an affected bucket stops the upsert
+    before the live table changes."""
+    out, bucket, files = _committed_duplicate(spark, corpus, tmp_path)
     victim = (
-        spark.read.parquet(spans_dir)
-        .where(F.col("bucket") == int(bucket_dir.rsplit("=", 1)[1]))
+        spark.read.parquet(os.path.join(out, "spans"))
+        .where(F.col("bucket") == bucket)
         .first()["doc_id"]
     )
     with pytest.raises(ValueError, match="duplicate doc_ids; table untouched"):
         upsert_extract(
             spark, out, corpus["docs_path"], where=f"doc_id = '{victim}'", delete=True,
         )
+    assert [s["op"] for s in S.list_snapshots(spark, out)] == ["extract", "test-duplicate"]
+    assert sorted(glob.glob(f"{out}/*/*/*.parquet")) == files
+
+
+def test_compact_refuses_rows_that_disagree_with_lineage(spark, corpus, tmp_path):
+    """Compaction gates its staged rewrite on the committed lineage, not on
+    a second digest of the live tree: a committed duplicate (two files in
+    one bucket, so compaction has work) is refused, and the table is left
+    as it was."""
+    out, _, files = _committed_duplicate(spark, corpus, tmp_path)
+    with pytest.raises(ValueError, match="compaction digest mismatch"):
+        compact_spans(spark, out)
     assert [s["op"] for s in S.list_snapshots(spark, out)] == ["extract", "test-duplicate"]
     assert sorted(glob.glob(f"{out}/*/*/*.parquet")) == files
