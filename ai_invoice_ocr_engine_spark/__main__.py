@@ -87,7 +87,7 @@ def _read_spans(spark, path: str):
 
     table, tree = posixpath.split(path.rstrip("/"))
     if tree == "spans" and tablefs.exists(spark, posixpath.join(table, snapshots.LAYOUT_PIN)):
-        return snapshots.read_tree(spark, table, "spans")
+        return snapshots.read_tree(spark, table)
     return spark.read.parquet(path)
 
 

@@ -7,7 +7,8 @@ Plan shape (what Catalyst sees, SURVEY.md §3.1) — the one extraction plan:
     scan(documents) → posexplode(spans) ⋈ ocr(media_ref)      [AQE-planned]
         → hashpartition(bucket) → groupBy(bucket, doc_id)
         → array_sort merge → spans_out
-        → staged write → lineage from the staged files → commit
+        → staged write → lineage folded from the staged files
+        → land the files → commit (the manifest carries the lineage)
 
 Scale design decisions:
   * The Python boundary is crossed ONCE per distinct media frame — a single
@@ -30,10 +31,12 @@ Scale design decisions:
   * Every bucket mutator takes three steps: ``snapshots.open_table`` →
     ``stage_buckets`` (one write into ``_staging``, lineage rows
     (partition_id, doc_count, span_count, checksum) folded from the files
-    that landed) → ``commit_buckets``. Every check of the table folds its
-    committed lineage once (``committed_lineage``); resume anti-joins
-    documents against its buckets (J3 of SURVEY.md §2.3) and processes
-    only the remainder.
+    that landed) → ``commit_buckets`` (archive, land the files, commit a
+    snapshot whose manifest records each bucket's lineage). Every check of
+    the table reads that committed lineage from HEAD's manifest
+    (``committed_lineage``, no Spark job); resume anti-joins documents
+    against its buckets (J3 of SURVEY.md §2.3) and processes only the
+    remainder.
 """
 
 from __future__ import annotations
@@ -53,7 +56,7 @@ from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 from .config import ExtractConfig
 from . import kernels as K
 from . import snapshots, tablefs
-from .snapshots import LINEAGE_SCHEMA, read_tree
+from .snapshots import read_tree
 
 #: per-python-worker media side-input cache (the reference's config-hash
 #: singleton pattern, /root/reference/engine.py:17-21 — load once per worker
@@ -505,7 +508,7 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
-def lineage_of(result_with_bucket: DataFrame, run_id: str | None, *extra) -> DataFrame:
+def lineage_of(result_with_bucket: DataFrame, *extra) -> DataFrame:
     """Per-partition lineage rows — the table's one digest: the staged
     files' lineage (``stage_buckets``) and ``verify_lineage``'s recount of
     the live tree fold through here. checksum = bit_xor fold of
@@ -513,27 +516,10 @@ def lineage_of(result_with_bucket: DataFrame, run_id: str | None, *extra) -> Dat
     overflow-free (Spark 4 ANSI mode makes sum() overflow an error).
     ``extra`` aggregates ride the same pass (upsert's duplicate gate)."""
     return result_with_bucket.groupBy(F.col("bucket").alias("partition_id")).agg(
-        F.lit(run_id).alias("run_id"),
         F.count(F.lit(1)).alias("doc_count"),
         F.coalesce(F.sum(F.size("spans_out")), F.lit(0)).cast("long").alias("span_count"),
         F.bit_xor(F.xxhash64("doc_id", F.to_json("spans_out"))).alias("checksum"),
         *extra,
-    )
-
-
-def lineage_frame(spark: SparkSession, rows: list) -> DataFrame:
-    """Lineage rows collected on the driver (``lineage_of(...).collect()``)
-    as a DataFrame to write. A pandas frame under Arrow plans as a
-    driver-local LocalTableScan; a list of Rows plans as a Python-RDD scan
-    whose tasks start a second pyspark.daemon and worker pool beside the
-    OCR stage's (measured at local[4]: 4 more workers, ~170 MB more PSS,
-    1.0–1.4 s more on a session's first write). Arrow needs at least one row; an
-    empty run records nothing, so it keeps the plain path."""
-    if not rows:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    return spark.createDataFrame(
-        pd.DataFrame([r.asDict() for r in rows], columns=LINEAGE_SCHEMA.fieldNames()),
-        LINEAGE_SCHEMA,
     )
 
 
@@ -547,35 +533,25 @@ def _by_bucket(lineage: list) -> dict[int, tuple]:
 
 
 def committed_lineage(spark: SparkSession, out_dir: str) -> dict[int, tuple]:
-    """The committed lineage folded per bucket over every run that wrote
-    it — {bucket: (doc_count, span_count, checksum)}, equal to
-    ``lineage_of`` over the bucket's live rows when lineage equals data.
-    The one read of the lineage tree; an emptied table folds to {}."""
-    return _by_bucket(
-        read_tree(spark, out_dir, "lineage")
-        .groupBy("partition_id")
-        .agg(
-            F.sum("doc_count").alias("doc_count"),
-            F.sum("span_count").alias("span_count"),
-            F.bit_xor("checksum").alias("checksum"),
-        )
-        .collect()
-    )
+    """The committed lineage: {bucket: (doc_count, span_count, checksum)}
+    as HEAD's manifest records it, equal to ``lineage_of`` over the
+    bucket's live rows when lineage equals data. A manifest read, no Spark
+    job; a table with no snapshot log, or an emptied one, gives {}."""
+    head = snapshots.current_snapshot_id(spark, out_dir)
+    return {} if head is None else snapshots.load_snapshot(spark, out_dir, head)["lineage"]
 
 
 def _staging(out_dir: str) -> str:
-    """Where a mutator stages its trees for ``commit_buckets``; each
+    """Where a mutator stages its rows for ``commit_buckets``; each
     ``snapshots.open_table`` starts it empty."""
     return os.path.join(out_dir, snapshots.STAGING_DIR)
 
 
-def _staged(out_dir: str, sub: str = "spans") -> str:
-    return os.path.join(_staging(out_dir), sub)
+def _staged(out_dir: str) -> str:
+    return os.path.join(_staging(out_dir), "spans")
 
 
-def stage_buckets(
-    spark: SparkSession, out_dir: str, rows: DataFrame, run_id: str | None = None
-) -> list:
+def stage_buckets(spark: SparkSession, out_dir: str, rows: DataFrame) -> list:
     """The one staging step of every bucket mutator, between
     ``snapshots.open_table`` and ``commit_buckets``: write the
     bucket-clustered ``rows`` once into ``_staged(out_dir)`` and return
@@ -584,8 +560,7 @@ def stage_buckets(
     rather than the plan runs the plan once with nothing cached."""
     rows.write.partitionBy("bucket").parquet(_staged(out_dir))
     return lineage_of(
-        read_tree(spark, _staging(out_dir), "spans"), run_id,
-        F.count_distinct("doc_id").alias("ids"),
+        read_tree(spark, _staging(out_dir)), F.count_distinct("doc_id").alias("ids"),
     ).collect()
 
 
@@ -602,39 +577,44 @@ def commit_buckets(
     table (``snapshots.open_table``) and staged its spans rows
     (``stage_buckets``); ``lineage`` holds the staged files' lineage
     rows, collected on the driver (``None`` keeps the table's
-    lineage: compaction rewrites files, not content). The steps, which
+    lineage: compaction rewrites files, not content). The table's new
+    lineage is HEAD's less the ``replaced`` buckets, with each staged row
+    folded in — counts summed, checksums xored, so a bucket that is not
+    replaced (the streaming append) adds to its entry. The steps, which
     are also the protocol's crash points:
 
-    1. archive the live spans and lineage files of the ``replaced``
-       buckets, so every earlier snapshot still reads back;
+    1. archive the live spans files of the ``replaced`` buckets, so every
+       earlier snapshot still reads back;
     2. land spans: delete each replaced bucket, then move every staged
        file into its bucket — renames, no pass over the data. A replaced
        bucket that got no rows stays dropped (a purge); a bucket not
        replaced gains files (the streaming append);
-    3. land lineage the same way, staged through ``lineage_frame``;
-    4. commit the snapshot — the commit marker.
+    3. commit the snapshot — the commit marker, whose one manifest
+       publish records the files and the new lineage together.
 
-    A crash before step 4 leaves the live tree off HEAD, and the next
+    A crash before step 3 leaves the live tree off HEAD, and the next
     ``open_table`` reconciles it back (``reconcile_to_head``: landed files
     removed, deleted ones restored from the archive). Returns the commit
     record."""
     replaced = sorted({int(b) for b in replaced})
-    trees = [("spans", "bucket")]
     if lineage is not None:
-        trees.append(("lineage", "partition_id"))
-        if lineage:
-            lineage_frame(spark, lineage).write.partitionBy("partition_id").parquet(
-                _staged(out_dir, "lineage")
-            )
+        table = {
+            b: v for b, v in committed_lineage(spark, out_dir).items() if b not in replaced
+        }
+        for b, (docs, spans, checksum) in _by_bucket(lineage).items():
+            d0, s0, c0 = table.get(b, (0, 0, 0))
+            table[b] = (d0 + docs, s0 + spans, c0 ^ checksum)
+        lineage = table
     snapshots.archive_buckets(spark, out_dir, replaced)
-    for sub, col in trees:
-        live, staged = os.path.join(out_dir, sub), _staged(out_dir, sub)
-        for b in replaced:
-            tablefs.delete(spark, os.path.join(live, f"{col}={b}"))
-        for rel, _ in tablefs.list_parquet_files(spark, staged):
-            tablefs.move(spark, os.path.join(staged, rel), os.path.join(live, rel))
-    snap = snapshots.commit_snapshot(spark, out_dir, op=op, run_id=run_id, summary=summary)
-    tablefs.delete(spark, os.path.join(out_dir, snapshots.STAGING_DIR))
+    live, staged = os.path.join(out_dir, "spans"), _staged(out_dir)
+    for b in replaced:
+        tablefs.delete(spark, os.path.join(live, f"bucket={b}"))
+    for rel, _ in tablefs.list_parquet_files(spark, staged):
+        tablefs.move(spark, os.path.join(staged, rel), os.path.join(live, rel))
+    snap = snapshots.commit_snapshot(
+        spark, out_dir, op=op, run_id=run_id, summary=summary, lineage=lineage
+    )
+    tablefs.delete(spark, _staging(out_dir))
     return snap
 
 
@@ -648,13 +628,15 @@ def run_extract(
     resume: bool = True,
     run_id: str | None = None,
 ) -> dict:
-    """End-to-end job: read → (resume filter) → extract → bucketed write +
-    lineage. Output layout:
+    """End-to-end job: read → (resume filter) → extract → bucketed write,
+    committed with its lineage. Output layout:
 
         {out_dir}/spans/bucket=N/part-*.parquet   (result, partitioned)
-        {out_dir}/lineage/part-*.parquet           (LINEAGE_SCHEMA)
+        {out_dir}/_snapshots/snap-*.json          (commits; each manifest
+                                                   carries the per-bucket lineage)
 
-    Returns run stats {run_id, buckets_done, buckets_skipped, docs, secs}.
+    Returns run stats {run_id, docs, buckets_skipped, secs, docs_per_sec,
+    out, snapshot_id}.
     """
     cfg = cfg or ExtractConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -662,29 +644,29 @@ def run_extract(
 
     done = sorted(committed_lineage(spark, out_dir)) if resume else []
     skipped = len(done)
-    # J3: resume skips the completed buckets
-    docs = with_bucket(spark.read.parquet(docs_path), num_buckets).where(
-        ~F.col("bucket").isin(done)
-    )
-    media = spark.read.parquet(media_path)
-
     t0 = time.time()
-    # bucketed docs in → bucket-clustered result out (one file per bucket);
-    # its ≤ num_buckets lineage rows carry the doc count and the buckets
-    # this run writes
-    lineage = stage_buckets(
-        spark, out_dir,
-        extract(docs, media, cfg, media_side_path=media_side_path_for(media_path)),
-        run_id,
-    )
+    lineage = []
+    # a table whose every bucket is committed has nothing to extract: no
+    # media blob, no plan, no staging write
+    if skipped < num_buckets:
+        # J3: resume skips the completed buckets
+        docs = with_bucket(spark.read.parquet(docs_path), num_buckets).where(
+            ~F.col("bucket").isin(done)
+        )
+        media = spark.read.parquet(media_path)
+        # bucketed docs in → bucket-clustered result out (one file per
+        # bucket); its ≤ num_buckets lineage rows carry the doc count and
+        # the buckets this run writes
+        lineage = stage_buckets(
+            spark, out_dir,
+            extract(docs, media, cfg, media_side_path=media_side_path_for(media_path)),
+        )
     n_docs = sum(r["doc_count"] for r in lineage)
     if lineage:
-        # the written buckets are REPLACED, data and lineage alike
+        # the written buckets are REPLACED, rows and lineage entry alike
         # (completed buckets, anti-joined out by resume, are untouched):
-        # a rerun after a crash between the data and lineage landing
-        # recomputes the unfinished bucket and replaces its partial
-        # partition instead of appending duplicates, and can never leave
-        # a stale lineage row describing overwritten data
+        # a rerun without resume replaces each bucket instead of adding
+        # its rows a second time
         snap_id = commit_buckets(
             spark, out_dir, "extract", lineage,
             replaced=[r["partition_id"] for r in lineage],
@@ -744,6 +726,7 @@ def upsert_extract(
     spans_dir = os.path.join(out_dir, "spans")
     num_buckets = snapshots.open_table(spark, out_dir)
 
+    t0 = time.time()
     docs = with_bucket(spark.read.parquet(docs_path), num_buckets)
     sel = docs.where(where) if where else docs
     # one pass over the selection: the buckets it touches and its distinct
@@ -755,11 +738,13 @@ def upsert_extract(
     affected = sorted(n_sel)
     if not affected:
         return {"run_id": run_id, "docs": 0, "buckets": 0,
-                "deleted": bool(delete), "out": spans_dir}
+                "deleted": bool(delete), "secs": round(time.time() - t0, 3),
+                "out": spans_dir,
+                "snapshot_id": snapshots.current_snapshot_id(spark, out_dir)}
 
     sel_ids = sel.select("doc_id")
     kept = (
-        read_tree(spark, out_dir, "spans")
+        read_tree(spark, out_dir)
         .where(F.col("bucket").isin(affected))
         .join(sel_ids, "doc_id", "left_anti")
     )
@@ -775,18 +760,17 @@ def upsert_extract(
     committed = committed_lineage(spark, out_dir)
     n_old = sum(committed[b][0] for b in affected if b in committed)
 
-    t0 = time.time()
     # the union of kept and new rows is clustered by nothing: this one
     # exchange puts each bucket in one task, so staging lands one file per
     # bucket. The count is explicit: AQE would coalesce this small shuffle
     # into ONE task that sorts and writes every affected bucket serially
     # (the slowest, least steady stage of the upsert)
     lineage = stage_buckets(
-        spark, out_dir, merged.repartition(_target_parallelism(spark), "bucket"), run_id
+        spark, out_dir, merged.repartition(_target_parallelism(spark), "bucket")
     )
     # the invariant gate before touching the live table: one row per doc.
     # A purge that empties every affected bucket stages no row, and so no
-    # lineage row
+    # lineage row: commit_buckets drops those buckets' entries
     dup = sum(r["doc_count"] - r["ids"] for r in lineage)
     if dup:
         tablefs.delete(spark, _staged(out_dir))
@@ -820,11 +804,11 @@ def verify_lineage(spark: SparkSession, out_dir: str) -> dict:
     """Operational integrity check: recompute per-bucket counts/checksums
     from the spans table and compare with the committed lineage. The
     10^12-scale answer to 'did every partition land, exactly once,
-    uncorrupted?' — one scan of the data and one of the lineage, each
-    folded to ≤ num_buckets rows and compared on the driver; no collect
+    uncorrupted?' — one scan of the data, folded to ≤ num_buckets rows
+    and compared on the driver with HEAD's manifest lineage; no collect
     of data rows. A bucket on one side only is a mismatch.
     """
-    actual = _by_bucket(lineage_of(read_tree(spark, out_dir, "spans"), None).collect())
+    actual = _by_bucket(lineage_of(read_tree(spark, out_dir)).collect())
     expected = committed_lineage(spark, out_dir)
     buckets = set(actual) | set(expected)
     absent = (None, None, None)
@@ -873,10 +857,10 @@ def compact_spans(
     rewrite is staged, its staged files' lineage must equal the committed
     lineage per bucket exactly (doc_count + span_count + checksum), and
     only then does ``commit_buckets`` move it into place: a table whose
-    live rows disagree with its lineage is refused, not compacted. Lineage rows
-    are untouched: content is identical, and the checksum is
-    order-insensitive, so verify_lineage passes unchanged against the
-    compacted table."""
+    live rows disagree with its lineage is refused, not compacted. The
+    commit carries the lineage unchanged: content is identical, and the
+    checksum is order-insensitive, so verify_lineage passes unchanged
+    against the compacted table."""
     spans_dir = os.path.join(out_dir, "spans")
     snapshots.open_table(spark, out_dir)
     target = int(target_mb) * 1024 * 1024
@@ -898,7 +882,7 @@ def compact_spans(
     total_slots = int(sum(slots.values()))
     lineage = stage_buckets(
         spark, out_dir,
-        read_tree(spark, out_dir, "spans")
+        read_tree(spark, out_dir)
         .join(F.broadcast(slot_df), "bucket", "inner")
         .withColumn("slot", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.col("n_slots")))
         .repartition(max(total_slots, 1), F.col("bucket"), F.col("slot"))
@@ -939,8 +923,8 @@ def rebucket_spans(
     many files to list. The rewrite is one shuffle keyed on (new
     bucket, slot) — compact's slot scheme, so a large bucket spreads
     over ceil(bytes/target) tasks/files instead of one. Safety: the
-    expected content digest comes from the COMMITTED lineage rows (a
-    k-row aggregate — no pre-scan of the live tree), and the table is
+    expected content digest comes from the COMMITTED lineage (HEAD's
+    manifest, k entries — no pre-scan of the live tree), and the table is
     opened without reconciliation, so torn files from a crashed writer
     can't launder in: any divergence between live data and lineage fails
     the gate (run `gc` first if a crash left uncommitted files). The
@@ -959,7 +943,7 @@ def rebucket_spans(
     run_id = run_id or f"rebucket-{uuid.uuid4().hex[:8]}"
     target = int(target_mb) * 1024 * 1024
 
-    # expected digest from committed lineage (k rows; xor folds across
+    # expected digest from committed lineage (k entries; xor folds across
     # buckets) — the gate that both saves a full pre-scan and refuses to
     # launder torn uncommitted files into the rewrite
     def total(d: dict) -> tuple[int, int]:
@@ -973,7 +957,7 @@ def rebucket_spans(
     # slots per NEW bucket ≈ ceil(expected bucket bytes / target): a big
     # bucket spreads over that many tasks/files (compact's slot scheme)
     n_slots = max(1, -(-total_bytes // (new_buckets * target)))
-    df = read_tree(spark, out_dir, "spans").drop("bucket")
+    df = read_tree(spark, out_dir).drop("bucket")
     lineage = stage_buckets(
         spark, out_dir,
         with_bucket(df, new_buckets)
@@ -982,7 +966,6 @@ def rebucket_spans(
         )
         .repartition(int(new_buckets * n_slots), F.col("bucket"), F.col("slot"))
         .drop("slot"),
-        run_id,
     )
     if total(_by_bucket(lineage)) != before:
         tablefs.delete(spark, _staged(out_dir))
@@ -1013,8 +996,9 @@ def rebucket_spans(
 def bucket_stats(spark: SparkSession, out_dir: str) -> dict:
     """Per-bucket layout/skew report — the decision input for ``compact``
     (files per bucket) and for salting (row skew). File counts/bytes come
-    from a listing; row counts from the lineage SUMS (no data scan at
-    all — the report is O(partitions) however large the table is).
+    from a listing; row counts from HEAD's manifest lineage (no data scan
+    and no Spark job — the report is O(partitions) however large the
+    table is).
     skew = max/mean of per-bucket rows; >2 is the usual salt-or-split
     signal (AQE handles it at join time, the layout fix is num_buckets
     or salting at write)."""
@@ -1060,7 +1044,7 @@ def lookup_docs(spark: SparkSession, out_dir: str, doc_ids) -> DataFrame:
     p = snapshots.pinned_buckets(spark, out_dir)
     buckets = sorted({spark_bucket(d, p) for d in ids})
     return (
-        read_tree(spark, out_dir, "spans")
+        read_tree(spark, out_dir)
         .where(F.col("bucket").isin(buckets))
         .where(F.col("doc_id").isin(ids))
     )

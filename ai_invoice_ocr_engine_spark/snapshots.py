@@ -10,16 +10,24 @@ retained snapshot references. The package writes no Iceberg table; this
 module provides the same contract for the parquet layout:
 
     {out_dir}/_manifest.json                  bucket layout pin (num_buckets, layout)
+    {out_dir}/spans/bucket=N/part-*.parquet   the table's rows (``SPANS_SCHEMA``)
     {out_dir}/_snapshots/snap-00000001.json   one immutable manifest per commit
     {out_dir}/_archive/<relpath>              retired data files (time travel)
-    {out_dir}/_staging/{spans,lineage}/       an op's rows before they land
+    {out_dir}/_staging/spans/                 an op's rows before they land
 
 (HEAD is derived by listing the manifests — no pointer file to go stale.)
 
 A snapshot manifest lists every live data file (relpath + size) under
-``spans/`` and ``lineage/`` at commit time, plus op metadata. The bucket
-mutators (``run_extract``, ``upsert_extract``, the streaming append,
-``compact_spans``, ``rebucket_spans``) take the same three steps:
+``spans/`` at commit time, the table's lineage — one entry per bucket,
+``"lineage": {"<bucket>": [doc_count, span_count, checksum]}``, the
+bucket's digest as ``pipeline.lineage_of`` computes it over its rows —
+and op metadata (``op``, ``run_id``, ``ts``, ``num_buckets``,
+``summary``). Files and lineage commit in the same atomic publish, so a
+committed snapshot never holds data without its lineage or lineage
+without its data; the run that wrote a bucket's entry is the committing
+snapshot's ``run_id``. The bucket mutators (``run_extract``,
+``upsert_extract``, the streaming append, ``compact_spans``,
+``rebucket_spans``) take the same three steps:
 
 1. ``open_table`` — clear ``_staging``, reconcile to HEAD, check the pin;
 2. ``pipeline.stage_buckets`` — write the op's rows once into
@@ -29,19 +37,18 @@ mutators (``run_extract``, ``upsert_extract``, the streaming append,
 3. ``pipeline.commit_buckets`` — ARCHIVE the files about to be destroyed
    (local archives are hard links: zero data copied, the inode survives
    the live file's deletion; paths with a URI scheme fall back to a
-   filesystem copy), land the staged rows and lineage, and commit a new
-   manifest.
+   filesystem copy), land the staged rows, and commit a new manifest
+   carrying the folded lineage.
 
 ``rollback`` archives and restores files itself. Every filesystem call
 goes through ``tablefs``. Spark part-file names carry a per-job UUID, so
 a relpath identifies one immutable file for the life of the table and the
 archive can be flat link-per-relpath with no versioning.
 
-Every Spark read of a table tree goes through ``read_tree`` with the
-tree's declared schema (``SPANS_SCHEMA``, ``LINEAGE_SCHEMA``), never one
-inferred from its files: no read starts a schema-inference job, and a
-missing or empty tree (a new table, one whose every doc was purged)
-reads as an empty DataFrame.
+Every Spark read of the spans tree goes through ``read_tree`` with the
+declared ``SPANS_SCHEMA``, never one inferred from its files: no read
+starts a schema-inference job, and a missing or empty tree (a new table,
+one whose every doc was purged) reads as an empty DataFrame.
 
 Scale posture: commits cost one file listing + O(retired files) hard
 links — no data pass; time-travel reads hand ``read_tree`` an explicit
@@ -56,12 +63,14 @@ exist), the same optimistic-commit stance Iceberg takes; a catalog adds
 retry orchestration, not safety.
 
 MANIFEST SIZE (VERDICT r4 next-step #4): manifests are DELTAS against
-their parent — ``{"base_id", "add": [...], "remove": [...]}`` — so a
-commit that touches B buckets writes O(files-in-B) manifest bytes, not
+their parent — ``{"base_id", "add": [...], "remove": [...], "lineage":
+{changed buckets}, "lineage_remove": [emptied buckets]}`` — so a commit
+that touches B buckets writes O(files-in-B + B) manifest bytes, not
 O(total files); this is Iceberg's manifest-reuse idea flattened onto a
 linear log. Every ``FULL_MANIFEST_EVERY``-th snapshot is a full listing,
 bounding every read's resolution chain; ``load_snapshot`` materializes
-transparently, so every consumer still sees ``snap["files"]``.
+transparently, so every consumer still sees ``snap["files"]`` and
+``snap["lineage"]``.
 ``expire_snapshots`` rewrites retained delta manifests to full form
 before dropping the bases they resolve against (a representation
 rewrite, never a content change).
@@ -77,7 +86,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
-    ArrayType, IntegerType, LongType, MapType, StringType, StructField, StructType,
+    ArrayType, IntegerType, MapType, StringType, StructField, StructType,
 )
 
 from . import tablefs
@@ -98,21 +107,9 @@ SPANS_SCHEMA = StructType([
     StructField("n_ocr", IntegerType()),
     StructField("bucket", IntegerType()),
 ])
-#: a lineage row: one bucket's digest as one run wrote it
-LINEAGE_SCHEMA = StructType([
-    StructField("partition_id", IntegerType()),
-    StructField("run_id", StringType()),
-    StructField("doc_count", LongType()),
-    StructField("span_count", LongType()),
-    StructField("checksum", LongType()),
-])
-#: the trees of a table, and of its ``_staging`` and ``_archive``
-TREE_SCHEMAS = {"spans": SPANS_SCHEMA, "lineage": LINEAGE_SCHEMA}
 
 SNAP_DIR = "_snapshots"
 ARCHIVE_DIR = "_archive"
-#: table subtrees captured by a snapshot (data first, commit marker second)
-TRACKED = ("spans", "lineage")
 #: every k-th snapshot is a full file listing; the rest are parent deltas.
 #: Bounds a read's delta-resolution chain at k-1 manifest loads while a
 #: commit touching B buckets writes O(files-in-B) bytes.
@@ -215,15 +212,12 @@ def open_table(
 
 
 def _list_tracked(spark: SparkSession | None, out_dir: str) -> list[list]:
-    """[[relpath, bytes], ...] of every live parquet data file under the
-    tracked subtrees, relpaths POSIX-style relative to ``out_dir``."""
-    out = [
-        [f"{sub}/{rel}", int(size)]
-        for sub in TRACKED
-        for rel, size in tablefs.list_parquet_files(spark, posixpath.join(out_dir, sub))
-    ]
-    out.sort()
-    return out
+    """[[relpath, bytes], ...] of every live parquet data file under
+    ``spans/``, relpaths POSIX-style relative to ``out_dir``."""
+    return sorted(
+        [f"spans/{rel}", int(size)]
+        for rel, size in tablefs.list_parquet_files(spark, posixpath.join(out_dir, "spans"))
+    )
 
 
 # ------------------------------------------------------------- snapshot log
@@ -248,7 +242,8 @@ def current_snapshot_id(spark: SparkSession, out_dir: str) -> int | None:
 def load_snapshot(spark: SparkSession, out_dir: str, snapshot_id: int) -> dict:
     """Load a manifest, MATERIALIZED: a delta manifest resolves against
     its base chain (bounded at FULL_MANIFEST_EVERY-1 hops by construction)
-    so every caller sees a complete ``snap["files"]`` regardless of the
+    so every caller sees a complete ``snap["files"]`` and ``snap["lineage"]``
+    ({bucket: (doc_count, span_count, checksum)}) regardless of the
     on-disk representation. An unparseable manifest names itself loudly —
     with the staged-publish writer that means external corruption, and the
     remedy (quarantine the file, re-list) is in the message."""
@@ -268,6 +263,7 @@ def load_snapshot(spark: SparkSession, out_dir: str, snapshot_id: int) -> dict:
             "readable; deltas based on it resolve only through their own "
             "chain)"
         ) from None
+    lineage = _lineage_map(snap.get("lineage", {}))
     if "files" not in snap:
         base = load_snapshot(spark, out_dir, snap["base_id"])
         files = {rel: sz for rel, sz in base["files"]}
@@ -276,7 +272,19 @@ def load_snapshot(spark: SparkSession, out_dir: str, snapshot_id: int) -> dict:
         for rel, sz in snap.get("add", ()):
             files[rel] = sz
         snap["files"] = sorted([rel, sz] for rel, sz in files.items())
+        emptied = set(snap.get("lineage_remove", ()))
+        lineage = {
+            **{b: v for b, v in base["lineage"].items() if b not in emptied},
+            **lineage,
+        }
+    snap["lineage"] = lineage
     return snap
+
+
+def _lineage_map(lineage: dict) -> dict[int, tuple]:
+    """A lineage map keyed by int bucket with (doc_count, span_count,
+    checksum) int tuples — JSON keys are strings and its arrays lists."""
+    return dict(sorted((int(b), tuple(int(x) for x in v)) for b, v in lineage.items()))
 
 
 def list_snapshots(spark: SparkSession, out_dir: str) -> list[dict]:
@@ -306,25 +314,31 @@ def commit_snapshot(
     run_id: str | None = None,
     summary: dict | None = None,
     files: list[list] | None = None,
+    lineage: dict | None = None,
 ) -> dict:
     """Append one immutable manifest describing the CURRENT live table.
 
-    Called by every mutating op strictly AFTER its data (and lineage)
-    writes land — the snapshot is the commit marker, mirroring how
-    lineage rows are written after the spans they describe. ``files``
-    lets ``rollback`` commit the restored manifest verbatim.
+    Called by every mutating op strictly AFTER its data lands — the
+    snapshot is the commit marker. ``lineage`` is the table's per-bucket
+    lineage after the op ({bucket: (doc_count, span_count, checksum)});
+    ``None`` carries the parent's (a rewrite that keeps content).
+    ``files`` lets ``rollback`` commit the restored manifest verbatim.
 
     On disk the manifest is a DELTA against the parent unless this is a
     FULL_MANIFEST_EVERY-th commit (or the log's first): an op touching B
-    buckets writes O(files-in-B) bytes however large the table is. The
-    returned dict is always materialized."""
+    buckets writes O(files-in-B + B) bytes however large the table is.
+    The returned dict is always materialized."""
     parent = current_snapshot_id(spark, out_dir)
+    prev = load_snapshot(spark, out_dir, parent) if parent is not None else None
     sid = (parent or 0) + 1
     # record the bucket layout the files were written under: rollback
     # across a rebucket boundary must re-pin _manifest.json to match the
     # restored tree, or follow-on writes would mix layouts
     num_buckets = (_pin(spark, out_dir) or {}).get("num_buckets")
     cur = files if files is not None else _list_tracked(spark, out_dir)
+    if lineage is None:
+        lineage = prev["lineage"] if prev is not None else {}
+    lin = _lineage_map(lineage)
     snap = {
         "snapshot_id": sid,
         "parent_id": parent,
@@ -334,20 +348,22 @@ def commit_snapshot(
         "num_buckets": num_buckets,
         "summary": summary or {},
         "files": cur,
+        "lineage": lin,
     }
     on_disk = snap
-    if parent is not None and (sid - 1) % FULL_MANIFEST_EVERY != 0:
-        prev = {
-            rel: sz
-            for rel, sz in load_snapshot(spark, out_dir, parent)["files"]
-        }
+    if prev is not None and (sid - 1) % FULL_MANIFEST_EVERY != 0:
+        old = {rel: sz for rel, sz in prev["files"]}
         new = {rel: sz for rel, sz in cur}
-        on_disk = {k: v for k, v in snap.items() if k != "files"}
+        on_disk = {k: v for k, v in snap.items() if k not in ("files", "lineage")}
         on_disk["base_id"] = parent
         on_disk["add"] = sorted(
-            [rel, sz] for rel, sz in new.items() if prev.get(rel) != sz
+            [rel, sz] for rel, sz in new.items() if old.get(rel) != sz
         )
-        on_disk["remove"] = sorted(rel for rel in prev if rel not in new)
+        on_disk["remove"] = sorted(rel for rel in old if rel not in new)
+        on_disk["lineage"] = {
+            b: v for b, v in lin.items() if prev["lineage"].get(b) != v
+        }
+        on_disk["lineage_remove"] = sorted(b for b in prev["lineage"] if b not in lin)
     # note: no separate HEAD pointer file — the manifest listing is the
     # single source of truth (a pointer written after the manifest could
     # go stale on a crash between the two writes and mislead operators)
@@ -417,7 +433,7 @@ def files_df(
         if snapshot_id is None:
             raise ValueError(f"{out_dir!r} has no snapshots")
     snap = load_snapshot(spark, out_dir, snapshot_id)
-    pat = re.compile(r"(spans|lineage)/(?:bucket|partition_id)=(\d+)/(.+)\Z")
+    pat = re.compile(r"(spans)/bucket=(\d+)/(.+)\Z")
     rows = []
     for rel, size in snap["files"]:
         m = pat.match(rel)
@@ -587,8 +603,8 @@ def reconcile_to_head(spark: SparkSession, out_dir: str) -> dict:
     ``spark.read.parquet``); (2) re-link from the archive any HEAD file
     MISSING from the live tree (a crash between a bucket's replacement
     and its commit deletes the old files, which survive only as archive
-    links — without the restore the live bucket reads empty while a stale
-    lineage row still marks it completed, so a resume run would silently
+    links — without the restore the live bucket reads empty while HEAD's
+    lineage still marks it completed, so a resume run would silently
     skip it). A HEAD file with no live or archive copy is unrecoverable →
     loud error, table untouched. Metadata/link ops only. Single-writer
     assumption as everywhere in this module. Returns the counts and the
@@ -620,62 +636,56 @@ def gc_uncommitted(spark: SparkSession, out_dir: str) -> dict:
     kept under its historical CLI name). Every batch mutator now runs the
     same reconciliation before writing, so a crashed predecessor can
     neither leave torn files to be laundered into the next commit nor a
-    silently-empty live bucket behind a stale lineage row."""
+    silently-empty live bucket behind HEAD's lineage entry."""
     return reconcile_to_head(spark, out_dir)
 
 
 # -------------------------------------------------------------- archiving
 def archive_buckets(spark: SparkSession, out_dir: str, buckets) -> int:
-    """Preserve every live spans and lineage file of the given bucket
-    partitions before a mutation replaces them (``commit_buckets`` deletes
-    the old files while it lands the new ones, so the links must exist
-    first). Returns the number of files preserved."""
+    """Preserve every live spans file of the given bucket partitions
+    before a mutation replaces them (``commit_buckets`` deletes the old
+    files while it lands the new ones, so the links must exist first).
+    Returns the number of files preserved."""
     n = 0
-    for sub, col in (("spans", "bucket"), ("lineage", "partition_id")):
-        for b in sorted({int(b) for b in buckets}):
-            part = f"{sub}/{col}={b}"
-            for rel, _ in tablefs.list_parquet_files(spark, posixpath.join(out_dir, part)):
-                tablefs.link(
-                    spark,
-                    posixpath.join(out_dir, part, rel),
-                    posixpath.join(out_dir, ARCHIVE_DIR, part, rel),
-                )
-                n += 1
+    for b in sorted({int(b) for b in buckets}):
+        part = f"spans/bucket={b}"
+        for rel, _ in tablefs.list_parquet_files(spark, posixpath.join(out_dir, part)):
+            tablefs.link(
+                spark,
+                posixpath.join(out_dir, part, rel),
+                posixpath.join(out_dir, ARCHIVE_DIR, part, rel),
+            )
+            n += 1
     return n
 
 
 # ---------------------------------------------------------------- reading
-def read_tree(
-    spark: SparkSession, root: str, sub: str, files: list[str] | None = None
-) -> DataFrame:
-    """The one Spark read of a table tree: ``{root}/{sub}`` (``sub`` is
-    ``spans`` or ``lineage``; ``root`` is the table, its ``_staging`` or
-    its ``_archive``) with the tree's declared schema, in its declared
-    column order. ``files`` restricts the read to those paths under the
-    tree (a snapshot's file list), partition columns still recovered from
-    their ``bucket=N`` / ``partition_id=N`` directories. A missing tree or
-    an empty file list reads as an empty DataFrame, planned as a local
-    relation: actions over it start no job."""
-    schema = TREE_SCHEMAS[sub]
-    base = posixpath.join(root, sub)
+def read_tree(spark: SparkSession, root: str, files: list[str] | None = None) -> DataFrame:
+    """The one Spark read of a spans tree: ``{root}/spans`` (``root`` is
+    the table, its ``_staging`` or its ``_archive``) with the declared
+    ``SPANS_SCHEMA``, in its declared column order. ``files`` restricts
+    the read to those paths under the tree (a snapshot's file list),
+    ``bucket`` still recovered from their ``bucket=N`` directories. A
+    missing tree or an empty file list reads as an empty DataFrame,
+    planned as a local relation: actions over it start no job."""
+    base = posixpath.join(root, "spans")
     if files is None:
         files = [base] if tablefs.exists(spark, base) else []
     if not files:
-        return spark.createDataFrame([], schema).limit(0)
+        return spark.createDataFrame([], SPANS_SCHEMA).limit(0)
     return (
-        spark.read.schema(schema)
+        spark.read.schema(SPANS_SCHEMA)
         .option("basePath", base)
         .parquet(*files)
-        .select(*schema.fieldNames())
+        .select(*SPANS_SCHEMA.fieldNames())
     )
 
 
 def _resolve_files(
-    spark: SparkSession, out_dir: str, snap: dict, sub: str,
-    buckets=None,
+    spark: SparkSession, out_dir: str, snap: dict, buckets=None,
 ) -> tuple[list[str], list[str]]:
-    """(live, archived) absolute paths for the snapshot's files under
-    ``sub``, optionally restricted to a bucket set. A relpath still
+    """(live, archived) absolute paths for the snapshot's spans files,
+    optionally restricted to a bucket set. A relpath still
     present live is read in place (archive links are the same bytes);
     otherwise the archive copy is used; neither → the snapshot has been
     expired out from under the caller → loud error."""
@@ -683,12 +693,10 @@ def _resolve_files(
     if buckets is not None:
         want = {int(b) for b in buckets}
     live, archived, missing = [], [], []
-    pat = re.compile(r"(?:bucket|partition_id)=(\d+)/")
+    pat = re.compile(r"spans/bucket=(\d+)/")
     for rel, _ in snap["files"]:
-        if not rel.startswith(sub + "/"):
-            continue
         if want is not None:
-            m = pat.search(rel)
+            m = pat.match(rel)
             if m is None or int(m.group(1)) not in want:
                 continue
         lp = posixpath.join(out_dir, rel)
@@ -712,23 +720,22 @@ def read_snapshot(
     spark: SparkSession,
     out_dir: str,
     snapshot_id: int | None = None,
-    sub: str = "spans",
     buckets=None,
 ) -> DataFrame:
     """Time-travel read: the table exactly as of ``snapshot_id`` (default
-    HEAD). Partition-column recovery (``bucket=N`` / ``partition_id=N``)
-    works on both the live and archived sides via ``basePath``, so
-    bucket-pruned point lookups prune identically on historical reads.
-    A snapshot with no files under ``sub`` (or none in the requested
-    buckets) reads as an empty DataFrame."""
+    HEAD). Partition-column recovery (``bucket=N``) works on both the
+    live and archived sides via ``basePath``, so bucket-pruned point
+    lookups prune identically on historical reads. A snapshot with no
+    files (or none in the requested buckets) reads as an empty
+    DataFrame."""
     if snapshot_id is None:
         snapshot_id = current_snapshot_id(spark, out_dir)
         if snapshot_id is None:
             raise ValueError(f"{out_dir!r} has no snapshots")
     snap = load_snapshot(spark, out_dir, snapshot_id)
-    live, archived = _resolve_files(spark, out_dir, snap, sub, buckets)
-    return read_tree(spark, out_dir, sub, live).unionByName(
-        read_tree(spark, posixpath.join(out_dir, ARCHIVE_DIR), sub, archived)
+    live, archived = _resolve_files(spark, out_dir, snap, buckets)
+    return read_tree(spark, out_dir, live).unionByName(
+        read_tree(spark, posixpath.join(out_dir, ARCHIVE_DIR), archived)
     )
 
 
@@ -750,9 +757,9 @@ def snapshot_as_of(spark: SparkSession, out_dir: str, ts: float) -> int:
 
 
 # ------------------------------------------------------------------- diff
-def _buckets_of(snap: dict, sub: str) -> dict[int, set[str]]:
+def _buckets_of(snap: dict) -> dict[int, set[str]]:
     out: dict[int, set[str]] = {}
-    pat = re.compile(rf"{sub}/(?:bucket|partition_id)=(\d+)/")
+    pat = re.compile(r"spans/bucket=(\d+)/")
     for rel, _ in snap["files"]:
         m = pat.match(rel)
         if m:
@@ -760,9 +767,9 @@ def _buckets_of(snap: dict, sub: str) -> dict[int, set[str]]:
     return out
 
 
-def _changed_buckets(a: dict, b: dict, sub: str = "spans") -> list[int]:
+def _changed_buckets(a: dict, b: dict) -> list[int]:
     """Buckets whose file sets differ between two manifests."""
-    ba, bb = _buckets_of(a, sub), _buckets_of(b, sub)
+    ba, bb = _buckets_of(a), _buckets_of(b)
     return sorted(k for k in (set(ba) | set(bb)) if ba.get(k) != bb.get(k))
 
 
@@ -887,6 +894,7 @@ def rollback(spark: SparkSession, out_dir: str, to_id: int) -> dict:
         op="rollback",
         summary={"to": to_id, "restored": n_restored, "removed": n_removed},
         files=target["files"],
+        lineage=target["lineage"],
     )
     return {
         "snapshot_id": snap["snapshot_id"],
@@ -961,15 +969,16 @@ def expire_snapshots(
     referenced: set[str] = set()
     # Retained DELTA manifests may resolve through bases about to drop:
     # rewrite them as full listings first (materialize while every base
-    # still exists — a representation change only; id, files, metadata
-    # are bit-identical after load_snapshot). Crash between rewrite and
-    # drop is harmless: rerun re-materializes (no-op) and re-drops.
+    # still exists — a representation change only; id, files, lineage,
+    # metadata are bit-identical after load_snapshot). Crash between
+    # rewrite and drop is harmless: rerun re-materializes (no-op) and
+    # re-drops.
     for sid in keep:
         raw = json.loads(tablefs.read_text(spark, _snap_path(out_dir, sid)))
         if "files" not in raw:
             full = load_snapshot(spark, out_dir, sid)
-            raw["files"] = full["files"]
-            for k in ("base_id", "add", "remove"):
+            raw["files"], raw["lineage"] = full["files"], full["lineage"]
+            for k in ("base_id", "add", "remove", "lineage_remove"):
                 raw.pop(k, None)
             tablefs.write_text(spark, _snap_path(out_dir, sid), json.dumps(raw))
     for sid in keep:

@@ -5,7 +5,8 @@ in-process ThreadPool, /root/reference/engine.py:57-58). At 10^12-doc scale,
 new documents arrive continuously; the natural Spark shape is a file/Iceberg
 incremental read feeding the SAME batch extraction per micro-batch:
 
-    readStream(documents) → foreachBatch(extract + bucketed append + lineage)
+    readStream(documents) → foreachBatch(extract + bucketed append, committed
+                                        with its lineage)
 
 Each micro-batch reuses pipeline.extract verbatim, so batch and streaming
 paths cannot diverge semantically; exactly-once lands on the streaming
@@ -99,18 +100,18 @@ def incremental_extract(
         # bucketed docs in → bucket-clustered result out: the append
         # adds one file per bucket this micro-batch touches
         todo = with_bucket(batch_df, num_buckets).join(
-            snapshots.read_tree(spark, out_dir, "spans").select("doc_id"),
+            snapshots.read_tree(spark, out_dir).select("doc_id"),
             "doc_id",
             "left_anti",
         )
         if todo.isEmpty():
             return
         lineage = stage_buckets(
-            spark, out_dir, extract(todo, media, cfg, media_side_path=media_side_path), run_id
+            spark, out_dir, extract(todo, media, cfg, media_side_path=media_side_path)
         )
-        # an append: no bucket is replaced, so the staged files and
-        # lineage rows join the buckets' existing ones (the same
-        # partition_id-partitioned lineage layout run_extract writes)
+        # an append: no bucket is replaced, so the staged files join the
+        # buckets' existing ones and each staged lineage row folds into
+        # its bucket's committed entry
         commit_buckets(
             spark, out_dir, "stream-append", lineage,
             run_id=run_id,

@@ -1,5 +1,5 @@
 """A table whose every doc was purged is an ordinary state: every read
-and every mutator works on it. Each tree is read with its declared
+and every mutator works on it. The spans tree is read with its declared
 schema (``snapshots.read_tree``), so a tree with no file reads as an
 empty DataFrame instead of failing schema inference."""
 
@@ -15,6 +15,7 @@ from ai_invoice_ocr_engine_spark import snapshots as S
 from ai_invoice_ocr_engine_spark.__main__ import _read_spans
 from ai_invoice_ocr_engine_spark.pipeline import (
     bucket_stats,
+    committed_lineage,
     extract,
     lookup_docs,
     rebucket_spans,
@@ -52,7 +53,7 @@ def _clone(spark, emptied, name):
 
 
 def _live(spark, out):
-    return spans_key(S.read_tree(spark, out, "spans").collect())
+    return spans_key(S.read_tree(spark, out).collect())
 
 
 def test_emptied_table_reads(spark, emptied):
@@ -79,7 +80,7 @@ def test_emptied_table_takes_an_upsert(spark, emptied, corpus, golden_spans):
         where=f"doc_id IN ({in_sql})",
     )
     assert r["docs"] == 3
-    rows = S.read_tree(spark, out, "spans").select("doc_id").collect()
+    rows = S.read_tree(spark, out).select("doc_id").collect()
     assert sorted(x["doc_id"] for x in rows) == three  # one row per doc_id
     assert_span_equal(_live(spark, out), {d: golden_spans[d] for d in three})
     assert verify_lineage(spark, out)["ok"]
@@ -129,12 +130,16 @@ def test_declared_read_starts_no_job(spark, emptied):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    assert jobs("declared", lambda: S.read_tree(spark, arch, "spans")) == 0
-    missing = str(emptied["dir"])  # holds no lineage tree
-    assert jobs("missing", lambda: S.read_tree(spark, missing, "lineage").collect()) == 0
+    assert jobs("declared", lambda: S.read_tree(spark, arch)) == 0
+    missing = str(emptied["dir"])  # holds no table
+    assert jobs("missing", lambda: S.read_tree(spark, missing).collect()) == 0
+    # committed lineage is a manifest read: no job on a missing table or
+    # on a committed one
+    assert jobs("lineage", lambda: committed_lineage(spark, missing)) == 0
+    assert jobs("committed", lambda: committed_lineage(spark, emptied["out"])) == 0
     assert jobs("inferred", lambda: spark.read.parquet(os.path.join(arch, "spans"))) >= 1
     # the archive holds the purged rows, read back with the declared schema
-    assert S.read_tree(spark, arch, "spans").count() == N_DOCS
+    assert S.read_tree(spark, arch).count() == N_DOCS
 
 
 def test_declared_spans_schema_matches_extract(spark, corpus):

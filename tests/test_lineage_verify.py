@@ -1,5 +1,5 @@
 """Lineage integrity verification: recomputed per-bucket checksums must match
-the lineage rows; a corrupted/short output must be flagged."""
+the committed lineage; a corrupted/short output must be flagged."""
 
 import glob
 import os
@@ -9,7 +9,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from ai_invoice_ocr_engine_spark.pipeline import run_extract, verify_lineage
+from ai_invoice_ocr_engine_spark import snapshots as S
+from ai_invoice_ocr_engine_spark.pipeline import committed_lineage, run_extract, verify_lineage
 
 
 def test_verify_lineage_ok_and_detects_corruption(spark, corpus, tmp_path):
@@ -38,7 +39,7 @@ def table(spark, corpus, tmp_path_factory):
     return out
 
 
-def _change_one_span(out):
+def _change_one_span(spark, out):
     """Rewrite one bucket's file with one span's text changed: the same
     doc and span counts, a different checksum."""
     path = sorted(glob.glob(os.path.join(out, "spans", "bucket=*", "*.parquet")))[0]
@@ -49,10 +50,13 @@ def _change_one_span(out):
     pq.write_table(pa.Table.from_pylist(rows, schema=t.schema), path)
 
 
-def _drop_one_lineage_partition(out):
-    """A data bucket with no lineage row."""
-    lineage = os.path.join(out, "lineage")
-    shutil.rmtree(os.path.join(lineage, sorted(os.listdir(lineage))[0]))
+def _drop_one_lineage_partition(spark, out):
+    """A data bucket with no lineage entry: a commit of HEAD's lineage
+    without its first bucket."""
+    lin = committed_lineage(spark, out)
+    S.commit_snapshot(
+        spark, out, op="test-drop", lineage={b: v for b, v in lin.items() if b != min(lin)},
+    )
 
 
 @pytest.mark.parametrize("corrupt", [_change_one_span, _drop_one_lineage_partition])
@@ -60,5 +64,5 @@ def test_verify_lineage_flags_a_bucket_that_differs(spark, table, tmp_path, corr
     out = str(tmp_path / "table")
     shutil.copytree(table, out)
     assert verify_lineage(spark, out) == {"partitions": 8, "mismatched": 0, "ok": True}
-    corrupt(out)
+    corrupt(spark, out)
     assert verify_lineage(spark, out) == {"partitions": 8, "mismatched": 1, "ok": False}

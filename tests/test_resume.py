@@ -1,40 +1,47 @@
 """Checkpoint-resume tests (SURVEY.md §5.2(5), north_rule): after a partial
-run (lineage written for a prefix of bucket partitions), a resumed run skips
+run (a prefix of bucket partitions committed), a resumed run skips
 completed buckets and the final table equals an uninterrupted run."""
 
 import os
 
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
+import pytest
 
+from ai_invoice_ocr_engine_spark import pipeline
+from ai_invoice_ocr_engine_spark import snapshots as S
 from ai_invoice_ocr_engine_spark.pipeline import (
-    LINEAGE_SCHEMA,
-    extract,
-    lineage_of,
+    committed_lineage,
     run_extract,
-    with_bucket,
 )
 from ai_invoice_ocr_engine_spark.config import ExtractConfig
+from ai_invoice_ocr_engine_spark.xxh import spark_bucket
 
 from .util import assert_span_equal, spans_key
 
 NB = 8  # few buckets so every bucket is populated at test scale
 
 
+def _docs_in_buckets(corpus, path, buckets) -> int:
+    """Write the corpus docs whose bucket is in ``buckets`` to ``path``;
+    returns how many there are."""
+    t = pq.read_table(corpus["docs_path"])
+    keep = [spark_bucket(d, NB) in buckets for d in t.column("doc_id").to_pylist()]
+    part = t.filter(keep)
+    pq.write_table(part, path)
+    return part.num_rows
+
+
 def test_resume_skips_completed_buckets(spark, corpus, golden_spans, tmp_path):
     out = str(tmp_path / "out")
     cfg = ExtractConfig()
 
-    # --- simulate a killed run: extract only buckets {0,1,2}, write their
-    # lineage, as if the job died before the rest ---
-    docs_all = with_bucket(spark.read.parquet(corpus["docs_path"]), NB)
-    media = spark.read.parquet(corpus["media_path"])
-    prefix = docs_all.where(F.col("bucket") <= 2)
-    part = with_bucket(extract(prefix, media, cfg), NB)
-    part.write.mode("append").partitionBy("bucket").parquet(os.path.join(out, "spans"))
-    lineage_of(part, "run-partial").write.mode("append").partitionBy(
-        "partition_id"
-    ).parquet(os.path.join(out, "lineage"))
-    n_prefix = part.count()
+    # --- a partial run: only buckets {0,1,2} committed, as if the job
+    # had been given their docs and nothing else ---
+    prefix = str(tmp_path / "prefix.parquet")
+    n_prefix = _docs_in_buckets(corpus, prefix, {0, 1, 2})
+    run_extract(spark, prefix, corpus["media_path"], out, cfg=cfg, num_buckets=NB,
+                run_id="run-partial")
+    assert sorted(committed_lineage(spark, out)) == [0, 1, 2]
 
     # --- resumed run ---
     stats = run_extract(
@@ -47,75 +54,79 @@ def test_resume_skips_completed_buckets(spark, corpus, golden_spans, tmp_path):
         resume=True,
         run_id="run-resume",
     )
+    n_docs = spark.read.parquet(corpus["docs_path"]).count()
     assert stats["buckets_skipped"] == 3
-    assert stats["docs"] == docs_all.count() - n_prefix  # no recompute
+    assert stats["docs"] == n_docs - n_prefix  # no recompute
 
     # --- final table equals the single-process oracle ---
     final = spans_key(spark.read.parquet(os.path.join(out, "spans")).collect())
     assert_span_equal(final, golden_spans)
 
-    # lineage accounting: every bucket exactly once, counts add up
-    lin = spark.read.parquet(os.path.join(out, "lineage"))
-    per_bucket = lin.groupBy("partition_id").count().collect()
-    assert all(r["count"] == 1 for r in per_bucket)
-    assert lin.agg(F.sum("doc_count")).collect()[0][0] == docs_all.count()
+    # lineage accounting: every bucket once, counts add up
+    lin = committed_lineage(spark, out)
+    assert sorted(lin) == list(range(NB))
+    assert sum(v[0] for v in lin.values()) == n_docs
 
 
-def test_rerun_is_noop(spark, corpus, tmp_path):
+def test_rerun_is_noop(spark, corpus, tmp_path, monkeypatch):
+    """A rerun over a table whose every bucket is committed returns
+    before any extraction work and commits nothing."""
     out = str(tmp_path / "out2")
     s1 = run_extract(
         spark, corpus["docs_path"], corpus["media_path"], out,
         num_buckets=NB, run_id="r1",
     )
     assert s1["buckets_skipped"] == 0 and s1["docs"] > 0
+
+    def no_extract(*args, **kwargs):
+        raise AssertionError("a fully resumed run must not extract")
+
+    monkeypatch.setattr(pipeline, "extract", no_extract)
     s2 = run_extract(
         spark, corpus["docs_path"], corpus["media_path"], out,
         num_buckets=NB, run_id="r2",
     )
     assert s2["docs"] == 0  # everything already completed
-
-    lin = spark.read.parquet(os.path.join(out, "lineage"))
-    assert set(LINEAGE_SCHEMA.fieldNames()) == set(lin.columns)
+    assert s2["buckets_skipped"] == NB
+    assert s2["snapshot_id"] == s1["snapshot_id"]
+    assert [s["op"] for s in S.list_snapshots(spark, out)] == ["extract"]
+    assert sorted(committed_lineage(spark, out)) == list(range(NB))
 
 
 def test_crash_between_data_and_lineage_no_duplicates(
-    spark, corpus, golden_spans, tmp_path
+    spark, corpus, golden_spans, tmp_path, monkeypatch
 ):
-    """A run that died AFTER writing a bucket's spans but BEFORE its
-    lineage row must be recoverable: the resumed run recomputes that
-    bucket and REPLACES the orphaned partition (dynamic partition
-    overwrite), so the final table has no duplicates and equals the
-    oracle. Lineage is the commit marker; data without lineage is invisible
-    to resume and must be safely overwritten."""
+    """A run that died AFTER landing a bucket's spans but BEFORE its
+    commit must be recoverable: the resumed run removes the uncommitted
+    files, recomputes that bucket, so the final table has no duplicates
+    and equals the oracle. The snapshot is the commit marker; data it
+    does not record is invisible to resume and must be safely replaced."""
     out = str(tmp_path / "out_crash")
-    cfg = ExtractConfig()
+    media = corpus["media_path"]
 
-    docs_all = with_bucket(spark.read.parquet(corpus["docs_path"]), NB)
-    media = spark.read.parquet(corpus["media_path"])
+    # buckets 0-2 completed properly (data + lineage, committed)
+    done = str(tmp_path / "done.parquet")
+    _docs_in_buckets(corpus, done, {0, 1, 2})
+    run_extract(spark, done, media, out, num_buckets=NB, run_id="run-done")
 
-    # simulate the crash: bucket 3's spans land on disk, its lineage does NOT
-    orphan = with_bucket(
-        extract(docs_all.where(F.col("bucket") == 3), media, cfg), NB
-    )
-    orphan.write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(out, "spans")
-    )
-    # buckets 0-2 completed properly (data + lineage)
-    done = with_bucket(
-        extract(docs_all.where(F.col("bucket") <= 2), media, cfg), NB
-    )
-    done.write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(out, "spans")
-    )
-    lineage_of(done, "run-crashed").write.mode("append").partitionBy(
-        "partition_id"
-    ).parquet(os.path.join(out, "lineage"))
+    # simulate the crash: bucket 3's spans land on disk, no commit records them
+    orphan = str(tmp_path / "orphan.parquet")
+    _docs_in_buckets(corpus, orphan, {3})
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("killed before the snapshot commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(S, "commit_snapshot", crash)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_extract(spark, orphan, media, out, num_buckets=NB, run_id="run-crashed")
+    assert os.listdir(os.path.join(out, "spans", "bucket=3"))
 
     stats = run_extract(
-        spark, corpus["docs_path"], corpus["media_path"], out,
+        spark, corpus["docs_path"], media, out,
         num_buckets=NB, resume=True,
     )
-    assert stats["buckets_skipped"] == 3  # only lineage-marked buckets skip
+    assert stats["buckets_skipped"] == 3  # only committed buckets skip
 
     final = spark.read.parquet(os.path.join(out, "spans"))
     n_docs_in = spark.read.parquet(corpus["docs_path"]).count()
@@ -126,7 +137,7 @@ def test_crash_between_data_and_lineage_no_duplicates(
 
 def test_no_resume_rerun_keeps_lineage_consistent(spark, corpus, tmp_path):
     """Code-review r2 finding: a full rerun with --no-resume must REPLACE
-    each bucket's lineage row along with its data — stale rows from the
+    each bucket's lineage along with its data — stale entries from the
     first run would double verify_lineage's expected counts and
     xor-cancel its checksums, flagging a healthy table."""
     from ai_invoice_ocr_engine_spark.pipeline import verify_lineage
@@ -136,8 +147,9 @@ def test_no_resume_rerun_keeps_lineage_consistent(spark, corpus, tmp_path):
                 num_buckets=NB, resume=False)
     run_extract(spark, corpus["docs_path"], corpus["media_path"], out,
                 num_buckets=NB, resume=False)
-    lin = spark.read.parquet(os.path.join(out, "lineage"))
-    assert lin.count() == lin.select("partition_id").distinct().count()
+    lin = committed_lineage(spark, out)
+    assert sorted(lin) == list(range(NB))
+    assert sum(v[0] for v in lin.values()) == spark.read.parquet(corpus["docs_path"]).count()
     report = verify_lineage(spark, out)
     assert report["ok"], report
 

@@ -404,12 +404,62 @@ def test_metadata_tables(spark, history):
     fdf = S.files_df(spark, out, 1)
     # every manifest row is carved into (sub, bucket, file)
     assert fdf.where(F.col("sub") == "spans").count() > 0
-    assert fdf.where(F.col("sub") == "lineage").count() > 0
     assert fdf.where(F.col("bucket").isNull()).count() == 0
     total = fdf.agg(F.sum("bytes")).collect()[0][0]
     assert total == sum(
         sz for _, sz in S.load_snapshot(spark, out, 1)["files"]
     )
+
+
+def _lineage_by_bucket(df) -> dict[int, tuple]:
+    from ai_invoice_ocr_engine_spark.pipeline import lineage_of
+
+    return {
+        r["partition_id"]: (r["doc_count"], r["span_count"], r["checksum"])
+        for r in lineage_of(df).collect()
+    }
+
+
+def test_every_manifest_lineage_equals_its_rows(spark, history, tmp_path):
+    """Each retained snapshot's manifest lineage is ``lineage_of`` over
+    that snapshot's rows — the history chain, then a rebucket and a
+    rollback across it on a clone."""
+    from ai_invoice_ocr_engine_spark.pipeline import rebucket_spans
+
+    out = str(tmp_path / "clone")
+    S.clone_table(spark, history["out"], out)
+    assert rebucket_spans(spark, out, 16)["rewritten"]
+    S.rollback(spark, out, 3)
+    ops = [s["op"] for s in S.list_snapshots(spark, out)]
+    assert ops[-2:] == ["rebucket", "rollback"]
+    for k in range(1, len(ops) + 1):
+        want = _lineage_by_bucket(S.read_snapshot(spark, out, k))
+        assert S.load_snapshot(spark, out, k)["lineage"] == want, f"snapshot {k}"
+
+
+def test_delta_manifest_lineage_names_only_touched_buckets(spark, history):
+    """A delta manifest records the lineage entries of the buckets its op
+    changed, and nothing for a rewrite that keeps content."""
+    import json
+
+    from ai_invoice_ocr_engine_spark.xxh import spark_bucket
+
+    out = history["out"]
+
+    def raw(k):
+        with open(S._snap_path(out, k)) as f:
+            return json.load(f)
+
+    def touched(raw_snap):
+        return {int(b) for b in raw_snap["lineage"]} | set(raw_snap["lineage_remove"])
+
+    assert "files" in raw(1) and len(raw(1)["lineage"]) == NB
+    up = {spark_bucket(d, NB) for d in history["up_ids"]}
+    assert "files" not in raw(2) and touched(raw(2)) <= up
+    gone = {spark_bucket(d, NB) for d in history["del_ids"]}
+    assert touched(raw(3)) == gone
+    for k in (4, 5):  # fragment, compact: same content, no entry
+        assert raw(k)["lineage"] == {} and raw(k)["lineage_remove"] == []
 
 
 def test_rebucket_partition_evolution(spark, corpus, tmp_path):
@@ -645,7 +695,7 @@ def test_time_travel_read_scans_only_requested_buckets(spark, history):
     # the plan's file listing may elide paths; fall back to the resolver
     live, archived = S._resolve_files(
         spark, history["out"],
-        S.load_snapshot(spark, history["out"], 1), "spans", buckets=[0],
+        S.load_snapshot(spark, history["out"], 1), buckets=[0],
     )
     for p in live + archived:
         assert "bucket=0" in p

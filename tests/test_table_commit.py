@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ai_invoice_ocr_engine_spark import snapshots as S
 from ai_invoice_ocr_engine_spark.config import ExtractConfig
 from ai_invoice_ocr_engine_spark.pipeline import (
+    committed_lineage,
     compact_spans,
     rebucket_spans,
     run_extract,
@@ -26,7 +27,7 @@ from ai_invoice_ocr_engine_spark.pipeline import (
 )
 from ai_invoice_ocr_engine_spark.streaming import incremental_extract
 
-from .util import fragment_spans, spans_key
+from .util import fragment_spans, lineage_tree_files, spans_key
 
 NB = 8
 
@@ -38,21 +39,28 @@ def _ids_sql(ids):
 def _walk(spark, corpus, out):
     """run_extract → upsert → delete → fragment + compact → rebucket →
     rollback to the delete, then the table's rows, bucket of every doc,
-    snapshot ops and verify_lineage report."""
+    snapshot ops and verify_lineage report. No op writes a lineage tree:
+    the lineage lives in the snapshot manifests."""
     docs, media = corpus["docs_path"], corpus["media_path"]
     ids = sorted(r.doc_id for r in spark.read.parquet(docs).select("doc_id").collect())
     run_extract(spark, docs, media, out, cfg=ExtractConfig(), num_buckets=NB, run_id="walk")
+    assert lineage_tree_files(out) == []
     upsert_extract(
         spark, out, docs, media_path=media,
         where=f"doc_id IN ({_ids_sql(ids[:5])})", run_id="walk-upsert",
     )
+    assert lineage_tree_files(out) == []
     deleted = upsert_extract(
         spark, out, docs, where=f"doc_id IN ({_ids_sql(ids[5:8])})", delete=True,
     )
+    assert lineage_tree_files(out) == []
     fragment_spans(spark, out)
     assert compact_spans(spark, out, target_mb=1024)["rewritten"]
+    assert lineage_tree_files(out) == []
     assert rebucket_spans(spark, out, 16, run_id="walk-rebucket")["rewritten"]
+    assert lineage_tree_files(out) == []
     S.rollback(spark, out, deleted["snapshot_id"])
+    assert lineage_tree_files(out) == []
     with open(os.path.join(out.removeprefix("file://"), "_manifest.json")) as f:
         assert json.load(f)["num_buckets"] == NB
     spans = spark.read.parquet(f"{out}/spans")
@@ -127,8 +135,7 @@ def test_rebucket_retried_after_a_crash_replaces_the_uncommitted_layout(
     spans = spark.read.parquet(os.path.join(out, "spans"))
     n_docs = spark.read.parquet(corpus["docs_path"]).count()
     assert spans.count() == spans.select("doc_id").distinct().count() == n_docs
-    lineage = spark.read.parquet(os.path.join(out, "lineage"))
-    assert lineage.agg(F.sum("doc_count")).first()[0] == n_docs
+    assert sum(v[0] for v in committed_lineage(spark, out).values()) == n_docs
     assert verify_lineage(spark, out)["ok"]
 
 

@@ -161,3 +161,20 @@ def test_upsert_requires_media_and_manifest(spark, corpus, tmp_path):
             spark, str(tmp_path / "nope"), corpus["docs_path"],
             where="1=1", delete=True,
         )
+
+
+def test_upsert_on_an_empty_selection_commits_nothing(spark, corpus, tmp_path):
+    """A ``where`` that matches no doc returns the same report shape as
+    any upsert, with the snapshot the table already stands at."""
+    from ai_invoice_ocr_engine_spark import snapshots as S
+
+    out = _base_run(spark, corpus, tmp_path)
+    head = S.current_snapshot_id(spark, out)
+    for delete in (False, True):
+        rep = upsert_extract(
+            spark, out, corpus["docs_path"], media_path=corpus["media_path"],
+            where="1=0", delete=delete,
+        )
+        assert (rep["docs"], rep["buckets"], rep["snapshot_id"]) == (0, 0, head)
+        assert rep["secs"] >= 0
+    assert [s["op"] for s in S.list_snapshots(spark, out)] == ["extract"]

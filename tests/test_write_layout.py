@@ -9,11 +9,12 @@ input."""
 import os
 
 import pyarrow.parquet as pq
-from pyspark.sql import functions as F
 
+from ai_invoice_ocr_engine_spark import snapshots as S
 from ai_invoice_ocr_engine_spark.config import ExtractConfig
 from ai_invoice_ocr_engine_spark.pipeline import (
     bucket_stats,
+    committed_lineage,
     compact_spans,
     extract,
     lineage_of,
@@ -24,6 +25,8 @@ from ai_invoice_ocr_engine_spark.pipeline import (
 )
 from ai_invoice_ocr_engine_spark.streaming import incremental_extract
 from ai_invoice_ocr_engine_spark.tablefs import list_parquet_files as _list_parquet_files
+
+from .util import lineage_tree_files
 
 NB = 8
 
@@ -41,6 +44,10 @@ def _lineage(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
+def _committed(spark, out) -> list[tuple]:
+    return sorted((b, *v) for b, v in committed_lineage(spark, out).items())
+
+
 def test_batch_writes_land_one_file_per_bucket(spark, corpus, tmp_path):
     out = str(tmp_path / "out")
     run_extract(
@@ -55,8 +62,8 @@ def test_batch_writes_land_one_file_per_bucket(spark, corpus, tmp_path):
     # lineage equals the unclustered plan's on the same input
     docs = spark.read.parquet(corpus["docs_path"])
     media = spark.read.parquet(corpus["media_path"])
-    want = _lineage(lineage_of(with_bucket(extract(docs, media), NB), "x"))
-    assert _lineage(spark.read.parquet(os.path.join(out, "lineage"))) == want
+    want = _lineage(lineage_of(with_bucket(extract(docs, media), NB)))
+    assert _committed(spark, out) == want
 
     # a fresh table has nothing to compact
     rep = compact_spans(spark, out, target_mb=128)
@@ -79,7 +86,7 @@ def test_batch_writes_land_one_file_per_bucket(spark, corpus, tmp_path):
     assert bucket_stats(spark, out)["max_files_per_bucket"] == 1
     assert sum(_files_per_bucket(spark, out).values()) == NB
     # re-extracting a subset with the same config leaves lineage as is
-    assert _lineage(spark.read.parquet(os.path.join(out, "lineage"))) == want
+    assert _committed(spark, out) == want
 
     gone = upsert_extract(
         spark, out, corpus["docs_path"], where=where(ids[12:20]), delete=True,
@@ -91,8 +98,8 @@ def test_batch_writes_land_one_file_per_bucket(spark, corpus, tmp_path):
 
 def test_stream_micro_batches_append_one_file_per_bucket(spark, corpus, tmp_path):
     """Two micro-batches (one source file each): every bucket a batch
-    writes gains exactly one file, so a bucket holds one file per batch
-    whose lineage rows name it."""
+    writes gains exactly one file, so a bucket holds one file per
+    stream-append snapshot whose commit changed its lineage."""
     src = tmp_path / "src"
     src.mkdir()
     t = pq.read_table(corpus["docs_path"])
@@ -106,13 +113,16 @@ def test_stream_micro_batches_append_one_file_per_bucket(spark, corpus, tmp_path
             num_buckets=NB, trigger_once=True,
         )
         q.awaitTermination(300)
-        batches = {
-            r["partition_id"]: r["n"]
-            for r in spark.read.parquet(os.path.join(out, "lineage"))
-            .groupBy("partition_id")
-            .agg(F.countDistinct("run_id").alias("n"))
-            .collect()
-        }
+        batches: dict[int, int] = {}
+        prev: dict = {}
+        for s in S.list_snapshots(spark, out):
+            lin = S.load_snapshot(spark, out, s["snapshot_id"])["lineage"]
+            assert s["op"] == "stream-append"
+            for b in lin:
+                if prev.get(b) != lin[b]:
+                    batches[b] = batches.get(b, 0) + 1
+            prev = lin
         assert max(batches.values()) == k + 1
         assert _files_per_bucket(spark, out) == batches
+        assert lineage_tree_files(out) == []
     assert verify_lineage(spark, out)["ok"]

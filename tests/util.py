@@ -46,3 +46,13 @@ def fragment_spans(spark, out: str, n_files: int = 32) -> dict:
     return pipeline.commit_buckets(
         spark, out, "test-fragment", None, replaced=range(num_buckets)
     )
+
+
+def lineage_tree_files(out: str) -> list[str]:
+    """Parquet files under the table's ``lineage/`` directory: the
+    lineage lives in the snapshot manifests, so there must be none."""
+    import glob
+    import os
+
+    root = os.path.join(out.removeprefix("file://"), "lineage")
+    return glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
