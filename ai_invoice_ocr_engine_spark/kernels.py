@@ -688,8 +688,20 @@ def gaussian_blur5(img: np.ndarray) -> np.ndarray:
 
 
 def otsu_threshold(img: np.ndarray) -> int:
-    """Classic Otsu over a 256-bin histogram (max between-class variance)."""
-    hist = np.bincount(img.ravel(), minlength=256).astype(np.float64)
+    """Classic Otsu over a 256-bin histogram (max between-class variance)
+    of a uint8 image (any strides).
+
+    The histogram counts pixel PAIRS: a uint16 view of the flat pixels,
+    one bincount over 65,536 bins (half the elements to cast and scatter),
+    folded to 256 by summing the low and high byte marginals. With an odd
+    pixel count the last pixel has no partner and is counted alone."""
+    flat = img.ravel()
+    n = flat.size
+    c = np.bincount(flat[: n & ~1].view(np.uint16), minlength=1 << 16).reshape(256, 256)
+    hist = c.sum(0) + c.sum(1)
+    if n & 1:
+        hist[flat[-1]] += 1
+    hist = hist.astype(np.float64)
     total = hist.sum()
     omega = np.cumsum(hist)
     mu = np.cumsum(hist * np.arange(256, dtype=np.float64))
@@ -701,81 +713,58 @@ def otsu_threshold(img: np.ndarray) -> int:
     return int(np.argmax(sigma_b))
 
 
-def _dilate3(m: np.ndarray) -> np.ndarray:
-    """3×3 binary dilation, separable (row max then col max); border=False
-    outside — identical to an 8-neighbor OR with constant-False padding."""
-    h = m.copy()
-    h[:, 1:] |= m[:, :-1]
-    h[:, :-1] |= m[:, 1:]
-    v = h.copy()
-    v[1:, :] |= h[:-1, :]
-    v[:-1, :] |= h[1:, :]
-    return v
+def _morph(m: np.ndarray, r: int, op) -> np.ndarray:
+    """Separable binary morphology with a (2r+1)×(2r+1) square: ``op`` is
+    np.bitwise_or to dilate, np.bitwise_and to erode. Outside the image
+    counts as op's identity (False for dilation, True for erosion — cv2's
+    morphology border), so radius r equals r radius-1 passes exactly.
+
+    Every pass is a contiguous loop: each row gets r identity columns on
+    its right, so the horizontal shifts can run over the flat array (rows
+    back to back, ~4x faster than a 2-D strided pass) — a shift across a
+    row end only ever reads identity columns."""
+    r = max(r, 0)
+    hh, w = m.shape
+    p = np.empty((hh, w + r), dtype=bool)
+    p[:, :w] = m
+    p[:, w:] = op.identity
+    v = p.copy()
+    for k in range(1, r + 1):
+        op(v[k:], p[:-k], out=v[k:])
+        op(v[:-k], p[k:], out=v[:-k])
+    out = v.copy()
+    fo, fv = out.ravel(), v.ravel()
+    for k in range(1, r + 1):
+        op(fo[k:], fv[:-k], out=fo[k:])
+        op(fo[:-k], fv[k:], out=fo[:-k])
+    return np.ascontiguousarray(out[:, :w])
 
 
-def _erode3(m: np.ndarray) -> np.ndarray:
-    """3×3 binary erosion, separable; border=True outside (cv2's +inf
-    morphology border) — identical to an 8-neighbor AND with constant-True
-    padding."""
-    h = m.copy()
-    h[:, 1:] &= m[:, :-1]
-    h[:, :-1] &= m[:, 1:]
-    v = h.copy()
-    v[1:, :] &= h[:-1, :]
-    v[:-1, :] &= h[1:, :]
-    return v
+def _dilate(m: np.ndarray, r: int = 1) -> np.ndarray:
+    return _morph(m, r, np.bitwise_or)
 
 
-def _dilate3_r2(m: np.ndarray) -> np.ndarray:
-    """Radius-2 (5×5 square) binary dilation == _dilate3 applied twice,
-    in one separable pass pair; border=False outside."""
-    h = m.copy()
-    h[:, 1:] |= m[:, :-1]
-    h[:, :-1] |= m[:, 1:]
-    h[:, 2:] |= m[:, :-2]
-    h[:, :-2] |= m[:, 2:]
-    v = h.copy()
-    v[1:, :] |= h[:-1, :]
-    v[:-1, :] |= h[1:, :]
-    v[2:, :] |= h[:-2, :]
-    v[:-2, :] |= h[2:, :]
-    return v
-
-
-def _erode3_r2(m: np.ndarray) -> np.ndarray:
-    """Radius-2 (5×5 square) binary erosion == _erode3 applied twice, in
-    one separable pass pair; border=True outside."""
-    h = m.copy()
-    h[:, 1:] &= m[:, :-1]
-    h[:, :-1] &= m[:, 1:]
-    h[:, 2:] &= m[:, :-2]
-    h[:, :-2] &= m[:, 2:]
-    v = h.copy()
-    v[1:, :] &= h[:-1, :]
-    v[:-1, :] &= h[1:, :]
-    v[2:, :] &= h[:-2, :]
-    v[:-2, :] &= h[2:, :]
-    return v
+def _erode(m: np.ndarray, r: int = 1) -> np.ndarray:
+    return _morph(m, r, np.bitwise_and)
 
 
 def detect_prob(gray: np.ndarray) -> np.ndarray:
-    """Fallback 'detector' forward: prob map = cleaned binary text mask.
+    """Fallback 'detector' forward: the cleaned binary text mask, as bool.
 
     Mirrors /root/reference/detect/db.py:10-23 (blur → Otsu inverse-binary →
-    morphological close ×2 → open ×1), with cv2 replaced by numpy.
+    morphological close ×2 → open ×1), with cv2 replaced by numpy. The
+    reference's probability map is this mask as 0.0/1.0; extract_boxes and
+    extract_boxes_rotated take either form and give identical boxes, so no
+    float copy is made.
     """
     bl = gaussian_blur5(gray)
     t = otsu_threshold(bl)
     mask = bl <= t  # THRESH_BINARY_INV: foreground where value <= threshold
-    # close ×2 == dilate×2 then erode×2 ; open ×1 == erode then dilate.
-    # The double dilate/erode pairs run as FUSED radius-2 separable passes
-    # (two 3×3 square SEs compose to one 5×5): ~40% less memory traffic
-    # than chaining _dilate3 twice, bit-identical (property-tested) — the
-    # r1→r2 ceiling work: the 8→32-core rolloff is bandwidth-bound, so
-    # every byte of mask traffic removed moves the full-width throughput.
-    mask = _erode3_r2(_dilate3_r2(mask))
-    mask = _dilate3(_erode3(mask))
-    return mask.astype(np.float32)
+    # close ×2 == dilate×2 then erode×2 ; open ×1 == erode then dilate. The
+    # 3×3 passes compose into square ones (two 3×3 squares make a 5×5), so
+    # the two erosions in a row run as one radius-3 pass: dilate r2 →
+    # erode r3 → dilate r1, bit-identical (property-tested).
+    return _dilate(_erode(_dilate(mask, 2), 3))
 
 
 def _label_runs(mask: np.ndarray):
@@ -786,18 +775,18 @@ def _label_runs(mask: np.ndarray):
     h, w = mask.shape
     if not mask.any():
         return None
-    padded = np.zeros((h, w + 2), dtype=np.int8)
+    padded = np.zeros((h, w + 2), dtype=bool)
     padded[:, 1:-1] = mask
-    d = np.diff(padded, axis=1)
-    # one full-image scan for both edge kinds; row-major nonzero order means
-    # the +1/-1 subsets keep their per-row pairing (runs alternate within a
-    # row), identical to separate nonzero(d==1)/nonzero(d==-1) scans
-    yy, xx = np.nonzero(d)
-    pos = d[yy, xx] == 1
-    sy, sx_a = yy[pos], xx[pos]      # run starts (row-major order)
-    ex_a = xx[~pos]                  # run ends, aligned with starts per row
-    sx = sx_a.tolist()
-    ex = ex_a.tolist()
+    # run edges: flat index y*(w+1) + x marks a change between padded
+    # columns x and x+1 of row y. One flat scan finds both kinds; row-major
+    # order keeps starts and ends paired per row (runs alternate within a
+    # row). An edge opens a run when the pixel after it is set.
+    flat = np.flatnonzero(padded[:, 1:] != padded[:, :-1])
+    yy, xx = np.divmod(flat, w + 1)
+    pos = padded.ravel()[flat + yy + 1]
+    sy = yy[pos]                     # run starts (row-major order)
+    sx = xx[pos].tolist()
+    ex = xx[~pos].tolist()           # run ends, aligned with starts per row
     n = len(sx)
     parent = list(range(n))
 
@@ -1145,13 +1134,12 @@ def extract_boxes_rotated(
     for rectangles). On an axis-aligned component the returned quad equals
     the extract_boxes AABB exactly.
 
+    ``prob`` is a float probability map or detect_prob's bool mask.
     Returns (quads (N,4,2) float32 ordered tl,tr,br,bl, scores (N,)).
     """
     dh, dw = prob.shape
     oh, ow = orig_size
-    mask = prob > th
-    for _ in range(dil):
-        mask = _dilate3(mask)
+    mask = _dilate(prob > th, dil)  # dil 3×3 dilations == one of radius dil
     quads, scores = [], []
     fx, fy = ow / dw, oh / dh
     for x0, y0, x1, y1, _area, pts, sc in connected_components_hulls(mask, prob):
@@ -1193,17 +1181,19 @@ def extract_boxes(
     unclip (exact rectangle offset d = area*ur/perimeter, K9) → min-size
     filter → rescale per-axis to the original frame with clipping.
 
+    ``prob`` is a float probability map or detect_prob's bool mask.
     Returns (boxes (N,4) float32 [x0,y0,x1,y1], scores (N,) float32).
     """
     dh, dw = prob.shape
     oh, ow = orig_size
-    mask = prob > th
-    for _ in range(dil):
-        mask = _dilate3(mask)
+    mask = _dilate(prob > th, dil)  # dil 3×3 dilations == one of radius dil
     boxes, scores = [], []
     for x0, y0, x1, y1, _area in connected_components(mask):
         region = prob[y0:y1, x0:x1]
-        sc = float(region.mean()) if region.size else 0.0
+        # float32 mean of a float map or of the detector's bool mask: on 0/1
+        # data every partial sum is an integer <= 2^24 (det.mxs <= 4096), so
+        # both forms give the same score
+        sc = float(region.mean(dtype=np.float32)) if region.size else 0.0
         if sc < bth:
             continue
         bw, bh = float(x1 - x0), float(y1 - y0)
@@ -1267,18 +1257,32 @@ def resize_bilinear(img: np.ndarray, nh: int, nw: int) -> np.ndarray:
     under any parallelism. Horizontal pass in uint16: per-pixel value is
     v0*(256-a) + v1*a <= 255*256 = 65280 (weights complement to 256), so it
     cannot overflow; vertical pass promotes to int32 (<= 255*256*256 < 2^31).
-    Bit-identical to the int32 formulation (property-tested), ~half the
-    memory traffic — the extract stage is bandwidth-bound on wide machines."""
+    Each pass gathers with np.take and lerps in place, one temporary per
+    pass; bit-identical to the two-product formulation (property-tested
+    against its twin in tests/test_property_kernels.py)."""
     h, w = img.shape
     if (h, w) == (nh, nw):
         return img.copy()
     y0, y1, x0, x1, wyq, wxq = _resize_indices(h, w, nh, nw)
-    f16 = img.astype(np.uint16)
-    # horizontal pass on the source rows: (h, w) -> (h, nw)
-    hx = f16[:, x0] * (256 - wxq) + f16[:, x1] * wxq
-    # vertical pass: (h, nw) -> (nh, nw)
-    v = hx[y0].astype(np.int32) * (256 - wyq) + hx[y1].astype(np.int32) * wyq
-    return ((v + (1 << 15)) >> 16).astype(np.uint8)
+    # horizontal pass on the source rows: (h, w) -> (h, nw), as the lerp
+    # (a << 8) + (b - a)*wx in place. In uint16 the difference wraps, but the
+    # sum is exact mod 2^16 and the true value is <= 65280.
+    hx = np.take(img, x0, axis=1).astype(np.uint16)
+    d = np.take(img, x1, axis=1).astype(np.uint16)
+    d -= hx
+    d *= wxq
+    hx <<= 8
+    hx += d
+    # vertical pass: (h, nw) -> (nh, nw), the same lerp in int32
+    v = np.take(hx, y0, axis=0).astype(np.int32)
+    d = np.take(hx, y1, axis=0).astype(np.int32)
+    d -= v
+    d *= wyq
+    v <<= 8
+    v += d
+    v += 1 << 15
+    v >>= 16
+    return v.astype(np.uint8)
 
 
 def det_resize(img: np.ndarray, mxs: int = 960) -> np.ndarray:
@@ -1905,6 +1909,10 @@ def ctc_beam(logits: np.ndarray, beam_width: int = 5) -> tuple[str, float]:
 # --------------------------------------------------------------------------
 
 
+#: The highest confidence textline_flip_class ever returns.
+TEXTLINE_CLS_MAX_CONF = 0.7
+
+
 def textline_flip_class(crop: np.ndarray) -> tuple[int, float]:
     """180° textline heuristic, /root/reference/preprocess/orientation.py:53-61
     verbatim: compare variance of left vs right thirds; class 1 (flipped)
@@ -1916,17 +1924,20 @@ def textline_flip_class(crop: np.ndarray) -> tuple[int, float]:
     rv = float(np.var(crop[:, 2 * w // 3 :]))
     if abs(lv - rv) < 50:
         return 0, 0.6
-    return (1, 0.7) if lv > rv else (0, 0.7)
+    return (1, TEXTLINE_CLS_MAX_CONF) if lv > rv else (0, TEXTLINE_CLS_MAX_CONF)
 
 
 def correct_textline(crop: np.ndarray, th: float = 0.9) -> np.ndarray:
     """Flip a textline crop 180° when the classifier clears the gate —
     the reference's per-crop cls stage (engine.py applies cls when
-    cfg.cls.en; gating at cls.th, reference config.py:41-42). With the
-    reference's heuristic classifier the max confidence is 0.7, so at the
-    default th=0.9 this is observably a no-op — exactly the reference's
-    fallback behavior; a model-backed classifier plugged into
-    textline_flip_class would start flipping without pipeline changes."""
+    cfg.cls.en; gating at cls.th, reference config.py:41-42). The
+    reference's heuristic classifier tops out at TEXTLINE_CLS_MAX_CONF
+    (0.7), so a gate above that returns the crop without classifying it:
+    at the default th=0.9 the stage is a no-op — exactly the reference's
+    fallback behavior. A model-backed classifier plugged into
+    textline_flip_class must raise the ceiling to start flipping."""
+    if th > TEXTLINE_CLS_MAX_CONF:
+        return crop
     cls, conf = textline_flip_class(crop)
     if cls == 1 and conf >= th:
         return np.ascontiguousarray(np.rot90(crop, k=2))

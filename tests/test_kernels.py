@@ -104,6 +104,31 @@ def test_otsu_bimodal():
     assert ((img <= t) == (img == 30)).all()
 
 
+def test_replayed_detection_equals_detect_frame():
+    """perfbench's kernel replay feeds detect_prob's bool mask straight to
+    extract_boxes; that must give detect_frame's boxes and scores, and the
+    rotated geometry must give the same quads on the bool mask as on its
+    float32 copy."""
+    from ai_invoice_ocr_engine_spark import extractor, fixtures
+    from ai_invoice_ocr_engine_spark.config import ExtractConfig
+
+    cfg = ExtractConfig()
+    kw = dict(th=cfg.det.th, bth=cfg.det.bth, ur=cfg.det.ur, ms=cfg.det.ms, dil=cfg.det.dil)
+    imgs = [K.decode_image(r["image"]) for r in fixtures.gen_media(7, 12, max_side=640)]
+    imgs.append(K.rotate_any(imgs[0], 9))
+    n_boxes = 0
+    for img in imgs:
+        mask = K.detect_prob(K.det_resize(img, cfg.det.mxs))
+        boxes, scores = K.extract_boxes(mask, img.shape, **kw)
+        want_boxes, want_scores = extractor.detect_frame(img, cfg)
+        assert np.array_equal(boxes, want_boxes) and np.array_equal(scores, want_scores)
+        quads, qscores = K.extract_boxes_rotated(mask, img.shape, **kw)
+        fquads, fqscores = K.extract_boxes_rotated(mask.astype(np.float32), img.shape, **kw)
+        assert np.array_equal(quads, fquads) and np.array_equal(qscores, fqscores)
+        n_boxes += len(boxes)
+    assert n_boxes > 30
+
+
 def test_connected_components_two_blobs():
     m = np.zeros((20, 30), bool)
     m[2:6, 2:10] = True
