@@ -77,16 +77,16 @@ def _cfg_from(args):
 
 def _read_spans(spark, path: str):
     """The ``--spans`` input of ``eval`` and ``export``. A table's
-    ``spans`` tree (its parent holds the layout pin) reads with the
+    ``spans`` tree (its parent holds a snapshot log) reads with the
     table's declared schema, so an emptied table reads as no rows; any
     other parquet (the oracle's golden file) reads with the schema its
     files carry."""
     import posixpath
 
-    from . import snapshots, tablefs
+    from . import snapshots
 
     table, tree = posixpath.split(path.rstrip("/"))
-    if tree == "spans" and tablefs.exists(spark, posixpath.join(table, snapshots.LAYOUT_PIN)):
+    if tree == "spans" and snapshots.current_snapshot_id(spark, table) is not None:
         return snapshots.read_tree(spark, table)
     return spark.read.parquet(path)
 

@@ -28,14 +28,15 @@ Scale design decisions:
     rows sit in one task and every bucketed write lands one file per
     bucket. Unbucketed docs (the library API, oracle/eval) group by
     doc_id as before.
-  * Every bucket mutator takes three steps: ``snapshots.open_table`` →
+  * Every bucket mutator takes three steps: ``snapshots.open_table``
+    (returns HEAD's manifest, the op's one read of table state) →
     ``stage_buckets`` (one write into ``_staging``, lineage rows
     (partition_id, doc_count, span_count, checksum) folded from the files
     that landed) → ``commit_buckets`` (archive, land the files, commit a
-    snapshot whose manifest records each bucket's lineage). Every check of
-    the table reads that committed lineage from HEAD's manifest
-    (``committed_lineage``, no Spark job); resume anti-joins documents
-    against its buckets (J3 of SURVEY.md §2.3) and processes only the
+    snapshot against that HEAD whose manifest records each bucket's
+    lineage). Every check of the table reads the committed lineage from
+    HEAD's manifest, no Spark job; resume anti-joins documents against
+    its buckets (J3 of SURVEY.md §2.3) and processes only the
     remainder.
 """
 
@@ -567,9 +568,11 @@ def stage_buckets(spark: SparkSession, out_dir: str, rows: DataFrame) -> list:
 def commit_buckets(
     spark: SparkSession,
     out_dir: str,
+    head: dict,
     op: str,
     lineage: list | None,
     replaced=(),
+    num_buckets: int | None = None,
     run_id: str | None = None,
     summary: dict | None = None,
 ) -> dict:
@@ -580,8 +583,9 @@ def commit_buckets(
     lineage: compaction rewrites files, not content). The table's new
     lineage is HEAD's less the ``replaced`` buckets, with each staged row
     folded in — counts summed, checksums xored, so a bucket that is not
-    replaced (the streaming append) adds to its entry. The steps, which
-    are also the protocol's crash points:
+    replaced (the streaming append) adds to its entry. ``head`` is the
+    HEAD manifest the open returned. The steps, which are also the
+    protocol's crash points:
 
     1. archive the live spans files of the ``replaced`` buckets, so every
        earlier snapshot still reads back;
@@ -589,18 +593,21 @@ def commit_buckets(
        file into its bucket — renames, no pass over the data. A replaced
        bucket that got no rows stays dropped (a purge); a bucket not
        replaced gains files (the streaming append);
-    3. commit the snapshot — the commit marker, whose one manifest
-       publish records the files and the new lineage together.
+    3. commit the snapshot against ``head`` — the commit marker, whose one
+       manifest publish records the files and the new lineage together.
+       The file list is HEAD's less the replaced buckets plus the files
+       step 2 moved: no listing of the live tree. ``num_buckets`` is the
+       layout the staged rows were written under (rebucket); ``None``
+       keeps HEAD's.
 
-    A crash before step 3 leaves the live tree off HEAD, and the next
-    ``open_table`` reconciles it back (``reconcile_to_head``: landed files
-    removed, deleted ones restored from the archive). Returns the commit
-    record."""
-    replaced = sorted({int(b) for b in replaced})
+    A crash before step 3, or a commit that loses to a writer that
+    committed after ``head`` was opened, leaves the live tree off HEAD,
+    and the next ``open_table`` reconciles it back (``reconcile_to_head``:
+    landed files removed, deleted ones restored from the archive). Returns
+    the commit record."""
+    replaced = {int(b) for b in replaced}
     if lineage is not None:
-        table = {
-            b: v for b, v in committed_lineage(spark, out_dir).items() if b not in replaced
-        }
+        table = {b: v for b, v in head["lineage"].items() if b not in replaced}
         for b, (docs, spans, checksum) in _by_bucket(lineage).items():
             d0, s0, c0 = table.get(b, (0, 0, 0))
             table[b] = (d0 + docs, s0 + spans, c0 ^ checksum)
@@ -609,10 +616,13 @@ def commit_buckets(
     live, staged = os.path.join(out_dir, "spans"), _staged(out_dir)
     for b in replaced:
         tablefs.delete(spark, os.path.join(live, f"bucket={b}"))
-    for rel, _ in tablefs.list_parquet_files(spark, staged):
+    files = [f for f in head["files"] if snapshots.bucket_of(f[0]) not in replaced]
+    for rel, size in tablefs.list_parquet_files(spark, staged):
         tablefs.move(spark, os.path.join(staged, rel), os.path.join(live, rel))
+        files.append([f"spans/{rel}", size])
     snap = snapshots.commit_snapshot(
-        spark, out_dir, op=op, run_id=run_id, summary=summary, lineage=lineage
+        spark, out_dir, head, op, files, lineage,
+        num_buckets=num_buckets, run_id=run_id, summary=summary,
     )
     tablefs.delete(spark, _staging(out_dir))
     return snap
@@ -640,9 +650,9 @@ def run_extract(
     """
     cfg = cfg or ExtractConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
-    num_buckets = snapshots.open_table(spark, out_dir, num_buckets)
+    head = snapshots.open_table(spark, out_dir, num_buckets)
 
-    done = sorted(committed_lineage(spark, out_dir)) if resume else []
+    done = sorted(head["lineage"]) if resume else []
     skipped = len(done)
     t0 = time.time()
     lineage = []
@@ -668,7 +678,7 @@ def run_extract(
         # a rerun without resume replaces each bucket instead of adding
         # its rows a second time
         snap_id = commit_buckets(
-            spark, out_dir, "extract", lineage,
+            spark, out_dir, head, "extract", lineage,
             replaced=[r["partition_id"] for r in lineage],
             run_id=run_id,
             summary={"docs": int(n_docs), "buckets_skipped": int(skipped)},
@@ -677,7 +687,7 @@ def run_extract(
         # fully-resumed rerun staged nothing — don't append a no-op
         # snapshot; report the head the table already stands at
         tablefs.delete(spark, _staging(out_dir))
-        snap_id = snapshots.current_snapshot_id(spark, out_dir)
+        snap_id = head["snapshot_id"]
     secs = time.time() - t0
     return {
         "run_id": run_id,
@@ -724,10 +734,10 @@ def upsert_extract(
     cfg = cfg or ExtractConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
     spans_dir = os.path.join(out_dir, "spans")
-    num_buckets = snapshots.open_table(spark, out_dir)
+    head = snapshots.open_table(spark, out_dir)
 
     t0 = time.time()
-    docs = with_bucket(spark.read.parquet(docs_path), num_buckets)
+    docs = with_bucket(spark.read.parquet(docs_path), head["num_buckets"])
     sel = docs.where(where) if where else docs
     # one pass over the selection: the buckets it touches and its distinct
     # doc_ids per bucket — a re-extract stages exactly one row per doc_id
@@ -740,7 +750,7 @@ def upsert_extract(
         return {"run_id": run_id, "docs": 0, "buckets": 0,
                 "deleted": bool(delete), "secs": round(time.time() - t0, 3),
                 "out": spans_dir,
-                "snapshot_id": snapshots.current_snapshot_id(spark, out_dir)}
+                "snapshot_id": head["snapshot_id"]}
 
     sel_ids = sel.select("doc_id")
     kept = (
@@ -757,8 +767,7 @@ def upsert_extract(
         n_new = sum(n_sel.values())
     # the affected buckets' rows before the upsert, from their committed
     # lineage (open_table reconciled the data to it): no count of the data
-    committed = committed_lineage(spark, out_dir)
-    n_old = sum(committed[b][0] for b in affected if b in committed)
+    n_old = sum(head["lineage"][b][0] for b in affected if b in head["lineage"])
 
     # the union of kept and new rows is clustered by nothing: this one
     # exchange puts each bucket in one task, so staging lands one file per
@@ -779,7 +788,7 @@ def upsert_extract(
         )
     n_replaced = n_old - (sum(r["doc_count"] for r in lineage) - n_new)
     snap = commit_buckets(
-        spark, out_dir, "delete" if delete else "upsert", lineage,
+        spark, out_dir, head, "delete" if delete else "upsert", lineage,
         replaced=affected,
         run_id=run_id,
         summary={
@@ -826,14 +835,15 @@ def verify_lineage(spark: SparkSession, out_dir: str) -> dict:
     }
 
 
-def _bucket_files(spark: SparkSession, spans_dir: str) -> dict[int, list[int]]:
-    """{bucket: [files, bytes]} of the live spans tree, from one listing —
-    the census compaction plans from and ``bucket_stats`` reports."""
+def _bucket_files(files: list) -> dict[int, list[int]]:
+    """{bucket: [files, bytes]} of a manifest-style file list: the census
+    compaction and ``bucket_stats`` take of HEAD's files, rebucket of the
+    live listing."""
     per: dict[int, list[int]] = {}
-    for rel, size in tablefs.list_parquet_files(spark, spans_dir):
-        m = re.match(r"bucket=(\d+)/", rel)
-        if m is not None:
-            st = per.setdefault(int(m.group(1)), [0, 0])
+    for rel, size in files:
+        b = snapshots.bucket_of(rel)
+        if b is not None:
+            st = per.setdefault(b, [0, 0])
             st[0] += 1
             st[1] += size
     return per
@@ -850,7 +860,7 @@ def compact_spans(
     before data size does.
 
     Per bucket, the target file count is ceil(bucket_bytes/target) from
-    an actual file listing (no guessing from row counts). The rewrite
+    HEAD's file list (no guessing from row counts, no listing). The rewrite
     shuffles on (bucket, slot) where slot = pmod(xxhash64(doc_id, 1),
     n_slots) — deterministic, and a task holds whole slots so each
     bucket directory lands at most n_slots files. Safety protocol: the
@@ -861,10 +871,9 @@ def compact_spans(
     commit carries the lineage unchanged: content is identical, and the
     checksum is order-insensitive, so verify_lineage passes unchanged
     against the compacted table."""
-    spans_dir = os.path.join(out_dir, "spans")
-    snapshots.open_table(spark, out_dir)
+    head = snapshots.open_table(spark, out_dir)
     target = int(target_mb) * 1024 * 1024
-    per = _bucket_files(spark, spans_dir)
+    per = _bucket_files(head["files"])
     files_before = sum(st[0] for st in per.values())
     slots = {b: max(1, -(-st[1] // target)) for b, st in per.items()}
     stats = {
@@ -888,12 +897,12 @@ def compact_spans(
         .repartition(max(total_slots, 1), F.col("bucket"), F.col("slot"))
         .drop("n_slots", "slot"),
     )
-    if _by_bucket(lineage) != committed_lineage(spark, out_dir):
+    if _by_bucket(lineage) != head["lineage"]:
         tablefs.delete(spark, staged)
         raise ValueError("compaction digest mismatch; original left untouched")
     files_after = len(tablefs.list_parquet_files(spark, staged))
     snap = commit_buckets(
-        spark, out_dir, "compact", None,
+        spark, out_dir, head, "compact", None,
         replaced=list(per),
         summary={"files_before": files_before, "files_after": files_after},
     )
@@ -914,9 +923,10 @@ def rebucket_spans(
 ) -> dict:
     """Partition evolution: rewrite the spans table under a different
     bucket count — the Iceberg partition-spec-evolution analog for the
-    parquet layout, where the bucket transform is pinned per table
-    (``snapshots.open_table``) and can otherwise never change (a mixed
-    layout would strand stale partitions).
+    parquet layout, where every manifest records the table's bucket count
+    (``snapshots.open_table`` refuses a write under another) and it can
+    otherwise never change (a mixed layout would strand stale
+    partitions).
 
     At 10^12 docs the need is real: a table bucketed for yesterday's
     size eventually has buckets too large to task-parallelize or too
@@ -929,15 +939,16 @@ def rebucket_spans(
     can't launder in: any divergence between live data and lineage fails
     the gate (run `gc` first if a crash left uncommitted files). The
     rewrite is staged and read ONCE: its lineage rows fold into the gate's
-    digest and are the new layout's lineage. Then the layout is re-pinned
-    and ``commit_buckets`` replaces every old bucket and commits
-    (op=rebucket). Old snapshots remain readable with their ORIGINAL
+    digest and are the new layout's lineage. Then ``commit_buckets``
+    replaces every old bucket and commits (op=rebucket) with the new
+    ``num_buckets``: the new layout becomes visible only in that commit,
+    so a crash before it leaves HEAD on the old one. Old snapshots remain readable with their ORIGINAL
     bucket numbers (the archived files carry the old layout)."""
-    spans_dir = os.path.join(out_dir, "spans")
     new_buckets = int(new_buckets)
     if new_buckets < 1:
         raise ValueError("new_buckets must be >= 1")
-    old_buckets = snapshots.open_table(spark, out_dir, reconcile=False)
+    head = snapshots.open_table(spark, out_dir, reconcile=False)
+    old_buckets = head["num_buckets"]
     if new_buckets == old_buckets:
         return {"rewritten": False, "num_buckets": old_buckets}
     run_id = run_id or f"rebucket-{uuid.uuid4().hex[:8]}"
@@ -950,9 +961,11 @@ def rebucket_spans(
         v = d.values()
         return sum(x[0] for x in v), functools.reduce(operator.xor, (x[2] for x in v), 0)
 
-    before = total(committed_lineage(spark, out_dir))
+    before = total(head["lineage"])
 
-    per = _bucket_files(spark, spans_dir)
+    # the live listing, not HEAD's files: the unreconciled tree may still
+    # hold the buckets of a crashed rebucket's uncommitted layout
+    per = _bucket_files(snapshots._list_tracked(spark, out_dir))
     total_bytes = sum(st[1] for st in per.values())
     # slots per NEW bucket ≈ ceil(expected bucket bytes / target): a big
     # bucket spreads over that many tasks/files (compact's slot scheme)
@@ -973,14 +986,11 @@ def rebucket_spans(
             "rebucket digest mismatch vs committed lineage; original left "
             "untouched (uncommitted files from a crashed writer? run `gc`)"
         )
-    # the commit records the pinned layout; a crash before it leaves the
-    # pin ahead of HEAD, and the next open_table re-pins it to HEAD's
-    snapshots.pin_buckets(spark, out_dir, new_buckets)
     snap = commit_buckets(
-        spark, out_dir, "rebucket", lineage,
-        # every live bucket: the unreconciled tree may still hold the
-        # buckets of a crashed rebucket's uncommitted layout
+        spark, out_dir, head, "rebucket", lineage,
+        # every live bucket, torn ones included
         replaced=set(per) | set(range(old_buckets)),
+        num_buckets=new_buckets,
         run_id=run_id,
         summary={"from_buckets": old_buckets, "to_buckets": new_buckets},
     )
@@ -995,15 +1005,16 @@ def rebucket_spans(
 
 def bucket_stats(spark: SparkSession, out_dir: str) -> dict:
     """Per-bucket layout/skew report — the decision input for ``compact``
-    (files per bucket) and for salting (row skew). File counts/bytes come
-    from a listing; row counts from HEAD's manifest lineage (no data scan
-    and no Spark job — the report is O(partitions) however large the
-    table is).
+    (files per bucket) and for salting (row skew). File counts/bytes and
+    row counts come from HEAD's manifest: its file list and lineage (no
+    listing, no data scan and no Spark job — the report is O(partitions)
+    however large the table is).
     skew = max/mean of per-bucket rows; >2 is the usual salt-or-split
     signal (AQE handles it at join time, the layout fix is num_buckets
     or salting at write)."""
-    per = _bucket_files(spark, os.path.join(out_dir, "spans"))
-    rows = {b: d[0] for b, d in committed_lineage(spark, out_dir).items()}
+    head = snapshots.load_head(spark, out_dir)
+    per = _bucket_files(head["files"])
+    rows = {b: d[0] for b, d in head["lineage"].items()}
     buckets = sorted(set(per) | set(rows))
     doc_counts = [int(rows.get(b, 0)) for b in buckets]
     mean = (sum(doc_counts) / len(doc_counts)) if doc_counts else 0.0
@@ -1036,12 +1047,12 @@ def lookup_docs(spark: SparkSession, out_dir: str, doc_ids) -> DataFrame:
     ``len(set(buckets))`` of the P directories — at 10^12 docs a 10-doc
     lookup touches ~10/P of the table's files instead of all of them;
     the residual doc_id IN (...) filter prunes row groups via parquet
-    stats within those. P comes from the table's layout pin, so callers
-    cannot desync from the layout that actually wrote the table."""
+    stats within those. P comes from HEAD's manifest, so callers cannot
+    desync from the layout that actually wrote the table."""
     from .xxh import spark_bucket
 
     ids = list(doc_ids)
-    p = snapshots.pinned_buckets(spark, out_dir)
+    p = snapshots.load_head(spark, out_dir)["num_buckets"]
     buckets = sorted({spark_bucket(d, p) for d in ids})
     return (
         read_tree(spark, out_dir)

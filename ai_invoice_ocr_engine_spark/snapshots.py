@@ -9,7 +9,6 @@ write, diffed for incremental (CDC) consumption, and vacuumed of files no
 retained snapshot references. The package writes no Iceberg table; this
 module provides the same contract for the parquet layout:
 
-    {out_dir}/_manifest.json                  bucket layout pin (num_buckets, layout)
     {out_dir}/spans/bucket=N/part-*.parquet   the table's rows (``SPANS_SCHEMA``)
     {out_dir}/_snapshots/snap-00000001.json   one immutable manifest per commit
     {out_dir}/_archive/<relpath>              retired data files (time travel)
@@ -17,28 +16,34 @@ module provides the same contract for the parquet layout:
 
 (HEAD is derived by listing the manifests — no pointer file to go stale.)
 
-A snapshot manifest lists every live data file (relpath + size) under
+HEAD's manifest is the table: no other file holds table state. A
+snapshot manifest lists every live data file (relpath + size) under
 ``spans/`` at commit time, the table's lineage — one entry per bucket,
 ``"lineage": {"<bucket>": [doc_count, span_count, checksum]}``, the
 bucket's digest as ``pipeline.lineage_of`` computes it over its rows —
-and op metadata (``op``, ``run_id``, ``ts``, ``num_buckets``,
-``summary``). Files and lineage commit in the same atomic publish, so a
-committed snapshot never holds data without its lineage or lineage
-without its data; the run that wrote a bucket's entry is the committing
-snapshot's ``run_id``. The bucket mutators (``run_extract``,
+the bucket layout its files were written under (``num_buckets``,
+``layout``) and op metadata (``op``, ``run_id``, ``ts``, ``summary``).
+Files and lineage commit in the same atomic publish, so a committed
+snapshot never holds data without its lineage or lineage without its
+data; the run that wrote a bucket's entry is the committing snapshot's
+``run_id``. The bucket mutators (``run_extract``,
 ``upsert_extract``, the streaming append, ``compact_spans``,
 ``rebucket_spans``) take the same three steps:
 
-1. ``open_table`` — clear ``_staging``, reconcile to HEAD, check the pin;
+1. ``open_table`` — clear ``_staging``, load HEAD once (one listing of
+   ``_snapshots``, one read of each manifest in its delta chain), check
+   its ``num_buckets`` and reconcile the live tree to it. The op reads
+   its files, lineage and bucket count from that HEAD only;
 2. ``pipeline.stage_buckets`` — write the op's rows once into
    ``_staging/spans`` and fold their lineage from the staged files; each
-   op's gate compares that lineage (with ``pipeline.committed_lineage``
-   where it checks the table) before anything live changes;
+   op's gate compares that lineage (with HEAD's where it checks the
+   table) before anything live changes;
 3. ``pipeline.commit_buckets`` — ARCHIVE the files about to be destroyed
    (local archives are hard links: zero data copied, the inode survives
    the live file's deletion; paths with a URI scheme fall back to a
    filesystem copy), land the staged rows, and commit a new manifest
-   carrying the folded lineage.
+   against HEAD as its parent: HEAD's files less the replaced buckets
+   plus the landed ones, carrying the folded lineage.
 
 ``rollback`` archives and restores files itself. Every filesystem call
 goes through ``tablefs``. Spark part-file names carry a per-job UUID, so
@@ -50,10 +55,12 @@ declared ``SPANS_SCHEMA``, never one inferred from its files: no read
 starts a schema-inference job, and a missing or empty tree (a new table,
 one whose every doc was purged) reads as an empty DataFrame.
 
-Scale posture: commits cost one file listing + O(retired files) hard
-links — no data pass; time-travel reads hand ``read_tree`` an explicit
-file list (one read over live files, one over archived, unioned, each
-with ``basePath``), so partition pruning on ``bucket`` still works;
+Scale posture: a commit lists no data — its file list is HEAD's plus
+the staged files it moved — and costs O(retired files) hard links, no
+data pass; the open's reconciliation is an op's one full listing;
+time-travel reads hand ``read_tree`` an explicit file list (one read
+over live files, one over archived, unioned, each with ``basePath``),
+so partition pruning on ``bucket`` still works;
 ``snapshot_changes`` diffs ONLY the buckets whose file sets differ
 between the two manifests, so CDC cost is bounded by the mutation size,
 not the table size. Concurrent committers ARE arbitrated at the
@@ -117,9 +124,7 @@ FULL_MANIFEST_EVERY = 16
 
 
 # ------------------------------------------------------------ table layout
-#: the bucket layout pin, read and written only here (see ``open_table``)
-LAYOUT_PIN = "_manifest.json"
-#: bucket layout identifier recorded in the pin: Iceberg's bucket(P,
+#: bucket layout identifier every manifest records: Iceberg's bucket(P,
 #: doc_id) transform is murmur3-based and assigns doc_ids to DIFFERENT
 #: bucket numbers than this xxhash64 layout — one table must never mix two
 #: layouts
@@ -127,36 +132,13 @@ BUCKET_LAYOUT = "parquet-xxhash64"
 #: where a mutator stages its rows before ``pipeline.commit_buckets``
 #: lands them; hidden, so no listing, snapshot or live-table read sees it
 STAGING_DIR = "_staging"
+_BUCKET_REL = re.compile(r"spans/bucket=(\d+)/")
 
 
-def _pin(spark: SparkSession, out_dir: str) -> dict | None:
-    path = posixpath.join(out_dir, LAYOUT_PIN)
-    return json.loads(tablefs.read_text(spark, path)) if tablefs.exists(spark, path) else None
-
-
-def pin_buckets(spark: SparkSession, out_dir: str, num_buckets: int) -> None:
-    """Pin the bucket count every later write of the table must use."""
-    tablefs.write_text(
-        spark,
-        posixpath.join(out_dir, LAYOUT_PIN),
-        json.dumps({"num_buckets": int(num_buckets), "layout": BUCKET_LAYOUT}),
-    )
-
-
-def pinned_buckets(spark: SparkSession, out_dir: str) -> int:
-    """The table's pinned bucket count. A missing pin means the directory
-    was not written by an extract job — a clear ValueError, not a raw
-    FileNotFoundError, so CLI callers see what went wrong."""
-    pin = _pin(spark, out_dir)
-    if pin is None:
-        raise ValueError(
-            f"{out_dir!r} has no {LAYOUT_PIN} — not an extract out_dir"
-        )
-    if pin.get("layout") != BUCKET_LAYOUT:
-        raise ValueError(
-            f"out_dir layout {pin.get('layout')!r} is not {BUCKET_LAYOUT!r}"
-        )
-    return int(pin["num_buckets"])
+def bucket_of(rel: str) -> int | None:
+    """The bucket of a data file's relpath (``spans/bucket=N/...``)."""
+    m = _BUCKET_REL.match(rel)
+    return None if m is None else int(m.group(1))
 
 
 def open_table(
@@ -164,51 +146,62 @@ def open_table(
     out_dir: str,
     num_buckets: int | None = None,
     reconcile: bool = True,
-) -> int:
-    """The one open step of every bucket mutator; returns the table's
-    bucket count.
+) -> dict:
+    """The one open step of every bucket mutator; returns the table's HEAD
+    manifest, materialized (``load_snapshot``): ``snapshot_id``,
+    ``files``, ``lineage``, ``num_buckets``. It is the only table state
+    the op reads, and the parent its commit is made against.
 
     1. Clear ``_staging``: rows a crashed op staged never landed.
-    2. With a snapshot log, reconcile the live tree to HEAD
-       (``reconcile_to_head``: torn files a crashed predecessor left are
-       removed, HEAD files it deleted are restored), then re-pin the
-       layout to HEAD's recorded ``num_buckets``: an op that re-pinned
-       (rebucket) and crashed before its commit must not leave the next
-       writer hashing into the uncommitted layout. ``reconcile=False``
-       skips the reconciliation only: ``rebucket_spans`` gates its rewrite
-       against committed lineage so that torn files fail it loudly
-       instead of being quietly removed.
-    3. Check the pin against ``num_buckets`` — or set it, on a table's
-       first write. The pin exists because a commit replaces only the
-       buckets its rows land in: a num_buckets change would strand stale
-       partitions of the old layout, with self-consistent lineage, so
-       verify_lineage would still pass. Tables without a log
-       (pre-snapshot layouts) skip step 2 — there is no manifest to
-       reconcile against."""
+    2. Load HEAD and check its ``num_buckets`` against ``num_buckets``:
+       a commit replaces only the buckets its rows land in, so another
+       count would strand stale partitions of the old layout, with
+       self-consistent lineage, and verify_lineage would still pass.
+    3. Reconcile the live tree to HEAD (``reconcile_to_head``: torn files
+       a crashed predecessor left are removed, HEAD files it deleted are
+       restored). ``reconcile=False`` skips this step only:
+       ``rebucket_spans`` gates its rewrite against committed lineage so
+       that torn files fail it loudly instead of being quietly removed.
+
+    A directory with no snapshot log is a new table when it holds no data
+    file and the caller gives ``num_buckets``: its first writer sets the
+    layout, and HEAD is the empty table (``snapshot_id`` None). Data files
+    without a log cannot be told from torn writes, and a HEAD that records
+    no layout was written before manifests carried it: both are refused,
+    as is a directory with no log when the caller gives no
+    ``num_buckets``."""
     tablefs.delete(spark, posixpath.join(out_dir, STAGING_DIR))
-    head = current_snapshot_id(spark, out_dir)
-    if head is not None:
-        # both return the HEAD manifest's fields; reconcile has loaded it
-        state = (
-            reconcile_to_head(spark, out_dir)
-            if reconcile
-            else load_snapshot(spark, out_dir, head)
-        )
-        head_nb = state.get("num_buckets")
-        if head_nb is not None and head_nb != (_pin(spark, out_dir) or {}).get("num_buckets"):
-            pin_buckets(spark, out_dir, head_nb)
-    if num_buckets is not None and _pin(spark, out_dir) is None:
-        pin_buckets(spark, out_dir, num_buckets)
-    pinned = pinned_buckets(spark, out_dir)
-    if num_buckets is not None and pinned != num_buckets:
+    sid = current_snapshot_id(spark, out_dir)
+    if sid is None:
+        if _list_tracked(spark, out_dir):
+            raise ValueError(
+                f"{out_dir!r} has data files but no snapshot log — cannot "
+                "distinguish committed rows from torn writes; write into a "
+                "fresh out_dir"
+            )
+        if num_buckets is None:
+            raise ValueError(f"{out_dir!r} holds no table: no snapshot log, so no HEAD manifest")
+        return {"snapshot_id": None, "num_buckets": int(num_buckets),
+                "layout": BUCKET_LAYOUT, "files": [], "lineage": {}}
+    head = load_snapshot(spark, out_dir, sid)
+    if head.get("layout") != BUCKET_LAYOUT:
         raise ValueError(
-            f"out_dir {out_dir!r} was written with num_buckets={pinned} "
+            f"{out_dir!r}: HEAD snapshot {sid} records layout "
+            f"{head.get('layout')!r}, not {BUCKET_LAYOUT!r} — a table written "
+            "before manifests recorded their layout is not migrated; "
+            "re-extract it into a fresh out_dir"
+        )
+    if num_buckets is not None and head["num_buckets"] != num_buckets:
+        raise ValueError(
+            f"out_dir {out_dir!r} was written with num_buckets={head['num_buckets']} "
             f"layout={BUCKET_LAYOUT!r}; rerunning with "
             f"num_buckets={num_buckets} would strand stale bucket "
             "partitions. Use a fresh out_dir (or delete the old one) to "
             "change the bucket layout, or rebucket the table."
         )
-    return pinned
+    if reconcile:
+        reconcile_to_head(spark, out_dir, head)
+    return head
 
 
 def _list_tracked(spark: SparkSession | None, out_dir: str) -> list[list]:
@@ -237,6 +230,15 @@ def _snapshot_ids(spark: SparkSession, out_dir: str) -> list[int]:
 def current_snapshot_id(spark: SparkSession, out_dir: str) -> int | None:
     ids = _snapshot_ids(spark, out_dir)
     return ids[-1] if ids else None
+
+
+def load_head(spark: SparkSession, out_dir: str) -> dict:
+    """HEAD's manifest, materialized; a directory with no snapshot log
+    holds no table and is refused."""
+    sid = current_snapshot_id(spark, out_dir)
+    if sid is None:
+        raise ValueError(f"{out_dir!r} holds no table: no snapshot log, so no HEAD manifest")
+    return load_snapshot(spark, out_dir, sid)
 
 
 def load_snapshot(spark: SparkSession, out_dir: str, snapshot_id: int) -> dict:
@@ -310,60 +312,62 @@ def list_snapshots(spark: SparkSession, out_dir: str) -> list[dict]:
 def commit_snapshot(
     spark: SparkSession,
     out_dir: str,
+    parent: dict,
     op: str,
+    files: list,
+    lineage: dict | None = None,
+    num_buckets: int | None = None,
     run_id: str | None = None,
     summary: dict | None = None,
-    files: list[list] | None = None,
-    lineage: dict | None = None,
 ) -> dict:
-    """Append one immutable manifest describing the CURRENT live table.
+    """Append one immutable manifest: the table after an op that opened
+    ``parent`` (the materialized HEAD ``open_table`` returned) and left
+    ``files`` ([[relpath, bytes], ...]) live.
 
     Called by every mutating op strictly AFTER its data lands — the
-    snapshot is the commit marker. ``lineage`` is the table's per-bucket
-    lineage after the op ({bucket: (doc_count, span_count, checksum)});
-    ``None`` carries the parent's (a rewrite that keeps content).
-    ``files`` lets ``rollback`` commit the restored manifest verbatim.
+    snapshot is the commit marker. The new id is the parent's + 1, so a
+    writer that committed after this op's open already holds that id: the
+    exclusive publish fails loudly (Iceberg's base check), and the next
+    ``open_table`` reconciles the live tree to the winner's HEAD.
+    ``lineage`` is the table's per-bucket lineage after the op ({bucket:
+    (doc_count, span_count, checksum)}); ``None`` carries the parent's (a
+    rewrite that keeps content). ``num_buckets`` is the layout ``files``
+    were written under; ``None`` keeps the parent's (rebucket and rollback
+    change it).
 
     On disk the manifest is a DELTA against the parent unless this is a
     FULL_MANIFEST_EVERY-th commit (or the log's first): an op touching B
     buckets writes O(files-in-B + B) bytes however large the table is.
     The returned dict is always materialized."""
-    parent = current_snapshot_id(spark, out_dir)
-    prev = load_snapshot(spark, out_dir, parent) if parent is not None else None
-    sid = (parent or 0) + 1
-    # record the bucket layout the files were written under: rollback
-    # across a rebucket boundary must re-pin _manifest.json to match the
-    # restored tree, or follow-on writes would mix layouts
-    num_buckets = (_pin(spark, out_dir) or {}).get("num_buckets")
-    cur = files if files is not None else _list_tracked(spark, out_dir)
-    if lineage is None:
-        lineage = prev["lineage"] if prev is not None else {}
-    lin = _lineage_map(lineage)
+    pid = parent["snapshot_id"]
+    sid = (pid or 0) + 1
+    lin = _lineage_map(parent["lineage"] if lineage is None else lineage)
     snap = {
         "snapshot_id": sid,
-        "parent_id": parent,
+        "parent_id": pid,
         "op": op,
         "run_id": run_id,
         "ts": round(time.time(), 3),
-        "num_buckets": num_buckets,
+        "num_buckets": int(parent["num_buckets"] if num_buckets is None else num_buckets),
+        "layout": BUCKET_LAYOUT,
         "summary": summary or {},
-        "files": cur,
+        "files": sorted([rel, int(sz)] for rel, sz in files),
         "lineage": lin,
     }
     on_disk = snap
-    if prev is not None and (sid - 1) % FULL_MANIFEST_EVERY != 0:
-        old = {rel: sz for rel, sz in prev["files"]}
-        new = {rel: sz for rel, sz in cur}
+    if pid is not None and (sid - 1) % FULL_MANIFEST_EVERY != 0:
+        old = {rel: sz for rel, sz in parent["files"]}
+        new = {rel: sz for rel, sz in snap["files"]}
         on_disk = {k: v for k, v in snap.items() if k not in ("files", "lineage")}
-        on_disk["base_id"] = parent
+        on_disk["base_id"] = pid
         on_disk["add"] = sorted(
             [rel, sz] for rel, sz in new.items() if old.get(rel) != sz
         )
         on_disk["remove"] = sorted(rel for rel in old if rel not in new)
         on_disk["lineage"] = {
-            b: v for b, v in lin.items() if prev["lineage"].get(b) != v
+            b: v for b, v in lin.items() if parent["lineage"].get(b) != v
         }
-        on_disk["lineage_remove"] = sorted(b for b in prev["lineage"] if b not in lin)
+        on_disk["lineage_remove"] = sorted(b for b in parent["lineage"] if b not in lin)
     # note: no separate HEAD pointer file — the manifest listing is the
     # single source of truth (a pointer written after the manifest could
     # go stale on a crash between the two writes and mislead operators)
@@ -391,63 +395,9 @@ def _write_text_exclusive(spark: SparkSession, path: str, text: str) -> None:
         if isinstance(e, FileExistsError) or "exists" in str(e).lower():
             raise ValueError(
                 f"concurrent snapshot commit detected: {path!r} already "
-                "exists — another writer committed first; re-list and retry"
+                "exists — another writer committed first; re-open the table and retry"
             ) from None
         raise
-
-
-# --------------------------------------------------------- metadata tables
-def snapshots_df(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The snapshot log as a DataFrame — Iceberg's ``table.snapshots``
-    metadata-table analog, for SQL over table history (commit cadence,
-    op mix, growth curves). One row per retained snapshot."""
-    rows = [
-        (
-            int(s["snapshot_id"]),
-            s["parent_id"],
-            s["op"],
-            s.get("run_id"),
-            float(s["ts"]) if s.get("ts") is not None else None,
-            int(s["files"]),
-            int(s["bytes"]),
-            json.dumps(s["summary"], sort_keys=True),
-        )
-        for s in list_snapshots(spark, out_dir)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "snapshot_id int, parent_id int, op string, run_id string, "
-        "ts double, n_files int, total_bytes long, summary string",
-    )
-
-
-def files_df(
-    spark: SparkSession, out_dir: str, snapshot_id: int | None = None
-) -> DataFrame:
-    """A snapshot's file manifest as a DataFrame — Iceberg's
-    ``table.files`` analog (default HEAD). Columns carve the relpath
-    into (sub, bucket, file) so skew / small-file audits are one
-    groupBy away; pair with ``bucket_stats`` for the live-table view."""
-    if snapshot_id is None:
-        snapshot_id = current_snapshot_id(spark, out_dir)
-        if snapshot_id is None:
-            raise ValueError(f"{out_dir!r} has no snapshots")
-    snap = load_snapshot(spark, out_dir, snapshot_id)
-    pat = re.compile(r"(spans)/bucket=(\d+)/(.+)\Z")
-    rows = []
-    for rel, size in snap["files"]:
-        m = pat.match(rel)
-        sub, bucket, name = (
-            (m.group(1), int(m.group(2)), m.group(3))
-            if m
-            else (rel.split("/", 1)[0], None, rel)
-        )
-        rows.append((int(snapshot_id), sub, bucket, name, rel, int(size)))
-    return spark.createDataFrame(
-        rows,
-        "snapshot_id int, sub string, bucket int, file string, "
-        "relpath string, bytes long",
-    )
 
 
 def doc_history(
@@ -462,7 +412,7 @@ def doc_history(
     trails stay pruned and correct across rebucket boundaries; legacy
     snapshots without the field scan that snapshot's spans fully —
     correct, just unpruned). Loud on a directory with no snapshot log,
-    matching gc/files_df."""
+    matching gc."""
     from .xxh import spark_bucket
 
     if isinstance(doc_ids, str):
@@ -551,15 +501,6 @@ def list_tags(spark: SparkSession, out_dir: str) -> dict[str, int]:
     return out
 
 
-def resolve_tag(spark: SparkSession, out_dir: str, name: str) -> int:
-    tags = list_tags(spark, out_dir)
-    if name not in tags:
-        raise ValueError(
-            f"tag {name!r} not found (have: {sorted(tags) or 'none'})"
-        )
-    return tags[name]
-
-
 # ---------------------------------------------------------------------- gc
 def _restore_tree(
     spark: SparkSession, out_dir: str, files: list, archive_removed: bool,
@@ -595,49 +536,43 @@ def _restore_tree(
     return len(live - want), len(want - live)
 
 
-def reconcile_to_head(spark: SparkSession, out_dir: str) -> dict:
-    """Make the live tree EXACTLY the HEAD manifest — the two-sided crash
-    reconciliation (ADVICE r4): (1) remove live tracked files HEAD does
-    not reference (torn writes of a job that crashed before its snapshot
-    commit — invisible to every snapshot yet read by a plain
-    ``spark.read.parquet``); (2) re-link from the archive any HEAD file
-    MISSING from the live tree (a crash between a bucket's replacement
-    and its commit deletes the old files, which survive only as archive
-    links — without the restore the live bucket reads empty while HEAD's
-    lineage still marks it completed, so a resume run would silently
-    skip it). A HEAD file with no live or archive copy is unrecoverable →
-    loud error, table untouched. Metadata/link ops only. Single-writer
-    assumption as everywhere in this module. Returns the counts and the
-    bucket count HEAD records."""
-    head = current_snapshot_id(spark, out_dir)
-    if head is None:
-        raise ValueError(
-            f"{out_dir!r} has no snapshot log — cannot distinguish "
-            "committed from torn files"
-        )
-    snap = load_snapshot(spark, out_dir, head)
+def reconcile_to_head(spark: SparkSession, out_dir: str, head: dict) -> dict:
+    """Make the live tree EXACTLY ``head``, the materialized HEAD manifest
+    — the two-sided crash reconciliation (ADVICE r4): (1) remove live
+    tracked files HEAD does not reference (torn writes of a job that
+    crashed before its snapshot commit — invisible to every snapshot yet
+    read by a plain ``spark.read.parquet``); (2) re-link from the archive
+    any HEAD file MISSING from the live tree (a crash between a bucket's
+    replacement and its commit deletes the old files, which survive only
+    as archive links — without the restore the live bucket reads empty
+    while HEAD's lineage still marks it completed, so a resume run would
+    silently skip it). A HEAD file with no live or archive copy is
+    unrecoverable → loud error, table untouched. Metadata/link ops only:
+    one listing of the live tree. Single-writer assumption as everywhere
+    in this module. Returns the counts and the bucket count HEAD
+    records."""
     removed, restored = _restore_tree(
-        spark, out_dir, snap["files"], archive_removed=False,
-        unreachable=f"HEAD snapshot {head} references {{n}} file(s) present "
-        "neither live nor archived (e.g. {rel!r}) — unrecoverable without "
-        "rollback to an older snapshot; table untouched",
+        spark, out_dir, head["files"], archive_removed=False,
+        unreachable=f"HEAD snapshot {head['snapshot_id']} references {{n}} "
+        "file(s) present neither live nor archived (e.g. {rel!r}) — "
+        "unrecoverable without rollback to an older snapshot; table untouched",
     )
     return {
-        "head": head,
+        "head": head["snapshot_id"],
         "removed": removed,
         "restored": restored,
-        "num_buckets": snap.get("num_buckets"),
+        "num_buckets": head["num_buckets"],
     }
 
 
 def gc_uncommitted(spark: SparkSession, out_dir: str) -> dict:
     """Quarantine torn writes AND restore HEAD-referenced files the live
     tree lost (see ``reconcile_to_head`` — this is that reconciliation,
-    kept under its historical CLI name). Every batch mutator now runs the
-    same reconciliation before writing, so a crashed predecessor can
+    kept under its historical CLI name). Every batch mutator runs the
+    same reconciliation in ``open_table``, so a crashed predecessor can
     neither leave torn files to be laundered into the next commit nor a
     silently-empty live bucket behind HEAD's lineage entry."""
-    return reconcile_to_head(spark, out_dir)
+    return reconcile_to_head(spark, out_dir, open_table(spark, out_dir, reconcile=False))
 
 
 # -------------------------------------------------------------- archiving
@@ -693,12 +628,9 @@ def _resolve_files(
     if buckets is not None:
         want = {int(b) for b in buckets}
     live, archived, missing = [], [], []
-    pat = re.compile(r"spans/bucket=(\d+)/")
     for rel, _ in snap["files"]:
-        if want is not None:
-            m = pat.match(rel)
-            if m is None or int(m.group(1)) not in want:
-                continue
+        if want is not None and bucket_of(rel) not in want:
+            continue
         lp = posixpath.join(out_dir, rel)
         ap = posixpath.join(out_dir, ARCHIVE_DIR, rel)
         if tablefs.exists(spark, lp):
@@ -728,42 +660,23 @@ def read_snapshot(
     lookups prune identically on historical reads. A snapshot with no
     files (or none in the requested buckets) reads as an empty
     DataFrame."""
-    if snapshot_id is None:
-        snapshot_id = current_snapshot_id(spark, out_dir)
-        if snapshot_id is None:
-            raise ValueError(f"{out_dir!r} has no snapshots")
-    snap = load_snapshot(spark, out_dir, snapshot_id)
+    snap = (
+        load_head(spark, out_dir) if snapshot_id is None
+        else load_snapshot(spark, out_dir, snapshot_id)
+    )
     live, archived = _resolve_files(spark, out_dir, snap, buckets)
     return read_tree(spark, out_dir, live).unionByName(
         read_tree(spark, posixpath.join(out_dir, ARCHIVE_DIR), archived)
     )
 
 
-def snapshot_as_of(spark: SparkSession, out_dir: str, ts: float) -> int:
-    """Resolve a wall-clock timestamp to the snapshot the table stood at —
-    the newest retained snapshot with commit ts <= ``ts`` (Iceberg's
-    as-of-timestamp read). Loud when ``ts`` predates the retained log."""
-    best = None
-    for sid in _snapshot_ids(spark, out_dir):
-        snap_ts = load_snapshot(spark, out_dir, sid).get("ts") or 0.0
-        if snap_ts <= ts:
-            best = sid
-    if best is None:
-        raise ValueError(
-            f"no retained snapshot at or before ts={ts} (history may have "
-            "been expired; earliest retained snapshot is newer)"
-        )
-    return best
-
-
 # ------------------------------------------------------------------- diff
 def _buckets_of(snap: dict) -> dict[int, set[str]]:
     out: dict[int, set[str]] = {}
-    pat = re.compile(r"spans/bucket=(\d+)/")
     for rel, _ in snap["files"]:
-        m = pat.match(rel)
-        if m:
-            out.setdefault(int(m.group(1)), set()).add(rel)
+        b = bucket_of(rel)
+        if b is not None:
+            out.setdefault(b, set()).add(rel)
     return out
 
 
@@ -809,58 +722,6 @@ def snapshot_changes(
     ).where(F.col("change").isNotNull())
 
 
-# ------------------------------------------------- incremental consumption
-#: per-doc stats a downstream table maintains from the spans table
-_DOC_STATS_COLS = ("doc_id", "bucket", "n_spans", "n_ocr", "total_chars")
-
-
-def doc_stats_full(df: DataFrame) -> DataFrame:
-    """Per-doc stats from a spans DataFrame (full recompute — the
-    bootstrap, and the oracle the incremental path must match)."""
-    sp = F.col("spans_out")
-    return df.select(
-        "doc_id",
-        "bucket",
-        F.size(sp).alias("n_spans"),
-        F.size(F.filter(sp, lambda s: s["kind"] == F.lit("ocr")))
-        .alias("n_ocr"),
-        F.aggregate(
-            sp, F.lit(0), lambda acc, s: acc + F.length(s["text"])
-        ).alias("total_chars"),
-    )
-
-
-def incremental_doc_stats(
-    spark: SparkSession,
-    out_dir: str,
-    prev_stats: DataFrame,
-    from_id: int,
-    to_id: int,
-) -> DataFrame:
-    """Maintain a downstream per-doc stats table by applying the CDC delta
-    between two snapshots instead of recomputing from the full table — the
-    consumption pattern that matters at 10^12 docs, where a nightly upsert
-    touches a few thousand buckets and a full recompute would rescan
-    everything. Reads ONLY the buckets whose file sets changed (same
-    restriction snapshot_changes uses), so cost is bounded by the mutation,
-    not the table. Returns prev_stats with changed/deleted docs replaced."""
-    changes = snapshot_changes(spark, out_dir, from_id, to_id)
-    changed_docs = changes.select("doc_id", "change")
-    changed_buckets = _changed_buckets(
-        load_snapshot(spark, out_dir, from_id), load_snapshot(spark, out_dir, to_id)
-    )
-    kept = prev_stats.join(
-        changed_docs.select("doc_id"), "doc_id", "left_anti"
-    )
-    to_side = read_snapshot(spark, out_dir, to_id, buckets=changed_buckets)
-    fresh = doc_stats_full(to_side).join(
-        changed_docs.where(F.col("change") != "delete").select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    return kept.unionByName(fresh)
-
-
 # --------------------------------------------------------------- rollback
 def rollback(spark: SparkSession, out_dir: str, to_id: int) -> dict:
     """Restore the live table to snapshot ``to_id`` and commit the result
@@ -871,30 +732,21 @@ def rollback(spark: SparkSession, out_dir: str, to_id: int) -> dict:
     Protocol: verify every target file is reachable (live or archived)
     BEFORE touching anything; archive-then-delete live files the target
     doesn't list; re-link missing target files from the archive. All
-    metadata/link operations — no data pass, any table size."""
+    metadata/link operations — no data pass, any table size. The
+    commit records the target's ``num_buckets``: rolling back across a
+    rebucket restores the layout the target's files were written under."""
+    head = open_table(spark, out_dir, reconcile=False)
     target = load_snapshot(spark, out_dir, to_id)
     n_removed, n_restored = _restore_tree(
         spark, out_dir, target["files"], archive_removed=True,
         unreachable=f"cannot roll back to snapshot {to_id}: {{n}} file(s) "
         "expired (e.g. {rel!r}); table untouched",
     )
-
-    # rolling back across a rebucket boundary: the restored tree carries
-    # the bucket layout of the TARGET snapshot — re-pin the layout to it
-    # before the commit records it (a crash in between is repaired by the
-    # next open_table, which re-pins to HEAD). Snapshots committed before
-    # num_buckets was recorded skip the re-pin; verify-lineage still flags
-    # any resulting inconsistency.
-    if target.get("num_buckets") is not None:
-        pin_buckets(spark, out_dir, target["num_buckets"])
-
     snap = commit_snapshot(
-        spark,
-        out_dir,
-        op="rollback",
-        summary={"to": to_id, "restored": n_restored, "removed": n_removed},
-        files=target["files"],
+        spark, out_dir, head, "rollback", target["files"],
         lineage=target["lineage"],
+        num_buckets=target["num_buckets"],
+        summary={"to": to_id, "restored": n_restored, "removed": n_removed},
     )
     return {
         "snapshot_id": snap["snapshot_id"],
@@ -908,19 +760,15 @@ def rollback(spark: SparkSession, out_dir: str, to_id: int) -> dict:
 def clone_table(spark: SparkSession, src_dir: str, dst_dir: str) -> dict:
     """Zero-copy clone of a snapshot-committed table — the CLONE TABLE /
     snapshot-export primitive for sandboxing a production table: every
-    tracked data file, archive file, snapshot manifest, tag, and the
-    layout pin is hard-linked (local) or copied (a URI scheme) into
+    tracked data file, archive file, snapshot manifest and tag is
+    hard-linked (local) or copied (a URI scheme) into
     ``dst_dir``. Data files are immutable (writers always create new
     part files; nothing mutates in place), so clone and source share
     bytes safely: mutations on either side add/remove NAMES, never
     rewrite shared content. Cost: O(files) metadata ops, zero data
     locally. The clone is a full first-class table — its own history,
     its own future."""
-    if current_snapshot_id(spark, src_dir) is None:
-        raise ValueError(
-            f"{src_dir!r} has no snapshot log — clone requires a "
-            "snapshot-committed table"
-        )
+    load_head(spark, src_dir)  # refuses a directory with no table
     if tablefs.exists(spark, posixpath.join(dst_dir, SNAP_DIR)):
         raise ValueError(f"{dst_dir!r} already holds a table; refusing")
 
@@ -933,8 +781,6 @@ def clone_table(spark: SparkSession, src_dir: str, dst_dir: str) -> dict:
         for n in tablefs.list_names(spark, posixpath.join(src_dir, SNAP_DIR))
         if n.endswith(".json")
     ]
-    if tablefs.exists(spark, posixpath.join(src_dir, LAYOUT_PIN)):
-        meta.append(LAYOUT_PIN)
     # metadata files are shared safely too: every metadata write publishes
     # a new file (tablefs.write_text), none rewrites one in place
     for rel in data + meta:
@@ -943,7 +789,7 @@ def clone_table(spark: SparkSession, src_dir: str, dst_dir: str) -> dict:
         "src": src_dir,
         "dst": dst_dir,
         "files": len(data),
-        "snapshots": len(meta) - (LAYOUT_PIN in meta),
+        "snapshots": len(meta),
     }
 
 

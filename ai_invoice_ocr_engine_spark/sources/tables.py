@@ -3,8 +3,8 @@
 The extraction table itself is not written here: its bucketed parquet
 layout (``bucket = pmod(xxhash64(doc_id), P)``, ``partitionBy("bucket")``)
 is staged by ``pipeline.stage_buckets`` and landed by
-``pipeline.commit_buckets`` under the layout pin of ``snapshots``. This
-module holds the other bucketing, which aligns TWO tables on a join key.
+``pipeline.commit_buckets`` under the ``num_buckets`` its HEAD snapshot
+records (``snapshots.open_table``). This module holds the other bucketing, which aligns TWO tables on a join key.
 """
 
 from __future__ import annotations

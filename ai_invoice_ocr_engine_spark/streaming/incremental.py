@@ -68,8 +68,8 @@ def incremental_extract(
         #     does not reference was appended by an attempt that crashed
         #     before its commit; remove it or the re-append doubles rows.
         #     No HEAD + live files = a table this protocol has never
-        #     committed (a legacy dir): refuse rather than guess which
-        #     files are torn.
+        #     committed (a legacy dir): open_table refuses rather than
+        #     guess which files are torn.
         # (2) doc-level idempotence — redelivery is anti-joined against
         #     the doc_ids already visible, so a replayed batch appends
         #     nothing, and a checkpoint-loss replay that MIXES committed
@@ -84,19 +84,11 @@ def incremental_extract(
         #     Note the stream re-asserts its source: a doc purged via
         #     `upsert --delete` is re-added if its file is replayed —
         #     takedowns must also drop the source file.
-        head = snapshots.current_snapshot_id(spark, out_dir)
-        if head is None and snapshots._list_tracked(spark, out_dir):
-            raise ValueError(
-                f"{out_dir!r} has data files but no snapshot log — "
-                "cannot distinguish committed rows from torn writes; "
-                "start streaming into a fresh out_dir or one written by "
-                "the snapshot-committing batch job"
-            )
         # the batch mutators' open step: the two-sided reconciliation
         # (torn appends removed, HEAD files a crashed mutator deleted
-        # restored) and the layout pin, set on a fresh out_dir and checked
-        # against num_buckets otherwise
-        snapshots.open_table(spark, out_dir, num_buckets)
+        # restored), and num_buckets checked against HEAD's (or taken as
+        # the layout of a fresh out_dir)
+        head = snapshots.open_table(spark, out_dir, num_buckets)
         # bucketed docs in → bucket-clustered result out: the append
         # adds one file per bucket this micro-batch touches
         todo = with_bucket(batch_df, num_buckets).join(
@@ -113,7 +105,7 @@ def incremental_extract(
         # buckets' existing ones and each staged lineage row folds into
         # its bucket's committed entry
         commit_buckets(
-            spark, out_dir, "stream-append", lineage,
+            spark, out_dir, head, "stream-append", lineage,
             run_id=run_id,
             summary={
                 "batch_id": int(batch_id),

@@ -91,8 +91,9 @@ def test_compact_splits_by_target_size(spark, corpus, tmp_path):
 
 
 def test_bucket_stats_report(spark, corpus, tmp_path):
-    """stats: files/bytes from the listing, docs from lineage sums (no
-    data scan), skew = max/mean of per-bucket docs."""
+    """stats: files/bytes from HEAD's file list (equal to the listing),
+    docs from lineage sums (no data scan), skew = max/mean of per-bucket
+    docs."""
     from ai_invoice_ocr_engine_spark.pipeline import bucket_stats
 
     out = str(tmp_path / "out")
@@ -116,16 +117,27 @@ def test_bucket_stats_report(spark, corpus, tmp_path):
     assert sum(v["docs"] for v in rep["per_bucket"].values()) == n_docs
 
 
-def test_ops_commands_need_manifest(spark, tmp_path):
-    """compact/lookup on a directory run_extract never wrote raise a
-    clear ValueError, not a raw FileNotFoundError."""
+def test_ops_commands_need_manifest(spark, corpus, tmp_path):
+    """upsert/compact/rebucket/lookup on a directory run_extract never
+    wrote raise a clear ValueError that names it, not a raw
+    FileNotFoundError."""
+    import re
+
     import pytest
 
-    from ai_invoice_ocr_engine_spark.pipeline import compact_spans, lookup_docs
+    from ai_invoice_ocr_engine_spark.pipeline import (
+        compact_spans, lookup_docs, rebucket_spans, upsert_extract,
+    )
 
     bogus = str(tmp_path / "not_an_out_dir")
     os.makedirs(bogus, exist_ok=True)
-    with pytest.raises(ValueError, match="_manifest"):
+    named = re.escape(repr(bogus)) + ".*no snapshot log"
+    with pytest.raises(ValueError, match=named):
+        upsert_extract(spark, bogus, corpus["docs_path"], where="1=1", delete=True)
+    with pytest.raises(ValueError, match=named):
         compact_spans(spark, bogus)
-    with pytest.raises(ValueError, match="_manifest"):
+    with pytest.raises(ValueError, match=named):
+        rebucket_spans(spark, bogus, 4)
+    with pytest.raises(ValueError, match=named):
         lookup_docs(spark, bogus, ["x"])
+    assert os.listdir(bogus) == []

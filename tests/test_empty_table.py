@@ -91,7 +91,7 @@ def test_emptied_table_rebuckets(spark, emptied):
     r = rebucket_spans(spark, out, 2)
     assert r["rewritten"] and r["rows"] == 0
     assert S.list_snapshots(spark, out)[-1]["op"] == "rebucket"
-    assert S.pinned_buckets(spark, out) == 2
+    assert S.load_head(spark, out)["num_buckets"] == 2
     assert verify_lineage(spark, out)["ok"]
 
 

@@ -54,8 +54,10 @@ def _drop_one_lineage_partition(spark, out):
     """A data bucket with no lineage entry: a commit of HEAD's lineage
     without its first bucket."""
     lin = committed_lineage(spark, out)
+    head = S.load_head(spark, out)
     S.commit_snapshot(
-        spark, out, op="test-drop", lineage={b: v for b, v in lin.items() if b != min(lin)},
+        spark, out, head, "test-drop", head["files"],
+        lineage={b: v for b, v in lin.items() if b != min(lin)},
     )
 
 

@@ -1,8 +1,8 @@
 """Multi-process race on the snapshot commit protocol: N workers commit
-to the same table simultaneously. The exclusive manifest create must
-admit exactly one writer per snapshot id — losers either retry onto the
-next id (getting a distinct manifest) or fail loudly; no manifest is
-ever overwritten and the log stays a gap-free, parseable chain."""
+to the same table simultaneously, each against the same parent. The
+exclusive manifest create must admit exactly one writer per snapshot id
+— losers fail loudly; no manifest is ever overwritten and the log stays
+a gap-free, parseable chain."""
 
 import json
 import multiprocessing as mp
@@ -16,10 +16,12 @@ N_WORKERS = 8
 def _worker(out_dir, barrier, results, idx):
     # workers are pure-filesystem: commit_snapshot only touches Spark for
     # '://' paths, so a local out_dir needs no SparkSession here
+    parent = S.load_head(None, out_dir)
     barrier.wait()
     try:
         snap = S.commit_snapshot(
-            None, out_dir, op="extract", run_id=f"racer-{idx}"
+            None, out_dir, parent, "extract", S._list_tracked(None, out_dir),
+            run_id=f"racer-{idx}",
         )
         results[idx] = ("ok", snap["snapshot_id"])
     except ValueError as e:
@@ -31,7 +33,10 @@ def test_parallel_commits_never_clobber(tmp_path):
     out = str(tmp_path / "out")
     os.makedirs(os.path.join(out, "spans"), exist_ok=True)
     # seed one committed snapshot so every racer starts from the same HEAD
-    S.commit_snapshot(None, out, op="extract", run_id="seed")
+    S.commit_snapshot(
+        None, out, S.open_table(None, out, num_buckets=1), "extract",
+        S._list_tracked(None, out), run_id="seed",
+    )
 
     ctx = mp.get_context("fork")
     barrier = ctx.Barrier(N_WORKERS)

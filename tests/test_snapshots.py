@@ -270,8 +270,7 @@ def test_read_snapshot_unknown_id_raises(spark, history):
 def test_cdc_delete_emptying_all_changed_buckets(spark, corpus, tmp_path):
     """Review scenario: the delta between two snapshots is a delete that
     empties every changed bucket. snapshot_changes must report the pure
-    deletes (the from-side read is empty-tolerant) and
-    incremental_doc_stats must return kept rows, not crash."""
+    deletes (the from-side read is empty-tolerant)."""
     out = str(tmp_path / "out")
     _extract(spark, corpus, out)
     spans_dir = os.path.join(out, "spans")
@@ -290,12 +289,6 @@ def test_cdc_delete_emptying_all_changed_buckets(spark, corpus, tmp_path):
         for r in S.snapshot_changes(spark, out, 1, 2).collect()
     }
     assert ch == {i: "delete" for i in ids}
-
-    base = S.doc_stats_full(S.read_snapshot(spark, out, 1))
-    got = S.incremental_doc_stats(spark, out, base, 1, 2)
-    want = S.doc_stats_full(S.read_snapshot(spark, out, 2))
-    key = lambda rows: sorted(tuple(r) for r in rows)  # noqa: E731
-    assert key(got.collect()) == key(want.collect())
 
 
 def test_tags_pin_snapshots_through_expiry(spark, corpus, tmp_path):
@@ -316,7 +309,6 @@ def test_tags_pin_snapshots_through_expiry(spark, corpus, tmp_path):
 
     S.set_tag(spark, out, "pre-delete", 1)
     assert S.list_tags(spark, out) == {"pre-delete": 1}
-    assert S.resolve_tag(spark, out, "pre-delete") == 1
 
     # keep_last=1 would drop snapshots 1 and 2 — the tag pins 1
     rep = S.expire_snapshots(spark, out, keep_last=1)
@@ -394,23 +386,6 @@ def test_export_as_of_cli(spark, history, tmp_path):
     assert rep["docs"] == len(history["states"][1])
 
 
-def test_metadata_tables(spark, history):
-    out = history["out"]
-    sdf = S.snapshots_df(spark, out)
-    log = S.list_snapshots(spark, out)
-    assert sdf.count() == len(log)
-    ops = [r["op"] for r in sdf.orderBy("snapshot_id").collect()]
-    assert ops[:3] == ["extract", "upsert", "delete"]
-    fdf = S.files_df(spark, out, 1)
-    # every manifest row is carved into (sub, bucket, file)
-    assert fdf.where(F.col("sub") == "spans").count() > 0
-    assert fdf.where(F.col("bucket").isNull()).count() == 0
-    total = fdf.agg(F.sum("bytes")).collect()[0][0]
-    assert total == sum(
-        sz for _, sz in S.load_snapshot(spark, out, 1)["files"]
-    )
-
-
 def _lineage_by_bucket(df) -> dict[int, tuple]:
     from ai_invoice_ocr_engine_spark.pipeline import lineage_of
 
@@ -464,8 +439,8 @@ def test_delta_manifest_lineage_names_only_touched_buckets(spark, history):
 
 def test_rebucket_partition_evolution(spark, corpus, tmp_path):
     """Rewrite 8 → 16 buckets: content identical (bucket-independent
-    key-set), lineage verifies under the new layout, the manifest is
-    re-pinned so follow-on ops use 16, a resume rerun treats the table
+    key-set), lineage verifies under the new layout, HEAD records 16
+    buckets so follow-on ops use 16, a resume rerun treats the table
     complete, and time travel to the pre-rebucket snapshot returns the
     ORIGINAL 8-bucket layout."""
     from ai_invoice_ocr_engine_spark.pipeline import rebucket_spans
@@ -489,7 +464,7 @@ def test_rebucket_partition_evolution(spark, corpus, tmp_path):
     assert verify_lineage(spark, out)["ok"]
 
     # follow-on extract resumes cleanly under the new layout (the old
-    # bucket count is correctly refused by the manifest guard)
+    # bucket count is correctly refused against HEAD's)
     with pytest.raises(ValueError, match="stale bucket partitions"):
         _extract(spark, corpus, out, run_id="after")
     rep2 = run_extract(
@@ -499,7 +474,7 @@ def test_rebucket_partition_evolution(spark, corpus, tmp_path):
     )
     assert rep2["docs"] == 0 and rep2["buckets_skipped"] == 16
 
-    # upsert works against the re-pinned manifest
+    # upsert works against the rebucketed HEAD
     some = sorted(before)[0]
     upsert_extract(
         spark, out, corpus["docs_path"],
@@ -548,10 +523,8 @@ def test_rebucket_refuses_torn_files(spark, corpus, tmp_path):
 
 def test_rollback_across_rebucket_repins_manifest(spark, corpus, tmp_path):
     """Rolling back over a rebucket commit restores the OLD bucket
-    layout — the manifest pin must follow, or the next extract would
+    layout — HEAD's num_buckets must follow, or the next extract would
     write 16-bucket partitions into an 8-bucket tree."""
-    import json as _json
-
     from ai_invoice_ocr_engine_spark.pipeline import rebucket_spans
 
     out = str(tmp_path / "out")
@@ -562,8 +535,7 @@ def test_rollback_across_rebucket_repins_manifest(spark, corpus, tmp_path):
     rebucket_spans(spark, out, 16)
     S.rollback(spark, out, 1)
 
-    with open(os.path.join(out, "_manifest.json")) as f:
-        assert _json.load(f)["num_buckets"] == NB
+    assert S.load_head(spark, out)["num_buckets"] == NB
     assert spans_key(spark.read.parquet(spans_dir).collect()) == before
     assert verify_lineage(spark, out)["ok"]
     # follow-on ops run under the restored 8-bucket layout
@@ -656,7 +628,7 @@ def test_gc_removes_torn_files_only(spark, corpus, tmp_path):
 def test_concurrent_commit_loses_loudly(spark, corpus, tmp_path):
     """Two writers racing to the same snapshot id: the second commit must
     fail loudly (exclusive manifest create), never clobber the first."""
-    # the race window is between commit_snapshot's HEAD read and its
+    # the race window is between the op's open (its HEAD read) and its
     # manifest write; simulate the loser's side by hitting the exclusive
     # create against a manifest the "winner" already wrote
     path = str(tmp_path / "_snapshots" / "snap-00000002.json")
@@ -701,36 +673,6 @@ def test_time_travel_read_scans_only_requested_buckets(spark, history):
         assert "bucket=0" in p
     assert live or archived
     assert scanned <= {"0"}
-
-
-def test_snapshot_as_of_timestamp(spark, history):
-    log = S.list_snapshots(spark, history["out"])
-    for s in log:
-        assert S.snapshot_as_of(
-            spark, history["out"], s["ts"]
-        ) == s["snapshot_id"]
-        # halfway to the next commit still resolves to this snapshot
-        assert S.snapshot_as_of(
-            spark, history["out"], s["ts"] + 0.0005
-        ) >= s["snapshot_id"]
-    with pytest.raises(ValueError, match="no retained snapshot"):
-        S.snapshot_as_of(spark, history["out"], log[0]["ts"] - 1.0)
-
-
-def test_incremental_doc_stats_matches_full_recompute(spark, history):
-    """Applying the 1→3 CDC delta to the snapshot-1 stats table must
-    equal a full recompute over snapshot 3 (upsert + delete applied):
-    the downstream-maintenance path reads only changed buckets yet
-    lands on the identical table."""
-    out = history["out"]
-    base = S.doc_stats_full(S.read_snapshot(spark, out, 1))
-    got = S.incremental_doc_stats(spark, out, base, 1, 3)
-    want = S.doc_stats_full(S.read_snapshot(spark, out, 3))
-    key = lambda rows: sorted(tuple(r) for r in rows)  # noqa: E731
-    assert key(got.collect()) == key(want.collect())
-    # idempotent on a no-change window (3→3)
-    again = S.incremental_doc_stats(spark, out, got, 3, 3)
-    assert key(again.collect()) == key(want.collect())
 
 
 def test_gc_restores_head_files_lost_live(spark, corpus, tmp_path):
@@ -783,7 +725,7 @@ def test_gc_restores_head_files_lost_live(spark, corpus, tmp_path):
 
 
 def test_mutator_start_reconciliation_blocks_laundering(spark, corpus, tmp_path):
-    """ADVICE r4 (medium): commit_snapshot manifests the live tree, so a
+    """ADVICE r4 (medium): a commit used to manifest the live tree, so a
     torn file left by a crashed predecessor in an untouched bucket used to
     be laundered into the next op's snapshot as committed data. Batch
     mutators now reconcile to HEAD before writing: the stray file is
@@ -832,7 +774,9 @@ def test_hidden_staging_dirs_excluded_from_manifest(spark, corpus, tmp_path):
         shutil.copy(some, os.path.join(d, "part-stage.parquet"))
     shutil.copy(some, os.path.join(os.path.dirname(some), ".part-x.parquet"))
     assert len(_list_parquet_files(spark, spans_dir)) == n_live
-    snap = S.commit_snapshot(spark, out, op="test")
+    snap = S.commit_snapshot(
+        spark, out, S.load_head(spark, out), "test", S._list_tracked(spark, out)
+    )
     assert all(
         "_temporary" not in rel
         and ".staging" not in rel
@@ -859,14 +803,15 @@ def test_delta_manifests_grow_with_changes_not_table(spark, tmp_path):
     expected = {}
     cur = dict(base)
     n_commits = 20
+    head = S.open_table(spark, out, num_buckets=8)
     for k in range(1, n_commits + 1):
         if k > 1:
             # each commit rewrites exactly one file (new name, one removed)
             victim = sorted(cur)[k]
             del cur[victim]
             cur[f"spans/bucket=0/part-new-{k:05d}.parquet"] = 7 * k
-        S.commit_snapshot(
-            spark, out, op="synthetic", files=sorted([r, s] for r, s in cur.items())
+        head = S.commit_snapshot(
+            spark, out, head, "synthetic", sorted([r, s] for r, s in cur.items())
         )
         expected[k] = sorted([r, s] for r, s in cur.items())
 
@@ -899,8 +844,9 @@ def test_torn_manifest_rejected_loudly(spark, tmp_path):
     older snapshots stay readable."""
     out = str(tmp_path / "t")
     os.makedirs(out)
-    S.commit_snapshot(spark, out, op="a", files=[["spans/bucket=0/p.parquet", 1]])
-    S.commit_snapshot(spark, out, op="b", files=[["spans/bucket=0/p.parquet", 1]])
+    files = [["spans/bucket=0/p.parquet", 1]]
+    first = S.commit_snapshot(spark, out, S.open_table(spark, out, num_buckets=1), "a", files)
+    S.commit_snapshot(spark, out, first, "b", files)
     with open(S._snap_path(out, 2), "w") as f:
         f.write('{"snapshot_id": 2, "files": [')  # truncated
     with pytest.raises(ValueError, match="not valid JSON"):
@@ -909,3 +855,18 @@ def test_torn_manifest_rejected_loudly(spark, tmp_path):
     # stray .tmp staging files never surface as snapshot ids
     open(S._snap_path(out, 3) + ".tmp-999", "w").write("x")
     assert S._snapshot_ids(spark, out) == [1, 2]
+
+
+def test_table_without_recorded_layout_is_refused(tmp_path):
+    """A table whose HEAD records no ``layout`` was written before
+    manifests carried it (with a separate layout file): every op's open
+    refuses it instead of migrating it."""
+    import json
+
+    out = str(tmp_path / "t")
+    os.makedirs(os.path.join(out, S.SNAP_DIR))
+    with open(S._snap_path(out, 1), "w") as f:
+        json.dump({"snapshot_id": 1, "parent_id": None, "op": "extract",
+                   "num_buckets": 8, "files": [], "lineage": {}}, f)
+    with pytest.raises(ValueError, match="not migrated"):
+        S.open_table(None, out)

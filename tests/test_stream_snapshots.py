@@ -169,6 +169,8 @@ def test_incremental_growth_commits_per_batch(
 
     log = S.list_snapshots(spark, out)
     assert [s["op"] for s in log] == ["stream-append", "stream-append"]
+    # the append's manifest is HEAD's files plus the ones it landed
+    assert S.load_head(spark, out)["files"] == S._list_tracked(spark, out)
     assert_span_equal(
         _table(spark, out),
         golden_spans,

@@ -2,12 +2,12 @@
 tail (pipeline.commit_buckets), seen from the ops that use them: a table
 under a ``file://`` URI goes through the Hadoop FileSystem branch of
 tablefs and must behave exactly like the same table under a plain path;
-a rebucket that crashes before its commit must not leave the next writer
-on the uncommitted layout; and the streaming append checks the layout
-pin like run_extract does."""
+after every op HEAD's manifest lists exactly the live files; a rebucket
+that crashes before its commit must not leave the next writer on the
+uncommitted layout; the streaming append checks HEAD's bucket count like
+run_extract does; and an op reads each manifest at most once."""
 
 import glob
-import json
 import os
 import shutil
 
@@ -27,13 +27,20 @@ from ai_invoice_ocr_engine_spark.pipeline import (
 )
 from ai_invoice_ocr_engine_spark.streaming import incremental_extract
 
-from .util import fragment_spans, lineage_tree_files, spans_key
+from .util import TablefsCalls, fragment_spans, lineage_tree_files, spans_key
 
 NB = 8
 
 
 def _ids_sql(ids):
     return ",".join(f"'{i}'" for i in ids)
+
+
+def _head_is_live(spark, out):
+    """HEAD's manifest, after asserting it lists exactly the live files."""
+    head = S.load_head(spark, out)
+    assert head["files"] == S._list_tracked(spark, out)
+    return head
 
 
 def _walk(spark, corpus, out):
@@ -45,24 +52,29 @@ def _walk(spark, corpus, out):
     ids = sorted(r.doc_id for r in spark.read.parquet(docs).select("doc_id").collect())
     run_extract(spark, docs, media, out, cfg=ExtractConfig(), num_buckets=NB, run_id="walk")
     assert lineage_tree_files(out) == []
+    _head_is_live(spark, out)
     upsert_extract(
         spark, out, docs, media_path=media,
         where=f"doc_id IN ({_ids_sql(ids[:5])})", run_id="walk-upsert",
     )
     assert lineage_tree_files(out) == []
+    _head_is_live(spark, out)
     deleted = upsert_extract(
         spark, out, docs, where=f"doc_id IN ({_ids_sql(ids[5:8])})", delete=True,
     )
     assert lineage_tree_files(out) == []
+    _head_is_live(spark, out)
     fragment_spans(spark, out)
+    _head_is_live(spark, out)
     assert compact_spans(spark, out, target_mb=1024)["rewritten"]
     assert lineage_tree_files(out) == []
+    _head_is_live(spark, out)
     assert rebucket_spans(spark, out, 16, run_id="walk-rebucket")["rewritten"]
     assert lineage_tree_files(out) == []
+    assert _head_is_live(spark, out)["num_buckets"] == 16
     S.rollback(spark, out, deleted["snapshot_id"])
     assert lineage_tree_files(out) == []
-    with open(os.path.join(out.removeprefix("file://"), "_manifest.json")) as f:
-        assert json.load(f)["num_buckets"] == NB
+    assert _head_is_live(spark, out)["num_buckets"] == NB
     spans = spark.read.parquet(f"{out}/spans")
     return (
         spans_key(spans.collect()),
@@ -105,9 +117,7 @@ def test_crashed_rebucket_commit_does_not_strand_the_next_upsert(
     )
     spans = spark.read.parquet(os.path.join(out, "spans"))
     assert spans.count() == spans.select("doc_id").distinct().count() == n_docs
-    head = S.load_snapshot(spark, out, S.current_snapshot_id(spark, out))
-    with open(os.path.join(out, "_manifest.json")) as f:
-        assert json.load(f)["num_buckets"] == head["num_buckets"] == NB
+    assert S.load_head(spark, out)["num_buckets"] == NB
     assert spans.where(F.col("bucket") >= NB).count() == 0
     assert verify_lineage(spark, out)["ok"]
 
@@ -178,7 +188,9 @@ def _committed_duplicate(spark, corpus, tmp_path):
         glob.glob(f"{bucket_dir}/part-*.parquet")[0],
         os.path.join(bucket_dir, "part-duplicate.parquet"),
     )
-    S.commit_snapshot(spark, out, op="test-duplicate")
+    S.commit_snapshot(
+        spark, out, S.load_head(spark, out), "test-duplicate", S._list_tracked(spark, out)
+    )
     return out, int(bucket_dir.rsplit("=", 1)[1]), sorted(glob.glob(f"{out}/*/*/*.parquet"))
 
 
@@ -210,3 +222,87 @@ def test_compact_refuses_rows_that_disagree_with_lineage(spark, corpus, tmp_path
         compact_spans(spark, out)
     assert [s["op"] for s in S.list_snapshots(spark, out)] == ["extract", "test-duplicate"]
     assert sorted(glob.glob(f"{out}/*/*/*.parquet")) == files
+
+
+def test_a_commit_whose_parent_is_no_longer_head_fails_loudly(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """A writer that commits after an op's open takes the id the op's
+    commit needs: the op fails on the exclusive publish, its landed files
+    stay off HEAD until the next op's open reconciles them away."""
+    out = str(tmp_path / "out")
+    docs = corpus["docs_path"]
+    run_extract(spark, docs, corpus["media_path"], out, cfg=ExtractConfig(), num_buckets=NB)
+    victim = sorted(r.doc_id for r in spark.read.parquet(docs).select("doc_id").collect())[0]
+    real = S.commit_snapshot
+
+    def racing(spark, out_dir, parent, *args, **kwargs):
+        real(spark, out_dir, parent, "other-writer", parent["files"])
+        return real(spark, out_dir, parent, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(S, "commit_snapshot", racing)
+        with pytest.raises(ValueError, match="concurrent snapshot commit"):
+            upsert_extract(spark, out, docs, where=f"doc_id = '{victim}'", delete=True)
+    assert [s["op"] for s in S.list_snapshots(spark, out)] == ["extract", "other-writer"]
+    assert S.load_head(spark, out)["files"] != S._list_tracked(spark, out)
+
+    assert not compact_spans(spark, out)["rewritten"]
+    _head_is_live(spark, out)
+    assert verify_lineage(spark, out)["ok"]
+    assert S.read_tree(spark, out).where(F.col("doc_id") == victim).count() == 1
+
+
+def test_run_extract_refuses_data_files_without_a_log(spark, corpus, tmp_path):
+    """Data files but no snapshot log: committed and torn files cannot be
+    told apart, so the open refuses before the reconciliation could
+    delete them."""
+    out = tmp_path / "out"
+    legacy = out / "spans" / "bucket=0"
+    legacy.mkdir(parents=True)
+    shutil.copy(corpus["docs_path"], legacy / "part-legacy.parquet")
+    before = sorted(glob.glob(f"{out}/**", recursive=True))
+    with pytest.raises(ValueError, match="data files but no snapshot log"):
+        run_extract(spark, corpus["docs_path"], corpus["media_path"], str(out), num_buckets=NB)
+    assert sorted(glob.glob(f"{out}/**", recursive=True)) == before
+
+
+def test_an_op_reads_each_manifest_once(spark, corpus, tmp_path, monkeypatch):
+    """At HEAD >= 9 (a delta chain of 9 manifests), a delete and an upsert
+    each list ``_snapshots`` once, read every manifest at most once and
+    list the whole ``spans`` tree once (the open's reconciliation; the
+    commit derives its file list from HEAD's). A fully resumed
+    run_extract reads each manifest at most once too. No op touches a
+    ``_manifest.json``."""
+    out = str(tmp_path / "out")
+    docs, media = corpus["docs_path"], corpus["media_path"]
+    run_extract(spark, docs, media, out, cfg=ExtractConfig(), num_buckets=NB)
+    for _ in range(8):
+        head = S.load_head(spark, out)
+        S.commit_snapshot(spark, out, head, "test-noop", head["files"])
+    assert S.current_snapshot_id(spark, out) == 9
+    ids = sorted(r.doc_id for r in spark.read.parquet(docs).select("doc_id").collect())
+    ops = [
+        lambda: upsert_extract(spark, out, docs, where=f"doc_id = '{ids[0]}'", delete=True),
+        lambda: upsert_extract(spark, out, docs, media, where=f"doc_id = '{ids[1]}'"),
+    ]
+    for op in ops:
+        chain = S.current_snapshot_id(spark, out)
+        with monkeypatch.context() as m:
+            calls = TablefsCalls(m, out)
+            op()
+        assert calls.of("list_names") == {S.SNAP_DIR: 1}
+        reads = calls.of("read_text")
+        assert len(reads) == chain and set(reads.values()) == {1}
+        assert calls.of("list_parquet_files")["spans"] == 1
+        assert not any("_manifest.json" in rel for _, rel in calls.calls)
+    assert S.current_snapshot_id(spark, out) == 11
+    _head_is_live(spark, out)
+
+    with monkeypatch.context() as m:
+        calls = TablefsCalls(m, out)
+        r = run_extract(spark, docs, media, out, cfg=ExtractConfig(), num_buckets=NB)
+    assert (r["docs"], r["snapshot_id"]) == (0, 11)
+    assert set(calls.of("read_text").values()) == {1}
+    assert not any("_manifest.json" in rel for _, rel in calls.calls)
+    assert not os.path.exists(os.path.join(out, "_manifest.json"))

@@ -40,11 +40,11 @@ def fragment_spans(spark, out: str, n_files: int = 32) -> dict:
 
     from ai_invoice_ocr_engine_spark import pipeline, snapshots
 
-    num_buckets = snapshots.open_table(spark, out)
+    head = snapshots.open_table(spark, out)
     frag = spark.read.parquet(os.path.join(out, "spans")).repartition(n_files, "doc_id")
     frag.write.partitionBy("bucket").parquet(pipeline._staged(out))
     return pipeline.commit_buckets(
-        spark, out, "test-fragment", None, replaced=range(num_buckets)
+        spark, out, head, "test-fragment", None, replaced=range(head["num_buckets"])
     )
 
 
@@ -56,3 +56,34 @@ def lineage_tree_files(out: str) -> list[str]:
 
     root = os.path.join(out.removeprefix("file://"), "lineage")
     return glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+
+
+class TablefsCalls:
+    """Counts the table's metadata calls until ``monkeypatch`` is undone:
+    every ``tablefs`` function call, as (function name, path relative to
+    ``out``), so a test can assert how often an op reads each manifest or
+    lists a tree."""
+
+    FUNCS = ("exists", "read_text", "write_text", "list_names",
+             "list_parquet_files", "link", "move", "delete")
+
+    def __init__(self, monkeypatch, out: str):
+        from collections import Counter
+
+        from ai_invoice_ocr_engine_spark import tablefs
+
+        self.calls = Counter()
+        root = out.rstrip("/") + "/"
+        for name in self.FUNCS:
+            fn = getattr(tablefs, name)
+
+            def counted(spark, path, *args, _name=name, _fn=fn, **kwargs):
+                rel = path[len(root):] if path.startswith(root) else path
+                self.calls[(_name, rel)] += 1
+                return _fn(spark, path, *args, **kwargs)
+
+            monkeypatch.setattr(tablefs, name, counted)
+
+    def of(self, name: str) -> dict:
+        """{relpath: calls} of one tablefs function."""
+        return {rel: n for (f, rel), n in self.calls.items() if f == name}
