@@ -1111,6 +1111,12 @@ def _warp_by_homography(img: np.ndarray, H: np.ndarray, out_h: int, out_w: int) 
     return _bilinear_sample(img, xs, ys)
 
 
+def _above(prob: np.ndarray, th: float) -> np.ndarray:
+    """``prob > th``; for 0 <= th < 1 detect_prob's bool mask is its own
+    threshold, which skips numpy's bool→float64 cast (~0.1 ms per frame)."""
+    return prob if prob.dtype == np.bool_ and 0 <= th < 1 else prob > th
+
+
 def extract_boxes_rotated(
     prob: np.ndarray,
     orig_size: tuple[int, int],
@@ -1139,7 +1145,7 @@ def extract_boxes_rotated(
     """
     dh, dw = prob.shape
     oh, ow = orig_size
-    mask = _dilate(prob > th, dil)  # dil 3×3 dilations == one of radius dil
+    mask = _dilate(_above(prob, th), dil)  # dil 3×3 dilations == one of radius dil
     quads, scores = [], []
     fx, fy = ow / dw, oh / dh
     for x0, y0, x1, y1, _area, pts, sc in connected_components_hulls(mask, prob):
@@ -1186,7 +1192,7 @@ def extract_boxes(
     """
     dh, dw = prob.shape
     oh, ow = orig_size
-    mask = _dilate(prob > th, dil)  # dil 3×3 dilations == one of radius dil
+    mask = _dilate(_above(prob, th), dil)  # dil 3×3 dilations == one of radius dil
     boxes, scores = [], []
     for x0, y0, x1, y1, _area in connected_components(mask):
         region = prob[y0:y1, x0:x1]

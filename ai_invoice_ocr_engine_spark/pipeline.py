@@ -46,8 +46,10 @@ import functools
 import operator
 import os
 import re
+import sys
 import time
 import uuid
+import zipimport
 from typing import Iterator
 
 import pandas as pd
@@ -181,6 +183,15 @@ def _ocr_frame_batches(
     like the semi join dropping them."""
     from .extractor import assemble_frame_lines, frame_geometry
 
+    # Once per task, in the worker: PySpark's worker runs
+    # importlib.invalidate_caches() before each task, which on CPython 3.11
+    # makes every cached zipimporter re-read its archive (pyspark.zip holds
+    # 1,328 entries; ~150 ms CPU per task on a 4-vCPU x86 box). zipimport
+    # keeps parsed directories in _zip_directory_cache, so a dropped finder
+    # that an import needs again is rebuilt without a re-read.
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
     weights = weights_bc.value
     blob = _load_media_side(media_side_path) if media_side_path is not None else None
     for pdf in batches:
@@ -260,8 +271,6 @@ def _media_plan_transforms_bytes(media: DataFrame) -> bool:
     OCR the on-disk originals instead (ADVICE r2 #3). Detection: an Alias
     defining `image` in the analyzed plan, or any Python-evaluation node
     (mapInPandas / pandas UDF / row UDF) upstream of it."""
-    import re
-
     if "image" not in media.columns:
         return False
     plan = media._jdf.queryExecution().analyzed().toString()
@@ -366,10 +375,13 @@ def extract(
     target_parallelism = _target_parallelism(spark)
     weights_bc = sc.broadcast(K.resolve_weights(cfg.rec))
 
+    # The plan's expressions are SQL text: the JVM parses each string in one
+    # py4j call, where a Column-DSL tree costs a round trip or more per node,
+    # and every extract, upsert and stream batch pays the build on the driver.
     needed = (
-        docs.select(F.explode("spans").alias("s"))
-        .where(F.col("s.kind") == "media")
-        .select(F.col("s.media_ref").alias("media_ref"))
+        docs.selectExpr("explode(spans) AS s")
+        .where("s.kind = 'media'")
+        .selectExpr("s.media_ref AS media_ref")
         .distinct()
     )
     blob_path = None
@@ -414,86 +426,52 @@ def extract(
     )
 
     bucket = ["bucket"] if "bucket" in docs.columns else []
-    sp = docs.select(*bucket, "doc_id", F.posexplode_outer("spans").alias("pos", "s"))
-    j = sp.join(ocr, sp["s.media_ref"] == ocr["media_ref"], "left")
-
-    is_media = F.col("s.kind") == "media"
-    ocr_piece = F.when(
-        F.col("lines").isNotNull(),
-        F.transform(
-            "lines",
-            lambda t: F.struct(
-                F.lit("ocr_text").alias("kind"),
-                t.alias("text"),
-                F.col("s.media_ref").alias("media_ref"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<kind:string,text:string,media_ref:string>>"))
-    text_piece = F.array(
-        F.struct(
-            F.lit("text").alias("kind"),
-            F.coalesce(F.col("s.text"), F.lit("")).alias("text"),
-            F.lit("").alias("media_ref"),
-        )
-    )
-    pieces = j.select(
+    sp = docs.selectExpr(*bucket, "doc_id", "posexplode_outer(spans) AS (pos, s)")
+    j = sp.join(ocr, F.expr("s.media_ref = media_ref"), "left")
+    no_pieces = "CAST(array() AS array<struct<kind:string,text:string,media_ref:string>>)"
+    pieces = j.selectExpr(
         *bucket,
         "doc_id",
         "pos",
-        F.when(F.col("s").isNull(), F.array().cast(
-            "array<struct<kind:string,text:string,media_ref:string>>"
-        ))
-        .when(is_media, ocr_piece)
-        .otherwise(text_piece)
-        .alias("piece"),
-        F.coalesce(F.col("s.offset"), F.col("pos")).alias("off"),
-        F.coalesce(is_media.cast("int"), F.lit(0)).alias("is_media"),
-        F.coalesce(
-            (is_media & F.col("lines").isNull()).cast("int"), F.lit(0)
-        ).alias("is_missing"),
-        F.col("s").isNotNull().cast("int").alias("is_span"),
+        f"""CASE WHEN s IS NULL THEN {no_pieces}
+            WHEN s.kind = 'media' THEN
+              CASE WHEN lines IS NOT NULL THEN transform(lines, t -> named_struct(
+                'kind', 'ocr_text', 'text', t, 'media_ref', s.media_ref))
+              ELSE {no_pieces} END
+            ELSE array(named_struct(
+              'kind', 'text', 'text', coalesce(s.text, ''), 'media_ref', ''))
+            END AS piece""",
+        "coalesce(s.offset, pos) AS off",
+        "coalesce(CAST(s.kind = 'media' AS int), 0) AS is_media",
+        "coalesce(CAST(s.kind = 'media' AND lines IS NULL AS int), 0) AS is_missing",
+        "CAST(s IS NOT NULL AS int) AS is_span",
     )
     if bucket:
         pieces = pieces.repartition(target_parallelism, "bucket")
     grouped = pieces.groupBy(*bucket, "doc_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("off", "pos", "piece"))),
-                lambda x: x["piece"],
-            )
-        ).alias("flat"),
-        F.sum("is_span").cast("int").alias("n_spans_in"),
-        F.sum("is_media").cast("int").alias("n_media"),
-        F.sum("is_missing").cast("int").alias("n_media_missing"),
-        F.sum(F.when(F.col("is_media") == 1, F.size("piece")).otherwise(0))
-        .cast("int")
-        .alias("n_ocr"),
-    )
-    spans_out = F.transform(
-        "flat",
-        lambda x, i: F.struct(
-            x["kind"].alias("kind"),
-            x["text"].alias("text"),
-            x["media_ref"].alias("media_ref"),
-            i.cast("int").alias("order"),
+        F.expr(
+            "flatten(transform(array_sort(collect_list(struct(off, pos, piece))),"
+            " x -> x.piece)) AS flat"
         ),
+        F.expr("CAST(sum(is_span) AS int) AS n_spans_in"),
+        F.expr("CAST(sum(is_media) AS int) AS n_media"),
+        F.expr("CAST(sum(is_missing) AS int) AS n_media_missing"),
+        F.expr("CAST(sum(CASE WHEN is_media = 1 THEN size(piece) ELSE 0 END) AS int) AS n_ocr"),
     )
-    # \\x02 separator: keeps the field regexes from matching across span
-    # boundaries (not \\s, not a word char) while preserving first-match-wins
-    # order - equivalent to the oracle's per-span scan
-    all_text = F.concat_ws("\x02", F.transform("flat", lambda x: x["text"]))
-    map_args = []
-    for fname, pat in K.INVOICE_FIELD_PATTERNS.items():
-        map_args.append(F.lit(fname))
-        map_args.append(F.regexp_extract(all_text, pat, 1))
-    fields = F.map_filter(
-        F.create_map(*map_args),
-        lambda _k, v: v != "",
+    # \x02 separator: keeps the field regexes from matching across span
+    # boundaries (not \s, not a word char) while preserving first-match-wins
+    # order - equivalent to the oracle's per-span scan. The patterns go in
+    # as raw literals (r'...': no escape processing; none holds a quote).
+    all_text = "concat_ws('\\u0002', transform(flat, x -> x.text))"
+    fields = ", ".join(
+        f"'{name}', regexp_extract({all_text}, r'{pat}', 1)"
+        for name, pat in K.INVOICE_FIELD_PATTERNS.items()
     )
-    return grouped.select(
+    return grouped.selectExpr(
         "doc_id",
-        spans_out.alias("spans_out"),
-        fields.alias("invoice_fields"),
+        "transform(flat, (x, i) -> named_struct('kind', x.kind, 'text', x.text,"
+        " 'media_ref', x.media_ref, 'order', i)) AS spans_out",
+        f"map_filter(map({fields}), (k, v) -> v != '') AS invoice_fields",
         "n_spans_in",
         "n_media",
         "n_media_missing",

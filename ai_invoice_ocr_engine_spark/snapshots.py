@@ -241,22 +241,28 @@ def load_head(spark: SparkSession, out_dir: str) -> dict:
     return load_snapshot(spark, out_dir, sid)
 
 
-def load_snapshot(spark: SparkSession, out_dir: str, snapshot_id: int) -> dict:
+def load_snapshot(
+    spark: SparkSession, out_dir: str, snapshot_id: int, loaded: dict | None = None
+) -> dict:
     """Load a manifest, MATERIALIZED: a delta manifest resolves against
     its base chain (bounded at FULL_MANIFEST_EVERY-1 hops by construction)
     so every caller sees a complete ``snap["files"]`` and ``snap["lineage"]``
     ({bucket: (doc_count, span_count, checksum)}) regardless of the
     on-disk representation. An unparseable manifest names itself loudly —
     with the staged-publish writer that means external corruption, and the
-    remedy (quarantine the file, re-list) is in the message."""
+    remedy (quarantine the file, re-list) is in the message. A caller that
+    loads several manifests passes one ``loaded`` dict ({id: manifest}) to
+    every call, so each manifest of a shared base chain is read once."""
+    if loaded is not None and snapshot_id in loaded:
+        return loaded[snapshot_id]
     path = _snap_path(out_dir, snapshot_id)
-    if not tablefs.exists(spark, path):
+    try:
+        snap = json.loads(tablefs.read_text(spark, path))
+    except FileNotFoundError:
         raise ValueError(
             f"snapshot {snapshot_id} not found in {out_dir!r} (expired or "
             f"never committed; see `snapshots` for the retained log)"
-        )
-    try:
-        snap = json.loads(tablefs.read_text(spark, path))
+        ) from None
     except ValueError:
         raise ValueError(
             f"snapshot manifest {path!r} is not valid JSON — the staged "
@@ -267,7 +273,7 @@ def load_snapshot(spark: SparkSession, out_dir: str, snapshot_id: int) -> dict:
         ) from None
     lineage = _lineage_map(snap.get("lineage", {}))
     if "files" not in snap:
-        base = load_snapshot(spark, out_dir, snap["base_id"])
+        base = load_snapshot(spark, out_dir, snap["base_id"], loaded)
         files = {rel: sz for rel, sz in base["files"]}
         for rel in snap.get("remove", ()):
             files.pop(rel, None)
@@ -280,6 +286,8 @@ def load_snapshot(spark: SparkSession, out_dir: str, snapshot_id: int) -> dict:
             **lineage,
         }
     snap["lineage"] = lineage
+    if loaded is not None:
+        loaded[snapshot_id] = snap
     return snap
 
 
@@ -291,9 +299,9 @@ def _lineage_map(lineage: dict) -> dict[int, tuple]:
 
 def list_snapshots(spark: SparkSession, out_dir: str) -> list[dict]:
     """Snapshot log, oldest first, manifests elided to metadata + counts."""
-    out = []
+    out, loaded = [], {}
     for sid in _snapshot_ids(spark, out_dir):
-        s = load_snapshot(spark, out_dir, sid)
+        s = load_snapshot(spark, out_dir, sid, loaded)
         out.append(
             {
                 "snapshot_id": s["snapshot_id"],
@@ -818,18 +826,15 @@ def expire_snapshots(
     # still exists — a representation change only; id, files, lineage,
     # metadata are bit-identical after load_snapshot). Crash between
     # rewrite and drop is harmless: rerun re-materializes (no-op) and
-    # re-drops.
+    # re-drops. One ``loaded`` memo reads each manifest once.
+    loaded: dict = {}
     for sid in keep:
-        raw = json.loads(tablefs.read_text(spark, _snap_path(out_dir, sid)))
-        if "files" not in raw:
-            full = load_snapshot(spark, out_dir, sid)
-            raw["files"], raw["lineage"] = full["files"], full["lineage"]
-            for k in ("base_id", "add", "remove", "lineage_remove"):
-                raw.pop(k, None)
-            tablefs.write_text(spark, _snap_path(out_dir, sid), json.dumps(raw))
-    for sid in keep:
-        for rel, _ in load_snapshot(spark, out_dir, sid)["files"]:
-            referenced.add(rel)
+        snap = load_snapshot(spark, out_dir, sid, loaded)
+        if "base_id" in snap:
+            full = {k: v for k, v in snap.items()
+                    if k not in ("base_id", "add", "remove", "lineage_remove")}
+            tablefs.write_text(spark, _snap_path(out_dir, sid), json.dumps(full))
+        referenced.update(rel for rel, _ in snap["files"])
 
     arch_root = posixpath.join(out_dir, ARCHIVE_DIR)
     n_files = 0

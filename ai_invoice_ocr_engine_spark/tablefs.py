@@ -16,6 +16,9 @@ import os
 import re
 import shutil
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
+
 _SCHEME = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:/")
 
 
@@ -38,11 +41,19 @@ def exists(spark, path: str) -> bool:
 
 
 def read_text(spark, path: str) -> str:
+    """The file's text; ``FileNotFoundError`` on both branches when it
+    does not exist, so a reader needs no ``exists`` probe first."""
     if not has_scheme(path):
         with open(path) as f:
             return f.read()
     jvm, _, p, fs = _hadoop(spark, path)
-    stream = fs.open(p)
+    try:
+        stream = fs.open(p)
+    except Py4JJavaError as e:
+        gateway = spark.sparkContext._gateway
+        if is_instance_of(gateway, e.java_exception, "java.io.FileNotFoundException"):
+            raise FileNotFoundError(path) from None
+        raise
     try:
         return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream)).decode("utf-8")
     finally:

@@ -131,6 +131,81 @@ def test_extract_bucketed_docs_merge_on_the_bucket_exchange(spark, corpus):
         assert "hashpartitioning(doc_id" not in plans["bucketed"], media_side_path
 
 
+def test_extract_plan_builds_in_few_py4j_round_trips(spark, corpus, monkeypatch):
+    """Building extract()'s plan on bucketed docs is a fixed driver cost
+    of every extract, upsert and stream batch: its expressions are SQL
+    text the JVM parses in one call each, so the build stays within 350
+    py4j round trips under both media deliveries. Only the building
+    thread's calls count: py4j's finalizer thread sends the deletes of
+    garbage-collected Java references (an earlier test's too) whenever
+    it wakes."""
+    import threading
+
+    import py4j.clientserver as CS
+
+    from ai_invoice_ocr_engine_spark.config import ExtractConfig
+    from ai_invoice_ocr_engine_spark.pipeline import extract, with_bucket
+
+    docs = with_bucket(spark.read.parquet(corpus["docs_path"]), 8)
+    media = spark.read.parquet(corpus["media_path"])
+    send = CS.ClientServerConnection.send_command
+    builder = threading.get_ident()
+    calls = []
+
+    def counted(self, command):
+        if threading.get_ident() == builder:
+            calls.append(command)
+        return send(self, command)
+
+    for media_side_path in (None, corpus["media_path"]):
+        calls.clear()
+        with monkeypatch.context() as m:
+            m.setattr(CS.ClientServerConnection, "send_command", counted)
+            extract(docs, media, ExtractConfig(), media_side_path=media_side_path)
+        assert 0 < len(calls) <= 350, (media_side_path, len(calls))
+
+
+def test_ocr_task_evicts_zip_finders(corpus, tmp_path, monkeypatch):
+    """Each OCR task drops the cached zipimport finders, which PySpark's
+    per-task ``importlib.invalidate_caches()`` would make re-read their
+    whole archive; a module in the same zip still imports afterwards."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    import pandas as pd
+
+    from ai_invoice_ocr_engine_spark import kernels as K
+    from ai_invoice_ocr_engine_spark.config import ExtractConfig
+    from ai_invoice_ocr_engine_spark.pipeline import _ocr_frame_batches
+
+    z = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(z, "w") as f:
+        f.writestr("zip_finder_probe_a.py", "X = 1\n")
+        f.writestr("zip_finder_probe_b.py", "X = 2\n")
+    monkeypatch.syspath_prepend(z)
+    assert importlib.import_module("zip_finder_probe_a").X == 1
+    assert isinstance(sys.path_importer_cache[z], zipimport.zipimporter)
+
+    cfg = ExtractConfig()
+
+    class Weights:
+        value = K.resolve_weights(cfg.rec)
+
+    m = corpus["media"][0]
+    batch = pd.DataFrame({"media_ref": [m["media_ref"]], "image": [m["image"]]})
+    out = list(_ocr_frame_batches(iter([batch]), cfg, Weights()))
+    assert list(out[0]["media_ref"]) == [m["media_ref"]]
+    assert not any(
+        isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+    )
+    importlib.invalidate_caches()
+    assert importlib.import_module("zip_finder_probe_b").X == 2
+    for name in ("zip_finder_probe_a", "zip_finder_probe_b"):
+        del sys.modules[name]
+
+
 @pytest.mark.parametrize("removed", ["broadcast", "join"])
 def test_extract_rejects_removed_per_document_plans(spark, corpus, removed):
     """extract runs one plan; its compatibility keyword takes only

@@ -497,18 +497,21 @@ def test_resize_bilinear_equals_twin(img, nh, nw):
 
 
 @settings(max_examples=120, deadline=None)
-@given(masks(), st.integers(0, 2))
-def test_extract_boxes_bool_mask_equals_float_map(mask, dil):
+@given(masks(), st.integers(0, 2), st.sampled_from((0.0, 0.3, 0.999, 1.0)))
+def test_extract_boxes_bool_mask_equals_float_map(mask, dil, th):
     """The scoring mean over a bool region equals the float32 0/1 map's
-    float32 mean, so the detector's bool mask and its float copy give the
-    same boxes and scores on both geometries."""
+    float32 mean, and a bool mask is its own threshold for 0 <= th < 1, so
+    the detector's bool mask and its float copy give the same boxes and
+    scores on both geometries; at th >= 1 neither keeps a pixel."""
     h, w = mask.shape
     prob = mask.astype(np.float32)
     for fn in (K.extract_boxes, K.extract_boxes_rotated):
-        bb, sb = fn(mask, (2 * h + 1, 3 * w), dil=dil)
-        bf, sf = fn(prob, (2 * h + 1, 3 * w), dil=dil)
+        bb, sb = fn(mask, (2 * h + 1, 3 * w), th=th, dil=dil)
+        bf, sf = fn(prob, (2 * h + 1, 3 * w), th=th, dil=dil)
         assert np.array_equal(bb, bf) and np.array_equal(sb, sf)
         assert sb.dtype == sf.dtype == np.float32
+        if th >= 1:
+            assert len(bb) == 0
 
 
 # crops under 3 px wide have an empty third: the classifier's variances are

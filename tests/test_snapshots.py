@@ -22,7 +22,7 @@ from ai_invoice_ocr_engine_spark.pipeline import (
     verify_lineage,
 )
 
-from .util import fragment_spans, spans_key
+from .util import TablefsCalls, fragment_spans, spans_key
 
 NB = 8
 
@@ -836,6 +836,32 @@ def test_delta_manifests_grow_with_changes_not_table(spark, tmp_path):
     for k in (n_commits - 1, n_commits):
         raw = json.loads(open(S._snap_path(out, k)).read())
         assert "files" in raw  # materialized
+        assert S.load_snapshot(spark, out, k)["files"] == expected[k]
+
+
+def test_expire_reads_each_manifest_once(spark, tmp_path, monkeypatch):
+    """Expiry at HEAD 12 with keep_last=6 loads every manifest once: the
+    retained deltas (7-12) and the dropped bases their chain resolves
+    through (1-6), 12 reads in all, with no existence probe; the retained
+    deltas are rewritten as full listings of the same files."""
+    import json
+
+    out = str(tmp_path / "t")
+    os.makedirs(out)
+    head = S.open_table(spark, out, num_buckets=8)
+    expected = {}
+    for k in range(1, 13):
+        files = [[f"spans/bucket={i % 8}/part-{i:05d}.parquet", 100 + i] for i in range(k, k + 20)]
+        head = S.commit_snapshot(spark, out, head, "synthetic", files)
+        expected[k] = sorted(files)
+    with monkeypatch.context() as m:
+        calls = TablefsCalls(m, out)
+        rep = S.expire_snapshots(spark, out, keep_last=6)
+    assert rep["kept"] == list(range(7, 13))
+    assert calls.of("read_text") == {f"{S.SNAP_DIR}/snap-{k:08d}.json": 1 for k in range(1, 13)}
+    assert not calls.of("exists")
+    for k in range(7, 13):
+        assert "files" in json.loads(open(S._snap_path(out, k)).read())
         assert S.load_snapshot(spark, out, k)["files"] == expected[k]
 
 

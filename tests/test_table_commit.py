@@ -267,13 +267,22 @@ def test_run_extract_refuses_data_files_without_a_log(spark, corpus, tmp_path):
     assert sorted(glob.glob(f"{out}/**", recursive=True)) == before
 
 
+def test_a_missing_manifest_is_refused_on_both_branches(spark, tmp_path):
+    """Loading a manifest that is not there reads it without a probe: a
+    plain path and a ``file://`` URI (the Hadoop branch) give the same
+    "not found" error."""
+    for out in (str(tmp_path / "plain"), "file://" + str(tmp_path / "uri")):
+        with pytest.raises(ValueError, match="snapshot 3 not found"):
+            S.load_snapshot(spark, out, 3)
+
+
 def test_an_op_reads_each_manifest_once(spark, corpus, tmp_path, monkeypatch):
     """At HEAD >= 9 (a delta chain of 9 manifests), a delete and an upsert
-    each list ``_snapshots`` once, read every manifest at most once and
-    list the whole ``spans`` tree once (the open's reconciliation; the
-    commit derives its file list from HEAD's). A fully resumed
-    run_extract reads each manifest at most once too. No op touches a
-    ``_manifest.json``."""
+    each list ``_snapshots`` once, read every manifest at most once with
+    no existence probe before the read, and list the whole ``spans`` tree
+    once (the open's reconciliation; the commit derives its file list from
+    HEAD's). A fully resumed run_extract reads each manifest at most once
+    too, and probes nothing. No op touches a ``_manifest.json``."""
     out = str(tmp_path / "out")
     docs, media = corpus["docs_path"], corpus["media_path"]
     run_extract(spark, docs, media, out, cfg=ExtractConfig(), num_buckets=NB)
@@ -296,6 +305,11 @@ def test_an_op_reads_each_manifest_once(spark, corpus, tmp_path, monkeypatch):
         assert len(reads) == chain and set(reads.values()) == {1}
         assert calls.of("list_parquet_files")["spans"] == 1
         assert not any("_manifest.json" in rel for _, rel in calls.calls)
+        # no existence probe of a manifest: the two left are the spans
+        # and staging reads' roots
+        exists = calls.of("exists")
+        assert sum(exists.values()) <= 2
+        assert not any(rel.startswith(S.SNAP_DIR) for rel in exists)
     assert S.current_snapshot_id(spark, out) == 11
     _head_is_live(spark, out)
 
@@ -304,5 +318,6 @@ def test_an_op_reads_each_manifest_once(spark, corpus, tmp_path, monkeypatch):
         r = run_extract(spark, docs, media, out, cfg=ExtractConfig(), num_buckets=NB)
     assert (r["docs"], r["snapshot_id"]) == (0, 11)
     assert set(calls.of("read_text").values()) == {1}
+    assert not calls.of("exists")
     assert not any("_manifest.json" in rel for _, rel in calls.calls)
     assert not os.path.exists(os.path.join(out, "_manifest.json"))
